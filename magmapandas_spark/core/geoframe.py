@@ -32,11 +32,10 @@ from magmapandas_spark.chem import elements as chem
 from magmapandas_spark.core.enums import Datatype, Unit
 
 
-def _sum(cols: Iterable[Column]) -> Column:
+def csum(cols: Iterable[Column]) -> Column:
+    """Σ of Column expressions, left to right; ``lit(0.0)`` when empty."""
     cols = list(cols)
-    if not cols:
-        return F.lit(0.0)
-    return reduce(lambda a, b: a + b, cols)
+    return reduce(lambda a, b: a + b, cols) if cols else F.lit(0.0)
 
 
 # 2^48 and 2π as exact double literals shared with the SQL oracles
@@ -137,7 +136,7 @@ class GeoFrame:
         names = list(species_exprs.keys())
         cols += [species_exprs[n].alias(n) for n in names]
         if total is True:
-            cols.append(_sum(species_exprs.values()).alias("total"))
+            cols.append(csum(species_exprs.values()).alias("total"))
         elif isinstance(total, Column):
             cols.append(total.alias("total"))
         out = self.df.select(*cols)
@@ -204,7 +203,7 @@ class GeoFrame:
             norm = 100.0
         else:
             norm = 1.0
-        total = _sum(F.col(s) for s in self.species)
+        total = csum(F.col(s) for s in self.species)
         exprs = {s: F.col(s) / total * F.lit(norm) for s in self.species}
         return self._rebuild(exprs, self.units)
 
@@ -221,7 +220,7 @@ class GeoFrame:
             raise ValueError(f"cannot convert units {self.units}")
         if not normalise:
             return self._rebuild(exprs, new_units)
-        total = _sum(exprs.values())
+        total = csum(exprs.values())
         scale = F.lit(100.0) if new_units == Unit.WT_PERCENT else F.lit(1.0)
         exprs = {s: e / total * scale for s, e in exprs.items()}
         return self._rebuild(exprs, new_units)
@@ -302,7 +301,7 @@ class GeoFrame:
             norm_to = 100.0
         if not normalise:
             return gf
-        total = _sum(F.col(s) for s in gf.species)
+        total = csum(F.col(s) for s in gf.species)
         return gf._rebuild(
             {s: F.col(s) / total * F.lit(norm_to) for s in gf.species},
             gf.units,
@@ -350,7 +349,7 @@ class GeoFrame:
             / chem.cation_amount(chem.oxide_name(s))
             for s in cats.species
         }
-        return _sum(F.col(s) * F.lit(r) for s, r in ratios.items())
+        return csum(F.col(s) * F.lit(r) for s, r in ratios.items())
 
     def with_oxygen(self, name: str = "oxygen") -> "GeoFrame":
         cats = self.cations()
@@ -366,7 +365,7 @@ class GeoFrame:
         ratios = {}
         for orig, cat in zip(self.species, cats.species):
             ratios[cat] = chem.oxygen_amount(orig) / chem.cation_amount(orig)
-        oxygen_total = _sum(F.col(c) * F.lit(r) for c, r in ratios.items())
+        oxygen_total = csum(F.col(c) * F.lit(r) for c, r in ratios.items())
         factor = F.lit(O) / oxygen_total
         exprs = {c: F.col(c) * factor for c in cats.species}
         exprs["O"] = F.lit(O)
@@ -385,7 +384,7 @@ class GeoFrame:
         cat_num = {s: chem.cation_amount(s) for s in oxides}
         # oxide moles × O per oxide, normalised to 1 total oxygen
         o_moles = {s: F.col(s) * F.lit(o_num[s]) for s in oxides}
-        total_o = _sum(o_moles.values())
+        total_o = csum(o_moles.values())
         exprs = {}
         names = {}
         for s in oxides:

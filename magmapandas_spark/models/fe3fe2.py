@@ -39,6 +39,7 @@ from magmapandas_spark.models.common import (
     csum,
     feo_fe2o3_split_np,
     mole_fraction_exprs,
+    solver_input,
 )
 
 R = eos.R
@@ -641,7 +642,7 @@ def calculate_Fe3Fe2(
     if model == "sun2024_deng":
         gamma = _sun2024_gamma_deng_udf(T, P)
         expr = fe3fe2_sun2024(mol, T, fO2, P, gamma=gamma)
-        return melt.df.withColumn(out_col, expr)
+        return solver_input(melt.df).withColumn(out_col, expr)
     if model in _SOLVER_MODELS_NP:
         # hand the UDF a struct of mol-fraction + condition columns
         fields = {s: mol[s] for s in melt.species}
@@ -650,7 +651,7 @@ def calculate_Fe3Fe2(
         fields["__fO2"] = fO2
         struct = F.struct(*[v.alias(k) for k, v in fields.items()])
         udf = _solver_udf(model, melt.species)
-        return melt.df.withColumn(out_col, udf(struct))
+        return solver_input(melt.df).withColumn(out_col, udf(struct))
     raise ValueError(f"unknown Fe3Fe2 model {model!r}")
 
 

@@ -30,6 +30,7 @@ from magmapandas_spark.models.common import (
     cation_fractions_np,
     csum,
     mole_fraction_exprs,
+    solver_input,
 )
 
 R = eos.R
@@ -368,7 +369,7 @@ def calculate_FeMg_Kd(
         fields["__Fe3Fe2"] = Fe3Fe2
         struct = F.struct(*[v.alias(k) for k, v in fields.items()])
         udf = _kd_solver_udf(model, melt.species)
-        return melt.df.withColumn(out_col, udf(struct))
+        return solver_input(melt.df).withColumn(out_col, udf(struct))
     raise ValueError(f"unknown Kd model {model!r}")
 
 

@@ -18,7 +18,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from magmapandas_spark.chem import elements as chem
-from magmapandas_spark.core.geoframe import GeoFrame
+from magmapandas_spark.core.geoframe import GeoFrame, csum
 
 # standard errors of estimate, K (``thermometers/melt.py:36-48``)
 ERRORS = {
@@ -70,11 +70,6 @@ _BEATTIE = {
 }
 
 
-def _sum(cols) -> Column:
-    cols = list(cols)
-    return reduce(lambda a, b: a + b, cols) if cols else F.lit(0.0)
-
-
 def _p_col(P_bar) -> Column:
     if isinstance(P_bar, Column):
         return P_bar
@@ -101,7 +96,7 @@ def _mole_fractions(
         for s, c in comp.items()
         if s not in exclude
     }
-    total = _sum(mol.values())
+    total = csum(mol.values())
     return {s: m / total for s, m in mol.items()}
 
 
@@ -116,7 +111,7 @@ def _cation_fractions(
         name = chem.cation_name(s)
         e = c / F.lit(chem.calculate_weight(s)) * F.lit(chem.cation_amount(s))
         cat[name] = cat[name] + e if name in cat else e
-    total = _sum(cat.values())
+    total = csum(cat.values())
     return {n: e / total for n, e in cat.items()}
 
 
@@ -131,7 +126,7 @@ def calibration_flag(gf: GeoFrame, model: str) -> Column | None:
     conds = []
     for spec, lo, hi in ranges:
         if isinstance(spec, tuple):
-            val = _sum(
+            val = csum(
                 F.coalesce(F.col(s), F.lit(0.0))
                 for s in spec
                 if s in gf.species
@@ -251,10 +246,10 @@ def putirka2008_22(
     def c(name: str) -> Column:
         return cat.get(name, F.lit(0.0))
 
-    num = F.lit(0.666) - _sum(F.lit(b) * c(n) for n, (_, b) in _BEATTIE.items())
-    den = _sum(F.lit(a) * c(n) for n, (a, _) in _BEATTIE.items())
+    num = F.lit(0.666) - csum(F.lit(b) * c(n) for n, (_, b) in _BEATTIE.items())
+    den = csum(F.lit(a) * c(n) for n, (a, _) in _BEATTIE.items())
     lnD_Mg = F.log(num / den)
-    C_NM = _sum(c(n) for n in ("Fe", "Mn", "Mg", "Ca", "Co", "Ni"))
+    C_NM = csum(c(n) for n in ("Fe", "Mn", "Mg", "Ca", "Co", "Ni"))
     NF = F.lit(3.5) * F.log(F.lit(1.0) - c("Al")) + F.lit(7.0) * F.log(
         F.lit(1.0) - c("Ti")
     )
@@ -291,7 +286,7 @@ def sun2020(
         if s not in volatiles and chem.oxygen_amount(s) > 0
     ]
     o_moles = {s: mol[s] * F.lit(chem.oxygen_amount(s)) for s in oxides}
-    total_o = _sum(o_moles.values())
+    total_o = csum(o_moles.values())
     per_ox = {}
     for s in oxides:
         cpo = chem.cation_amount(s) / chem.oxygen_amount(s)
@@ -336,7 +331,7 @@ def sugawara2000_3(
     anhydrous = {
         s: c for s, c in comp.items() if s != "H2O"
     }
-    total = _sum(anhydrous.values())
+    total = csum(anhydrous.values())
     anhydrous = {s: c / total * F.lit(100.0) for s, c in anhydrous.items()}
     mol_pc = {
         s: e * F.lit(100.0)
@@ -360,7 +355,7 @@ def sugawara2000_6a(
     (``thermometers/melt.py:570-616``)."""
     comp = _components(melt, "sugawara2000_6a")
     anhydrous = {s: c for s, c in comp.items() if s != "H2O"}
-    total = _sum(anhydrous.values())
+    total = csum(anhydrous.values())
     anhydrous = {s: c / total * F.lit(100.0) for s, c in anhydrous.items()}
     mol_pc = {
         s: e * F.lit(100.0)
@@ -413,7 +408,7 @@ def putirka2007_4(
     def c(d, name):
         return d.get(name, F.lit(0.0))
 
-    C_NM = _sum(c(cat, n) for n in ("Fe", "Mn", "Mg", "Ca", "Co", "Ni"))
+    C_NM = csum(c(cat, n) for n in ("Fe", "Mn", "Mg", "Ca", "Co", "Ni"))
     NF = F.lit(3.5) * F.log(F.lit(1.0) - c(cat, "Al")) + F.lit(7.0) * F.log(
         F.lit(1.0) - c(cat, "Ti")
     )

@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from magmapandas_spark.chem import elements as chem
 from magmapandas_spark.core.geoframe import GeoFrame
 from magmapandas_spark.models import eos
-from magmapandas_spark.models.common import as_col
+from magmapandas_spark.models.common import as_col, solver_input
 
 W = chem.calculate_weight
 
@@ -485,19 +485,10 @@ def volatile_saturation_pressure(
 
     sat_fn = SATURATION_MODELS[model][species]
     species_cols = list(melt.species)
-    # solver stage wants full-core parallelism: parquet scans often
-    # yield far fewer partitions than cores, and per-partition solver
-    # cost dwarfs the round-robin exchange (the reference paid a
-    # process-Pool pickle per ROW here)
-    spark = melt.df.sparkSession
-    n_part = spark.sparkContext.defaultParallelism
-    # unconditional round-robin fan-out: per-partition solver cost
-    # dwarfs the exchange at any scale, and probing the current
-    # partition count via df.rdd would force a plan→RDD conversion
-    # (serializes the analyzed plan) just to maybe skip a cheap shuffle
-    df = melt.df.repartition(n_part)
-    melt = GeoFrame(df, units=melt.units, datatype=melt.datatype,
-                    species=melt.species)
+    # one task per core: the reference paid a process-Pool pickle per
+    # ROW here; a Python-worker task costs a fixed ~0.2 s of CPU, so
+    # the stage input is sized by solver_input, not the caller's layout
+    df = solver_input(melt.df)
     T = as_col(T_K)
     fields = {s: F.coalesce(F.col(s), F.lit(0.0)) for s in species_cols}
     fields["__T_K"] = T
@@ -516,7 +507,7 @@ def volatile_saturation_pressure(
                 out = np.full_like(T_arr, np.nan)
             return pd.Series(np.asarray(out, dtype=float))
 
-        return melt.df.withColumn(out_col, sat_udf(struct))
+        return df.withColumn(out_col, sat_udf(struct))
 
     schema = StructType(
         [
@@ -537,7 +528,7 @@ def volatile_saturation_pressure(
             x = np.full_like(T_arr, np.nan)
         return pd.DataFrame({"P_bar_sat": P, "Xfl": x})
 
-    out = melt.df.withColumn("__sat", mixed_udf(struct))
+    out = df.withColumn("__sat", mixed_udf(struct))
     return (
         out.withColumn(out_col, F.col("__sat.P_bar_sat"))
         .withColumn("Xfl", F.col("__sat.Xfl"))
@@ -584,7 +575,7 @@ def volatile_solubility(
         co2 = co2_solubility_np(wt2, P_arr, T_arr, x_arr, parameters)
         return pd.DataFrame({"H2O_sol": h2o, "CO2_sol": co2})
 
-    out = melt.df.withColumn("__sol", sol_udf(struct))
+    out = solver_input(melt.df).withColumn("__sol", sol_udf(struct))
     return (
         out.withColumn("H2O_sol", F.col("__sol.H2O_sol"))
         .withColumn("CO2_sol", F.col("__sol.CO2_sol"))
@@ -640,7 +631,10 @@ def co2_h2o_isobars(
 
     sol_fn = SOLUBILITY_MODELS[model]
     species_cols = list(melt.species)
-    replicated = melt.df.crossJoin(F.broadcast(grid))
+    # sized before the crossJoin: the broadcast nested-loop join keeps
+    # the melt's partitioning, and probing after it would run the
+    # broadcast job at construction
+    replicated = solver_input(melt.df).crossJoin(F.broadcast(grid))
 
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import DoubleType, StructField, StructType

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from magmapandas_spark.chem import elements as chem
-from magmapandas_spark.core.geoframe import GeoFrame, _sum
+from magmapandas_spark.core.geoframe import GeoFrame, csum
 
 
 def _to_geoframe(
@@ -48,7 +48,7 @@ def _to_geoframe(
     cols += [F.col(s).cast(T.DoubleType()).alias(s) for s in species]
     # total is always recomputed from species (``readers.py:58-60``)
     cols.append(
-        _sum(F.col(s).cast(T.DoubleType()) for s in species).alias("total")
+        csum(F.col(s).cast(T.DoubleType()) for s in species).alias("total")
     )
     out = df.select(*cols)
     return GeoFrame(out, units=units, datatype=datatype, species=species)

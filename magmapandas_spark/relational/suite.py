@@ -16,6 +16,7 @@ engines):
 
 from __future__ import annotations
 
+import weakref
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -30,7 +31,46 @@ W = chem.calculate_weight
 # helpers
 # ----------------------------------------------------------------------
 
-_shipped_sessions: set[int] = set()
+# weak, so a new context never inherits a dead one's recycled id()
+_shipped_contexts = weakref.WeakSet()
+
+
+def package_zip(pkg_dir: str, out_dir: str) -> str:
+    """Zip ``pkg_dir`` (minus bytecode caches) into ``out_dir``, named by
+    the SHA-256 of every zipped file's relative path and bytes.
+
+    Any edit to any shipped file -- code or data, within the same
+    second or restored with an older mtime -- yields a new name, so a
+    cached zip is never stale. Entries carry a fixed timestamp, so the
+    same content always gives the same zip bytes."""
+    import hashlib
+    import os
+    import zipfile
+
+    root = os.path.dirname(pkg_dir)
+    files = []
+    for dirpath, dirs, names in os.walk(pkg_dir):
+        dirs[:] = sorted(d for d in dirs if d != "__pycache__")
+        files += [os.path.join(dirpath, n) for n in sorted(names)
+                  if not n.endswith(".pyc")]
+    digest = hashlib.sha256()
+    blobs = []
+    for path in files:
+        rel = os.path.relpath(path, root)
+        with open(path, "rb") as fh:
+            data = fh.read()
+        digest.update(rel.encode() + b"\0" + data + b"\0")
+        blobs.append((rel, data))
+    name = f"{os.path.basename(pkg_dir)}_pyfiles_{digest.hexdigest()[:16]}"
+    zip_path = os.path.join(out_dir, name + ".zip")
+    if not os.path.exists(zip_path):
+        tmp = f"{zip_path}.{os.getpid()}.tmp"
+        with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
+            for rel, data in blobs:
+                info = zipfile.ZipInfo(rel, date_time=(1980, 1, 1, 0, 0, 0))
+                zf.writestr(info, data, zipfile.ZIP_DEFLATED)
+        os.replace(tmp, zip_path)
+    return zip_path
 
 
 def ensure_workers_can_import(spark: SparkSession) -> None:
@@ -40,35 +80,19 @@ def ensure_workers_can_import(spark: SparkSession) -> None:
     pandas UDFs cloudpickle references to this package, so workers must
     be able to import it. A zip via ``addPyFile`` works in local and
     cluster mode alike."""
-    key = id(spark)
-    if key in _shipped_sessions:
+    # keyed by context: a second session on the same context has
+    # shipped the zip already
+    sc = spark.sparkContext
+    if sc in _shipped_contexts:
         return
     import os
-    import shutil
     import tempfile
 
     import magmapandas_spark
 
     pkg_dir = os.path.dirname(os.path.abspath(magmapandas_spark.__file__))
-    # rebuild when any package file is newer than the cached zip
-    newest = 0.0
-    for root, _dirs, files in os.walk(pkg_dir):
-        for fn in files:
-            if fn.endswith(".py"):
-                newest = max(newest, os.path.getmtime(os.path.join(root, fn)))
-    zip_base = os.path.join(
-        tempfile.gettempdir(), f"magmapandas_spark_pyfiles_{int(newest)}"
-    )
-    zip_path = zip_base + ".zip"
-    if not os.path.exists(zip_path):
-        shutil.make_archive(
-            zip_base, "zip", os.path.dirname(pkg_dir), "magmapandas_spark"
-        )
-    try:
-        spark.sparkContext.addPyFile(zip_path)
-    except Exception:
-        pass  # already added in this context
-    _shipped_sessions.add(key)
+    sc.addPyFile(package_zip(pkg_dir, tempfile.gettempdir()))
+    _shipped_contexts.add(sc)
 
 
 def _t(sf_dir: str, name: str) -> str:

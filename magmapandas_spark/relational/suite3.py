@@ -1882,6 +1882,7 @@ def q_fe3fe2_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
     melt pressure so both regimes of the selector run. The oracle
     unrolls the De Boor triangle per knot span with literal
     knots/coefficients — previously golden-tested only."""
+    from magmapandas_spark.models.common import solver_input
     from magmapandas_spark.operators.montecarlo import fe3fe2_error_column
     from magmapandas_spark.relational.suite import heavy_sorted
 
@@ -1890,7 +1891,7 @@ def q_fe3fe2_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = F.when((F.col("name") % 3) == 0, F.lit(1.0)).otherwise(
         F.col("P_bar")
     )
-    base = gf.df.select("name", x.alias("x"), p.alias("p"))
+    base = solver_input(gf.df).select("name", x.alias("x"), p.alias("p"))
     cols = [
         F.round(
             fe3fe2_error_column(m, F.col("x"), F.col("p")), 6

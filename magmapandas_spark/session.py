@@ -67,8 +67,9 @@ def ship_package(spark: SparkSession) -> None:
 
     pandas UDFs cloudpickle references to this package; a process whose
     cwd is not the repo root (or a real cluster) needs the package
-    shipped. ``addPyFile`` with a content-stamped zip works in local and
-    cluster mode alike and is idempotent per session."""
+    shipped. ``addPyFile`` with a zip named by the SHA-256 of the
+    package's files (code and data; see ``suite.package_zip``) works in
+    local and cluster mode alike and is idempotent per session."""
     from magmapandas_spark.relational.suite import ensure_workers_can_import
 
     ensure_workers_can_import(spark)

@@ -14,6 +14,8 @@ from magmapandas_spark.parse_io.readers import read_melt
 
 from .conftest import MELTS_CSV
 
+pytestmark = pytest.mark.needs_reference(MELTS_CSV)
+
 
 @pytest.fixture(scope="module")
 def melts_pd():

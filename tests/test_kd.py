@@ -33,6 +33,7 @@ def sun_inputs():
     return pdf
 
 
+@pytest.mark.needs_reference(KD_CALIBRATION_CSV, BENCH_DATA)
 def test_kd_sun2020_golden(spark, sun_inputs):
     """Reproduces the reference's Kd benchmark: sun2020 at Fe3Fe2=0.2 vs
     the Sun spreadsheet Kd_Fetotal (``benchmarks/Kd.ipynb``)."""
@@ -76,6 +77,7 @@ def _mirror_iterate(kd_fn, mol, T, P, fe3fe2, fo0=0.85, conv=0.001):
     return kd
 
 
+@pytest.mark.needs_reference(KD_CALIBRATION_CSV)
 @pytest.mark.parametrize("model", ["toplis2005", "blundy2020", "saper2022"])
 def test_kd_iteration_tier(spark, sun_inputs, model):
     pdf = sun_inputs[SUN_ELEMENTS + ["T_K", "P_bar"]].dropna(
@@ -106,6 +108,7 @@ def test_kd_iteration_tier(spark, sun_inputs, model):
     assert ((got > 0.005) & (got < 0.8)).all(), got
 
 
+@pytest.mark.needs_reference(KD_CALIBRATION_CSV)
 def test_kd_expression_tier(spark, sun_inputs):
     pdf = sun_inputs[SUN_ELEMENTS].fillna(0.0).head(20).reset_index().rename(
         columns={"run": "name"}
@@ -130,6 +133,7 @@ def test_kd_expression_tier(spark, sun_inputs):
     assert (out.select("Kd").toPandas()["Kd"] == 0.33).all()
 
 
+@pytest.mark.needs_reference(MELTS_CSV)
 def test_observed_kd_and_equilibrium_fo(spark):
     melt = read_melt(spark, MELTS_CSV, index_col="name")
     out = kd_mod.observed_FeMg_Kd(
@@ -141,6 +145,7 @@ def test_observed_kd_and_equilibrium_fo(spark):
     assert (res > 0).all()
 
 
+@pytest.mark.needs_reference(MELTS_CSV, OLIVINES_CSV)
 def test_olmelt_thermometer(spark):
     melt = read_melt(spark, MELTS_CSV, index_col="name")
     olivine = read_olivine(spark, OLIVINES_CSV, index_col="name")

@@ -39,6 +39,7 @@ def hirschmann_gf(spark, pdf):
                     species=HIRSCHMANN_SPECIES)
 
 
+@pytest.mark.needs_reference(BENCH_DATA)
 def test_borisov2018_spark_vs_mirror(spark, borisov_golden):
     """Spark expr vs plain-numpy mirror on already-mol-fraction input."""
     sp = ["SiO2", "TiO2", "Al2O3", "FeO", "MgO", "CaO", "Na2O", "K2O", "P2O5"]
@@ -70,6 +71,7 @@ def test_borisov2018_spark_vs_mirror(spark, borisov_golden):
     assert np.median(np.abs(dlog)) < 0.05
 
 
+@pytest.mark.needs_reference(BENCH_DATA)
 def test_hirschmann2022_golden(spark, hirschmann_golden):
     """hirschmann2022 (Armstrong dV/dP) vs the Hirschmann (2022) matlab
     outputs shipped as golden data."""
@@ -84,6 +86,7 @@ def test_hirschmann2022_golden(spark, hirschmann_golden):
     assert np.abs(ratio.to_numpy() - gold).max() < 0.005
 
 
+@pytest.mark.needs_reference(BENCH_DATA)
 def test_sun2024_parameterised_golden(spark):
     s = pd.read_csv(f"{BENCH_DATA}/Fe3Fe2/Fe3Fe2_input_sun2024.csv")
     sp = ["SiO2", "TiO2", "Al2O3", "MgO", "CaO", "Na2O", "K2O", "P2O5",
@@ -101,6 +104,7 @@ def test_sun2024_parameterised_golden(spark):
     assert np.abs(res["Fe3Fe2"].to_numpy()[ok] - gold[ok]).max() < 0.005
 
 
+@pytest.mark.needs_reference(BENCH_DATA)
 def test_solver_models_spark(spark, hirschmann_golden):
     """Solver-tier pandas UDFs (oneill2006 / armstrong2019 / deng2020)
     run through Spark and agree with their direct numpy twins."""
@@ -128,6 +132,7 @@ def test_solver_models_spark(spark, hirschmann_golden):
         assert np.allclose(res, exp, rtol=1e-6), model
 
 
+@pytest.mark.needs_reference(BENCH_DATA)
 def test_qfm_golden_curve():
     g = pd.read_csv(f"{BENCH_DATA}/fO2/QFM_anenburg.csv")
     out = eos.fo2_qfm(0.0, g["T_K"].to_numpy(), g["P_bar"].to_numpy())
@@ -174,6 +179,7 @@ def test_fo2_expression_buffers(spark):
     assert out["iw_oneill"][0] < out["qfm_1bar"][0]
 
 
+@pytest.mark.needs_reference(MELTS_CSV)
 def test_density_viscosity_ranges(spark):
     melt = read_melt(spark, MELTS_CSV, index_col="name")
     d = rheology.calculate_density(melt, T_K=1473.15, P_bar=1000.0)
@@ -187,6 +193,7 @@ def test_density_viscosity_ranges(spark):
     assert visc.between(-1, 6).all(), visc.describe()
 
 
+@pytest.mark.needs_reference(OLIVINES_CSV)
 def test_olivine_forsterite(spark):
     ol = read_olivine(spark, OLIVINES_CSV, index_col="name")
     out = minerals.forsterite(ol).select("name", "Fo").toPandas()
@@ -266,6 +273,7 @@ def test_magnetite_ilmenite_speciation(spark):
     )
 
 
+@pytest.mark.needs_reference(MELTS_CSV)
 def test_nbo_t(spark):
     melt = read_melt(spark, MELTS_CSV, index_col="name")
     out = minerals.nbo_t(melt).select("name", "NBO_T").toPandas()
@@ -273,6 +281,7 @@ def test_nbo_t(spark):
     assert out["NBO_T"].between(0.0, 2.0).all(), out["NBO_T"].describe()
 
 
+@pytest.mark.needs_reference(BENCH_DATA)
 def test_iw_golden_curve():
     """Exact IW (Hirschmann 2021) vs the reference's golden benchmark
     data (docs/source/notebooks/benchmarks/data/fO2/fO2_IW_Hirschmann.csv,

@@ -32,6 +32,7 @@ def test_configuration_validates():
     assert cfg.melt_thermometer == "putirka2008_15"
 
 
+@pytest.mark.needs_reference(MELTS_CSV)
 def test_melt_temperature_config_dispatch(spark, melt_gf):
     """Default thermometer == putirka2008_15; switching the config
     switches the generated plan."""
@@ -60,6 +61,7 @@ def test_melt_temperature_config_dispatch(spark, melt_gf):
     assert not np.allclose(t13["T_K"], default["T_K"])
 
 
+@pytest.mark.needs_reference(MELTS_CSV)
 def test_melt_chain_smoke(spark, melt_gf):
     """temperature → Fe3Fe2 → Kd → density/viscosity composes lazily."""
     m = Melt(melt_gf)

@@ -98,6 +98,7 @@ def _vec(df, col):
     return pdf.loc[NAMES, col].to_numpy(dtype=float)
 
 
+@pytest.mark.needs_reference(MELTS_CSV)
 def test_ep1_read_melt(melt):
     """Cells 2-3: read_melt parses the notebook CSV; heads match."""
     pdf = melt.df.select("name", "SiO2", "Al2O3").toPandas().set_index(
@@ -112,6 +113,7 @@ def test_ep1_read_melt(melt):
     assert melt.has_total
 
 
+@pytest.mark.needs_reference(MELTS_CSV)
 def test_ep2_temperature_matches_notebook(temperatures):
     """Cells 8/10 parity: eager pandas vs codegen'd expression —
     sub-0.01 K agreement."""
@@ -119,6 +121,7 @@ def test_ep2_temperature_matches_notebook(temperatures):
     assert np.allclose(got, NB_T_K, atol=1e-2)
 
 
+@pytest.mark.needs_reference(MELTS_CSV)
 def test_ep2_thermometer_switch_changes_result(melt, temperatures):
     """Cell 9: switching the configured thermometer switches the
     dispatched model (16 ≠ 15 on these melts)."""
@@ -129,6 +132,7 @@ def test_ep2_thermometer_switch_changes_result(melt, temperatures):
     assert not np.allclose(t15, t16, atol=0.5)
 
 
+@pytest.mark.needs_reference(MELTS_CSV)
 def test_ep2_moles_and_fixed_speciation(melt):
     """Cells 14-15: moles() then FeO_Fe2O3_calc(0.33, wtpc=False) —
     mole-fraction speciation parity on the stored head."""
@@ -147,6 +151,7 @@ def test_ep2_moles_and_fixed_speciation(melt):
     assert (pdf["Fe2O3"] > 0).all()
 
 
+@pytest.mark.needs_reference(MELTS_CSV)
 def test_ep2_fe3fe2_matches_notebook(temperatures, nb_config):
     """Cells 16/18 parity: borisov2018 at QFM+0 with the cell-8
     temperatures. rtol 2e-3 covers the compounded drift of the
@@ -158,6 +163,7 @@ def test_ep2_fe3fe2_matches_notebook(temperatures, nb_config):
     assert np.allclose(got, NB_FE3FE2, rtol=2e-3)
 
 
+@pytest.mark.needs_reference(MELTS_CSV)
 def test_ep2_speciation_from_computed_fe3fe2(temperatures, nb_config):
     """Cell 20 parity: FeO_Fe2O3_calc(Fe3Fe2=<computed column>) —
     the wt.% FeO after speciation matches the notebook head."""
@@ -187,6 +193,7 @@ def _saturation(temperatures, model):
     return _vec(out, "P_bar_sat")
 
 
+@pytest.mark.needs_reference(MELTS_CSV)
 def test_ep3_saturation_allison_matches_notebook(temperatures):
     """Cell 26 parity: allison2022 saturation — all ten samples within
     0.5% of the notebook (vectorized bisection vs brentq)."""
@@ -194,6 +201,7 @@ def test_ep3_saturation_allison_matches_notebook(temperatures):
                        NB_P_A22, rtol=5e-3)
 
 
+@pytest.mark.needs_reference(MELTS_CSV)
 def test_ep3_saturation_im2012_matches_notebook(temperatures):
     """Cell 23 parity: iaconomarziano2012 saturation — the eight
     reference-converged samples within 0.5%; the two adjudicated
@@ -205,6 +213,7 @@ def test_ep3_saturation_im2012_matches_notebook(temperatures):
     )
 
 
+@pytest.mark.needs_reference(MELTS_CSV)
 def test_ep3_im2012_outliers_are_reference_artifacts(temperatures):
     """The adjudication itself, pinned: for the two divergent samples
     the ENGINE's root reproduces the observed H2O and CO2 through the
@@ -321,6 +330,7 @@ def test_fb_direct_constructor(spark):
     assert set(gf.species) == {"SiO2", "FeO", "MgO"}
 
 
+@pytest.mark.needs_reference(MELTS_CSV)
 def test_fb_describe_matches_pandas(melt):
     """Cell 8: melt.describe() — the GeoFrame API reproduces the
     notebook's stored SiO2 summary (count/mean/std/min/max exact;
@@ -339,6 +349,7 @@ def test_fb_describe_matches_pandas(melt):
     assert "Al2O3" in pdf.columns
 
 
+@pytest.mark.needs_reference(OLIVINES_CSV)
 def test_fb_horizontal_sum(olivine):
     """Cell 9: olivine[['FeO','MgO']].sum(axis=1) — stored float32
     series, first 10 samples by name."""
@@ -353,6 +364,7 @@ def test_fb_horizontal_sum(olivine):
     assert np.allclose(out["s"], FB_OL_FEMG_SUM, atol=1e-4)
 
 
+@pytest.mark.needs_reference(MELTS_CSV, OLIVINES_CSV)
 def test_fb_elements_and_weights(melt, olivine):
     """Cells 12-14: elements list (order preserved from the CSV) and
     atomic-weight catalogues."""
@@ -366,6 +378,7 @@ def test_fb_elements_and_weights(melt, olivine):
         assert abs(olivine.weights[el] - w) < 0.01, el
 
 
+@pytest.mark.needs_reference(MELTS_CSV)
 def test_fb_cations_and_moles(melt):
     """Cells 16-17: cation and oxide mol-fraction conversions, row
     PI032-04-01 against the stored frames."""
@@ -381,6 +394,7 @@ def test_fb_cations_and_moles(melt):
         assert abs(mol[ox] - v) < 1e-5, ox
 
 
+@pytest.mark.needs_reference(MELTS_CSV)
 def test_fb_units_strings(melt):
     """Cell 19: (melt.units, cations.units, moles.units) =
     ('oxide wt.%', 'cation mol fraction', 'oxide mol fraction')."""
@@ -415,12 +429,14 @@ MB_FO = [  # cell 7: olivine.forsterite, first 10 by name
 ]
 
 
+@pytest.mark.needs_reference(OLIVINES_CSV)
 def test_mb_read_head(olivine):
     row = olivine.df.filter(F.col("name") == "PI032-01-04").collect()[0]
     for c, v in MB_HEAD_ROW1.items():
         assert abs(row[c] - v) < 1e-4, c
 
 
+@pytest.mark.needs_reference(OLIVINES_CSV)
 def test_mb_formula(spark, olivine):
     from magmapandas_spark.core.phases import Olivine
 
@@ -433,6 +449,7 @@ def test_mb_formula(spark, olivine):
         assert abs(out[el] - v) < 1e-4, el
 
 
+@pytest.mark.needs_reference(OLIVINES_CSV)
 def test_mb_forsterite(olivine):
     from magmapandas_spark.core.phases import Olivine
 
@@ -700,6 +717,7 @@ def test_cal_model_catalogues_match_notebook():
     assert sorted(Kd_models) == NB_CAL_KD_MODELS
 
 
+@pytest.mark.needs_reference(_CAL_DATA_DIR)
 def test_cal_dataset_contract_matches_notebook():
     """Cell 17: the packaged calibration CSVs (which the engine's
     calibration_spec docs point users at) carry exactly the stored
@@ -713,6 +731,7 @@ def test_cal_dataset_contract_matches_notebook():
     assert list(kd.columns) == NB_CAL_KD_COLS
 
 
+@pytest.mark.needs_reference(MELTS_CSV)
 def test_cal_plot_calibration_flow(spark):
     """Cells 18/24: plot_calibration over the quickstart melts — the
     engine flow is read_melt -> calibration_flag -> calibration_spec;
@@ -735,6 +754,7 @@ def test_cal_plot_calibration_flow(spark):
     assert spec["xlabel"].startswith("SiO")  # subscripted oxide label
 
 
+@pytest.mark.needs_reference(MELTS_CSV)
 def test_cal_plot_calibration_pt_flow(spark):
     """Cells 10/12: plot_calibration_PT — the engine's PT spec uses
     the notebook's axis conventions (T in °C, P in kbar, pressure

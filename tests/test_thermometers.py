@@ -55,6 +55,7 @@ def mirror_putirka15(pdf, sp, P_bar):
     )
 
 
+@pytest.mark.needs_reference(MELTS_CSV)
 def test_putirka2008_15_exact(melt_gf, melts_pd):
     out = (
         tm.putirka2008_15(melt_gf, P_bar=4000.0)
@@ -66,6 +67,7 @@ def test_putirka2008_15_exact(melt_gf, melts_pd):
     assert np.allclose(out["T_K"], exp.loc[out.index], rtol=1e-12)
 
 
+@pytest.mark.needs_reference(MELTS_CSV)
 def test_putirka2008_13_exact(melt_gf, melts_pd):
     out = (
         tm.putirka2008_13(melt_gf)
@@ -77,6 +79,7 @@ def test_putirka2008_13_exact(melt_gf, melts_pd):
     assert np.allclose(out["T_K"], exp.loc[out.index], rtol=1e-12)
 
 
+@pytest.mark.needs_reference(MELTS_CSV)
 def test_offset_applies_see(melt_gf):
     base = tm.putirka2008_15(melt_gf, P_bar=0.0).select("name", "T_K").toPandas()
     up = (
@@ -101,6 +104,7 @@ def sun_calibration(spark):
     return pdf
 
 
+@pytest.mark.needs_reference(KD_CALIBRATION_CSV, BENCH_DATA)
 @pytest.mark.parametrize(
     "model", ["putirka2008_13", "putirka2008_14", "putirka2008_15",
               "putirka2008_16", "putirka2008_22"]
@@ -128,6 +132,7 @@ def test_putirka_golden(spark, sun_calibration, model):
     assert delta.abs().median() < 10.0, delta.describe()
 
 
+@pytest.mark.needs_reference(KD_CALIBRATION_CSV, BENCH_DATA)
 def test_sun2020_golden(spark, sun_calibration):
     golden = pd.read_csv(
         f"{BENCH_DATA}/melt_thermometers/melt_thermometer_sun2020.csv"

@@ -102,6 +102,7 @@ def test_shishkina_below_intercept_nan():
     assert np.isnan(out[0])
 
 
+@pytest.mark.needs_reference(MELTS_CSV)
 def test_saturation_udf_spark(spark):
     melt = read_melt(spark, MELTS_CSV, index_col="name")
     out = vol.volatile_saturation_pressure(melt, T_K=1473.15, species="mixed")
@@ -125,6 +126,7 @@ def test_saturation_udf_spark(spark):
     assert abs(got["Xfl"] - x[0]) < 1e-9
 
 
+@pytest.mark.needs_reference(MELTS_CSV)
 def test_solubility_udf_spark(spark):
     melt = read_melt(spark, MELTS_CSV, index_col="name")
     out = vol.volatile_solubility(melt, P_bar=2000.0, T_K=1473.15, x_fluid=0.5)
@@ -133,6 +135,7 @@ def test_solubility_udf_spark(spark):
     assert (pdf["H2O_sol"] > 0).all() and (pdf["CO2_sol"] > 0).all()
 
 
+@pytest.mark.needs_reference(MELTS_CSV)
 def test_shishkina_udf_spark(spark):
     melt = read_melt(spark, MELTS_CSV, index_col="name")
     out = vol.volatile_saturation_pressure(
