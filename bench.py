@@ -102,14 +102,12 @@ def main() -> None:
     suite.synthetic_melt(spark, sf_dir).df.write.format("noop").mode(
         "overwrite"
     ).save()
-    try:
+    if os.path.exists(os.path.join(sf_dir, "embeddings.parquet")):
         from magmapandas_spark.operators.similarity import (
             ivf_fit_centroids,
         )
 
         ivf_fit_centroids(sf_dir)
-    except Exception:
-        pass  # embeddings table absent at this SF — nothing to warm
 
     def run_once(name: str, fn) -> float:
         t0 = time.perf_counter()
@@ -178,8 +176,8 @@ def main() -> None:
         if prior.get("sf") == (float(sf) if sf.replace(".", "").isdigit()
                                else sf):
             ref = dict(prior.get("queries", {}))
-    except Exception:
-        pass
+    except (FileNotFoundError, json.JSONDecodeError):
+        pass  # no readable history: every query is historyless
     suspects, historyless = select_retry_suspects(timings, ref)
     retried = 0
     replaced = 0

@@ -15,21 +15,113 @@ relative at the default scale) — far below float PageRank's own
 iteration tolerance.
 
 Plan shape per round (the GraphX/Pregel shape, same family as
-``connected_components``): edges ⋈ ranks on src (both partitioned on
-the join key, partitioned once and reused), bigint-sum aggregation on
-dst, plus the teleport constant. The loop is a fixed iteration count —
-no convergence probe, so rounds run with zero driver synchronization
-beyond job submission; lineage is truncated per round with a lazy
-localCheckpoint exactly as in the CC loop.
+``connected_components``): edges ⋈ ranks on src, bigint-sum
+aggregation on dst, plus the teleport constant, with every relation
+hash-partitioned on its node key into the same ``n_partitions`` so the
+round's only exchange is the inflow aggregation's. The loop is a fixed
+iteration count — no convergence probe. Lineage is cut with a lazy
+``localCheckpoint`` every ``checkpoint_interval`` rounds; under AQE
+even a lazy cut is a driver synchronization point — it runs the
+shuffle stages of the rounds since the previous cut at call time.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 #: rank scale: 1.0 of probability mass == S
 SCALE = 1_000_000_000_000
+
+
+def _rank_round(
+    e: DataFrame, nodes: DataFrame, ranks: DataFrame, tp: Column, npart: int
+) -> DataFrame:
+    """One damped rank update: ``e`` is (u, v, outdeg) and ``nodes``
+    / ``ranks`` are node-keyed, all hash-partitioned on their node key
+    into ``npart``. The |V| rank side is joined shuffle-hash (left to
+    the planner it is re-broadcast every round) and the inflow is
+    summed over an explicit ``npart``-wide exchange on ``node``, so
+    the left join onto ``nodes`` is co-partitioned; it is hinted
+    shuffle-hash too, or AQE turns it into a broadcast at run time.
+    One exchange per round, no broadcast. ``tp`` is the teleport
+    share, a column over ``nodes``."""
+    contribs = (
+        e.join(
+            ranks.select(F.col("node").alias("u"), "rank").hint(
+                "shuffle_hash"
+            ),
+            on="u",
+        )
+        .select(
+            F.col("v").alias("node"),
+            F.expr("(85 * rank) div (100 * outdeg)").alias("c"),
+        )
+        .repartition(npart, "node")
+        .groupBy("node")
+        .agg(F.sum("c").alias("inflow"))
+    )
+    return nodes.join(contribs.hint("shuffle_hash"), "node", "left").select(
+        "node",
+        (tp + F.coalesce(F.col("inflow"), F.lit(0))).cast("long").alias(
+            "rank"
+        ),
+    )
+
+
+def _rank_edges(edges: DataFrame, src: str, dst: str, npart: int) -> DataFrame:
+    """(u, v, outdeg) hash-partitioned on ``u`` into ``npart``."""
+    outdeg = edges.groupBy(src).agg(F.count(F.lit(1)).alias("outdeg"))
+    return (
+        edges.join(outdeg, on=src)
+        .select(F.col(src).alias("u"), F.col(dst).alias("v"), "outdeg")
+        .repartition(npart, "u")
+    )
+
+
+def _node_set(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    return (
+        edges.select(F.col(src).alias("node"))
+        .union(edges.select(F.col(dst).alias("node")))
+        .distinct()
+    )
+
+
+def _rank_loop(
+    edges: DataFrame,
+    nodes: DataFrame,
+    tp: Column,
+    r0: Column,
+    src: str,
+    dst: str,
+    npart: int,
+    iterations: int,
+    checkpoint_interval: int,
+) -> DataFrame:
+    """The loop :func:`pagerank` and :func:`personalized_pagerank`
+    share. ``nodes`` is persisted, materialized and hash-partitioned
+    on ``node`` into ``npart``; ``tp`` / ``r0`` are the teleport share
+    and the initial rank as columns over it."""
+    # (u, v, outdeg) partitioned once on u and reused every round.
+    # Both caches are materialized before the first round is planned:
+    # AQE reports an unmaterialized cache's partitioning as unknown,
+    # and the rounds would then re-shuffle e and nodes every round
+    # instead of reading them co-partitioned.
+    e = _rank_edges(edges, src, dst, npart).persist()
+    e.count()
+    ranks = nodes.select("node", r0.alias("rank"))
+    for i in range(iterations):
+        ranks = _rank_round(e, nodes, ranks, tp, npart)
+        if (i + 1) % checkpoint_interval == 0 or i == iterations - 1:
+            ranks = ranks.localCheckpoint(eager=False)
+    # materialize the lazy localCheckpoint chain BEFORE releasing the
+    # co-partitioned edge/node caches — otherwise the caller's first
+    # action replays the whole edge-prep lineage uncached, defeating
+    # the partitioned-once-and-reused plan
+    ranks.count()
+    nodes.unpersist()
+    e.unpersist()
+    return ranks
 
 
 def pagerank(
@@ -50,71 +142,23 @@ def pagerank(
     ``checkpoint_interval``: lineage is cut (lazy localCheckpoint)
     every k-th round instead of every round — the GraphX
     ``checkpointInterval`` convention. Each cut costs a full
-    analyze/optimize/plan pass on the driver (measured ~0.3 s per
-    round at gate scale: the loop was 75 % driver-side planning,
-    3.1 s build vs 0.06 s execution), while the cut's benefit —
-    bounded recovery/lineage depth — needs only PERIODIC cuts.
-    Ranks are identical for any interval (the integer recurrence
-    does not depend on where lineage is truncated; A/B-verified for
-    k ∈ {1, 2, 5, 10}).
+    analyze/optimize/plan pass on the driver and, under AQE, runs the
+    shuffle stages of the rounds since the previous cut right away,
+    while the cut's benefit — bounded recovery/lineage depth — needs
+    only PERIODIC cuts. Ranks are identical for any interval (the
+    integer recurrence does not depend on where lineage is truncated;
+    A/B-verified for k ∈ {1, 2, 5, 10}).
     """
-    spark = edges.sparkSession
     npart = n_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions")
+        edges.sparkSession.conf.get("spark.sql.shuffle.partitions")
     )
-    nodes = (
-        edges.select(F.col(src).alias("node"))
-        .union(edges.select(F.col(dst).alias("node")))
-        .distinct()
-        .repartition(npart, "node")
-        .persist()
-    )
+    nodes = _node_set(edges, src, dst).repartition(npart, "node").persist()
     n_nodes = nodes.count()
-    outdeg = edges.groupBy(src).agg(F.count(F.lit(1)).alias("outdeg"))
-    # (src, dst, outdeg) partitioned once on src and reused every round
-    e = (
-        edges.join(outdeg, on=src)
-        .select(F.col(src).alias("u"), F.col(dst).alias("v"), "outdeg")
-        .repartition(npart, "u")
-        .persist()
+    return _rank_loop(
+        edges, nodes, F.lit((15 * SCALE) // (100 * n_nodes)),
+        F.lit(SCALE // n_nodes).cast("long"),
+        src, dst, npart, iterations, checkpoint_interval,
     )
-    e.count()
-    teleport = (15 * SCALE) // (100 * n_nodes)
-    ranks = nodes.select(
-        "node", F.lit(SCALE // n_nodes).cast("long").alias("rank")
-    )
-    for i in range(iterations):
-        contribs = (
-            e.join(
-                ranks.select(F.col("node").alias("u"), "rank"), on="u"
-            )
-            .select(
-                F.col("v").alias("node"),
-                F.expr("(85 * rank) div (100 * outdeg)").alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("inflow"))
-        )
-        ranks = nodes.join(contribs, on="node", how="left").select(
-            "node",
-            (
-                F.lit(teleport)
-                + F.coalesce(F.col("inflow"), F.lit(0))
-            ).cast("long").alias("rank"),
-        )
-        if (i + 1) % checkpoint_interval == 0 or i == iterations - 1:
-            ranks = ranks.repartition(npart, "node").localCheckpoint(
-                eager=False
-            )
-    out = ranks
-    # materialize the lazy localCheckpoint chain BEFORE releasing the
-    # co-partitioned edge/node caches — otherwise the caller's first
-    # action replays the whole edge-prep lineage uncached, defeating
-    # the partitioned-once-and-reused plan
-    out.count()
-    nodes.unpersist()
-    e.unpersist()
-    return out
 
 
 # ---------------------------------------------------------------------
@@ -402,8 +446,30 @@ ORDER BY p.tri_count DESC, p.node
 
 
 # ---------------------------------------------------------------------
-# Synchronous min-label propagation (fixed-round community detection)
+# Fixed-round loops over the symmetrized edge list (label propagation,
+# k-core): node state rides on the edge rows, so a round is two
+# windows and one exchange — no join, no checkpoint
 # ---------------------------------------------------------------------
+
+
+def _sym_edges(edges: DataFrame) -> DataFrame:
+    """Symmetrized simple edge list (a, b): both directions of every
+    undirected edge, self-loops and duplicates dropped, hash-partitioned
+    on ``a`` (the dedup aggregate reuses the ``a`` exchange)."""
+    e = edges.filter(F.col("src") != F.col("dst"))
+    return (
+        e.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+        .unionByName(e.select(F.col("dst").alias("a"), F.col("src").alias("b")))
+        .repartition("a")
+        .distinct()
+    )
+
+
+def _swap(df: DataFrame, *pairs: tuple[str, str]) -> DataFrame:
+    """Rename each (x, y) pair to (y, x); a hash partitioning on ``b``
+    carries over to the renamed ``a``."""
+    names = dict(pairs) | {y: x for x, y in pairs}
+    return df.select([F.col(c).alias(names.get(c, c)) for c in df.columns])
 
 
 def min_label_propagation(
@@ -419,59 +485,32 @@ def min_label_propagation(
     (operators/dedup.py) — this operator is its bounded-round,
     hash-checkable twin.
 
-    Scale posture: per round, one join of the label relation against
-    the symmetrized edge list (both keyed on node — AQE co-partitions
-    the repeat joins) and one min-aggregation. Label state is one row
-    per node; round count is the graph-diameter bound the caller
-    chooses. Returns (node, community).
+    Scale posture: labels ride on the symmetrized edge rows as
+    (a, b, la, lb), partitioned on ``a``. Because the edge list is
+    symmetric, a window on ``a`` sees all of a's neighbours' labels
+    and, after one exchange on ``b``, a window on ``b`` sees all of
+    b's; both take ``least(own, min(neighbour))`` from the previous
+    round's labels, then ``a``/``b`` swap so the next round starts
+    partitioned on ``a`` again. One shuffle per round, a plan that
+    grows linearly in ``rounds``, no join and no driver job. Returns
+    (node, community).
     """
-    und = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("u"),
-            F.greatest("src", "dst").alias("v"),
-        )
-        .distinct()
+    by_a, by_b = Window.partitionBy("a"), Window.partitionBy("b")
+    state = _sym_edges(edges).select(
+        "a", "b", F.col("a").alias("la"), F.col("b").alias("lb")
     )
-    # Materialize the edge cache once and the label state once per
-    # round — the same fix as kcore_peel (r14): left lazy, round r's
-    # plan references labels_{r-1} TWICE (the neighbor-min join and
-    # the label update join), so the edge/label subtree count grows
-    # as 2^rounds (31 copies of the distinct+union pipeline at the
-    # default rounds=4), re-planned and re-executed wherever exchange
-    # reuse misses. Label state is one row per node (bounded);
-    # values unchanged (least/min see the same inputs).
-    sym = (
-        und.select(F.col("u").alias("a"), F.col("v").alias("b"))
-        .unionByName(und.select(F.col("v").alias("a"), F.col("u").alias("b")))
-        .localCheckpoint(eager=True)
-    )
-    nodes = sym.select(F.col("a").alias("node")).distinct()
-    labels = nodes.select("node", F.col("node").alias("lbl"))
     for _ in range(rounds):
-        nmin = (
-            sym.join(
-                labels.select(
-                    F.col("node").alias("b"), F.col("lbl").alias("blbl")
-                ),
-                "b",
-            )
-            .groupBy("a")
-            .agg(F.min("blbl").alias("nmin"))
+        state = _swap(
+            state.withColumn("na", F.least("la", F.min("lb").over(by_a)))
+            .repartition("b")
+            .withColumn("lb", F.least("lb", F.min("la").over(by_b)))
+            .select("a", "b", F.col("na").alias("la"), "lb"),
+            ("a", "b"),
+            ("la", "lb"),
         )
-        labels = (
-            labels.join(
-                nmin.withColumnRenamed("a", "node"), "node", "left"
-            )
-            .select(
-                "node",
-                F.least(
-                    F.col("lbl"), F.coalesce(F.col("nmin"), F.col("lbl"))
-                ).alias("lbl"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return labels.select("node", F.col("lbl").alias("community"))
+    return state.groupBy("a").agg(F.min("la").alias("community")).select(
+        F.col("a").alias("node"), "community"
+    )
 
 
 def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -550,67 +589,37 @@ def kcore_peel(edges: DataFrame, k: int = 10, rounds: int = 3) -> DataFrame:
     the identical round body. Returns the surviving nodes with their
     within-subgraph degree after the last round.
 
-    Scale posture: each round is one join of the symmetrized edge
-    list against the surviving-node set (semi-join shape, keyed on
-    node) and one count aggregation — no state beyond the node set.
+    Scale posture: the surviving induced subgraph is carried as its
+    symmetrized edge rows (a, b, ca, cb), partitioned on ``a``, with
+    ``ca`` / ``cb`` the endpoint degrees of the previous round. A
+    round keeps the rows with both degrees ≥ k, counts a's degree in
+    a window on ``a`` and, after one exchange on ``b``, b's in a
+    window on ``b`` (the list is symmetric, so each window sees a
+    node's whole adjacency), then swaps ``a``/``b``. One shuffle per
+    round, no join and no driver job. A survivor whose within-core
+    neighbours were all peeled in the last round still appears, with
+    core_degree 0 (the k=10 round-4 core is exactly four
+    mutually-disconnected nodes).
     """
-    und = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("u"),
-            F.greatest("src", "dst").alias("v"),
-        )
-        .distinct()
+    by_a, by_b = Window.partitionBy("a"), Window.partitionBy("b")
+    one = F.lit(1)
+    state = _sym_edges(edges).select(
+        "a", "b", F.lit(k).alias("ca"), F.lit(k).alias("cb")
     )
-    # Materialize the symmetrized edge list ONCE (the loop's edge
-    # cache — same posture as pagerank's persisted `e`), and the
-    # surviving-node set once per round. Left lazy, round r's plan
-    # contained round r-1's subtree TWICE (both semi-join sides), so
-    # the `sym` subtree appeared 2 + 2·(previous) times — 14 copies
-    # of the distinct+union pipeline by round 3, re-planned and
-    # re-executed wherever exchange reuse missed. With the cuts the
-    # per-round plan is one join pair over two ExistingRDD scans;
-    # `alive` is node-grain (bounded by |V|), `sym` is the edge
-    # relation every round consumes anyway. Values unchanged
-    # (A/B-verified: identical survivor/degree output).
-    sym = (
-        und.select(F.col("u").alias("a"), F.col("v").alias("b"))
-        .unionByName(und.select(F.col("v").alias("a"), F.col("u").alias("b")))
-        .localCheckpoint(eager=True)
-    )
-    alive = sym.select(F.col("a").alias("node")).distinct()
     for _ in range(rounds):
-        alive = (
-            sym.join(
-                alive.select(F.col("node").alias("a")), "a"
-            )
-            .join(alive.select(F.col("node").alias("b")), "b")
-            .groupBy("a")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .filter(F.col("deg") >= k)
-            .select(F.col("a").alias("node"))
-            .localCheckpoint(eager=True)
+        state = _swap(
+            state.filter((F.col("ca") >= k) & (F.col("cb") >= k))
+            .withColumn("ca", F.count(one).over(by_a))
+            .repartition("b")
+            .withColumn("cb", F.count(one).over(by_b)),
+            ("a", "b"),
+            ("ca", "cb"),
         )
-    # LEFT join the degree report onto the surviving node set: a
-    # survivor whose within-core neighbors were all peeled this round
-    # has core_degree 0 and must still appear (an inner join silently
-    # dropped such nodes — caught by the r8 fixpoint test, where the
-    # k=10 round-4 core is exactly four mutually-disconnected nodes)
-    deg = (
-        sym.join(alive.select(F.col("node").alias("a")), "a")
-        .join(alive.select(F.col("node").alias("b")), "b")
-        .groupBy("a")
-        .agg(F.count(F.lit(1)).alias("core_degree"))
-        .select(F.col("a").alias("node"), "core_degree")
-    )
     return (
-        alive.join(deg, "node", "left")
-        .select(
-            "node",
-            F.coalesce("core_degree", F.lit(0)).cast("long").alias(
-                "core_degree"
-            ),
-        )
+        state.filter(F.col("ca") >= k)
+        .groupBy("a")
+        .agg(F.count(F.when(F.col("cb") >= k, one)).alias("core_degree"))
+        .select(F.col("a").alias("node"), "core_degree")
         .orderBy("node")
     )
 
@@ -815,21 +824,18 @@ def personalized_pagerank(
     """Scaled-integer PERSONALIZED PageRank: the 15% teleport mass
     returns only to the ``seeds`` node set (one ``node`` column), so
     ranks measure proximity to the seeds — the recommendation /
-    related-items primitive. Same damped integer recurrence,
-    per-round plan, dangling-node convention and
-    ``checkpoint_interval`` lineage-cut cadence as :func:`pagerank`;
-    the per-node teleport share is precomputed into the persisted
-    node relation (one broadcast semi-join before the loop, zero
-    extra per-round work)."""
-    spark = edges.sparkSession
+    related-items primitive. Same damped integer recurrence, round
+    body, dangling-node convention and ``checkpoint_interval``
+    lineage-cut cadence as :func:`pagerank`; the per-node teleport
+    share is precomputed into the persisted node relation (one
+    broadcast semi-join before the loop, zero extra per-round work)."""
     npart = n_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions")
+        edges.sparkSession.conf.get("spark.sql.shuffle.partitions")
     )
     n_seeds = seeds.count()
+    is_seed = F.col("is_seed").isNotNull()
     nodes = (
-        edges.select(F.col(src).alias("node"))
-        .union(edges.select(F.col(dst).alias("node")))
-        .distinct()
+        _node_set(edges, src, dst)
         .join(
             F.broadcast(
                 seeds.select(F.col("node"), F.lit(1).alias("is_seed"))
@@ -839,17 +845,11 @@ def personalized_pagerank(
         )
         .select(
             "node",
-            F.when(
-                F.col("is_seed").isNotNull(),
-                F.lit((15 * SCALE) // (100 * n_seeds)),
-            )
+            F.when(is_seed, F.lit((15 * SCALE) // (100 * n_seeds)))
             .otherwise(F.lit(0))
             .cast("long")
             .alias("tp"),
-            F.when(
-                F.col("is_seed").isNotNull(),
-                F.lit(SCALE // n_seeds),
-            )
+            F.when(is_seed, F.lit(SCALE // n_seeds))
             .otherwise(F.lit(0))
             .cast("long")
             .alias("r0"),
@@ -858,42 +858,10 @@ def personalized_pagerank(
         .persist()
     )
     nodes.count()
-    outdeg = edges.groupBy(src).agg(F.count(F.lit(1)).alias("outdeg"))
-    e = (
-        edges.join(outdeg, on=src)
-        .select(F.col(src).alias("u"), F.col(dst).alias("v"), "outdeg")
-        .repartition(npart, "u")
-        .persist()
+    return _rank_loop(
+        edges, nodes, F.col("tp"), F.col("r0"),
+        src, dst, npart, iterations, checkpoint_interval,
     )
-    e.count()
-    ranks = nodes.select("node", F.col("r0").alias("rank"))
-    for i in range(iterations):
-        contribs = (
-            e.join(
-                ranks.select(F.col("node").alias("u"), "rank"), on="u"
-            )
-            .select(
-                F.col("v").alias("node"),
-                F.expr("(85 * rank) div (100 * outdeg)").alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("inflow"))
-        )
-        ranks = nodes.join(contribs, on="node", how="left").select(
-            "node",
-            (
-                F.col("tp") + F.coalesce(F.col("inflow"), F.lit(0))
-            ).cast("long").alias("rank"),
-        )
-        if (i + 1) % checkpoint_interval == 0 or i == iterations - 1:
-            ranks = ranks.repartition(npart, "node").localCheckpoint(
-                eager=False
-            )
-    out = ranks
-    out.count()
-    nodes.unpersist()
-    e.unpersist()
-    return out
 
 
 def q_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:

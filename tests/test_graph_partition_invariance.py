@@ -1,0 +1,72 @@
+"""The fixed-round graph loops give the same values whatever the
+partitioning (ROADMAP 5(c), graph slice).
+
+``kcore_peel`` and ``min_label_propagation`` take their width from
+unsized exchanges that AQE coalesces, and the PageRank loops from
+``n_partitions``; a window, join or aggregate that only sees part of a
+key's rows would change a value here. Each output is compared by a
+digest of its rows in sorted order."""
+
+import hashlib
+
+from pyspark.sql import functions as F
+
+from magmapandas_spark.operators import graph
+
+QUERIES = (
+    "q_pagerank", "q_personalized_pagerank", "q_kcore", "q_label_propagation",
+)
+#: the k-core cases tests/test_round7b.py checks for fixpoint consistency
+KCORE_CASES = [(k, rounds) for k in (8, 10) for rounds in (2, 3, 4)]
+
+
+def _digest(df) -> str:
+    pdf = df.toPandas()
+    pdf = pdf.sort_values(list(pdf.columns)).reset_index(drop=True)
+    return hashlib.sha256(pdf.to_csv(index=False).encode()).hexdigest()
+
+
+def _outputs(spark) -> dict[str, str]:
+    out = {q: _digest(getattr(graph, q)(spark, "")) for q in QUERIES}
+    for k, rounds in KCORE_CASES:
+        peeled = graph.kcore_peel(
+            graph.synthetic_tri_graph(spark), k=k, rounds=rounds
+        )
+        out[f"kcore k={k} rounds={rounds}"] = _digest(peeled)
+    return out
+
+
+def test_graph_loops_shuffle_partition_invariant(spark):
+    key = "spark.sql.shuffle.partitions"
+    prior = spark.conf.get(key)
+    try:
+        results = {}
+        for n in (1, 8, 64):
+            spark.conf.set(key, str(n))
+            results[n] = _outputs(spark)
+    finally:
+        spark.conf.set(key, prior)
+    for name in results[8]:
+        assert results[1][name] == results[8][name] == results[64][name], name
+
+
+def test_pagerank_n_partitions_invariant(spark):
+    edges = graph.synthetic_link_graph(spark)
+    seeds = spark.range(0, 500, 50).select(F.col("id").alias("node"))
+    ranks = {
+        n: (
+            _digest(graph.pagerank(edges, iterations=10, n_partitions=n)),
+            _digest(
+                graph.personalized_pagerank(
+                    edges, seeds, iterations=10, n_partitions=n
+                )
+            ),
+        )
+        for n in (1, 2, 8)
+    }
+    assert ranks[1] == ranks[2] == ranks[8], ranks
+    # the gate queries run at n_partitions=2
+    assert ranks[2] == (
+        _digest(graph.q_pagerank(spark, "")),
+        _digest(graph.q_personalized_pagerank(spark, "")),
+    )
