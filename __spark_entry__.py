@@ -16,12 +16,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
-from magmapandas_spark.relational import suite  # noqa: E402
+from magmapandas_spark.relational import geochem, suite  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    return suite.q_thermometer_putirka15(spark, "/root/testdata/sf0.001")
+    return geochem.q_thermometer_putirka15(spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from magmapandas_spark.operators.curation import SQL_WORD_TOKENS
 from magmapandas_spark.relational.suite import SQL_DSUM, _t, dsum
 
 # ---------------------------------------------------------------------
@@ -356,15 +357,9 @@ def q_token_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     return token_pmi(docs)
 
 
-# DuckDB twin of curation.word_tokens (suite4 keeps the same literal)
-_SQL_TOKS = (
-    "list_filter(str_split_regex(lower(text), '[^a-z0-9]+'),"
-    " x -> x <> '')"
-)
-
 SQL_TOKEN_PMI = f"""
 WITH toks AS (
-  SELECT {_SQL_TOKS} AS t FROM documents
+  SELECT {SQL_WORD_TOKENS} AS t FROM documents
 ),
 n AS (SELECT CAST(SUM(len(t)) AS BIGINT) AS n_tokens FROM toks),
 uni AS (
@@ -2340,3 +2335,30 @@ SELECT COALESCE(sk.cls, ex.cls) AS cls,
 FROM sk FULL JOIN ex ON ex.cls = sk.cls
 ORDER BY cls
 """
+
+
+# (query, oracle) pairs collected by relational.suite
+QUERIES = {
+    "scd2_build": (q_scd2_build, SQL_SCD2_BUILD),
+    "funnel_conversion": (q_funnel_conversion, SQL_FUNNEL_CONVERSION),
+    "token_pmi": (q_token_pmi, SQL_TOKEN_PMI),
+    "incremental_agg": (q_incremental_agg, SQL_INCREMENTAL_AGG),
+    "cohort_retention": (q_cohort_retention, SQL_COHORT_RETENTION),
+    "event_transitions": (q_event_transitions, SQL_EVENT_TRANSITIONS),
+    "ab_chi2": (q_ab_chi2, SQL_AB_CHI2),
+    "session_paths": (q_session_paths, SQL_SESSION_PATHS),
+    "incremental_join": (q_incremental_join, SQL_INCREMENTAL_JOIN),
+    "attribution": (q_attribution, SQL_ATTRIBUTION),
+    "rfm_segments": (q_rfm_segments, SQL_RFM_SEGMENTS),
+    "dominant_suppliers": (q_dominant_suppliers, SQL_DOMINANT_SUPPLIERS),
+    "winsorized_stats": (q_winsorized_stats, SQL_WINSORIZED_STATS),
+    "rfm_segments_sketch": (q_rfm_segments_sketch, SQL_RFM_SEGMENTS_SKETCH),
+    "budget_allocation": (q_budget_allocation, SQL_BUDGET_ALLOCATION),
+    "abc_classification": (q_abc_classification, SQL_ABC_CLASSIFICATION),
+    "gini_concentration": (q_gini_concentration, SQL_GINI_CONCENTRATION),
+    "gini_sketch": (q_gini_sketch, SQL_GINI_SKETCH),
+    "abc_classification_sketch": (
+        q_abc_classification_sketch,
+        SQL_ABC_CLASSIFICATION_SKETCH,
+    ),
+}

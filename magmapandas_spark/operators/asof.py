@@ -264,3 +264,10 @@ SELECT p.event_id, p.user_id, p.ts,
 FROM p LEFT JOIN j USING (event_id)
 ORDER BY event_id
 """
+
+
+# (query, oracle) pairs collected by relational.suite
+QUERIES = {
+    "asof_purchase_view": (q_asof_purchase_view, SQL_ASOF_PURCHASE_VIEW),
+    "range_join_clicks": (q_range_join_clicks, sql_range_join_clicks),
+}

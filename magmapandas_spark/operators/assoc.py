@@ -156,3 +156,9 @@ FROM scored
 QUALIFY rank <= 50
 ORDER BY rank
 """
+
+
+# (query, oracle) pairs collected by relational.suite
+QUERIES = {
+    "copurchase_lift": (q_copurchase_lift, SQL_COPURCHASE_LIFT),
+}

@@ -178,3 +178,9 @@ FROM (
 ) WHERE rn <= {k}
 ORDER BY qid, rn
 """
+
+
+# (query, oracle) pairs collected by relational.suite
+QUERIES = {
+    "binary_topk": (q_binary_topk, sql_binary_topk),
+}

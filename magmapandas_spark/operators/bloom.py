@@ -265,3 +265,9 @@ FROM flagged
 GROUP BY doc_id
 ORDER BY doc_id
 """
+
+
+# (query, oracle) pairs collected by relational.suite
+QUERIES = {
+    "bloom_decontaminate": (q_bloom_decontaminate, SQL_BLOOM_DECONTAMINATE),
+}

@@ -207,3 +207,9 @@ SELECT doc_id,
 FROM tok
 ORDER BY doc_id
 """
+
+
+# (query, oracle) pairs collected by relational.suite
+QUERIES = {
+    "bpe_tokens": (q_bpe_tokens, SQL_BPE_TOKENS),
+}

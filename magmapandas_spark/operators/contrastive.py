@@ -170,3 +170,9 @@ FROM (SELECT * FROM best WHERE is_pos AND rn = 1) p
 JOIN (SELECT * FROM best WHERE NOT is_pos AND rn = 1) n USING (qid)
 ORDER BY qid
 """
+
+
+# (query, oracle) pairs collected by relational.suite
+QUERIES = {
+    "hard_negatives": (q_hard_negatives, SQL_HARD_NEGATIVES),
+}

@@ -20,10 +20,11 @@ library); these extend the engine toward the training-data use case.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from magmapandas_spark.operators.dedup import _md5_60
+from magmapandas_spark.operators.dedup import _md5_60, fan_out
+from magmapandas_spark.relational.suite import _t
 
 #: word tokenizer shared by every curation operator — lowercase, split
 #: on non-alphanumeric runs, drop empties. The same expression is
@@ -38,6 +39,13 @@ def word_tokens(text_col: str = "text") -> Column:
         F.split(F.lower(F.col(text_col)), TOKEN_SPLIT_RE),
         lambda x: x != F.lit(""),
     )
+
+
+#: DuckDB twin of :func:`word_tokens` over the ``text`` column.
+SQL_WORD_TOKENS = (
+    "list_filter(str_split_regex(lower(text), '[^a-z0-9]+'),"
+    " x -> x <> '')"
+)
 
 
 def word_ngrams(tokens_col: str, n: int) -> Column:
@@ -1577,3 +1585,360 @@ WHERE keep AND NOT bench
   AND doc_id NOT IN (SELECT doc_id FROM flagged)
 ORDER BY stage
 """
+
+
+# ----------------------------------------------------------------------
+# gate queries
+# ----------------------------------------------------------------------
+
+
+def q_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Corpus-wide token frequency table, top 100 — the tokenizer-
+    training / frequency-filter primitive. Classic word-count shape:
+    scan-local tokenize + explode, ONE shuffle into a hash aggregate
+    with map-side partial aggregation, TakeOrdered top-k (no global
+    sort). Ties broken on the token so the LIMIT boundary is
+    deterministic."""
+    # fan_out: the tokenize-explode amplifies ~200× and runs inside the
+    # scan stage — parallelism would be capped at the (single-row-group)
+    # file's task count without it
+    docs = fan_out(spark.read.parquet(_t(sf_dir, "documents")))
+    tok = docs.select(
+        "doc_id", F.explode(word_tokens()).alias("token")
+    )
+    return (
+        tok.groupBy("token")
+        .agg(
+            F.count(F.lit(1)).alias("tf"),
+            F.countDistinct("doc_id").alias("df"),
+        )
+        .orderBy(F.desc("tf"), "token")
+        .limit(100)
+    )
+
+
+SQL_VOCAB_TOPK = f"""
+WITH tok AS (
+  SELECT doc_id, unnest({SQL_WORD_TOKENS}) AS token FROM documents
+)
+SELECT token, COUNT(*) AS tf, COUNT(DISTINCT doc_id) AS df
+FROM tok
+GROUP BY token
+ORDER BY tf DESC, token
+LIMIT 100
+"""
+
+
+def q_ngram_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Benchmark decontamination: corpus docs sharing a 5-word-gram
+    with the held-out set (doc_id % 11 = 0 plays the benchmark here).
+    The benchmark n-gram relation is broadcast; corpus data never
+    shuffles. Word soup in the synthetic corpus means only true
+    near-duplicates collide — exactly the leak the operator exists to
+    catch."""
+    docs = spark.read.parquet(_t(sf_dir, "documents"))
+    bench = docs.filter(F.col("doc_id") % 11 == 0)
+    corpus = docs.filter(F.col("doc_id") % 11 != 0)
+    return contamination_pairs(corpus, bench, n=5).orderBy(
+        "corpus_id", "bench_id"
+    )
+
+
+SQL_NGRAM_CONTAMINATION = f"""
+WITH toks AS (
+  SELECT doc_id, {SQL_WORD_TOKENS} AS t FROM documents
+),
+sh AS (
+  SELECT DISTINCT doc_id,
+         array_to_string(t[CAST(i AS INT):CAST(i + 4 AS INT)], ' ') AS g
+  FROM toks, UNNEST(range(1, len(t) - 3)) AS r(i)
+  WHERE len(t) >= 5
+)
+SELECT c.doc_id AS corpus_id, b.doc_id AS bench_id,
+       COUNT(*) AS n_common
+FROM sh c
+JOIN sh b ON c.g = b.g
+WHERE b.doc_id % 11 = 0 AND c.doc_id % 11 <> 0
+GROUP BY c.doc_id, b.doc_id
+ORDER BY corpus_id, bench_id
+"""
+
+
+_RATES = {"en": 250}
+
+
+_DEFAULT_RATE = 500
+
+
+def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic stratified downsampling: keep 25% of English docs
+    and 50% of every other language, decided per-doc by a salted md5
+    bucket — a scan-local filter (zero shuffle, zero RNG state) that
+    any engine reproduces bit-for-bit. The shape that downsamples a
+    100 TB common-crawl slice at the scan."""
+    docs = spark.read.parquet(_t(sf_dir, "documents"))
+    out = stratified_sample(
+        docs, "lang", _RATES, _DEFAULT_RATE, key_col="doc_id"
+    )
+    return out.select(
+        "doc_id",
+        "lang",
+        "source",
+        sample_hash(F.col("doc_id")).alias("bucket"),
+    ).orderBy("doc_id")
+
+
+SQL_STRATIFIED_SAMPLE = f"""
+WITH h AS (
+  SELECT doc_id, lang, source,
+         ('0x' || substr(md5('strat:' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
+           % 1000 AS bucket
+  FROM documents
+)
+SELECT doc_id, lang, source, bucket
+FROM h
+WHERE bucket < CASE WHEN lang = 'en' THEN {_RATES['en']}
+               ELSE {_DEFAULT_RATE} END
+ORDER BY doc_id
+"""
+
+
+def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Concat-and-chunk sequence packing into 2048-token context
+    windows: per-doc stream offsets via a two-phase distributed prefix
+    sum (per-block windows + broadcast block offsets — no
+    single-partition corpus window), then per-window occupancy stats.
+    All integer arithmetic — the gate hash is exact by construction."""
+    # fan_out: tokenization of every doc's full text runs in the scan
+    # stage — spread it before the (cheap) downstream prefix scan
+    docs = fan_out(spark.read.parquet(_t(sf_dir, "documents")))
+    toks = docs.select(
+        "doc_id", F.size(word_tokens()).alias("n_tok")
+    )
+    packed = pack_offsets(toks, "n_tok", budget=2048)
+    return (
+        packed.groupBy(F.col("bin_first").alias("bin_id"))
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("n_tok").alias("stream_tokens"),
+            F.sum(
+                F.when(F.col("bin_last") > F.col("bin_first"), 1).otherwise(0)
+            ).alias("n_spanning"),
+            F.min("doc_id").alias("first_doc"),
+            F.max("doc_id").alias("last_doc"),
+        )
+        .orderBy("bin_id")
+    )
+
+
+SQL_SEQUENCE_PACKING = f"""
+WITH toks AS (
+  SELECT doc_id, len({SQL_WORD_TOKENS}) AS n_tok FROM documents
+),
+off AS (
+  SELECT doc_id, n_tok,
+         CAST(COALESCE(SUM(n_tok) OVER (ORDER BY doc_id
+           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+           AS BIGINT) AS start
+  FROM toks
+),
+b AS (
+  SELECT doc_id, n_tok,
+         start // 2048 AS bin_first,
+         (start + GREATEST(n_tok, 1) - 1) // 2048 AS bin_last
+  FROM off
+)
+SELECT bin_first AS bin_id,
+       COUNT(*) AS n_docs,
+       CAST(SUM(n_tok) AS BIGINT) AS stream_tokens,
+       CAST(SUM(CASE WHEN bin_last > bin_first THEN 1 ELSE 0 END)
+            AS BIGINT) AS n_spanning,
+       MIN(doc_id) AS first_doc,
+       MAX(doc_id) AS last_doc
+FROM b
+GROUP BY bin_first
+ORDER BY bin_id
+"""
+
+
+def q_repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gopher-style repetition/quality filters (duplicate-word
+    fraction, top-bigram coverage, longest same-word run) — entirely
+    scan-local array expressions, zero shuffle; the oracle computes
+    max_word_run with an independent gaps-and-islands formulation."""
+    from magmapandas_spark.operators.curation import repetition_scores
+
+    docs = spark.read.parquet(_t(sf_dir, "documents"))
+    return repetition_scores(docs).orderBy("doc_id")
+
+
+def q_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Unigram-LM perplexity quality filter: broadcast top-1000 vocab,
+    add-1 smoothed mean negative log-prob per doc (CCNet/KenLM-style
+    reduced to its relational core)."""
+    from magmapandas_spark.operators.curation import lm_quality_score
+
+    docs = spark.read.parquet(_t(sf_dir, "documents"))
+    return lm_quality_score(docs)
+
+
+def q_text_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sliding-window RAG chunking: 200-char windows, 40-char overlap,
+    scan-local (no shuffle before the final sort)."""
+    from magmapandas_spark.operators.curation import chunk_text
+
+    docs = spark.read.parquet(_t(sf_dir, "documents"))
+    return chunk_text(docs).orderBy("doc_id", "chunk_idx")
+
+
+SQL_TEXT_CHUNKS = """
+WITH d AS (
+  SELECT doc_id, text,
+         GREATEST(CAST(CEIL((LENGTH(text) - 40) / 160.0) AS BIGINT), 1)
+           AS nc
+  FROM documents
+),
+c AS (
+  SELECT doc_id, CAST(k.k AS INT) AS chunk_idx,
+         CAST(k.k * 160 AS BIGINT) AS start,
+         substring(text, CAST(k.k * 160 + 1 AS INT), 200) AS chunk
+  FROM d, LATERAL (SELECT UNNEST(range(nc)) AS k) k
+)
+SELECT doc_id, chunk_idx, start, chunk,
+       CAST(LENGTH(chunk) AS INT) AS chunk_len
+FROM c ORDER BY doc_id, chunk_idx
+"""
+
+
+#: Target mixture for the gate's domain-weighting query: English 40%,
+#: every other language 15%.
+_MIX_WEIGHTS = {"en": 40, "de": 15, "es": 15, "fr": 15, "zh": 15}
+
+
+def q_mixture_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Domain-mixture scheduling over the documents table: per-lang
+    keep rates toward a 40/15/15/15/15 target (no upsampling), plus
+    the deterministically kept doc/token counts those rates produce."""
+    from magmapandas_spark.operators.curation import mixture_schedule
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return mixture_schedule(docs, _MIX_WEIGHTS).orderBy("stratum")
+
+
+_SQL_MIX_W = (
+    "CASE lang WHEN 'en' THEN 40 WHEN 'de' THEN 15 WHEN 'es' THEN 15 "
+    "WHEN 'fr' THEN 15 WHEN 'zh' THEN 15 ELSE 0 END"
+)
+
+
+SQL_MIXTURE_SCHEDULE = f"""
+WITH sizes AS (
+  SELECT lang, CAST(SUM(CAST(n_chars AS BIGINT)) AS BIGINT) AS tokens,
+         {_SQL_MIX_W} AS w
+  FROM documents GROUP BY lang
+),
+ref AS (
+  SELECT tokens AS ref_tokens, w AS ref_w
+  FROM sizes WHERE w > 0
+  ORDER BY (tokens * 1000000) // w, lang LIMIT 1
+),
+rates AS (
+  SELECT lang, w, tokens,
+         CASE WHEN w = 0 THEN 0
+              ELSE LEAST(1000,
+                (1000 * ref_tokens * w) // (ref_w * tokens)) END
+           AS rate_permille
+  FROM sizes, ref
+),
+kept AS (
+  SELECT d.lang, COUNT(*) AS n_kept,
+         CAST(SUM(CAST(d.n_chars AS BIGINT)) AS BIGINT) AS kept_tokens
+  FROM documents d JOIN rates r ON d.lang = r.lang
+  WHERE ('0x' || substr(md5('mix:' || CAST(d.doc_id AS VARCHAR)), 1, 15))
+          ::BIGINT % 1000 < r.rate_permille
+  GROUP BY d.lang
+)
+SELECT r.lang AS stratum,
+       r.w AS weight,
+       r.tokens,
+       r.rate_permille,
+       COALESCE(k.n_kept, 0) AS n_kept,
+       COALESCE(k.kept_tokens, 0) AS kept_tokens
+FROM rates r LEFT JOIN kept k ON r.lang = k.lang
+ORDER BY stratum
+"""
+
+
+def q_quality_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Quality-filter ENSEMBLE — the composed keep/drop verdict a real
+    pipeline ships: Gopher repetition flags ⋈ unigram-LM perplexity ⋈
+    length/OOV heuristics, one boolean per doc. Thresholds are
+    literals; the OOV test is integer arithmetic (oov·5 ≤ n_tokens)
+    and the avg_nll test compares the decimal-summed rounded value, so
+    the verdict is engine-independent. Both signal pipelines are
+    scan-local; the ensemble adds one join on doc_id."""
+    from pyspark.sql import functions as F
+
+    from magmapandas_spark.operators.curation import (
+        lm_quality_score,
+        repetition_scores,
+    )
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    rep = repetition_scores(docs).select(
+        "doc_id", "repetitive", "max_word_run"
+    )
+    lm = lm_quality_score(docs).select(
+        "doc_id", "n_tokens", "oov_count", "avg_nll"
+    )
+    j = rep.join(lm, on="doc_id")
+    keep = (
+        (~F.col("repetitive"))
+        & (F.col("avg_nll") <= 1.478)
+        & (F.col("n_tokens") >= 20)
+        & (F.col("oov_count") * 5 <= F.col("n_tokens"))
+    )
+    return j.select(
+        "doc_id", "repetitive", "max_word_run", "n_tokens",
+        "oov_count", "avg_nll", keep.alias("keep"),
+    ).orderBy("doc_id")
+
+
+def _sql_quality_ensemble() -> str:
+    return f"""
+SELECT r.doc_id, r.repetitive, r.max_word_run, q.n_tokens,
+       q.oov_count, q.avg_nll,
+       ((NOT r.repetitive) AND q.avg_nll <= 1.478
+        AND q.n_tokens >= 20
+        AND q.oov_count * 5 <= q.n_tokens) AS keep
+FROM ({SQL_REPETITION_SCORES}) r
+JOIN ({SQL_LM_QUALITY}) q ON r.doc_id = q.doc_id
+ORDER BY r.doc_id
+"""
+
+
+# (query, oracle) pairs collected by relational.suite
+QUERIES = {
+    "vocab_topk": (q_vocab_topk, SQL_VOCAB_TOPK),
+    "ngram_contamination": (q_ngram_contamination, SQL_NGRAM_CONTAMINATION),
+    "stratified_sample": (q_stratified_sample, SQL_STRATIFIED_SAMPLE),
+    "sequence_packing": (q_sequence_packing, SQL_SEQUENCE_PACKING),
+    "repetition_scores": (q_repetition_scores, SQL_REPETITION_SCORES),
+    "lm_quality": (q_lm_quality, SQL_LM_QUALITY),
+    "text_chunks": (q_text_chunks, SQL_TEXT_CHUNKS),
+    "mixture_schedule": (q_mixture_schedule, SQL_MIXTURE_SCHEDULE),
+    "quality_ensemble": (q_quality_ensemble, _sql_quality_ensemble),
+    "weighted_sample": (q_weighted_sample, SQL_WEIGHTED_SAMPLE),
+    "stratified_weighted_sample": (
+        q_stratified_weighted_sample,
+        SQL_STRATIFIED_WEIGHTED_SAMPLE,
+    ),
+    "sentence_stats": (q_sentence_stats, SQL_SENTENCE_STATS),
+    "domain_divergence": (q_domain_divergence, SQL_DOMAIN_DIVERGENCE),
+    "bigram_lm": (q_bigram_lm, SQL_BIGRAM_LM),
+    "kfold_split": (q_kfold_split, SQL_KFOLD_SPLIT),
+    "length_lognormal": (q_length_lognormal, SQL_LENGTH_LOGNORMAL),
+    "balanced_sample": (q_balanced_sample, SQL_BALANCED_SAMPLE),
+    "text_hapax": (q_text_hapax, SQL_TEXT_HAPAX),
+    "corpus_build_funnel": (q_corpus_build_funnel, SQL_CORPUS_BUILD_FUNNEL),
+}

@@ -1,7 +1,7 @@
 """Deduplication operators for large text corpora (beyond-reference
 surface; first-class for a 100 TB training-data pipeline).
 
-- exact dedup: content-hash groupBy (see suite.q_dedup_exact)
+- exact dedup: content-hash groupBy (see :func:`q_dedup_exact`)
 - MinHash + LSH banding: shingle → n minhash signatures → band-bucket
   equi-join → candidate pairs. One shuffle per stage, no cross product.
 - SimHash: 64-bit signed-projection fingerprint + prefix buckets +
@@ -26,6 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from magmapandas_spark.relational.suite import _t
 
 #: Mersenne prime 2^31 - 1: double-hash modulus small enough that
 #: (h1 % P) + 31 * (h2 % P) can never overflow int64 in either engine
@@ -1618,3 +1620,193 @@ SELECT doc_id, n_grams, n_unique,
 FROM per_doc
 ORDER BY doc_id
 """
+
+
+# ----------------------------------------------------------------------
+# gate queries
+# ----------------------------------------------------------------------
+
+
+def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact deduplication accounting by source: md5 content hash →
+    distinct count. Hash-groupBy is the 100 TB-scale pattern (no sort,
+    single shuffle on the hash)."""
+    docs = spark.read.parquet(_t(sf_dir, "documents"))
+    return (
+        docs.groupBy("source")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.countDistinct(F.md5(F.col("text"))).alias("n_unique"),
+        )
+        .withColumn("n_dupes", F.col("n_docs") - F.col("n_unique"))
+        .orderBy("source")
+    )
+
+
+SQL_DEDUP_EXACT = """
+SELECT
+  source,
+  COUNT(*) AS n_docs,
+  COUNT(DISTINCT md5(text)) AS n_unique,
+  COUNT(*) - COUNT(DISTINCT md5(text)) AS n_dupes
+FROM documents
+GROUP BY source
+ORDER BY source
+"""
+
+
+def q_ngram_jaccard_adjacent(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Character-5-gram Jaccard similarity for adjacent doc pairs —
+    exercises shingling + set intersection with an O(n) join on the
+    composite (doc_id, shingle) key (no hot-shingle skew)."""
+    from magmapandas_spark.operators.dedup import fan_out
+
+    # fan_out: the HOF-heavy shingle build runs in the scan stage —
+    # spread it when the scan is a single small file
+    docs = fan_out(
+        spark.read.parquet(_t(sf_dir, "documents")).filter(
+            F.length("text") >= 5
+        )
+    )
+    # per-doc distinct shingle SET as one expression pass (transform
+    # over an index sequence + array_distinct): no explode, no shuffle,
+    # and the set is built once instead of once per downstream use
+    arr = F.array_distinct(
+        F.expr("transform(sequence(1, length(text) - 4),"
+               " i -> substring(text, i, 5))")
+    )
+    # route BOTH join sides through one hash exchange: the (interpreted,
+    # HOF-heavy) shingle build is materialized into a single shuffle and
+    # read twice, instead of being re-evaluated per side and again by
+    # the orderBy's range-sampling pass
+    sets = docs.select("doc_id", arr.alias("shs"),
+                       F.size(arr).alias("n")).repartition("doc_id")
+    c1 = sets.alias("c1")
+    c2 = sets.alias("c2")
+    # materialize the intersection size ONCE (three inline references
+    # would re-run array_intersect per reference)
+    pairs = (
+        c1.join(c2, F.col("c1.doc_id") + 1 == F.col("c2.doc_id"))
+        .select(
+            F.col("c1.doc_id").alias("id1"),
+            (F.col("c1.doc_id") + 1).alias("id2"),
+            F.size(
+                F.array_intersect(F.col("c1.shs"), F.col("c2.shs"))
+            ).alias("common"),
+            (F.col("c1.n") + F.col("c2.n")).alias("n_sum"),
+        )
+    )
+    return pairs.select(
+        "id1",
+        "id2",
+        "common",
+        (
+            F.col("common").cast("double")
+            / (F.col("n_sum") - F.col("common"))
+        ).alias("jaccard"),
+    ).orderBy("id1")
+
+
+SQL_NGRAM_JACCARD = """
+WITH sh AS (
+  SELECT DISTINCT doc_id, substring(text, CAST(i AS INT), 5) AS sh
+  FROM documents, UNNEST(range(1, len(text) - 3)) AS t(i)
+  WHERE len(text) >= 5
+),
+cnt AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
+common AS (
+  SELECT a.doc_id AS id1, COUNT(*) AS common
+  FROM sh a JOIN sh b ON a.doc_id + 1 = b.doc_id AND a.sh = b.sh
+  GROUP BY a.doc_id
+)
+SELECT c1.doc_id AS id1, c1.doc_id + 1 AS id2,
+  COALESCE(common.common, 0) AS common,
+  CAST(COALESCE(common.common, 0) AS DOUBLE)
+    / (c1.n + c2.n - COALESCE(common.common, 0)) AS jaccard
+FROM cnt c1
+JOIN cnt c2 ON c1.doc_id + 1 = c2.doc_id
+LEFT JOIN common ON c1.doc_id = common.id1
+ORDER BY id1
+"""
+
+
+def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Winnowing-style document fingerprint: word 3-gram shingles →
+    md5 rolling window → per-doc minimum hash (bottom-1 sketch) +
+    shingle cardinalities. Engine-portable md5 (not xxhash64) so the
+    DuckDB oracle is exact.
+
+    Fully scan-local: the hash array is built in ONE projection
+    (materialized before the aggregates so Spark's no-CSE-across-lambdas
+    limitation can't triple the md5 work) and min/size/distinct are
+    array expressions — no explode, no shuffle, no per-shingle row
+    blow-up. At 100 TB every doc is one row in, one row out."""
+    docs = spark.read.parquet(_t(sf_dir, "documents"))
+    words = F.split(F.col("text"), " ")
+    staged = (
+        docs.filter(F.size(words) >= 3)
+        .select("doc_id", words.alias("w"))
+        .select(
+            "doc_id",
+            F.expr(
+                "transform(sequence(0, size(w) - 3),"
+                " i -> md5(concat_ws(' ', w[i], w[i+1], w[i+2])))"
+            ).alias("hs"),
+        )
+    )
+    return staged.select(
+        "doc_id",
+        F.array_min("hs").alias("fp_min"),
+        F.size("hs").alias("n_shingles"),
+        F.size(F.array_distinct("hs")).alias("n_distinct"),
+    ).orderBy("doc_id")
+
+
+SQL_DOC_FINGERPRINT = """
+WITH words AS (
+  SELECT doc_id, str_split(text, ' ') AS w
+  FROM documents
+  WHERE len(str_split(text, ' ')) >= 3
+),
+shingles AS (
+  SELECT doc_id,
+         UNNEST([md5(w[i + 1] || ' ' || w[i + 2] || ' ' || w[i + 3])
+                 for i in generate_series(0, len(w) - 3)]) AS h
+  FROM words
+)
+SELECT doc_id,
+       MIN(h) AS fp_min,
+       COUNT(*) AS n_shingles,
+       COUNT(DISTINCT h) AS n_distinct
+FROM shingles
+GROUP BY doc_id
+ORDER BY doc_id
+"""
+
+
+# (query, oracle) pairs collected by relational.suite
+QUERIES = {
+    "dedup_exact": (q_dedup_exact, SQL_DEDUP_EXACT),
+    "dedup_clusters": (q_dedup_clusters, sql_dedup_clusters),
+    "dedup_clusters_distributed": (
+        q_dedup_clusters_distributed,
+        sql_dedup_clusters,
+    ),
+    "dedup_verified": (q_dedup_verified, sql_dedup_verified),
+    "ngram_jaccard_adjacent": (q_ngram_jaccard_adjacent, SQL_NGRAM_JACCARD),
+    "minhash_lsh_candidates": (
+        q_minhash_lsh_candidates,
+        sql_minhash_lsh_candidates,
+    ),
+    # xxhash64 production path: an engine-specific hash, so rows-only at
+    # the gate (DESIGN.md §2); the md5 twin above carries the oracle
+    "minhash_lsh_xxhash": (q_minhash_lsh_xxhash, None),
+    "simhash_buckets": (q_simhash_buckets, sql_simhash_buckets),
+    "doc_fingerprint": (q_doc_fingerprint, SQL_DOC_FINGERPRINT),
+    "dedup_keep_best": (q_dedup_keep_best, sql_dedup_keep_best),
+    "minhash_jaccard_est": (q_minhash_jaccard_est, sql_minhash_jaccard_est),
+    "exact_substring_dups": (q_exact_substring_dups, sql_exact_substring_dups),
+    "pair_overlap_scores": (q_pair_overlap_scores, sql_pair_overlap_scores),
+    "ngram_novelty": (q_ngram_novelty, SQL_NGRAM_NOVELTY),
+    "dedup_impact": (q_dedup_impact, SQL_DEDUP_IMPACT),
+}

@@ -712,3 +712,19 @@ ORDER BY t.qid
 
 
 SQL_KNN_LABEL_NOISE = _sql_knn_label_noise()
+
+
+# (query, oracle) pairs collected by relational.suite
+QUERIES = {
+    "ann_recall": (q_ann_recall, sql_ann_recall),
+    "retrieval_eval": (q_retrieval_eval, SQL_RETRIEVAL_EVAL),
+    "lsh_recall_eval": (q_lsh_recall_eval, SQL_LSH_RECALL_EVAL),
+    # hashed recall-bound twins of the two rows-only production probes
+    # (minhash_lsh_xxhash, ivfpq_topk)
+    "minhash_xxhash_recall_bound": (
+        q_minhash_xxhash_recall_bound,
+        SQL_MINHASH_XXHASH_RECALL_BOUND,
+    ),
+    "ivfpq_recall_bound": (q_ivfpq_recall_bound, SQL_IVFPQ_RECALL_BOUND),
+    "knn_label_noise": (q_knn_label_noise, SQL_KNN_LABEL_NOISE),
+}

@@ -602,3 +602,12 @@ SELECT cluster_id, n_members, node AS golden_key,
 FROM survivor WHERE rn = 1
 ORDER BY cluster_id
 """
+
+
+# (query, oracle) pairs collected by relational.suite
+QUERIES = {
+    "fuzzy_join": (q_fuzzy_join, SQL_FUZZY_JOIN),
+    "snm_pairs": (q_snm_pairs, SQL_SNM_PAIRS),
+    "er_golden": (q_er_golden, SQL_ER_GOLDEN),
+    "er_golden_multipass": (q_er_golden_multipass, SQL_ER_GOLDEN_MULTIPASS),
+}

@@ -511,3 +511,12 @@ SELECT l_orderkey * 10 + l_linenumber AS name,
 FROM lineitem
 ORDER BY name
 """
+
+
+# (query, oracle) pairs collected by relational.suite
+QUERIES = {
+    "chondrite_normalize": (q_chondrite_normalize, sql_chondrite_normalize),
+    "reservoir_normalize": (q_reservoir_normalize, sql_reservoir_normalize),
+    "tas_classification": (q_tas_classification, sql_tas_classification),
+    "rhodes_grid": (q_rhodes_grid, sql_rhodes_grid),
+}

@@ -336,3 +336,9 @@ FROM px
 GROUP BY media_id, w, h
 ORDER BY media_id
 """
+
+
+# (query, oracle) pairs collected by relational.suite
+QUERIES = {
+    "gif_decode": (q_gif_decode, SQL_GIF_DECODE),
+}

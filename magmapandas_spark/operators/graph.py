@@ -1010,3 +1010,18 @@ SELECT CAST(n AS BIGINT) AS n_edges,
          AS assortativity
 FROM g
 """
+
+
+# (query, oracle) pairs collected by relational.suite
+QUERIES = {
+    "pagerank": (q_pagerank, sql_pagerank),
+    "triangle_count": (q_triangle_count, SQL_TRIANGLE_COUNT),
+    "label_propagation": (q_label_propagation, SQL_LABEL_PROPAGATION),
+    "kcore": (q_kcore, SQL_KCORE),
+    "two_hop_reach": (q_two_hop_reach, SQL_TWO_HOP_REACH),
+    "degree_assortativity": (q_degree_assortativity, SQL_DEGREE_ASSORTATIVITY),
+    "personalized_pagerank": (
+        q_personalized_pagerank,
+        SQL_PERSONALIZED_PAGERANK,
+    ),
+}

@@ -6228,3 +6228,27 @@ def __getattr__(name: str) -> str:
     raise AttributeError(
         f"module {__name__!r} has no attribute {name!r}"
     )
+
+
+# (query, oracle) pairs collected by relational.suite
+QUERIES = {
+    "h264_ipcm_decode": (q_h264_ipcm_decode, SQL_H264_IPCM_DECODE),
+    "h264_intra_decode": (q_h264_intra_decode, SQL_H264_INTRA_DECODE),
+    "h264_cavlc_decode": (q_h264_cavlc_decode, SQL_H264_CAVLC_DECODE),
+    "h264_lumadc_decode": (q_h264_lumadc_decode, SQL_H264_LUMADC_DECODE),
+    "h264_plane_decode": (q_h264_plane_decode, SQL_H264_PLANE_DECODE),
+    "h264_gop_decode": (q_h264_gop_decode, SQL_H264_GOP_DECODE),
+    "h264_full_decode": (q_h264_full_decode, SQL_H264_FULL_DECODE),
+    "h264_multiqp_decode": (q_h264_multiqp_decode, SQL_H264_MULTIQP_DECODE),
+    "h264_qptrack_decode": (q_h264_qptrack_decode, SQL_H264_QPTRACK_DECODE),
+    "video_fingerprint": (q_video_fingerprint, SQL_VIDEO_FINGERPRINT),
+    "h264_ac_decode": (q_h264_ac_decode, _LAZY_SQL["SQL_H264_AC_DECODE"]),
+    "h264_i4x4_decode": (
+        q_h264_i4x4_decode,
+        _LAZY_SQL["SQL_H264_I4X4_DECODE"],
+    ),
+    "h264_ladder_decode": (
+        q_h264_ladder_decode,
+        _LAZY_SQL["SQL_H264_LADDER_DECODE"],
+    ),
+}

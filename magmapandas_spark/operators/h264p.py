@@ -3643,3 +3643,29 @@ def _sql_h264_reorder(slice_col: str = "n_slices") -> str:
         " % 256",
         "1", slice_col, p_frames=(1, 2, 3),
     )
+
+
+# (query, oracle) pairs collected by relational.suite
+QUERIES = {
+    "h264_p_decode": (q_h264_p_decode, _LAZY_SQL["SQL_H264_P_DECODE"]),
+    "h264_pparts_decode": (
+        q_h264_pparts_decode,
+        _LAZY_SQL["SQL_H264_PPARTS_DECODE"],
+    ),
+    "h264_p8x8_decode": (
+        q_h264_p8x8_decode,
+        _LAZY_SQL["SQL_H264_P8X8_DECODE"],
+    ),
+    "h264_multiref_decode": (
+        q_h264_multiref_decode,
+        _LAZY_SQL["SQL_H264_MULTIREF_DECODE"],
+    ),
+    "h264_weighted_decode": (
+        q_h264_weighted_decode,
+        _LAZY_SQL["SQL_H264_WEIGHTED_DECODE"],
+    ),
+    "h264_reorder_decode": (
+        q_h264_reorder_decode,
+        _LAZY_SQL["SQL_H264_REORDER_DECODE"],
+    ),
+}

@@ -165,3 +165,9 @@ SELECT page.doc_id,
 FROM page JOIN txt ON page.doc_id = txt.doc_id
 ORDER BY page.doc_id
 """
+
+
+# (query, oracle) pairs collected by relational.suite
+QUERIES = {
+    "html_extract": (q_html_extract, SQL_HTML_EXTRACT),
+}

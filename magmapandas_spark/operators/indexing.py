@@ -404,3 +404,10 @@ def bm25_from_index(
         .orderBy(F.desc("score"), "doc")
         .limit(top_k)
     )
+
+
+# (query, oracle) pairs collected by relational.suite
+QUERIES = {
+    "domain_topk": (q_domain_topk, SQL_DOMAIN_TOPK),
+    "inverted_index": (q_inverted_index, SQL_INVERTED_INDEX),
+}

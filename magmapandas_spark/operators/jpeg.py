@@ -745,3 +745,9 @@ JOIN dc ON nbagg.media_id = dc.media_id
 JOIN ac ON nbagg.media_id = ac.media_id
 ORDER BY nbagg.media_id
 """
+
+
+# (query, oracle) pairs collected by relational.suite
+QUERIES = {
+    "jpeg_decode": (q_jpeg_decode, SQL_JPEG_DECODE),
+}

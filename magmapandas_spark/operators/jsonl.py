@@ -130,3 +130,9 @@ SELECT rec_no,
 FROM lines
 ORDER BY rec_no
 """
+
+
+# (query, oracle) pairs collected by relational.suite
+QUERIES = {
+    "jsonl_ingest": (q_jsonl_ingest, SQL_JSONL_INGEST),
+}

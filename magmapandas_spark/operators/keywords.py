@@ -117,3 +117,9 @@ LIMIT {_TOP_K}
 
 
 SQL_RAKE_KEYWORDS = _sql_rake()
+
+
+# (query, oracle) pairs collected by relational.suite
+QUERIES = {
+    "rake_keywords": (q_rake_keywords, SQL_RAKE_KEYWORDS),
+}

@@ -279,3 +279,9 @@ FROM afinal
 GROUP BY cell
 ORDER BY cell
 """
+
+
+# (query, oracle) pairs collected by relational.suite
+QUERIES = {
+    "kmeans_refine": (q_kmeans_refine, sql_kmeans_refine),
+}

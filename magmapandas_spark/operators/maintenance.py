@@ -451,3 +451,10 @@ FROM d, delta
 GROUP BY change, delta.price_delta
 ORDER BY change
 """
+
+
+# (query, oracle) pairs collected by relational.suite
+QUERIES = {
+    "merge_upsert": (q_merge_upsert, SQL_MERGE_UPSERT),
+    "table_diff": (q_table_diff, SQL_TABLE_DIFF),
+}

@@ -18,8 +18,10 @@ the reference.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from magmapandas_spark.relational.suite import _t
 
 
 def _arr_mean(arr):
@@ -157,3 +159,66 @@ def fit_error_function(
             if lam > 1e12:
                 break
     return p, (float(x.min()), float(x.max()))
+
+
+# ----------------------------------------------------------------------
+# gate queries
+# ----------------------------------------------------------------------
+
+
+def q_running_stddev(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Running windowed stddev of part size ordered by retail price
+    with 2σ-from-median rejection (``tools/model_errors.py:20-42``) —
+    ordered window + higher-order array expressions, no UDF."""
+    from magmapandas_spark.operators.model_errors import running_stddev
+
+    part = spark.read.parquet(_t(sf_dir, "part")).select(
+        F.col("p_retailprice").alias("x"),
+        F.col("p_size").cast("double").alias("y"),
+        F.col("p_partkey").alias("tb"),
+    )
+    out = running_stddev(part, "x", "y", boxsize=30, sigma=2.0,
+                         tiebreak="tb")
+    return out.select(
+        F.round("x", 4).alias("x"), F.round("stddev", 4).alias("stddev")
+    ).orderBy("x")
+
+
+SQL_RUNNING_STDDEV = """
+WITH base AS (
+  SELECT p_retailprice AS x, CAST(p_size AS DOUBLE) AS y, p_partkey AS tb
+  FROM part
+  WHERE p_size IS NOT NULL
+),
+w AS (
+  SELECT x,
+    ROW_NUMBER() OVER (ORDER BY x, tb) AS rn,
+    COUNT(*) OVER () AS n,
+    list(y) OVER (ORDER BY x, tb
+                  ROWS BETWEEN 15 PRECEDING AND 13 FOLLOWING) AS ys
+  FROM base
+),
+f AS (SELECT x, ys FROM w WHERE rn > 15 AND rn <= n - 15),
+calc AS (
+  SELECT x, ys,
+    list_sort(ys)[(len(ys) + 1) // 2] AS med,
+    sqrt(list_sum([v * v for v in ys]) / len(ys)
+         - (list_sum(ys) / len(ys)) ^ 2) AS std_all
+  FROM f
+),
+kept AS (
+  SELECT x, [v for v in ys if abs(v - med) < 2.0 * std_all] AS k
+  FROM calc
+)
+SELECT ROUND(x, 4) AS x,
+       ROUND(sqrt(list_sum([v * v for v in k]) / len(k)
+                  - (list_sum(k) / len(k)) ^ 2), 4) AS stddev
+FROM kept
+ORDER BY x
+"""
+
+
+# (query, oracle) pairs collected by relational.suite
+QUERIES = {
+    "running_stddev": (q_running_stddev, SQL_RUNNING_STDDEV),
+}

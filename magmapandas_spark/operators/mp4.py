@@ -47,7 +47,9 @@ Scale posture: identical to every decode path — one narrow
 
 from __future__ import annotations
 
+import importlib
 import struct
+from typing import Callable
 
 import numpy as np
 import pandas as pd
@@ -1111,3 +1113,31 @@ def q_h264_mp4_p_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         "media_id",
         "frame_idx",
     )
+
+
+def _codec_oracle(module: str, name: str) -> Callable[[], str]:
+    """Builder for an AVC-in-MP4 oracle, which h264/h264p build beside
+    their decoders' explicit-loop twins; imported on first build."""
+    return lambda: getattr(
+        importlib.import_module(f"magmapandas_spark.operators.{module}"),
+        name,
+    )
+
+
+# (query, oracle) pairs collected by relational.suite
+QUERIES = {
+    "mp4_metadata": (q_mp4_metadata, SQL_MP4_METADATA),
+    "video_frame_decode": (q_video_frame_decode, SQL_VIDEO_FRAME_DECODE),
+    "h264_mp4_decode": (
+        q_h264_mp4_decode,
+        _codec_oracle("h264", "SQL_H264_MP4_DECODE"),
+    ),
+    "h264_mp4_ac_decode": (
+        q_h264_mp4_ac_decode,
+        _codec_oracle("h264", "SQL_H264_MP4_AC_DECODE"),
+    ),
+    "h264_mp4_p_decode": (
+        q_h264_mp4_p_decode,
+        _codec_oracle("h264p", "SQL_H264_MP4_P_DECODE"),
+    ),
+}

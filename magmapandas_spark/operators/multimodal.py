@@ -708,7 +708,7 @@ ORDER BY fmt
 def q_crossmodal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gate query: ONE per-asset dedup verdict joining all four
     fingerprint legs of the multimodal quad — text (winnowing-style
-    shingle bottom-1, suite3 ``doc_fingerprint``), video (per-frame
+    shingle bottom-1, dedup ``doc_fingerprint``), video (per-frame
     luma histograms through the real H.264 decode, h264.py), audio
     (amplitude histograms through the real WAV/PCM decode, wav.py),
     image (pixel histograms through the real PNG inflate/unfilter,
@@ -729,7 +729,7 @@ def q_crossmodal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from magmapandas_spark.operators.h264 import q_video_fingerprint
     from magmapandas_spark.operators.png import q_image_fingerprint
     from magmapandas_spark.operators.wav import q_audio_fingerprint
-    from magmapandas_spark.relational.suite3 import q_doc_fingerprint
+    from magmapandas_spark.operators.dedup import q_doc_fingerprint
 
     aid = (F.col("media_id") % 12).alias("asset_id")
 
@@ -826,7 +826,7 @@ def _sql_crossmodal() -> str:
     from magmapandas_spark.operators.h264 import SQL_VIDEO_FINGERPRINT
     from magmapandas_spark.operators.png import SQL_IMAGE_FINGERPRINT
     from magmapandas_spark.operators.wav import SQL_AUDIO_FINGERPRINT
-    from magmapandas_spark.relational.suite3 import SQL_DOC_FINGERPRINT
+    from magmapandas_spark.operators.dedup import SQL_DOC_FINGERPRINT
 
     return f"""
 WITH vm AS (
@@ -884,3 +884,14 @@ SELECT asset_id, n_video_dup, n_audio_dup, n_image_dup, n_text_dup,
 FROM rep
 ORDER BY asset_id
 """
+
+
+# (query, oracle) pairs collected by relational.suite
+QUERIES = {
+    "media_features": (q_media_features, SQL_MEDIA_FEATURES),
+    "image_decode": (q_image_decode, SQL_IMAGE_DECODE),
+    "media_inventory": (q_media_inventory, SQL_MEDIA_INVENTORY),
+    "video_frames": (q_video_frames, SQL_VIDEO_FRAMES),
+    "audio_chunks": (q_audio_chunks, SQL_AUDIO_CHUNKS),
+    "crossmodal_dedup": (q_crossmodal_dedup, _sql_crossmodal),
+}

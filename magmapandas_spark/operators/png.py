@@ -617,3 +617,11 @@ SELECT bj.media_id, ij.idx_media_id, bj.fp
 FROM bj JOIN ij ON ij.fp = bj.fp
 ORDER BY media_id, idx_media_id
 """
+
+
+# (query, oracle) pairs collected by relational.suite
+QUERIES = {
+    "png_decode": (q_png_decode, SQL_PNG_DECODE),
+    "image_fingerprint": (q_image_fingerprint, SQL_IMAGE_FINGERPRINT),
+    "fp_index_probe": (q_fp_index_probe, SQL_FP_INDEX_PROBE),
+}

@@ -109,3 +109,9 @@ FROM per_row
 GROUP BY grp
 ORDER BY c_mktsegment
 """
+
+
+# (query, oracle) pairs collected by relational.suite
+QUERIES = {
+    "randomized_response": (q_randomized_response, SQL_RANDOMIZED_RESPONSE),
+}

@@ -198,3 +198,9 @@ ORDER BY proj_rank
 
 
 SQL_RANDOM_PROJECTION = _sql_random_projection()
+
+
+# (query, oracle) pairs collected by relational.suite
+QUERIES = {
+    "random_projection": (q_random_projection, SQL_RANDOM_PROJECTION),
+}

@@ -270,3 +270,9 @@ def merge_histograms(a: DataFrame, b: DataFrame, group_col: str) -> DataFrame:
         .groupBy(group_col, "bin")
         .agg(F.sum("cnt").alias("cnt"))
     )
+
+
+# (query, oracle) pairs collected by relational.suite
+QUERIES = {
+    "histogram_quantiles": (q_histogram_quantiles, SQL_HISTOGRAM_QUANTILES),
+}

@@ -317,3 +317,10 @@ SELECT l_returnflag, n_rows, beta0, beta1, beta2,
 FROM betas
 ORDER BY l_returnflag
 """
+
+
+# (query, oracle) pairs collected by relational.suite
+QUERIES = {
+    "linreg_normal": (q_linreg_normal, SQL_LINREG_NORMAL),
+    "ols_multi": (q_ols_multi, SQL_OLS_MULTI),
+}

@@ -259,3 +259,10 @@ ORDER BY user_id, event_id
 
 
 SQL_EWMA_SMOOTH = _sql_ewma()
+
+
+# (query, oracle) pairs collected by relational.suite
+QUERIES = {
+    "mad_outliers": (q_mad_outliers, SQL_MAD_OUTLIERS),
+    "ewma_smooth": (q_ewma_smooth, SQL_EWMA_SMOOTH),
+}

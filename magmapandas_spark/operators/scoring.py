@@ -356,3 +356,11 @@ WHERE n_chars > 0
 ORDER BY priority DESC, doc_id
 LIMIT 100
 """
+
+
+# (query, oracle) pairs collected by relational.suite
+QUERIES = {
+    "quality_classifier": (q_quality_classifier, _sql_quality_classifier),
+    "dsir_importance": (q_dsir_importance, _sql_dsir_importance),
+    "curated_sample": (q_curated_sample, _sql_curated_sample),
+}

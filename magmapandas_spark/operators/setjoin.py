@@ -196,3 +196,9 @@ JOIN sz sb ON sb.doc_id = i.b
 WHERE i.n_inter * 1000000 // (sa.s + sb.s - i.n_inter) >= {_TAU_PPM}
 ORDER BY doc_a, doc_b
 """
+
+
+# (query, oracle) pairs collected by relational.suite
+QUERIES = {
+    "setsim_join": (q_setsim_join, SQL_SETSIM_JOIN),
+}

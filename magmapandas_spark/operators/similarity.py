@@ -22,12 +22,15 @@ corpus is a data bug better surfaced than smoothed.
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from magmapandas_spark.operators.dedup import fan_out
+from magmapandas_spark.relational.suite import _t
 
 
 def _norm(vec_col):
@@ -1871,3 +1874,105 @@ def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.filter(F.col("vec_id") < 20), codes, cent, cbs
     )
     return out.select("qid", "rn", "cid").orderBy("qid", "rn")
+
+
+# ----------------------------------------------------------------------
+# gate queries
+# ----------------------------------------------------------------------
+
+
+def q_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Brute-force cosine top-5 neighbors for the first 20 vectors.
+
+    The query side is broadcast; the dot product is an explicitly
+    ordered left fold so Spark and DuckDB produce bit-identical doubles
+    (both engines: 0.0 + Σ left-to-right over float32→double promoted
+    products)."""
+    from magmapandas_spark.operators.similarity import cosine_topk_bruteforce
+
+    emb = spark.read.parquet(_t(sf_dir, "embeddings"))
+    queries = emb.filter(F.col("vec_id") < 20)
+    out = cosine_topk_bruteforce(
+        queries, emb, id_col="vec_id", vec_col="embedding", k=5
+    )
+    return out.select(
+        "qid", "cid", F.round("cos", 6).alias("cos"), "rn"
+    ).orderBy("qid", "rn")
+
+
+SQL_EMBEDDING_TOPK = """
+WITH q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 20),
+dots AS (
+  SELECT q.vec_id AS qid, e.vec_id AS cid,
+    list_reduce(
+      list_transform(q.embedding, (x, i) ->
+        CAST(x AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)),
+      (a, b) -> a + b) AS dot,
+    sqrt(list_reduce(
+      list_transform(q.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)),
+      (a, b) -> a + b)) AS nq,
+    sqrt(list_reduce(
+      list_transform(e.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)),
+      (a, b) -> a + b)) AS nc
+  FROM q, embeddings e
+  WHERE e.vec_id != q.vec_id
+),
+ranked AS (
+  SELECT qid, cid, dot / (nq * nc) AS cos,
+    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY dot / (nq * nc) DESC, cid) AS rn
+  FROM dots
+)
+SELECT qid, cid, ROUND(cos, 6) AS cos, rn
+FROM ranked WHERE rn <= 5
+ORDER BY qid, rn
+"""
+
+
+def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact cosine near-duplicate pairs above 0.45 (the synthetic
+    embeddings are near-orthogonal, so 0.45 is the regime with real
+    pairs to verify): the oracle-checked baseline for the LSH-bucketed
+    scale path (operators.similarity.cosine_topk_lsh)."""
+    from magmapandas_spark.operators.similarity import all_pairs_cosine
+
+    emb = spark.read.parquet(_t(sf_dir, "embeddings"))
+    out = all_pairs_cosine(emb, threshold=0.45, n_blocks=4)
+    return out.select(
+        "id_a", "id_b", F.round("cos_sim", 4).alias("cos_sim")
+    ).orderBy("id_a", "id_b")
+
+
+SQL_EMBEDDING_NEARDUP = """
+WITH pairs AS (
+  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+         list_cosine_similarity(
+           CAST(a.embedding AS DOUBLE[]),
+           CAST(b.embedding AS DOUBLE[])
+         ) AS cos
+  FROM embeddings a
+  JOIN embeddings b ON a.vec_id < b.vec_id
+)
+SELECT id_a, id_b, ROUND(cos, 4) AS cos_sim
+FROM pairs
+WHERE cos >= 0.45
+ORDER BY id_a, id_b
+"""
+
+
+# (query, oracle) pairs collected by relational.suite
+QUERIES = {
+    "embedding_topk": (q_embedding_topk, SQL_EMBEDDING_TOPK),
+    "embedding_neardup": (q_embedding_neardup, SQL_EMBEDDING_NEARDUP),
+    "ivf_topk": (q_ivf_topk, sql_ivf_topk),
+    "ivf_topk_seeded": (q_ivf_topk_seeded, sql_ivf_topk_seeded),
+    "lsh_topk": (q_lsh_topk, sql_lsh_topk),
+    "pq_topk_seeded": (q_pq_topk_seeded, sql_pq_topk_seeded),
+    # rows-only production probe (DESIGN.md §2): ivf_topk_seeded and
+    # pq_topk_seeded verify its pieces under the hash
+    "ivfpq_topk": (q_ivfpq_topk, None),
+    "semdedup": (q_semdedup, sql_semdedup),
+    "semdedup_sharded": (
+        q_semdedup_sharded,
+        partial(sql_semdedup, max_cell_rows=_SEMDEDUP_GATE_MCR),
+    ),
+}

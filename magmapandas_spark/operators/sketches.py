@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from magmapandas_spark.operators.curation import SQL_WORD_TOKENS
 from magmapandas_spark.operators.dedup import _md5_60
 
 #: 2^60 — _md5_60 yields uniform integers in [0, 2^60).
@@ -491,15 +492,9 @@ def q_cms_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cms_token_counts(docs).orderBy(F.desc("tf"), "token")
 
 
-#: DuckDB twin of curation.word_tokens (same as suite4's)
-_SQL_CMS_TOKS = (
-    "list_filter(str_split_regex(lower(text), '[^a-z0-9]+'),"
-    " x -> x <> '')"
-)
-
 SQL_CMS_TOPK = f"""
 WITH tok AS (
-  SELECT unnest({_SQL_CMS_TOKS}) AS token FROM documents
+  SELECT unnest({SQL_WORD_TOKENS}) AS token FROM documents
 ),
 tf AS (
   SELECT token, COUNT(*) AS tf FROM tok GROUP BY token
@@ -839,3 +834,13 @@ SELECT
     AS BIGINT) AS est_inter
 FROM stats
 """
+
+
+# (query, oracle) pairs collected by relational.suite
+QUERIES = {
+    "kmv_distinct": (q_kmv_distinct, SQL_KMV_DISTINCT),
+    "hll_distinct": (q_hll_distinct, SQL_HLL_DISTINCT),
+    "cms_topk": (q_cms_topk, SQL_CMS_TOPK),
+    "hll_join_card": (q_hll_join_card, SQL_HLL_JOIN_CARD),
+    "kmv_setops": (q_kmv_setops, SQL_KMV_SETOPS),
+}

@@ -16,8 +16,10 @@ the unsalted equivalent, only the shuffle fan-out changes.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from magmapandas_spark.relational.suite import SQL_DSUM, _t, dsum
 
 
 def salted_join(
@@ -101,3 +103,95 @@ def salted_count_distinct(
         .agg(F.count_distinct(F.col("__v")).alias("__nd"))
     )
     return per_bucket.groupBy(*keys).agg(F.sum("__nd").alias(out_col))
+
+
+# ----------------------------------------------------------------------
+# gate queries
+# ----------------------------------------------------------------------
+
+
+def q_skew_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact distinct-order counts over 8 deliberately hot keys via
+    value-hash salting (``operators.skew.salted_count_distinct``):
+    COUNT(DISTINCT) is non-algebraic, so without salting every row of a
+    hot key converges on one reduce task. Values are exactly the plain
+    COUNT(DISTINCT) — the oracle is the unsalted SQL."""
+    from magmapandas_spark.operators.skew import salted_count_distinct
+
+    li = spark.read.parquet(_t(sf_dir, "lineitem"))
+    hot = li.select(
+        (F.col("l_partkey") % 8).alias("hot_key"), "l_orderkey"
+    )
+    out = salted_count_distinct(hot, ["hot_key"], "l_orderkey", n_salt=16)
+    return out.orderBy("hot_key")
+
+
+SQL_SKEW_DISTINCT = """
+SELECT l_partkey % 8 AS hot_key,
+       COUNT(DISTINCT l_orderkey) AS n_distinct
+FROM lineitem
+GROUP BY 1
+ORDER BY hot_key
+"""
+
+
+def q_salted_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Weighted revenue through a salted equi-join on 10 hot keys
+    (``operators.skew.salted_join``): the dimension side is replicated
+    per salt shard so each hot key spreads over n_salt reduce tasks.
+    Join output — and therefore the aggregate — is byte-identical to
+    the plain join the oracle runs."""
+    from magmapandas_spark.operators.skew import salted_join
+
+    li = spark.read.parquet(_t(sf_dir, "lineitem")).select(
+        (F.col("l_partkey") % 10).alias("hot_key"),
+        "l_extendedprice",
+        "l_discount",
+    )
+    dim = (
+        spark.read.parquet(_t(sf_dir, "part"))
+        .select((F.col("p_partkey") % 10).alias("hot_key"))
+        .distinct()
+        .withColumn(
+            "factor", F.col("hot_key").cast("double") * F.lit(0.01) + F.lit(1.0)
+        )
+    )
+    joined = salted_join(li, dim, on=["hot_key"], n_salt=8)
+    return (
+        joined.groupBy("hot_key")
+        .agg(
+            dsum(
+                F.col("l_extendedprice")
+                * (F.lit(1.0) - F.col("l_discount"))
+                * F.col("factor")
+            ).alias("weighted_revenue"),
+            F.count(F.lit(1)).alias("n"),
+        )
+        .orderBy("hot_key")
+    )
+
+
+SQL_SALTED_JOIN_REVENUE = f"""
+WITH dim AS (
+  SELECT DISTINCT p_partkey % 10 AS hot_key FROM part
+),
+dimf AS (
+  SELECT hot_key, CAST(hot_key AS DOUBLE) * 0.01 + 1.0 AS factor FROM dim
+)
+SELECT l.hot_key,
+  {SQL_DSUM.format(x="l.l_extendedprice * (1.0 - l.l_discount) * dimf.factor")}
+    AS weighted_revenue,
+  COUNT(*) AS n
+FROM (SELECT l_partkey % 10 AS hot_key, l_extendedprice, l_discount
+      FROM lineitem) l
+JOIN dimf ON l.hot_key = dimf.hot_key
+GROUP BY l.hot_key
+ORDER BY l.hot_key
+"""
+
+
+# (query, oracle) pairs collected by relational.suite
+QUERIES = {
+    "skew_distinct": (q_skew_distinct, SQL_SKEW_DISTINCT),
+    "salted_join_revenue": (q_salted_join_revenue, SQL_SALTED_JOIN_REVENUE),
+}

@@ -88,3 +88,9 @@ WHERE NOT ((l.prev_max IS NOT NULL AND l.prev_max >= p.p_size)
            OR l.lvl_max > p.p_size)
 ORDER BY p.p_retailprice, p.p_partkey
 """
+
+
+# (query, oracle) pairs collected by relational.suite
+QUERIES = {
+    "skyline_parts": (q_skyline_parts, SQL_SKYLINE_PARTS),
+}

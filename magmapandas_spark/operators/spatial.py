@@ -206,3 +206,9 @@ SELECT pk AS probe_key, ck AS nearest_key, d2, n_candidates
 FROM ranked WHERE rn = 1
 ORDER BY probe_key
 """
+
+
+# (query, oracle) pairs collected by relational.suite
+QUERIES = {
+    "geo_nearest": (q_geo_nearest, SQL_GEO_NEAREST),
+}

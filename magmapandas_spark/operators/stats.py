@@ -998,3 +998,15 @@ SELECT * FROM fd1 UNION ALL SELECT * FROM fd2 UNION ALL
 SELECT * FROM fd3
 ORDER BY fd
 """
+
+
+# (query, oracle) pairs collected by relational.suite
+QUERIES = {
+    "table_stats": (q_table_stats, SQL_TABLE_STATS),
+    "zonemap_prune": (q_zonemap_prune, SQL_ZONEMAP_PRUNE),
+    "bootstrap_ci": (q_bootstrap_ci, SQL_BOOTSTRAP_CI),
+    "mutual_info": (q_mutual_info, SQL_MUTUAL_INFO),
+    "fd_check": (q_fd_check, SQL_FD_CHECK),
+    "corr_matrix": (q_corr_matrix, SQL_CORR_MATRIX),
+    "psi_drift": (q_psi_drift, SQL_PSI_DRIFT),
+}

@@ -453,3 +453,11 @@ FROM sparse s FULL OUTER JOIN dense d ON s.doc_id = d.doc_id
 ORDER BY rrf DESC, doc_id
 LIMIT {top_k}
 """
+
+
+# (query, oracle) pairs collected by relational.suite
+QUERIES = {
+    "tfidf_search": (q_tfidf_search, SQL_TFIDF_SEARCH),
+    "bm25_search": (q_bm25_search, _sql_bm25_search),
+    "hybrid_search": (q_hybrid_search, _sql_hybrid_search),
+}

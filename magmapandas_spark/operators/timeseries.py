@@ -600,3 +600,13 @@ SELECT dow, hour, n, n_outliers,
 FROM flagged
 ORDER BY dow, hour
 """
+
+
+# (query, oracle) pairs collected by relational.suite
+QUERIES = {
+    "gap_fill": (q_gap_fill, SQL_GAP_FILL),
+    "cusum_alarms": (q_cusum_alarms, SQL_CUSUM_ALARMS),
+    "triangle_downsample": (q_triangle_downsample, SQL_TRIANGLE_DOWNSAMPLE),
+    "seasonal_outliers": (q_seasonal_outliers, SQL_SEASONAL_OUTLIERS),
+    "seasonal_profile": (q_seasonal_profile, SQL_SEASONAL_PROFILE),
+}

@@ -404,3 +404,11 @@ ORDER BY e.digit
 
 
 SQL_BENFORD_AUDIT = _sql_benford()
+
+
+# (query, oracle) pairs collected by relational.suite
+QUERIES = {
+    "validate_lineitem": (q_validate_lineitem, SQL_VALIDATE_LINEITEM),
+    "skew_report": (q_skew_report, SQL_SKEW_REPORT),
+    "benford_audit": (q_benford_audit, SQL_BENFORD_AUDIT),
+}

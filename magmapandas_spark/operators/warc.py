@@ -305,3 +305,10 @@ def q_warc_gz_records(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: lossless → same oracle as the uncompressed gate
 SQL_WARC_GZ_RECORDS = SQL_WARC_RECORDS
+
+
+# (query, oracle) pairs collected by relational.suite
+QUERIES = {
+    "warc_records": (q_warc_records, SQL_WARC_RECORDS),
+    "warc_gz_records": (q_warc_gz_records, SQL_WARC_GZ_RECORDS),
+}

@@ -344,3 +344,10 @@ JOIN fp2 f2 ON f2.ie = c.ie
 JOIN dups d ON d.fp = f2.fp
 ORDER BY c.media_id
 """
+
+
+# (query, oracle) pairs collected by relational.suite
+QUERIES = {
+    "wav_chunks": (q_wav_chunks, SQL_WAV_CHUNKS),
+    "audio_fingerprint": (q_audio_fingerprint, SQL_AUDIO_FINGERPRINT),
+}

@@ -993,3 +993,16 @@ ORDER BY c_nationkey, c_mktsegment, bal_band
 
 
 SQL_T_CLOSENESS = _sql_t_closeness()
+
+
+# (query, oracle) pairs collected by relational.suite
+QUERIES = {
+    "pii_scan": (q_pii_scan, SQL_PII_SCAN),
+    "url_canonical": (q_url_canonical, SQL_URL_CANONICAL),
+    "host_quota": (q_host_quota, SQL_HOST_QUOTA),
+    "robots_filter": (q_robots_filter, SQL_ROBOTS_FILTER),
+    "line_dedup": (q_line_dedup, SQL_LINE_DEDUP),
+    "k_anonymity": (q_k_anonymity, SQL_K_ANONYMITY),
+    "l_diversity": (q_l_diversity, SQL_L_DIVERSITY),
+    "t_closeness": (q_t_closeness, SQL_T_CLOSENESS),
+}

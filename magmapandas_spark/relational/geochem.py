@@ -1,274 +1,383 @@
-"""Correctness-suite extension 3: sessionization, document
-fingerprinting, embedding near-dup pairs, Allison/isobar volatile
-queries, Monte-Carlo error propagation.
+"""Geochemistry gate queries: the paper's models over the synthetic
+melt table (:func:`suite.synthetic_melt`) and over olivine, Fe-Ti oxide
+and plagioclase fixtures derived from ``lineitem`` the same way.
 
-Same contract as :mod:`suite` / :mod:`suite2`: every query returns a
-DataFrame whose columns are aliased identically to its DuckDB oracle;
-big-sum aggregates go through DECIMAL(18,6) casts for
-order-independence; model outputs are ROUNDed on both sides.
-"""
+Expression-tier models have exact SQL twins built from the same
+formulas; solver-tier models (per-row fixed points, EOS integrals)
+are checked against the DuckDB replays in :mod:`solver_oracles`.
+Model outputs are ROUNDed on both sides."""
 
 from __future__ import annotations
+
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from magmapandas_spark.chem import elements as chem
+from magmapandas_spark.core.geoframe import GeoFrame
 from magmapandas_spark.relational.suite import (
-    SQL_DSUM,
+    MELT_SPECIES,
+    SQL_MELT_CTE,
+    _sql_mole_fraction_terms,
     _t,
-    dsum,
     heavy_sorted,
     synthetic_melt,
 )
 
+W = chem.calculate_weight
+R_GAS = 8.314462618
+
+
+def _solver_oracle(name: str) -> Callable[[], str]:
+    """Oracle builder for a solver-tier query. ``solver_oracles``
+    imports the model modules, so it loads when an oracle is built,
+    not when the registry is listed."""
+
+    def build() -> str:
+        from magmapandas_spark.relational import solver_oracles
+
+        return getattr(solver_oracles, name)(SQL_MELT_CTE)
+
+    return build
+
+
 # ----------------------------------------------------------------------
-# sessionization (streaming twin: streams.user_sessions)
+# melt thermometers, redox, density/viscosity, olivine
 # ----------------------------------------------------------------------
 
-def q_event_deltas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LAG-based per-user deltas: value change and seconds elapsed
-    since each user's previous event. Covers offset window functions
-    (the suite otherwise exercises rank, sliding frames and cumulative
-    frames); one shuffle on user_id."""
-    from pyspark.sql import Window
 
-    from magmapandas_spark.streaming.streams import read_events_batch
+def q_thermometer_putirka15(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Default melt thermometer (Putirka 2008 eq. 15,
+    ``thermometers/melt.py:191-279``) over the synthetic melt table —
+    narrow, shuffle-free expression pipeline."""
+    from magmapandas_spark.models import thermometers as tm
 
-    events = read_events_batch(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    prev_v = F.lag("value").over(w)
-    prev_ts = F.lag("ts").over(w)
-    return (
-        events.select(
-            "user_id",
-            "event_id",
-            F.round((F.col("value") - prev_v), 6).alias("value_delta"),
-            (
-                F.unix_timestamp("ts") - F.unix_timestamp(prev_ts)
-            ).alias("gap_s"),
-        )
-        .filter(F.col("value_delta").isNotNull())
-        .orderBy("user_id", "event_id")
+    gf = synthetic_melt(spark, sf_dir)
+    out = tm.putirka2008_15(gf, P_bar="P_bar")
+    return out.select("name", F.round("T_K", 4).alias("T_K")).orderBy("name")
+
+
+def _sql_thermometer_putirka15() -> str:
+    anhyd = [s for s in MELT_SPECIES if s != "H2O"]
+    _, frac = _sql_mole_fraction_terms(anhyd)
+    mg_no = f"({frac['MgO']} / ({frac['MgO']} + {frac['FeO']}))"
+    t_k = (
+        f"815.3 + 265.5 * {mg_no} + 15.37 * MgO + 8.61 * FeO"
+        f" + 6.646 * (Na2O + K2O) + 39.16 * (P_bar / 10000.0)"
+        f" - 12.83 * H2O + 273.15"
     )
-
-
-SQL_EVENT_DELTAS = """
-SELECT user_id, event_id,
-  ROUND(value - LAG(value) OVER w, 6) AS value_delta,
-  CAST(FLOOR(epoch(ts)) AS BIGINT)
-    - CAST(FLOOR(epoch(LAG(ts) OVER w)) AS BIGINT) AS gap_s
-FROM events
-WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-QUALIFY value_delta IS NOT NULL
-ORDER BY user_id, event_id
+    return f"""
+WITH {SQL_MELT_CTE}
+SELECT name, ROUND({t_k}, 4) AS T_K
+FROM melt
+ORDER BY name
 """
 
 
-def q_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based session windows per user via ``F.session_window`` —
-    the batch twin of the streaming sessionization operator
-    (streaming==batch parity is the engine's test strategy, SURVEY
-    §2.9). Epoch-second timestamps so the value hash is tz- and
-    precision-invariant across engines."""
-    from magmapandas_spark.streaming.streams import read_events_batch
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    events = read_events_batch(spark, sf_dir)
-    ts = F.col("ts")
+def _sql_putirka15_raw() -> str:
+    anhyd = [s for s in MELT_SPECIES if s != "H2O"]
+    _, frac = _sql_mole_fraction_terms(anhyd)
+    mg_no = f"({frac['MgO']} / ({frac['MgO']} + {frac['FeO']}))"
     return (
-        events.select(ts.alias("ts"), "user_id", "value")
-        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            dsum(F.col("value")).alias("session_value"),
-        )
+        f"(815.3 + 265.5 * {mg_no} + 15.37 * MgO + 8.61 * FeO"
+        f" + 6.646 * (Na2O + K2O) + 39.16 * (P_bar / 10000.0)"
+        f" - 12.83 * H2O + 273.15)"
+    )
+
+
+def q_redox_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Flagship chained pipeline (EP2 of SURVEY §3): thermometer →
+    QFM(1 bar)+1 fO2 → Borisov Fe3Fe2 — one shuffle-free codegen stage
+    end-to-end."""
+    from magmapandas_spark.models import fe3fe2, fo2
+    from magmapandas_spark.models import thermometers as tm
+    from magmapandas_spark.models.common import mole_fraction_exprs
+
+    gf = synthetic_melt(spark, sf_dir)
+    with_t = tm.putirka2008_15(gf, P_bar="P_bar")
+    gf2 = GeoFrame(with_t, units="wt.%", datatype="oxide",
+                   species=MELT_SPECIES)
+    fO2 = fo2.fo2_qfm_1bar(1.0, F.col("T_K"))
+    comp = {s: F.coalesce(F.col(s), F.lit(0.0)) for s in gf2.species}
+    mol = mole_fraction_exprs(comp)
+    fe = fe3fe2.fe3fe2_borisov2018(mol, F.col("T_K"), fO2)
+    return (
+        gf2.df.withColumn("Fe3Fe2", fe)
         .select(
-            F.unix_timestamp(F.col("w.start")).alias("session_start"),
-            F.unix_timestamp(F.col("w.end")).alias("session_end"),
-            "user_id",
-            "n_events",
-            "session_value",
+            "name",
+            F.round("T_K", 4).alias("T_K"),
+            F.round("Fe3Fe2", 6).alias("Fe3Fe2"),
         )
-        .orderBy("user_id", "session_start")
+        .orderBy("name")
     )
 
 
-def q_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user cumulative value over event time — the batch twin of the
-    streaming ``applyInPandasWithState`` running-totals operator
-    (streams.py), expressed as a frame-bounded window. Both engines add
-    in the identical (ts, event_id) order, so the float accumulation is
-    bit-deterministic."""
-    from pyspark.sql import Window
-
-    from magmapandas_spark.streaming.streams import read_events_batch
-
-    events = read_events_batch(spark, sf_dir)
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+def _sql_redox_chain() -> str:
+    t_k = _sql_putirka15_raw()
+    _, frac = _sql_mole_fraction_terms(MELT_SPECIES)
+    fo2 = (
+        f"(EXP((-587474 + 1584.427 * T_K - 203.3164 * T_K * LN(T_K)"
+        f" + 0.092710 * T_K * T_K) / ({R_GAS!r} * T_K)) * 10.0)"
     )
-    return (
-        events.select(
-            "user_id",
-            "event_id",
-            F.unix_timestamp("ts").alias("ts_s"),
-            F.round(F.sum("value").over(w), 6).alias("running_value"),
-            F.count(F.lit(1)).over(w).alias("n_so_far"),
-        )
-        .orderBy("user_id", "ts_s", "event_id")
+    log10fo2 = f"(LN({fo2}) / LN(10.0))"
+    fe3fe2 = (
+        f"POWER(10.0, 0.207 * {log10fo2} + 4633.3 / T_K"
+        f" - 0.445 * {frac['SiO2']} - 0.900 * {frac['TiO2']}"
+        f" + 1.532 * {frac['MgO']} + 0.314 * {frac['CaO']}"
+        f" + 2.030 * {frac['Na2O']} + 3.355 * {frac['K2O']}"
+        f" - 4.851 * {frac['P2O5']}"
+        f" - 3.081 * {frac['SiO2']} * {frac['Al2O3']}"
+        f" - 4.370 * {frac['SiO2']} * {frac['MgO']} - 1.852)"
     )
-
-
-SQL_RUNNING_TOTALS = """
-SELECT user_id, event_id,
-  CAST(FLOOR(epoch(ts)) AS BIGINT) AS ts_s,
-  ROUND(SUM(value) OVER (
-    PARTITION BY user_id ORDER BY ts, event_id
-    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 6) AS running_value,
-  COUNT(*) OVER (
-    PARTITION BY user_id ORDER BY ts, event_id
-    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS n_so_far
-FROM events
-ORDER BY user_id, ts_s, event_id
+    return f"""
+WITH {SQL_MELT_CTE},
+with_t AS (SELECT *, {t_k} AS T_K FROM melt)
+SELECT name, ROUND(T_K, 4) AS T_K, ROUND({fe3fe2}, 6) AS Fe3Fe2
+FROM with_t
+ORDER BY name
 """
 
 
-# Spark session_window: [first_event, last_event + gap); sessions merge
-# iff the next event starts strictly before the current window end, so
-# a new session begins when the gap is >= 30 min.
-SQL_USER_SESSIONS = f"""
-WITH marked AS (
+_DENSITY = {
+    "T_REF": {"SiO2": 1773.0, "TiO2": 1773.0, "Al2O3": 1773.0,
+              "Fe2O3": 1723.0, "FeO": 1723.0, "MgO": 1773.0, "CaO": 1773.0,
+              "Na2O": 1773.0, "K2O": 1773.0, "H2O": 1273.0},
+    "MV": {"SiO2": 26.86, "TiO2": 28.32, "Al2O3": 37.42, "Fe2O3": 41.50,
+           "FeO": 12.68, "MgO": 12.02, "CaO": 16.90, "Na2O": 29.65,
+           "K2O": 47.28, "H2O": 22.9},
+    "DVDT": {"SiO2": 0.0, "TiO2": 0.00724, "Al2O3": 0.00262, "Fe2O3": 0.0,
+             "FeO": 0.00369, "MgO": 0.00327, "CaO": 0.00374,
+             "Na2O": 0.00768, "K2O": 0.01208, "H2O": 0.0095},
+    "DVDP": {"SiO2": -1.89e-4, "TiO2": -2.31e-4, "Al2O3": -2.26e-4,
+             "Fe2O3": -2.5e-4, "FeO": -4.5e-5, "MgO": 2.7e-5,
+             "CaO": 3.4e-5, "Na2O": -2.4e-4, "K2O": -6.75e-4,
+             "H2O": -3.2e-4},
+}
+
+
+def q_density_viscosity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Iacovino density + Giordano viscosity over the synthetic melt."""
+    from magmapandas_spark.models import rheology
+
+    gf = synthetic_melt(spark, sf_dir)
+    T_K, P_bar = 1473.15, 2000.0
+    d = rheology.calculate_density(gf, T_K=T_K, P_bar=P_bar)
+    gf_d = GeoFrame(d, units="wt.%", datatype="oxide", species=MELT_SPECIES)
+    out = rheology.calculate_viscosity(gf_d, T_K=T_K)
+    return (
+        out.select(
+            "name",
+            F.round("density", 4).alias("density"),
+            F.round("viscosity", 6).alias("viscosity"),
+        )
+        .orderBy("name")
+    )
+
+
+def _sql_density_viscosity() -> str:
+    T_K, P_bar = 1473.15, 2000.0
+    comps = list(_DENSITY["MV"])
+    # mole fractions over ALL species (density.py:96-98), model oxides only
+    # in the volume sum; Fe2O3 missing → zero term
+    _, frac = _sql_mole_fraction_terms(MELT_SPECIES)
+    mass = " + ".join(
+        f"({frac[s]} * {W(s)!r})" for s in comps if s in frac
+    )
+    vol = " + ".join(
+        f"((({T_K!r} - {_DENSITY['T_REF'][s]!r}) * {_DENSITY['DVDT'][s]!r}"
+        f" + ({P_bar!r} - 1.0) * {_DENSITY['DVDP'][s]!r}"
+        f" + {_DENSITY['MV'][s]!r}) * {frac[s]})"
+        for s in comps
+        if s in frac
+    )
+    density = f"(({mass}) / ({vol}) * 1000.0)"
+
+    m = {s: f"({frac[s]} * 100.0)" for s in frac}
+    z = "0.0"
+    g = lambda s: m.get(s, z)
+    B = (
+        f"(159.6 * ({g('SiO2')} + {g('TiO2')})"
+        f" + -173.3 * {g('Al2O3')}"
+        f" + 72.1 * ({g('FeO')} + {g('MnO')} + {g('P2O5')})"
+        f" + 75.7 * {g('MgO')}"
+        f" + -39.0 * {g('CaO')}"
+        f" + -84.1 * ({g('Na2O')} + {g('H2O')} + {z})"
+        f" + 141.5 * ({g('H2O')} + {z} + LN(1.0 + {g('H2O')}))"
+        f" + -2.43 * (({g('SiO2')} + {g('TiO2')}) * ({g('FeO')} + {g('MnO')} + {g('MgO')}))"
+        f" + -0.91 * (({g('SiO2')} + {g('TiO2')} + {g('Al2O3')} + {g('P2O5')})"
+        f" * ({g('Na2O')} + {g('K2O')} + {g('H2O')}))"
+        f" + 17.6 * ({g('Al2O3')} * ({g('Na2O')} + {g('K2O')})))"
+    )
+    C = (
+        f"(2.75 * {g('SiO2')}"
+        f" + 15.7 * ({g('TiO2')} + {g('Al2O3')})"
+        f" + 8.3 * ({g('FeO')} + {g('MgO')} + {g('MnO')})"
+        f" + 10.2 * {g('CaO')}"
+        f" + -12.3 * ({g('Na2O')} + {g('K2O')})"
+        f" + -99.5 * LN(1.0 + {g('H2O')} + {z})"
+        f" + 0.3 * (({g('Al2O3')} + {g('FeO')} + {g('MgO')} + {g('MnO')}"
+        f" + {g('CaO')} - {g('P2O5')})"
+        f" * ({g('Na2O')} + {g('K2O')} + {g('H2O')} + {z})))"
+    )
+    viscosity = f"(-4.55 + {B} / ({T_K!r} - {C}))"
+    return f"""
+WITH {SQL_MELT_CTE}
+SELECT name, ROUND({density}, 4) AS density, ROUND({viscosity}, 6) AS viscosity
+FROM melt
+ORDER BY name
+"""
+
+
+SQL_OLIVINE_CTE = """
+olivine AS (
   SELECT
-    user_id, ts, value,
-    CASE
-      WHEN ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-           >= INTERVAL 30 MINUTE THEN 1
-      WHEN LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-           IS NULL THEN 1
-      ELSE 0
-    END AS new_session
-  FROM events
-),
-numbered AS (
-  SELECT *,
-    SUM(new_session) OVER (
-      PARTITION BY user_id ORDER BY ts
-      ROWS UNBOUNDED PRECEDING
-    ) AS session_id
-  FROM marked
+    p_partkey AS name,
+    39.0 + (p_partkey % 30) * 0.05 AS SiO2,
+    42.0 + (p_size % 20) * 0.25 AS MgO,
+    10.0 + (p_partkey % 80) * 0.1 AS FeO,
+    0.1 + (p_size % 5) * 0.05 AS MnO,
+    0.25 AS NiO,
+    0.05 + (p_partkey % 3) * 0.05 AS CaO
+  FROM part
 )
-SELECT
-  CAST(FLOOR(EXTRACT(EPOCH FROM MIN(ts))) AS BIGINT) AS session_start,
-  CAST(FLOOR(EXTRACT(EPOCH FROM MAX(ts) + INTERVAL 30 MINUTE)) AS BIGINT)
-    AS session_end,
-  user_id,
-  COUNT(*) AS n_events,
-  {SQL_DSUM.format(x='value')} AS session_value
-FROM numbered
-GROUP BY user_id, session_id
-ORDER BY user_id, session_start
 """
 
 
-# ----------------------------------------------------------------------
-# document fingerprinting (rolling shingle hash, winnowing-style)
-# ----------------------------------------------------------------------
+OLIVINE_SPECIES = ["SiO2", "MgO", "FeO", "MnO", "NiO", "CaO"]
 
-def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnowing-style document fingerprint: word 3-gram shingles →
-    md5 rolling window → per-doc minimum hash (bottom-1 sketch) +
-    shingle cardinalities. Engine-portable md5 (not xxhash64) so the
-    DuckDB oracle is exact.
 
-    Fully scan-local: the hash array is built in ONE projection
-    (materialized before the aggregates so Spark's no-CSE-across-lambdas
-    limitation can't triple the md5 work) and min/size/distinct are
-    array expressions — no explode, no shuffle, no per-shingle row
-    blow-up. At 100 TB every doc is one row in, one row out."""
-    docs = spark.read.parquet(_t(sf_dir, "documents"))
-    words = F.split(F.col("text"), " ")
-    staged = (
-        docs.filter(F.size(words) >= 3)
-        .select("doc_id", words.alias("w"))
-        .select(
-            "doc_id",
-            F.expr(
-                "transform(sequence(0, size(w) - 3),"
-                " i -> md5(concat_ws(' ', w[i], w[i+1], w[i+2])))"
-            ).alias("hs"),
-        )
+def synthetic_olivine(spark: SparkSession, sf_dir: str) -> GeoFrame:
+    part = spark.read.parquet(_t(sf_dir, "part"))
+    df = part.select(
+        F.col("p_partkey").alias("name"),
+        (F.lit(39.0) + (F.col("p_partkey") % 30) * F.lit(0.05)).alias("SiO2"),
+        (F.lit(42.0) + (F.col("p_size") % 20) * F.lit(0.25)).alias("MgO"),
+        (F.lit(10.0) + (F.col("p_partkey") % 80) * F.lit(0.1)).alias("FeO"),
+        (F.lit(0.1) + (F.col("p_size") % 5) * F.lit(0.05)).alias("MnO"),
+        F.lit(0.25).alias("NiO"),
+        (F.lit(0.05) + (F.col("p_partkey") % 3) * F.lit(0.05)).alias("CaO"),
     )
-    return staged.select(
-        "doc_id",
-        F.array_min("hs").alias("fp_min"),
-        F.size("hs").alias("n_shingles"),
-        F.size(F.array_distinct("hs")).alias("n_distinct"),
-    ).orderBy("doc_id")
+    return GeoFrame(df, units="wt.%", datatype="oxide", species=OLIVINE_SPECIES)
 
 
-SQL_DOC_FINGERPRINT = """
-WITH words AS (
-  SELECT doc_id, str_split(text, ' ') AS w
-  FROM documents
-  WHERE len(str_split(text, ' ')) >= 3
-),
-shingles AS (
-  SELECT doc_id,
-         UNNEST([md5(w[i + 1] || ' ' || w[i + 2] || ' ' || w[i + 3])
-                 for i in generate_series(0, len(w) - 3)]) AS h
-  FROM words
-)
-SELECT doc_id,
-       MIN(h) AS fp_min,
-       COUNT(*) AS n_shingles,
-       COUNT(DISTINCT h) AS n_distinct
-FROM shingles
-GROUP BY doc_id
-ORDER BY doc_id
+def q_mineral_forsterite(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Olivine forsterite + 4-oxygen mineral-formula cations."""
+    from magmapandas_spark.models import minerals
+
+    gf = synthetic_olivine(spark, sf_dir)
+    with_fo = minerals.forsterite(gf)
+    gf2 = GeoFrame(with_fo, units="wt.%", datatype="oxide",
+                   species=OLIVINE_SPECIES)
+    formula = gf2.mineral_formula(O=4)
+    out = formula.df.select(
+        "name",
+        F.round("Fo", 6).alias("Fo"),
+        F.round("Si", 6).alias("Si"),
+        F.round("Mg", 6).alias("Mg"),
+        F.round("Fe", 6).alias("Fe"),
+    )
+    return out.orderBy("name")
+
+
+def _sql_mineral_forsterite() -> str:
+    _, frac = _sql_mole_fraction_terms(OLIVINE_SPECIES)
+    fo = f"({frac['MgO']} / ({frac['FeO']} + {frac['MgO']}))"
+    # cation fractions == oxide mol fractions here (all 1-cation oxides);
+    # oxygen factor: Σ cation_i × (O/cat)_i ; SiO2 → 2 O, others → 1
+    o_ratio = {"SiO2": 2.0, "MgO": 1.0, "FeO": 1.0, "MnO": 1.0, "NiO": 1.0,
+               "CaO": 1.0}
+    mol_terms = [f"({s} / {W(s)!r})" for s in OLIVINE_SPECIES]
+    total_mol = " + ".join(mol_terms)
+    cat = {s: f"(({s} / {W(s)!r}) / ({total_mol}))" for s in OLIVINE_SPECIES}
+    oxy_total = " + ".join(f"({cat[s]} * {o_ratio[s]!r})" for s in OLIVINE_SPECIES)
+    factor = f"(4.0 / ({oxy_total}))"
+    return f"""
+WITH {SQL_OLIVINE_CTE}
+SELECT name,
+  ROUND({fo}, 6) AS Fo,
+  ROUND({cat['SiO2']} * {factor}, 6) AS Si,
+  ROUND({cat['MgO']} * {factor}, 6) AS Mg,
+  ROUND({cat['FeO']} * {factor}, 6) AS Fe
+FROM olivine
+ORDER BY name
 """
 
 
 # ----------------------------------------------------------------------
-# embedding cosine near-duplicates (exact pairs; LSH twin is rows-only)
+# volatile solubility and saturation
 # ----------------------------------------------------------------------
 
-def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact cosine near-duplicate pairs above 0.45 (the synthetic
-    embeddings are near-orthogonal, so 0.45 is the regime with real
-    pairs to verify): the oracle-checked baseline for the LSH-bucketed
-    scale path (operators.similarity.cosine_topk_lsh)."""
-    from magmapandas_spark.operators.similarity import all_pairs_cosine
 
-    emb = spark.read.parquet(_t(sf_dir, "embeddings"))
-    out = all_pairs_cosine(emb, threshold=0.45, n_blocks=4)
-    return out.select(
-        "id_a", "id_b", F.round("cos_sim", 4).alias("cos_sim")
-    ).orderBy("id_a", "id_b")
+def q_shishkina_co2_saturation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Shishkina (2014) pure-CO2 saturation pressure — closed-form
+    inversion as a pure Column expression (no UDF, whole-stage
+    codegen)."""
+    from magmapandas_spark.models import volatiles as vol
+
+    gf = synthetic_melt(spark, sf_dir)
+    out = gf.df.withColumn(
+        "P_sat", vol.shishkina_co2_saturation_expr(gf)
+    )
+    return out.select("name", F.round("P_sat", 4).alias("P_sat")).orderBy(
+        "name"
+    )
 
 
-SQL_EMBEDDING_NEARDUP = """
-WITH pairs AS (
-  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-         list_cosine_similarity(
-           CAST(a.embedding AS DOUBLE[]),
-           CAST(b.embedding AS DOUBLE[])
-         ) AS cos
-  FROM embeddings a
-  JOIN embeddings b ON a.vec_id < b.vec_id
-)
-SELECT id_a, id_b, ROUND(cos, 4) AS cos_sim
-FROM pairs
-WHERE cos >= 0.45
-ORDER BY id_a, id_b
+def _sql_shishkina_co2() -> str:
+    # anhydrous cation fractions from the synthetic melt species
+    anhyd = [s for s in MELT_SPECIES if s not in ("H2O", "CO2")]
+    from magmapandas_spark.chem.elements import (
+        cation_amount,
+        cation_name,
+        calculate_weight,
+    )
+
+    cat_terms = {
+        s: f"(({s} / {calculate_weight(s)!r}) * {cation_amount(s)!r})"
+        for s in anhyd
+    }
+    total = " + ".join(cat_terms.values())
+    cat = {cation_name(s): f"({cat_terms[s]} / ({total}))" for s in anhyd}
+    z = "0.0"
+    g = lambda n: cat.get(n, z)
+    pi_star = (
+        f"(({g('Ca')} + 0.8 * {g('K')} + 0.7 * {g('Na')}"
+        f" + 0.4 * {g('Mg')} + 0.4 * {g('Fe')}) / ({g('Si')} + {g('Al')}))"
+    )
+    A, B, C = 1.150, 6.71, -1.345
+    p_sat = (
+        f"(CASE WHEN CO2 > 0 THEN"
+        f" EXP((LN(CO2 * 10000.0) - {B!r} * {pi_star} - ({C!r})) / {A!r}) * 10.0"
+        f" ELSE 0.0 END)"
+    )
+    return f"""
+WITH {SQL_MELT_CTE}
+SELECT name, ROUND({p_sat}, 4) AS P_sat
+FROM melt
+ORDER BY name
 """
 
 
-# ----------------------------------------------------------------------
-# volatile models: Allison 2022 + isobar grids (rows-only: implicit
-# root-finding / MRK fugacity is not SQL-expressible)
-# ----------------------------------------------------------------------
+def q_volatile_saturation_im(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Iacono-Marziano mixed CO2-H2O saturation over the synthetic melt:
+    the reference's per-row multiprocessing showcase (EP3, SURVEY §3)
+    as one vectorized UDF stage. Exact DuckDB oracle: the saturation
+    residual is closed-form in P, so the 60-step bisection is a
+    recursive CTE (``solver_oracles.sql_volatile_saturation_im``)."""
+    from magmapandas_spark.models import volatiles as vol
+
+    gf = synthetic_melt(spark, sf_dir)
+    out = vol.volatile_saturation_pressure(gf, T_K=1473.15, species="mixed")
+    return heavy_sorted(
+        out.select(
+            "name",
+            F.round("P_bar_sat", 4).alias("P_bar_sat"),
+            F.round("Xfl", 6).alias("Xfl"),
+        ),
+        "name",
+    )
+
 
 def q_allison_saturation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Allison (2022) MafiCH mixed-fluid saturation over the synthetic
@@ -319,9 +428,9 @@ def q_isobar_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------------------------------------
-# Monte-Carlo error propagation (seeded randn — engine-specific RNG →
-# rows-only check; determinism is asserted in tests instead)
+# Monte-Carlo error propagation
 # ----------------------------------------------------------------------
+
 
 def q_mc_thermometer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Monte-Carlo uncertainty on the default melt thermometer:
@@ -366,326 +475,10 @@ def q_mc_thermometer(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("name")
 
 
-def _q_ivf(spark, sf_dir):
-    from magmapandas_spark.operators.similarity import q_ivf_topk
-
-    return q_ivf_topk(spark, sf_dir)
-
-
-def _q_ivf_seeded(spark, sf_dir):
-    from magmapandas_spark.operators.similarity import q_ivf_topk_seeded
-
-    return q_ivf_topk_seeded(spark, sf_dir)
-
-
-def _q_lsh_topk(spark, sf_dir):
-    from magmapandas_spark.operators.similarity import q_lsh_topk
-
-    return q_lsh_topk(spark, sf_dir)
-
-
-def _q_media_features(spark, sf_dir):
-    from magmapandas_spark.operators.multimodal import q_media_features
-
-    return q_media_features(spark, sf_dir)
-
-
-def _q_audio_chunks(spark, sf_dir):
-    from magmapandas_spark.operators.multimodal import q_audio_chunks
-
-    return q_audio_chunks(spark, sf_dir)
-
-
-def _q_video_frames(spark, sf_dir):
-    from magmapandas_spark.operators.multimodal import q_video_frames
-
-    return q_video_frames(spark, sf_dir)
-
-
-def _q_image_decode(spark, sf_dir):
-    from magmapandas_spark.operators.multimodal import q_image_decode
-
-    return q_image_decode(spark, sf_dir)
-
-
-def _q_jpeg_decode(spark, sf_dir):
-    from magmapandas_spark.operators.jpeg import q_jpeg_decode
-
-    return q_jpeg_decode(spark, sf_dir)
-
-
-def _q_png_decode(spark, sf_dir):
-    from magmapandas_spark.operators.png import q_png_decode
-
-    return q_png_decode(spark, sf_dir)
-
-
-def _q_wav_chunks(spark, sf_dir):
-    from magmapandas_spark.operators.wav import q_wav_chunks
-
-    return q_wav_chunks(spark, sf_dir)
-
-
-def _q_mp4_metadata(spark, sf_dir):
-    from magmapandas_spark.operators.mp4 import q_mp4_metadata
-
-    return q_mp4_metadata(spark, sf_dir)
-
-
-def _q_html_extract(spark, sf_dir):
-    from magmapandas_spark.operators.html import q_html_extract
-
-    return q_html_extract(spark, sf_dir)
-
-
-def _q_media_inventory(spark, sf_dir):
-    from magmapandas_spark.operators.multimodal import q_media_inventory
-
-    return q_media_inventory(spark, sf_dir)
-
-
-def queries():
-    return {
-        "user_sessions": q_user_sessions,
-        "running_totals": q_running_totals,
-        "event_deltas": q_event_deltas,
-        "doc_fingerprint": q_doc_fingerprint,
-        "embedding_neardup": q_embedding_neardup,
-        # rows-only
-        "allison_saturation": q_allison_saturation,
-        "isobar_grid": q_isobar_grid,
-        "mc_thermometer": q_mc_thermometer,
-        "running_stddev": q_running_stddev,
-        "ivf_topk": _q_ivf,
-        "ivf_topk_seeded": _q_ivf_seeded,
-        "lsh_topk": _q_lsh_topk,
-        "media_features": _q_media_features,
-        "image_decode": _q_image_decode,
-        "jpeg_decode": _q_jpeg_decode,
-        "png_decode": _q_png_decode,
-        "wav_chunks": _q_wav_chunks,
-        "mp4_metadata": _q_mp4_metadata,
-        "html_extract": _q_html_extract,
-        "media_inventory": _q_media_inventory,
-        "video_frames": _q_video_frames,
-        "audio_chunks": _q_audio_chunks,
-        "sliding_value_avg": q_sliding_value_avg,
-        "thermometers_multi": q_thermometers_multi,
-        "fe3fe2_expr_models": q_fe3fe2_expr_models,
-        "kd_expr_models": q_kd_expr_models,
-        "olmelt_thermometer": q_olmelt_thermometer,
-        "unit_conversions": q_unit_conversions,
-        "melt_structure": q_melt_structure,
-        "thermometers_multi2": q_thermometers_multi2,
-        "magnetite_speciation": q_magnetite_speciation,
-        "ilmenite_speciation": q_ilmenite_speciation,
-        "plag_endmembers": q_plag_endmembers,
-        "feo_fe2o3_split": q_feo_fe2o3_split,
-        "calibration_flags": q_calibration_flags,
-        "fe3fe2_deng2020": q_fe3fe2_deng2020,
-        "kd_toplis_iteration": q_kd_toplis_iteration,
-        "melt_describe": q_melt_describe,
-        "fo2_buffers": q_fo2_buffers,
-        "qfm_exact": q_qfm_exact,
-        "iw_exact": q_iw_exact,
-        "fe3fe2_errors": q_fe3fe2_errors,
-        "kd_blundy_saper": q_kd_blundy_saper,
-        "fe3fe2_expr_models2": q_fe3fe2_expr_models2,
-        "fe3fe2_expr_models3": q_fe3fe2_expr_models3,
-        "fe3fe2_hirschmann2022": q_fe3fe2_hirschmann2022,
-        "fe3fe2_solvers2": q_fe3fe2_solvers2,
-        "sugawara6a_cpx": q_sugawara6a_cpx,
-    }
-
-
-def oracle_sql():
-    from magmapandas_spark.relational import solver_oracles as so
-    from magmapandas_spark.relational.suite import SQL_MELT_CTE
-
-    from magmapandas_spark.operators.similarity import (
-        sql_ivf_topk,
-        sql_ivf_topk_seeded,
-        sql_lsh_topk,
-    )
-
-    from magmapandas_spark.operators.multimodal import (
-        SQL_MEDIA_INVENTORY,
-        SQL_AUDIO_CHUNKS,
-        SQL_IMAGE_DECODE,
-        SQL_MEDIA_FEATURES,
-        SQL_VIDEO_FRAMES,
-    )
-
-    from magmapandas_spark.operators.jpeg import SQL_JPEG_DECODE
-    from magmapandas_spark.operators.png import SQL_PNG_DECODE
-    from magmapandas_spark.operators.wav import SQL_WAV_CHUNKS
-    from magmapandas_spark.operators.mp4 import SQL_MP4_METADATA
-    from magmapandas_spark.operators.html import SQL_HTML_EXTRACT
-
-    return {
-        "jpeg_decode": SQL_JPEG_DECODE,
-        "png_decode": SQL_PNG_DECODE,
-        "wav_chunks": SQL_WAV_CHUNKS,
-        "mp4_metadata": SQL_MP4_METADATA,
-        "html_extract": SQL_HTML_EXTRACT,
-        "media_inventory": SQL_MEDIA_INVENTORY,
-        "ivf_topk": sql_ivf_topk(),
-        "ivf_topk_seeded": sql_ivf_topk_seeded(),
-        "lsh_topk": sql_lsh_topk(),
-        "media_features": SQL_MEDIA_FEATURES,
-        "image_decode": SQL_IMAGE_DECODE,
-        "video_frames": SQL_VIDEO_FRAMES,
-        "audio_chunks": SQL_AUDIO_CHUNKS,
-        "allison_saturation": so.sql_allison_saturation(SQL_MELT_CTE),
-        "fe3fe2_solvers2": so.sql_fe3fe2_solvers2(SQL_MELT_CTE),
-        "kd_toplis_iteration": so.sql_kd_toplis(SQL_MELT_CTE),
-        "kd_blundy_saper": so.sql_kd_blundy_saper(SQL_MELT_CTE),
-        "isobar_grid": so.sql_isobar_grid(SQL_MELT_CTE),
-        "mc_thermometer": so.sql_mc_thermometer(SQL_MELT_CTE),
-        "fe3fe2_deng2020": so.sql_fe3fe2_deng2020(SQL_MELT_CTE),
-        "fo2_buffers": _sql_fo2_buffers(),
-        "qfm_exact": so.sql_qfm_exact(SQL_MELT_CTE),
-        "iw_exact": so.sql_iw_exact(SQL_MELT_CTE),
-        "fe3fe2_errors": _sql_fe3fe2_errors(),
-        "user_sessions": SQL_USER_SESSIONS,
-        "running_totals": SQL_RUNNING_TOTALS,
-        "event_deltas": SQL_EVENT_DELTAS,
-        "doc_fingerprint": SQL_DOC_FINGERPRINT,
-        "embedding_neardup": SQL_EMBEDDING_NEARDUP,
-        "running_stddev": SQL_RUNNING_STDDEV,
-        "sliding_value_avg": SQL_SLIDING_VALUE_AVG,
-        "thermometers_multi": _sql_thermometers_multi(),
-        "fe3fe2_expr_models": _sql_fe3fe2_expr_models(),
-        "kd_expr_models": _sql_kd_expr_models(),
-        "olmelt_thermometer": _sql_olmelt_thermometer(),
-        "unit_conversions": _sql_unit_conversions(),
-        "melt_structure": _sql_melt_structure(),
-        "thermometers_multi2": _sql_thermometers_multi2(),
-        "magnetite_speciation": _sql_magnetite_speciation(),
-        "ilmenite_speciation": _sql_ilmenite_speciation(),
-        "plag_endmembers": _sql_plag_endmembers(),
-        "feo_fe2o3_split": _sql_feo_fe2o3_split(),
-        "calibration_flags": _sql_calibration_flags(),
-        "melt_describe": _sql_melt_describe(),
-        "fe3fe2_expr_models2": _sql_fe3fe2_expr_models2(),
-        "fe3fe2_expr_models3": _sql_fe3fe2_expr_models3(),
-        "fe3fe2_hirschmann2022": _sql_fe3fe2_hirschmann2022(),
-        "sugawara6a_cpx": _sql_sugawara6a_cpx(),
-    }
-
-
 # ----------------------------------------------------------------------
-# running stddev with outlier rejection (SURVEY §2.5, model_errors)
+# multi-model coverage with full SQL oracles
 # ----------------------------------------------------------------------
 
-def q_running_stddev(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Running windowed stddev of part size ordered by retail price
-    with 2σ-from-median rejection (``tools/model_errors.py:20-42``) —
-    ordered window + higher-order array expressions, no UDF."""
-    from magmapandas_spark.operators.model_errors import running_stddev
-
-    part = spark.read.parquet(_t(sf_dir, "part")).select(
-        F.col("p_retailprice").alias("x"),
-        F.col("p_size").cast("double").alias("y"),
-        F.col("p_partkey").alias("tb"),
-    )
-    out = running_stddev(part, "x", "y", boxsize=30, sigma=2.0,
-                         tiebreak="tb")
-    return out.select(
-        F.round("x", 4).alias("x"), F.round("stddev", 4).alias("stddev")
-    ).orderBy("x")
-
-
-SQL_RUNNING_STDDEV = """
-WITH base AS (
-  SELECT p_retailprice AS x, CAST(p_size AS DOUBLE) AS y, p_partkey AS tb
-  FROM part
-  WHERE p_size IS NOT NULL
-),
-w AS (
-  SELECT x,
-    ROW_NUMBER() OVER (ORDER BY x, tb) AS rn,
-    COUNT(*) OVER () AS n,
-    list(y) OVER (ORDER BY x, tb
-                  ROWS BETWEEN 15 PRECEDING AND 13 FOLLOWING) AS ys
-  FROM base
-),
-f AS (SELECT x, ys FROM w WHERE rn > 15 AND rn <= n - 15),
-calc AS (
-  SELECT x, ys,
-    list_sort(ys)[(len(ys) + 1) // 2] AS med,
-    sqrt(list_sum([v * v for v in ys]) / len(ys)
-         - (list_sum(ys) / len(ys)) ^ 2) AS std_all
-  FROM f
-),
-kept AS (
-  SELECT x, [v for v in ys if abs(v - med) < 2.0 * std_all] AS k
-  FROM calc
-)
-SELECT ROUND(x, 4) AS x,
-       ROUND(sqrt(list_sum([v * v for v in k]) / len(k)
-                  - (list_sum(k) / len(k)) ^ 2), 4) AS stddev
-FROM kept
-ORDER BY x
-"""
-
-
-# ----------------------------------------------------------------------
-# sliding windows (streaming twin: streams.sliding_value_avg)
-# ----------------------------------------------------------------------
-
-def q_sliding_value_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """2-hour/1-hour sliding-window mean value per event type via
-    ``F.window`` — the batch twin of the streaming sliding-window
-    operator. Every event lands in exactly two windows; the oracle
-    expands the same membership with UNNEST."""
-    from magmapandas_spark.streaming.streams import read_events_batch
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    events = read_events_batch(spark, sf_dir)
-    ts = F.col("ts")
-    return (
-        events.select(ts.alias("ts"), "event_type", "value")
-        .groupBy(F.window("ts", "2 hours", "1 hour").alias("w"),
-                 "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            (
-                F.sum(F.col("value").cast("decimal(18,6)")).cast("double")
-                / F.count(F.lit(1))
-            ).alias("avg_value"),
-        )
-        .select(
-            F.unix_timestamp(F.col("w.start")).alias("window_start"),
-            "event_type",
-            "n_events",
-            "avg_value",
-        )
-        .orderBy("window_start", "event_type")
-    )
-
-
-SQL_SLIDING_VALUE_AVG = """
-WITH expanded AS (
-  SELECT UNNEST([date_trunc('hour', ts) - INTERVAL 1 HOUR,
-                 date_trunc('hour', ts)]) AS ws,
-         event_type, value
-  FROM events
-)
-SELECT CAST(FLOOR(EXTRACT(EPOCH FROM ws)) AS BIGINT) AS window_start,
-       event_type,
-       COUNT(*) AS n_events,
-       CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*)
-         AS avg_value
-FROM expanded
-GROUP BY ws, event_type
-ORDER BY window_start, event_type
-"""
-
-
-# ----------------------------------------------------------------------
-# multi-model domain coverage with full SQL oracles
-# ----------------------------------------------------------------------
 
 def q_thermometers_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Four expression-tier thermometers as parallel columns of ONE
@@ -718,12 +511,6 @@ def q_thermometers_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_thermometers_multi() -> str:
-    from magmapandas_spark.relational.suite import (
-        MELT_SPECIES,
-        SQL_MELT_CTE,
-        _sql_mole_fraction_terms,
-    )
-
     anhyd = [s for s in MELT_SPECIES if s != "H2O"]
     _, frac_anh = _sql_mole_fraction_terms(anhyd)
     _, frac_full = _sql_mole_fraction_terms(MELT_SPECIES)
@@ -781,11 +568,6 @@ def _sql_fe3fe2_expr_models() -> str:
         calculate_weight,
         cation_amount,
         cation_name,
-    )
-    from magmapandas_spark.relational.suite import (
-        MELT_SPECIES,
-        SQL_MELT_CTE,
-        _sql_mole_fraction_terms,
     )
 
     _, mol = _sql_mole_fraction_terms(MELT_SPECIES)
@@ -864,11 +646,6 @@ def q_kd_expr_models(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_kd_expr_models() -> str:
-    from magmapandas_spark.relational.suite import (
-        MELT_SPECIES,
-        SQL_MELT_CTE,
-    )
-
     total = " + ".join(MELT_SPECIES)
     w = {s: f"({s} / ({total}) * 100.0)" for s in MELT_SPECIES}
     alk2 = f"POW({w['Na2O']} + {w['K2O']}, 2.0)"
@@ -903,7 +680,6 @@ def q_olmelt_thermometer(spark: SparkSession, sf_dir: str) -> DataFrame:
     alignment as an inner equi-join of the synthetic olivine (from
     part) with the synthetic melt (from lineitem) on the sample key."""
     from magmapandas_spark.models.thermometers import putirka2007_4
-    from magmapandas_spark.relational.suite2 import synthetic_olivine
 
     melt = synthetic_melt(spark, sf_dir)
     ol = synthetic_olivine(spark, sf_dir)
@@ -919,11 +695,6 @@ def _sql_olmelt_thermometer() -> str:
         cation_amount,
         cation_name,
     )
-    from magmapandas_spark.relational.suite import (
-        MELT_SPECIES,
-        SQL_MELT_CTE,
-    )
-    from magmapandas_spark.relational.suite2 import OLIVINE_SPECIES
 
     def cation_fracs(species, prefix=""):
         terms = {
@@ -1039,11 +810,6 @@ def _sql_unit_conversions() -> str:
         cation_amount,
         cation_name,
     )
-    from magmapandas_spark.relational.suite import (
-        MELT_SPECIES,
-        SQL_MELT_CTE,
-        _sql_mole_fraction_terms,
-    )
 
     _, mol = _sql_mole_fraction_terms(MELT_SPECIES)
     cat_terms: dict = {}
@@ -1106,10 +872,6 @@ def _sql_melt_structure() -> str:
         cation_name,
         oxygen_amount,
     )
-    from magmapandas_spark.relational.suite import (
-        MELT_SPECIES,
-        SQL_MELT_CTE,
-    )
 
     cat_terms: dict = {}
     ratios: dict = {}
@@ -1169,11 +931,6 @@ def _sql_thermometers_multi2() -> str:
         cation_amount,
         cation_name,
         oxygen_amount,
-    )
-    from magmapandas_spark.relational.suite import (
-        MELT_SPECIES,
-        SQL_MELT_CTE,
-        _sql_mole_fraction_terms,
     )
 
     anhyd = [s for s in MELT_SPECIES if s != "H2O"]
@@ -1256,7 +1013,9 @@ ORDER BY name
 # Fe-Ti oxide minerals: endmembers + Fe speciation (expr tier)
 # ----------------------------------------------------------------------
 
+
 MT_SPECIES = ["TiO2", "Al2O3", "MgO", "MnO", "FeO"]
+
 
 SQL_MT_CTE = """
 mt AS (
@@ -1273,8 +1032,6 @@ mt AS (
 
 
 def _synthetic_mt(spark: SparkSession, sf_dir: str):
-    from magmapandas_spark.core.geoframe import GeoFrame
-
     sup = spark.read.parquet(_t(sf_dir, "supplier"))
     df = sup.select(
         F.col("s_suppkey").alias("name"),
@@ -1407,6 +1164,7 @@ ORDER BY name
 
 PLAG_SPECIES = ["SiO2", "Al2O3", "CaO", "Na2O", "K2O"]
 
+
 SQL_PLAG_CTE = """
 plag AS (
   SELECT
@@ -1489,7 +1247,6 @@ def q_feo_fe2o3_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     Kd against the synthetic olivine (``Kd_calculate.py:12-62``)."""
     from magmapandas_spark.models.kd import observed_FeMg_Kd
     from magmapandas_spark.models.minerals import forsterite
-    from magmapandas_spark.relational.suite2 import synthetic_olivine
 
     from magmapandas_spark.core.geoframe import GeoFrame
 
@@ -1520,11 +1277,6 @@ def q_feo_fe2o3_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_feo_fe2o3_split() -> str:
     from magmapandas_spark.chem.elements import calculate_weight
-    from magmapandas_spark.relational.suite import (
-        MELT_SPECIES,
-        SQL_MELT_CTE,
-        _sql_mole_fraction_terms,
-    )
 
     _, mol = _sql_mole_fraction_terms(MELT_SPECIES)
     q = "(1.0 / (1.0 + 0.237))"  # Fe2+ fraction, Fe3Fe2 = 0.237
@@ -1546,8 +1298,6 @@ def _sql_feo_fe2o3_split() -> str:
 
     # mirror minerals.forsterite exactly: mole fractions over the FULL
     # olivine species set, Fo = MgO / (FeO + MgO) in that order
-    from magmapandas_spark.relational.suite2 import OLIVINE_SPECIES
-
     ol_terms = {
         s: f"(ol.ol_{s} / {calculate_weight(s)!r})" for s in OLIVINE_SPECIES
     }
@@ -1613,9 +1363,6 @@ def q_calibration_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_calibration_flags() -> str:
-    from magmapandas_spark.relational.suite import SQL_MELT_CTE
-    from magmapandas_spark.relational.suite2 import _sql_putirka15_raw
-
     t_k = _sql_putirka15_raw()
     in_range = (
         "(SiO2 BETWEEN 31.0 AND 73.64"
@@ -1642,12 +1389,11 @@ ORDER BY in_range, t_valid
 
 
 # ----------------------------------------------------------------------
-# solver-tier queries (rows-only: per-row fixed points / EOS integrals)
+# solver-tier queries (per-row fixed points / EOS integrals)
 # ----------------------------------------------------------------------
 
-def _melt_subset(spark, sf_dir, modulus=64):
-    from magmapandas_spark.core.geoframe import GeoFrame
 
+def _melt_subset(spark, sf_dir, modulus=64):
     gf = synthetic_melt(spark, sf_dir)
     sub = gf.df.filter(F.col("name") % modulus == 0)
     return GeoFrame(sub, units=gf.units, datatype=gf.datatype,
@@ -1775,7 +1521,6 @@ def _sql_fo2_buffers() -> str:
         f" WHEN {t} <= 1184.0 THEN {mu_mid}"
         f" ELSE {mu_high} END) / ({R!r} * {t})){off}"
     )
-    from magmapandas_spark.relational.suite import SQL_MELT_CTE
 
     cols = {
         "nno": nno,
@@ -1903,7 +1648,6 @@ def q_fe3fe2_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_fe3fe2_errors() -> str:
     from magmapandas_spark.operators.montecarlo import sql_fe3fe2_error
-    from magmapandas_spark.relational.suite import SQL_MELT_CTE
 
     x = "(0.05 + (name % 440) * 0.005)"
     p = "(CASE WHEN name % 3 = 0 THEN 1.0 ELSE P_bar END)"
@@ -1960,8 +1704,6 @@ def q_melt_describe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_melt_describe() -> str:
-    from magmapandas_spark.relational.suite import SQL_MELT_CTE
-
     davg = "CAST(SUM(CAST({x} AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*)"
     davg_sq = (
         "CAST(SUM(CAST(CAST({x} AS DECIMAL(18,6))"
@@ -2044,12 +1786,6 @@ def q_fe3fe2_expr_models2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_fe3fe2_expr_models2() -> str:
-    from magmapandas_spark.relational.suite import (
-        MELT_SPECIES,
-        SQL_MELT_CTE,
-        _sql_mole_fraction_terms,
-    )
-
     _, mol = _sql_mole_fraction_terms(MELT_SPECIES)
     R = 8.31446261815324
     t = "(1400.0 + (name % 200) / 2.0)"
@@ -2131,11 +1867,6 @@ def _sql_fe3fe2_expr_models3() -> str:
         calculate_weight,
         cation_amount,
         cation_name,
-    )
-    from magmapandas_spark.relational.suite import (
-        MELT_SPECIES,
-        SQL_MELT_CTE,
-        _sql_mole_fraction_terms,
     )
 
     _, mol = _sql_mole_fraction_terms(MELT_SPECIES)
@@ -2226,10 +1957,6 @@ def _sql_fe3fe2_hirschmann2022() -> str:
         calculate_weight,
         cation_amount,
         cation_name,
-    )
-    from magmapandas_spark.relational.suite import (
-        MELT_SPECIES,
-        SQL_MELT_CTE,
     )
     import numpy as np
 
@@ -2348,11 +2075,6 @@ def q_sugawara6a_cpx(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_sugawara6a_cpx() -> str:
     from magmapandas_spark.chem.elements import calculate_weight
-    from magmapandas_spark.relational.suite import (
-        MELT_SPECIES,
-        SQL_MELT_CTE,
-        _sql_mole_fraction_terms,
-    )
 
     anhyd = [s for s in MELT_SPECIES if s != "H2O"]
     _, frac_anh = _sql_mole_fraction_terms(anhyd)
@@ -2385,3 +2107,72 @@ FROM melt_t
 JOIN mt ON melt_t.mt_name = mt.name
 ORDER BY name
 """
+
+
+# (query, oracle) pairs collected by relational.suite
+QUERIES = {
+    "thermometer_putirka2008_15": (
+        q_thermometer_putirka15,
+        _sql_thermometer_putirka15,
+    ),
+    "redox_chain": (q_redox_chain, _sql_redox_chain),
+    "density_viscosity": (q_density_viscosity, _sql_density_viscosity),
+    "mineral_forsterite": (q_mineral_forsterite, _sql_mineral_forsterite),
+    "shishkina_co2_saturation": (
+        q_shishkina_co2_saturation,
+        _sql_shishkina_co2,
+    ),
+    "volatile_saturation_im": (
+        q_volatile_saturation_im,
+        _solver_oracle("sql_volatile_saturation_im"),
+    ),
+    "allison_saturation": (
+        q_allison_saturation,
+        _solver_oracle("sql_allison_saturation"),
+    ),
+    "isobar_grid": (q_isobar_grid, _solver_oracle("sql_isobar_grid")),
+    "mc_thermometer": (q_mc_thermometer, _solver_oracle("sql_mc_thermometer")),
+    "thermometers_multi": (q_thermometers_multi, _sql_thermometers_multi),
+    "fe3fe2_expr_models": (q_fe3fe2_expr_models, _sql_fe3fe2_expr_models),
+    "kd_expr_models": (q_kd_expr_models, _sql_kd_expr_models),
+    "olmelt_thermometer": (q_olmelt_thermometer, _sql_olmelt_thermometer),
+    "unit_conversions": (q_unit_conversions, _sql_unit_conversions),
+    "melt_structure": (q_melt_structure, _sql_melt_structure),
+    "thermometers_multi2": (q_thermometers_multi2, _sql_thermometers_multi2),
+    "magnetite_speciation": (
+        q_magnetite_speciation,
+        _sql_magnetite_speciation,
+    ),
+    "ilmenite_speciation": (q_ilmenite_speciation, _sql_ilmenite_speciation),
+    "plag_endmembers": (q_plag_endmembers, _sql_plag_endmembers),
+    "feo_fe2o3_split": (q_feo_fe2o3_split, _sql_feo_fe2o3_split),
+    "calibration_flags": (q_calibration_flags, _sql_calibration_flags),
+    "fe3fe2_deng2020": (
+        q_fe3fe2_deng2020,
+        _solver_oracle("sql_fe3fe2_deng2020"),
+    ),
+    "kd_toplis_iteration": (
+        q_kd_toplis_iteration,
+        _solver_oracle("sql_kd_toplis"),
+    ),
+    "melt_describe": (q_melt_describe, _sql_melt_describe),
+    "fo2_buffers": (q_fo2_buffers, _sql_fo2_buffers),
+    "qfm_exact": (q_qfm_exact, _solver_oracle("sql_qfm_exact")),
+    "iw_exact": (q_iw_exact, _solver_oracle("sql_iw_exact")),
+    "fe3fe2_errors": (q_fe3fe2_errors, _sql_fe3fe2_errors),
+    "kd_blundy_saper": (
+        q_kd_blundy_saper,
+        _solver_oracle("sql_kd_blundy_saper"),
+    ),
+    "fe3fe2_expr_models2": (q_fe3fe2_expr_models2, _sql_fe3fe2_expr_models2),
+    "fe3fe2_expr_models3": (q_fe3fe2_expr_models3, _sql_fe3fe2_expr_models3),
+    "fe3fe2_hirschmann2022": (
+        q_fe3fe2_hirschmann2022,
+        _sql_fe3fe2_hirschmann2022,
+    ),
+    "fe3fe2_solvers2": (
+        q_fe3fe2_solvers2,
+        _solver_oracle("sql_fe3fe2_solvers2"),
+    ),
+    "sugawara6a_cpx": (q_sugawara6a_cpx, _sql_sugawara6a_cpx),
+}

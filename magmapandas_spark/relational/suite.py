@@ -1,10 +1,13 @@
-"""Correctness-gate query suite: paired (Spark query, DuckDB oracle SQL).
+"""Correctness-gate registry: paired (Spark query, DuckDB oracle SQL).
 
-Each entry exercises an operator family from SURVEY.md §2 on the
-driver-provided parquet tables. Domain (geochemistry) operators run on a
-*deterministic synthetic melt table* derived from ``lineitem`` with pure
-integer/decimal arithmetic, so Spark and DuckDB compute bit-comparable
-inputs; model outputs are rounded to 4-6 decimals on both sides.
+Each module in ``_MODULES`` ends with one ``QUERIES`` dict declaring
+its queries and their oracles; :func:`queries` and :func:`oracle_sql`
+collect them. The queries exercise the operator families of SURVEY.md
+§2 on the driver-provided parquet tables. Domain (geochemistry)
+operators run on a *deterministic synthetic melt table* derived from
+``lineitem`` with pure integer/decimal arithmetic (:func:`synthetic_melt`),
+so Spark and DuckDB compute bit-comparable inputs; model outputs are
+rounded to 4-6 decimals on both sides.
 
 Numeric-determinism rules used throughout (so value-hashes match across
 engines):
@@ -16,6 +19,7 @@ engines):
 
 from __future__ import annotations
 
+import importlib
 import weakref
 from typing import Callable
 
@@ -241,137 +245,6 @@ def _sql_mole_fraction_terms(species: list[str]) -> tuple[str, dict[str, str]]:
 
 
 # ----------------------------------------------------------------------
-# queries
-# ----------------------------------------------------------------------
-
-def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1-style pricing summary. Partial (map-side) aggregation +
-    single shuffle on a low-cardinality key — the canonical scale-safe
-    aggregate."""
-    li = spark.read.parquet(_t(sf_dir, "lineitem"))
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    charge = disc_price * (1 + F.col("l_tax"))
-    return (
-        li.groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            dsum(F.col("l_quantity")).alias("sum_qty"),
-            dsum(F.col("l_extendedprice")).alias("sum_base_price"),
-            dsum(disc_price).alias("sum_disc_price"),
-            dsum(charge).alias("sum_charge"),
-            davg(F.col("l_quantity")).alias("avg_qty"),
-            davg(F.col("l_extendedprice")).alias("avg_price"),
-            davg(F.col("l_discount")).alias("avg_disc"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
-    )
-
-
-SQL_PRICING_SUMMARY = f"""
-SELECT
-  l_returnflag,
-  l_linestatus,
-  {SQL_DSUM.format(x='l_quantity')} AS sum_qty,
-  {SQL_DSUM.format(x='l_extendedprice')} AS sum_base_price,
-  {SQL_DSUM.format(x='l_extendedprice * (1 - l_discount)')} AS sum_disc_price,
-  {SQL_DSUM.format(x='l_extendedprice * (1 - l_discount) * (1 + l_tax)')} AS sum_charge,
-  {SQL_DAVG.format(x='l_quantity')} AS avg_qty,
-  {SQL_DAVG.format(x='l_extendedprice')} AS avg_price,
-  {SQL_DAVG.format(x='l_discount')} AS avg_disc,
-  COUNT(*) AS count_order
-FROM lineitem
-GROUP BY l_returnflag, l_linestatus
-ORDER BY l_returnflag, l_linestatus
-"""
-
-
-def q_thermometer_putirka15(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Default melt thermometer (Putirka 2008 eq. 15,
-    ``thermometers/melt.py:191-279``) over the synthetic melt table —
-    narrow, shuffle-free expression pipeline."""
-    from magmapandas_spark.models import thermometers as tm
-
-    gf = synthetic_melt(spark, sf_dir)
-    out = tm.putirka2008_15(gf, P_bar="P_bar")
-    return out.select("name", F.round("T_K", 4).alias("T_K")).orderBy("name")
-
-
-def _sql_thermometer_putirka15() -> str:
-    anhyd = [s for s in MELT_SPECIES if s != "H2O"]
-    _, frac = _sql_mole_fraction_terms(anhyd)
-    mg_no = f"({frac['MgO']} / ({frac['MgO']} + {frac['FeO']}))"
-    t_k = (
-        f"815.3 + 265.5 * {mg_no} + 15.37 * MgO + 8.61 * FeO"
-        f" + 6.646 * (Na2O + K2O) + 39.16 * (P_bar / 10000.0)"
-        f" - 12.83 * H2O + 273.15"
-    )
-    return f"""
-WITH {SQL_MELT_CTE}
-SELECT name, ROUND({t_k}, 4) AS T_K
-FROM melt
-ORDER BY name
-"""
-
-
-def q_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Text analytics: per-language doc counts / char sums / mean token
-    counts (whitespace tokenizer)."""
-    docs = spark.read.parquet(_t(sf_dir, "documents"))
-    tokens = F.size(F.split(F.col("text"), " "))
-    return (
-        docs.groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").alias("total_chars"),
-            F.round(davg(tokens.cast("double")), 6).alias("avg_tokens"),
-        )
-        .orderBy("lang")
-    )
-
-
-# DuckDB SUM(INTEGER) yields HUGEINT (renders 19525.0) while Spark SUM(INT)
-# yields BIGINT — cast the oracle side so the value hashes agree.
-SQL_DOC_STATS = f"""
-SELECT
-  lang,
-  COUNT(*) AS n_docs,
-  CAST(SUM(n_chars) AS BIGINT) AS total_chars,
-  ROUND({SQL_DAVG.format(x="CAST(len(str_split(text, ' ')) AS DOUBLE)")}, 6) AS avg_tokens
-FROM documents
-GROUP BY lang
-ORDER BY lang
-"""
-
-
-def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact deduplication accounting by source: md5 content hash →
-    distinct count. Hash-groupBy is the 100 TB-scale pattern (no sort,
-    single shuffle on the hash)."""
-    docs = spark.read.parquet(_t(sf_dir, "documents"))
-    return (
-        docs.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.countDistinct(F.md5(F.col("text"))).alias("n_unique"),
-        )
-        .withColumn("n_dupes", F.col("n_docs") - F.col("n_unique"))
-        .orderBy("source")
-    )
-
-
-SQL_DEDUP_EXACT = """
-SELECT
-  source,
-  COUNT(*) AS n_docs,
-  COUNT(DISTINCT md5(text)) AS n_unique,
-  COUNT(*) - COUNT(DISTINCT md5(text)) AS n_dupes
-FROM documents
-GROUP BY source
-ORDER BY source
-"""
-
-
-# ----------------------------------------------------------------------
 # registry
 # ----------------------------------------------------------------------
 
@@ -386,18 +259,9 @@ def _wrap(fn: Callable) -> Callable:
 
 
 # The correctness driver hash-verifies only the FIRST 50 entries of
-# queries(). Registry order is therefore part of the gate contract
-# (size/resolvability pinned by tests/test_registry.py).
-# Round-14 rotation — oldest-first, per the r13 verdict's item 8.
-# After r13 the staleness profile (latest driver stamp per entry,
-# all 247) is r9:48 r10:50 r11:49 r12:50 r13:50. The 50 slots take
-# ALL 48 r9-stamped rows (registry order), then the first 2 of the
-# r10 cohort alphabetically (`asof_purchase_view`,
-# `below_avg_revenue`) to fill the head and start the next wave —
-# after this rotation no oracle-bearing entry's latest driver stamp
-# is older than r10. Everything past slot 50 stays covered by
-# tests/test_oracle.py (the identical rows+schema+values check over
-# the whole registry, run at sf0.01 and sf0.1 every session).
+# queries(), so this head is part of the gate contract (size and
+# resolvability pinned by tests/test_registry.py). Rotation policy and
+# each round's rotation detail: DESIGN.md §1.
 _GATE_ORDER = [
     # r9-stamped (all 48, registry order)
     "h264_intra_decode",
@@ -460,75 +324,93 @@ def _gate_sorted(out: dict) -> dict:
     return {**front, **rest}
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from magmapandas_spark.relational import (
-        suite2,
-        suite3,
-        suite4,
-        suite5,
-        suite6,
-        suite7,
-        suite8,
-        suite9,
-        suite10,
-        suite11,
-        suite12,
-        suite13,
-    )
 
-    out = {
-        "pricing_summary": q_pricing_summary,
-        "thermometer_putirka2008_15": q_thermometer_putirka15,
-        "doc_stats": q_doc_stats,
-        "dedup_exact": q_dedup_exact,
-    }
-    out.update(suite2.queries())
-    out.update(suite3.queries())
-    out.update(suite4.queries())
-    out.update(suite5.queries())
-    out.update(suite6.queries())
-    out.update(suite7.queries())
-    out.update(suite8.queries())
-    out.update(suite9.queries())
-    out.update(suite10.queries())
-    out.update(suite11.queries())
-    out.update(suite12.queries())
-    out.update(suite13.queries())
-    return {k: _wrap(v) for k, v in _gate_sorted(out).items()}
+
+# Every module that declares queries, in registry order past the gate
+# head. Imported on first use, so operator modules can import the
+# helpers above from this module without an import cycle.
+_MODULES = (
+    "magmapandas_spark.relational.tpch",
+    "magmapandas_spark.relational.events",
+    "magmapandas_spark.relational.text",
+    "magmapandas_spark.relational.geochem",
+    "magmapandas_spark.operators.analytics",
+    "magmapandas_spark.operators.asof",
+    "magmapandas_spark.operators.assoc",
+    "magmapandas_spark.operators.binary_ann",
+    "magmapandas_spark.operators.bloom",
+    "magmapandas_spark.operators.bpe",
+    "magmapandas_spark.operators.contrastive",
+    "magmapandas_spark.operators.curation",
+    "magmapandas_spark.operators.dedup",
+    "magmapandas_spark.operators.evaluation",
+    "magmapandas_spark.operators.fuzzy",
+    "magmapandas_spark.operators.geochem_aux",
+    "magmapandas_spark.operators.gif",
+    "magmapandas_spark.operators.graph",
+    "magmapandas_spark.operators.h264",
+    "magmapandas_spark.operators.h264p",
+    "magmapandas_spark.operators.html",
+    "magmapandas_spark.operators.indexing",
+    "magmapandas_spark.operators.jpeg",
+    "magmapandas_spark.operators.jsonl",
+    "magmapandas_spark.operators.keywords",
+    "magmapandas_spark.operators.kmeans",
+    "magmapandas_spark.operators.maintenance",
+    "magmapandas_spark.operators.model_errors",
+    "magmapandas_spark.operators.mp4",
+    "magmapandas_spark.operators.multimodal",
+    "magmapandas_spark.operators.png",
+    "magmapandas_spark.operators.privacy",
+    "magmapandas_spark.operators.projection",
+    "magmapandas_spark.operators.quantiles",
+    "magmapandas_spark.operators.regression",
+    "magmapandas_spark.operators.robust",
+    "magmapandas_spark.operators.scoring",
+    "magmapandas_spark.operators.setjoin",
+    "magmapandas_spark.operators.similarity",
+    "magmapandas_spark.operators.sketches",
+    "magmapandas_spark.operators.skew",
+    "magmapandas_spark.operators.skyline",
+    "magmapandas_spark.operators.spatial",
+    "magmapandas_spark.operators.stats",
+    "magmapandas_spark.operators.tfidf",
+    "magmapandas_spark.operators.timeseries",
+    "magmapandas_spark.operators.validation",
+    "magmapandas_spark.operators.warc",
+    "magmapandas_spark.operators.wav",
+    "magmapandas_spark.operators.webcorpus",
+)
+
+
+def _declarations() -> dict[str, tuple]:
+    """Every module's ``QUERIES`` merged, gate head first. Each entry is
+    ``name -> (query, oracle)`` where ``oracle`` is the DuckDB SQL, a
+    zero-argument builder of it, or None for a rows-only probe
+    (DESIGN.md §2). A name declared by two modules raises."""
+    out: dict[str, tuple] = {}
+    owner: dict[str, str] = {}
+    for mod_name in _MODULES:
+        for name, decl in importlib.import_module(mod_name).QUERIES.items():
+            if name in owner:
+                raise ValueError(
+                    f"query {name!r} declared in both {owner[name]} "
+                    f"and {mod_name}"
+                )
+            owner[name] = mod_name
+            out[name] = decl
+    return _gate_sorted(out)
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return {k: _wrap(fn) for k, (fn, _) in _declarations().items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    from magmapandas_spark.relational import (
-        suite2,
-        suite3,
-        suite4,
-        suite5,
-        suite6,
-        suite7,
-        suite8,
-        suite9,
-        suite10,
-        suite11,
-        suite12,
-        suite13,
-    )
-
-    out = {
-        "pricing_summary": SQL_PRICING_SUMMARY,
-        "thermometer_putirka2008_15": _sql_thermometer_putirka15(),
-        "doc_stats": SQL_DOC_STATS,
-        "dedup_exact": SQL_DEDUP_EXACT,
+    """Oracle SQL of every query that has one; builders run here, never
+    in :func:`queries`."""
+    return {
+        k: oracle if isinstance(oracle, str) else oracle()
+        for k, (_, oracle) in _declarations().items()
+        if oracle is not None
     }
-    out.update(suite2.oracle_sql())
-    out.update(suite3.oracle_sql())
-    out.update(suite4.oracle_sql())
-    out.update(suite5.oracle_sql())
-    out.update(suite6.oracle_sql())
-    out.update(suite7.oracle_sql())
-    out.update(suite8.oracle_sql())
-    out.update(suite9.oracle_sql())
-    out.update(suite10.oracle_sql())
-    out.update(suite11.oracle_sql())
-    out.update(suite12.oracle_sql())
-    out.update(suite13.oracle_sql())
-    return _gate_sorted(out)

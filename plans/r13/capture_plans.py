@@ -45,7 +45,7 @@ def main() -> None:
     spark = get_spark(app_name="r13-plan-capture")
 
     # ----- volatile_saturation_im: kernel-internal change ------------
-    from magmapandas_spark.relational.suite2 import (
+    from magmapandas_spark.relational.geochem import (
         q_volatile_saturation_im,
     )
 

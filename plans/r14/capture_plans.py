@@ -225,7 +225,7 @@ def main() -> None:
     )
 
     # ----- allison_saturation: kernel-internal change ----------------
-    from magmapandas_spark.relational.suite3 import q_allison_saturation
+    from magmapandas_spark.relational.geochem import q_allison_saturation
 
     plan = explain_str(q_allison_saturation(spark, SF_DIR))
     hdr = (

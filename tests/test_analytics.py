@@ -1,4 +1,4 @@
-"""Behavioral tests for the round-6 suite7 operators (regression,
+"""Behavioral tests for the warehouse-analytics operators (regression,
 triangles, SCD2, funnel, PMI, incremental aggregation) — semantics on
 hand-built inputs, independent of the DuckDB oracle sweep."""
 

@@ -576,7 +576,7 @@ def test_table_diff_join_is_digest_narrow(spark):
     assert "FullOuter" not in plan
 
 
-# -- round-7 wave (suite8) --------------------------------------------
+# -- association rules, graph, spatial, privacy, robust stats ---------
 
 
 def test_copurchase_topk_is_takeordered(spark):

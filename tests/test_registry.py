@@ -1,6 +1,14 @@
 """Registry-contract guards: the driver hash-verifies only the FIRST
 50 entries of queries(), so _GATE_ORDER's size and resolvability are
-part of the correctness gate, not a style choice."""
+part of the correctness gate, not a style choice. The collector itself
+must fail loudly and stay cheap."""
+
+import ast
+import subprocess
+import sys
+from pathlib import Path
+
+import pytest
 
 from magmapandas_spark.relational import suite
 
@@ -29,3 +37,60 @@ def test_oracles_have_no_orphans():
     q = suite.queries()
     orphans = sorted(k for k in suite.oracle_sql() if k not in q)
     assert not orphans
+
+
+def test_duplicate_query_name_raises_naming_both_modules(monkeypatch):
+    """A name declared by two modules must fail the collector, never
+    let the later module silently shadow the earlier one."""
+    import sys
+    import types
+
+    for mod_name in ("fake_registry_a", "fake_registry_b"):
+        mod = types.ModuleType(mod_name)
+        mod.QUERIES = {"same_name": (lambda spark, sf_dir: None, "SELECT 1")}
+        monkeypatch.setitem(sys.modules, mod_name, mod)
+    monkeypatch.setattr(
+        suite, "_MODULES", ("fake_registry_a", "fake_registry_b")
+    )
+    with pytest.raises(ValueError) as err:
+        suite.queries()
+    msg = str(err.value)
+    assert "same_name" in msg
+    assert "fake_registry_a" in msg and "fake_registry_b" in msg
+
+
+def test_modules_list_matches_query_declarations():
+    """Every package module assigning a top-level ``QUERIES`` is in
+    ``_MODULES``, and every ``_MODULES`` entry assigns one."""
+    pkg = Path(suite.__file__).resolve().parents[1]
+    declaring = set()
+    for path in pkg.rglob("*.py"):
+        tree = ast.parse(path.read_text())
+        if any(
+            isinstance(node, ast.Assign)
+            and any(getattr(t, "id", None) == "QUERIES" for t in node.targets)
+            for node in tree.body
+        ):
+            rel = path.relative_to(pkg.parent).with_suffix("")
+            declaring.add(".".join(rel.parts))
+    assert declaring == set(suite._MODULES)
+    assert len(suite._MODULES) == len(set(suite._MODULES))
+
+
+def test_listing_queries_builds_no_oracle():
+    """``queries()`` must stay cheap: oracle builders run only in
+    ``oracle_sql()`` (building them all costs seconds of CPU)."""
+    root = Path(__file__).resolve().parents[1]
+    code = (
+        "import sys, time\n"
+        f"sys.path.insert(0, {str(root)!r})\n"
+        "from magmapandas_spark.relational import suite\n"
+        "t = time.process_time()\n"
+        "suite.queries()\n"
+        "print(time.process_time() - t)\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True,
+        check=True,
+    )
+    assert float(out.stdout.strip()) < 2.0
