@@ -9,6 +9,16 @@ Late-data policy: explicit watermarks on event time; aggregations emit
 in append/update per Spark semantics. All queries here are also
 runnable on the batch ``events`` table for the correctness gate
 (streaming==batch parity is the test strategy).
+
+Every ``streaming_*_ingest`` runs through one micro-batch runner,
+:func:`_run_batches`: the query starts with ``foreachBatch`` under an
+``availableNow`` trigger (process everything present, then stop), only
+non-empty micro-batches reach the ingest's batch body, and the call
+returns the finished query. A query that fails re-raises its error; one
+still running after ``timeout_s`` is stopped and raises
+``TimeoutError`` (:func:`_await`), so no caller reads state that a live
+query is still writing. State that persists across micro-batches
+folds through one read-merge-overwrite helper, :func:`_fold_state`.
 """
 
 from __future__ import annotations
@@ -17,15 +27,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-def _events_ts_is_int64(sf_dir: str) -> bool:
+def _events_ts_int64(spark: SparkSession, sf_dir: str) -> bool:
     """Inspect the parquet footer: the driver has shipped ``events.ts``
     both as int64 nanos (TIMESTAMP(NANOS), which Spark only reads via
-    the nanosAsLong legacy flag) and as timestamp[us]. Driver-side
-    metadata peek, no data read."""
+    the nanosAsLong legacy flag, set here when needed) and as
+    timestamp[us]. Driver-side metadata peek, no data read."""
     import pyarrow.parquet as pq
 
     field = pq.read_schema(f"{sf_dir}/events.parquet").field("ts")
-    return str(field.type) in ("int64", "timestamp[ns]")
+    ts_int64 = str(field.type) in ("int64", "timestamp[ns]")
+    if ts_int64:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return ts_int64
 
 
 def _events_schema(ts_int64: bool) -> T.StructType:
@@ -83,18 +96,14 @@ def _stage_symlink(src: str, prefix: str) -> str:
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events parquet (→ UTC timestamp),
     symlink-staged under /tmp (see :func:`_stage_symlink`)."""
-    ts_int64 = _events_ts_is_int64(sf_dir)
-    if ts_int64:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    ts_int64 = _events_ts_int64(spark, sf_dir)
     stage = _stage_symlink(f"{sf_dir}/events.parquet", "events_stream")
     raw = spark.readStream.schema(_events_schema(ts_int64)).parquet(stage)
     return _normalize_ts(raw, ts_int64)
 
 
 def read_events_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ts_int64 = _events_ts_is_int64(sf_dir)
-    if ts_int64:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    ts_int64 = _events_ts_int64(spark, sf_dir)
     raw = spark.read.parquet(f"{sf_dir}/events.parquet")
     return _normalize_ts(raw, ts_int64)
 
@@ -223,6 +232,40 @@ def running_user_totals(events: DataFrame) -> DataFrame:
     )
 
 
+def _await(q, timeout_s):
+    """Wait for ``q`` to finish and return it. A failed query re-raises
+    its error here; one still running after ``timeout_s`` is stopped
+    and raises ``TimeoutError`` naming it."""
+    # awaitTermination returns False on timeout (None when it waited
+    # without one)
+    if q.awaitTermination(timeout_s) is False:
+        q.stop()
+        raise TimeoutError(
+            f"streaming query {q.name or q.id} did not finish within "
+            f"{timeout_s} s; stopped"
+        )
+    return q
+
+
+def _run_batches(stream: DataFrame, checkpoint_dir: str, timeout_s, body):
+    """The one micro-batch runner: call ``body(batch_df, batch_id)`` on
+    every non-empty micro-batch of ``stream`` (``foreachBatch`` under an
+    ``availableNow`` trigger, checkpointed at ``checkpoint_dir``) and
+    return the finished query (see :func:`_await`)."""
+
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.head(1):
+            body(batch_df, batch_id)
+
+    q = (
+        stream.writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    return _await(q, timeout_s)
+
+
 def run_stream_to_memory(stream_df: DataFrame, name: str,
                          output_mode: str = "complete",
                          timeout_s: int = 120) -> DataFrame:
@@ -239,7 +282,7 @@ def run_stream_to_memory(stream_df: DataFrame, name: str,
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
+    _await(q, timeout_s)
     return stream_df.sparkSession.table(name)
 
 
@@ -277,10 +320,10 @@ def streaming_dedup_ingest(
     the index per batch can).
 
     ``fail_injector`` is a test-only fault hook called with the
-    batch_id at the TOP of every micro-batch, BEFORE any side effect
-    — raising there simulates an executor/driver crash at a batch
-    boundary, the recoverable failure point of this (non-atomic
-    two-sink) batch body. The crash-recovery drill in
+    batch_id at the TOP of every non-empty micro-batch, BEFORE any
+    side effect — raising there simulates an executor/driver crash at
+    a batch boundary, the recoverable failure point of this
+    (non-atomic two-sink) batch body. The crash-recovery drill in
     tests/test_streaming_ingest.py restarts from the same checkpoint
     and asserts exactly-once acceptance. (A crash BETWEEN the two
     appends below is NOT exactly-once recoverable — the accepted
@@ -300,9 +343,6 @@ def streaming_dedup_ingest(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if fail_injector is not None:
             fail_injector(batch_id)
-        spark = batch_df.sparkSession
-        if not batch_df.head(1):
-            return
         batch_df = batch_df.localCheckpoint(eager=True)
         # 1. cross-batch: drop anything colliding with the index
         dup_new = incremental_lsh_candidates(
@@ -321,14 +361,7 @@ def streaming_dedup_ingest(
             "append"
         ).insertInto(index_table)
 
-    q = (
-        doc_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_s)
-    return q
+    return _run_batches(doc_stream, checkpoint_dir, timeout_s, process)
 
 
 # ---------------------------------------------------------------------
@@ -391,12 +424,14 @@ def scrub_documents(docs: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------
 
 
-def _fold_sketch_state(batch_rel: DataFrame, state_path: str, merge_fn) -> None:
-    """Fold one micro-batch's sketch relation into the parquet state:
-    read-merge-overwrite, with an eager localCheckpoint so the merged
-    relation is materialized BEFORE the path it was read from is
-    overwritten. State stays sketch-sized (≤ m rows per group / d·w
-    rows), so this is a constant-cost fold per batch."""
+def _fold_state(batch_rel: DataFrame, state_path: str, merge_fn) -> None:
+    """The one read-merge-overwrite fold: ``merge_fn(state, batch_rel)``
+    replaces the parquet state at ``state_path`` (``batch_rel`` alone
+    starts it). The eager localCheckpoint materializes the merged
+    relation BEFORE the path it was read from is overwritten — that is
+    what makes reading and rewriting the same path safe. Sketch states
+    stay sketch-sized (≤ m rows per group / d·w rows), a constant-cost
+    fold per batch; the CDC merge's state is the full table."""
     import os
 
     spark = batch_rel.sparkSession
@@ -429,22 +464,13 @@ def streaming_hll_ingest(
     )
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.head(1):
-            return
         rel = hll_register_relation(batch_df, group_col, value_col)
-        _fold_sketch_state(
+        _fold_state(
             rel, state_path,
             lambda a, b: merge_hll_registers(a, b, group_col),
         )
 
-    q = (
-        events_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_s)
-    return q
+    return _run_batches(events_stream, checkpoint_dir, timeout_s, process)
 
 
 def streaming_cms_ingest(
@@ -465,19 +491,10 @@ def streaming_cms_ingest(
     )
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.head(1):
-            return
         rel = cms_counter_relation(batch_df, text_col)
-        _fold_sketch_state(rel, state_path, merge_cms_counters)
+        _fold_state(rel, state_path, merge_cms_counters)
 
-    q = (
-        doc_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_s)
-    return q
+    return _run_batches(doc_stream, checkpoint_dir, timeout_s, process)
 
 
 def streaming_histogram_ingest(
@@ -504,24 +521,15 @@ def streaming_histogram_ingest(
     )
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.head(1):
-            return
         rel = fixed_histogram_relation(
             batch_df, group_col, value_col, lo, hi, n_bins
         )
-        _fold_sketch_state(
+        _fold_state(
             rel, state_path,
             lambda a, b: merge_histograms(a, b, group_col),
         )
 
-    q = (
-        events_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_s)
-    return q
+    return _run_batches(events_stream, checkpoint_dir, timeout_s, process)
 
 
 def streaming_stats_ingest(
@@ -546,19 +554,10 @@ def streaming_stats_ingest(
     )
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.head(1):
-            return
         rel = mergeable_stats_relation(batch_df, columns)
-        _fold_sketch_state(rel, state_path, merge_stats_relations)
+        _fold_state(rel, state_path, merge_stats_relations)
 
-    q = (
-        stream_df.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_s)
-    return q
+    return _run_batches(stream_df, checkpoint_dir, timeout_s, process)
 
 
 def streaming_index_ingest(
@@ -582,24 +581,15 @@ def streaming_index_ingest(
     )
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.head(1):
-            return
         rel = inverted_index_relation(
             batch_df, max_postings=max_postings
         )
-        _fold_sketch_state(
+        _fold_state(
             rel, state_path,
             lambda a, b: merge_inverted_index(a, b, max_postings),
         )
 
-    q = (
-        doc_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_s)
-    return q
+    return _run_batches(doc_stream, checkpoint_dir, timeout_s, process)
 
 
 def streaming_reservoir_ingest(
@@ -627,19 +617,10 @@ def streaming_reservoir_ingest(
         return u.orderBy(F.desc("priority"), key_col).limit(k)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.head(1):
-            return
         cand = weighted_sample(batch_df, weight_col, k, key_col=key_col)
-        _fold_sketch_state(cand, state_path, merge)
+        _fold_state(cand, state_path, merge)
 
-    q = (
-        doc_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_s)
-    return q
+    return _run_batches(doc_stream, checkpoint_dir, timeout_s, process)
 
 
 def streaming_validation_ingest(
@@ -675,19 +656,10 @@ def streaming_validation_ingest(
         )
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.head(1):
-            return
         rel = validate(batch_df, rules).select("rule", "n_violations")
-        _fold_sketch_state(rel, state_path, merge)
+        _fold_state(rel, state_path, merge)
 
-    q = (
-        stream_df.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_s)
-    return q
+    return _run_batches(stream_df, checkpoint_dir, timeout_s, process)
 
 
 def streaming_transitions_ingest(
@@ -731,8 +703,6 @@ def streaming_transitions_ingest(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql import Window
 
-        if not batch_df.head(1):
-            return
         spark = batch_df.sparkSession
         batch = batch_df.select(
             F.col(user_col), F.col(type_col), F.col(ts_col),
@@ -760,17 +730,13 @@ def streaming_transitions_ingest(
             .groupBy("from_state", "to_state")
             .agg(F.count(F.lit(1)).alias("n"))
         )
-        if os.path.exists(counts_path):
-            merged = (
-                spark.read.parquet(counts_path)
-                .unionByName(new_counts)
-                .groupBy("from_state", "to_state")
-                .agg(F.sum("n").alias("n"))
-            )
-        else:
-            merged = new_counts
-        merged = merged.localCheckpoint(eager=True)
-        merged.write.mode("overwrite").parquet(counts_path)
+        _fold_state(
+            new_counts,
+            counts_path,
+            lambda a, b: a.unionByName(b)
+            .groupBy("from_state", "to_state")
+            .agg(F.sum("n").alias("n")),
+        )
         wb = Window.partitionBy(user_col).orderBy(
             F.desc(ts_col), F.desc(seq_col)
         )
@@ -782,14 +748,7 @@ def streaming_transitions_ingest(
         )
         boundary.write.mode("overwrite").parquet(boundary_path)
 
-    q = (
-        events_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_s)
-    return q
+    return _run_batches(events_stream, checkpoint_dir, timeout_s, process)
 
 
 def finalize_streaming_transitions(
@@ -863,7 +822,7 @@ def streaming_merge_ingest(
     semantics: per micro-batch, last-writer-wins compaction (when
     ``order_col`` is given), then ``merge_upsert`` of the compacted
     delta into the parquet state, materialized eagerly before the
-    swap (the `_fold_sketch_state` discipline).
+    swap (through :func:`_fold_state`).
 
     Unlike the sketch folds, the state here is the FULL table, so the
     per-batch cost is one base scan + rewrite — exactly what a
@@ -879,13 +838,10 @@ def streaming_merge_ingest(
 
     from magmapandas_spark.operators.maintenance import merge_upsert
 
-    spark = base.sparkSession
     if not os.path.exists(state_path):
         base.write.mode("overwrite").parquet(state_path)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.head(1):
-            return
         delta = (
             # the ordering column is feed metadata (LSN/sequence), not
             # table payload: drop it after compaction so the state
@@ -896,20 +852,15 @@ def streaming_merge_ingest(
             if order_col
             else batch_df
         )
-        state = spark.read.parquet(state_path)
-        merged = merge_upsert(
-            state, delta, key_col, delete_col=delete_col
-        ).localCheckpoint(eager=True)
-        merged.write.mode("overwrite").parquet(state_path)
+        _fold_state(
+            delta,
+            state_path,
+            lambda state, d: merge_upsert(
+                state, d, key_col, delete_col=delete_col
+            ),
+        )
 
-    q = (
-        cdc_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_s)
-    return q
+    return _run_batches(cdc_stream, checkpoint_dir, timeout_s, process)
 
 
 # ---------------------------------------------------------------------
@@ -1014,13 +965,11 @@ def streaming_cusum_ingest(
     the histogram/HLL/CMS ingests."""
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.head(1):
-            return
         rel = batch_df.groupBy(
             F.col(group_col).alias("g"),
             F.date_trunc("hour", F.col(ts_col)).alias("h"),
         ).agg(F.count(F.lit(1)).alias("c"))
-        _fold_sketch_state(
+        _fold_state(
             rel,
             state_path,
             lambda a, b: a.unionByName(b)
@@ -1028,14 +977,7 @@ def streaming_cusum_ingest(
             .agg(F.sum("c").alias("c")),
         )
 
-    q = (
-        events_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_s)
-    return q
+    return _run_batches(events_stream, checkpoint_dir, timeout_s, process)
 
 
 def finalize_streaming_cusum(
@@ -1107,8 +1049,6 @@ def streaming_seasonal_ingest(
     pinned (DECIMAL(38,6)) so repeated folds never re-widen."""
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.head(1):
-            return
         days = F.datediff(
             F.to_date("ts"), F.to_date(F.lit("1970-01-01"))
         )
@@ -1124,7 +1064,7 @@ def streaming_seasonal_ingest(
                 .alias("sv"),
             )
         )
-        _fold_sketch_state(
+        _fold_state(
             rel,
             state_path,
             lambda a, b: a.unionByName(b)
@@ -1135,14 +1075,7 @@ def streaming_seasonal_ingest(
             ),
         )
 
-    q = (
-        events_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_s)
-    return q
+    return _run_batches(events_stream, checkpoint_dir, timeout_s, process)
 
 
 def finalize_streaming_seasonal(
@@ -1189,8 +1122,6 @@ def streaming_psi_ingest(
     finalize-time formula over the tiny state."""
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.head(1):
-            return
         if mx == mn:
             bin_c = F.lit(0)
         else:
@@ -1202,7 +1133,7 @@ def streaming_psi_ingest(
             batch_df.groupBy(bin_c.cast("long").alias("bin"))
             .agg(F.count(F.lit(1)).alias("c_b"))
         )
-        _fold_sketch_state(
+        _fold_state(
             rel,
             state_path,
             lambda a, b: a.unionByName(b)
@@ -1210,14 +1141,7 @@ def streaming_psi_ingest(
             .agg(F.sum("c_b").alias("c_b")),
         )
 
-    q = (
-        docs_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_s)
-    return q
+    return _run_batches(docs_stream, checkpoint_dir, timeout_s, process)
 
 
 def finalize_streaming_psi(
@@ -1293,8 +1217,6 @@ def streaming_fp_ingest(
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        if not batch_df.head(1):
-            return
         fps = png_fingerprints(batch_df).localCheckpoint(eager=True)
         idx = spark.table(index_table).select("fp").distinct()
         fresh = fps.join(idx, "fp", "anti")
@@ -1313,14 +1235,7 @@ def streaming_fp_ingest(
             "append"
         ).insertInto(index_table)
 
-    q = (
-        media_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_s)
-    return q
+    return _run_batches(media_stream, checkpoint_dir, timeout_s, process)
 
 
 def streaming_funnel_ingest(
@@ -1357,8 +1272,9 @@ def streaming_funnel_ingest(
     When batches arrive in doc_id order (first occurrence = min
     doc_id), the folded totals are BIT-EQUAL to the batch funnel —
     pinned by tests/test_streaming_oracle.py."""
+    import os
+
     from pyspark.sql import Window
-    from pyspark.sql.utils import AnalysisException
 
     from magmapandas_spark.operators.bloom import bloom_flag_docs_bitset
 
@@ -1367,8 +1283,6 @@ def streaming_funnel_ingest(
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        if not batch_df.head(1):
-            return
         tokens = F.split(F.col("text"), " ")
         base = batch_df.select(
             "doc_id",
@@ -1394,14 +1308,14 @@ def streaming_funnel_ingest(
             .filter(F.col("rn") == 1)
             .drop("rn")
         )
-        try:
+        if os.path.exists(hashes_path):
             seen = (
                 spark.read.parquet(hashes_path)
                 .filter(F.col("batch_id") != batch_id)
                 .select("h")
             )
             kept = firsts.join(seen, "h", "anti")
-        except AnalysisException:
+        else:
             kept = firsts
         kept = kept.localCheckpoint(eager=True)
         kept.select(
@@ -1450,14 +1364,7 @@ def streaming_funnel_ingest(
             "append"
         ).parquet(counters_path)
 
-    q = (
-        docs_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_s)
-    return q
+    return _run_batches(docs_stream, checkpoint_dir, timeout_s, process)
 
 
 def finalize_streaming_funnel(

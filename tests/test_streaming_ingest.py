@@ -251,3 +251,100 @@ def test_streaming_ingest_recovery_across_crash(spark, workdir):
         assert idx_rows == n_bands_per_doc * len(got_ids)
     finally:
         spark.sql("DROP TABLE IF EXISTS ingest_crash_idx")
+
+
+def test_timed_out_ingest_stops_and_raises(spark, workdir):
+    """A stream still running at ``timeout_s`` is stopped and raises
+    TimeoutError, instead of returning a live query whose state the
+    caller could read while the query still writes it."""
+    import time
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").filter(
+        F.col("doc_id") < 50
+    )
+    write_lsh_index(docs.limit(0), "ingest_timeout_idx", hash_strategy="md5")
+    try:
+        docs.coalesce(1).write.parquet(f"{workdir}/src/b0")
+        stream = spark.readStream.schema(docs.schema).parquet(
+            f"{workdir}/src/*"
+        )
+
+        def stall(batch_id):
+            time.sleep(5)
+            # the stalled batch never reaches its side effects
+            raise RuntimeError("stalled batch")
+
+        before = {q.id for q in spark.streams.active}
+        with pytest.raises(TimeoutError, match="did not finish within 1 s"):
+            streaming_dedup_ingest(
+                stream, "ingest_timeout_idx", f"{workdir}/accepted",
+                f"{workdir}/ckpt", hash_strategy="md5", timeout_s=1,
+                fail_injector=stall,
+            )
+        assert {q.id for q in spark.streams.active} == before
+    finally:
+        spark.sql("DROP TABLE IF EXISTS ingest_timeout_idx")
+
+
+def test_funnel_ingest_raises_on_unreadable_hash_state(spark, tmp_path):
+    """A seen-hash state that exists but cannot be read (here: it has
+    no batch_id column) fails the stream instead of silently skipping
+    cross-batch dedup."""
+    from magmapandas_spark.operators.bloom import build_bloom_bits
+    from magmapandas_spark.streaming.streams import streaming_funnel_ingest
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").select(
+        "doc_id", "text"
+    ).filter(F.col("doc_id") < 50)
+    src = str(tmp_path / "src")
+    docs.coalesce(1).write.parquet(f"{src}/b0")
+    state = str(tmp_path / "state")
+    spark.createDataFrame([("x",)], "h string").write.parquet(
+        f"{state}/hashes"
+    )
+    stream = spark.readStream.schema("doc_id bigint, text string").parquet(
+        f"{src}/*"
+    )
+    with pytest.raises(Exception, match="batch_id"):
+        streaming_funnel_ingest(
+            stream, build_bloom_bits(docs.filter(F.col("doc_id") % 11 == 0)),
+            state, str(tmp_path / "ckpt"),
+        )
+
+
+def test_streams_have_one_runner_and_one_fold():
+    """Tripwire: every ingest in streams.py starts, guards and awaits
+    its micro-batches through the one runner, and persists folded
+    state through the one read-merge-overwrite fold."""
+    import ast
+
+    from magmapandas_spark.streaming import streams
+
+    with open(streams.__file__) as fh:
+        tree = ast.parse(fh.read())
+    calls = [
+        n for n in ast.walk(tree)
+        if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+    ]
+
+    def named(attr):
+        return [c for c in calls if c.func.attr == attr]
+
+    def consts(call):
+        return [a.value if isinstance(a, ast.Constant) else None
+                for a in call.args]
+
+    assert len(named("foreachBatch")) == 1
+    assert len(named("awaitTermination")) == 1
+    assert len([c for c in named("head") if consts(c) == [1]]) == 1
+    overwrites = sorted(
+        ast.unparse(c.func.value.func.value)
+        for c in named("parquet")
+        if isinstance(c.func.value, ast.Call)
+        and isinstance(c.func.value.func, ast.Attribute)
+        and c.func.value.func.attr == "mode"
+        and consts(c.func.value) == ["overwrite"]
+    )
+    # one fold write; the transitions ``boundary`` snapshot and the
+    # merge ingest's initial ``base`` write are the two non-fold writes
+    assert overwrites == ["base.write", "boundary.write", "merged.write"]
