@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from magmapandas_spark.operators.graph import connected_components
 from magmapandas_spark.relational.suite import _t
 
 #: Mersenne prime 2^31 - 1: double-hash modulus small enough that
@@ -523,206 +524,6 @@ def simhash_near_dups(
     )
 
 
-def _union_find_labels(edges: list) -> dict:
-    """Driver-side union-find with path compression; component label =
-    minimum node id (identical to min-label propagation's fixpoint)."""
-    parent: dict = {}
-
-    def find(x):
-        root = x
-        while parent.get(root, root) != root:
-            root = parent[root]
-        while parent.get(x, x) != root:
-            parent[x], x = root, parent[x]
-        return root
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            # attach the larger root under the smaller: roots stay the
-            # component minimum, so find() IS the cluster label
-            if ra < rb:
-                parent[rb] = ra
-            else:
-                parent[ra] = rb
-    return {n: find(n) for n in {x for e in edges for x in e}}
-
-
-def connected_components(
-    pairs: DataFrame,
-    id1: str = "id1",
-    id2: str = "id2",
-    max_iter: int = 50,
-    n_partitions: int | None = None,
-    driver_threshold: int = 100_000,
-) -> DataFrame:
-    """Connected components over an undirected pair list — the dedup
-    *clustering* step that turns near-duplicate candidate pairs into
-    groups (keep one doc per cluster at 100 TB).
-
-    Min-label propagation with pointer jumping (path halving): each
-    round every node (a) adopts the minimum label among itself and its
-    neighbours, then (b) adopts its label's label. Step (b) is the
-    doubling trick — without it, a path component of length L needs L
-    rounds; with it, convergence is O(log L) (near-dup corpora chain
-    adjacent docs into exactly such paths). Each round is two joins +
-    one aggregation, all shuffling on node id; the symmetrized edge
-    list is partitioned once and reused across rounds. The driver loop
-    only monitors convergence (one count per round) — all data movement
-    stays on executors, the standard shape for iterative graph
-    algorithms on Spark (GraphX/Pregel does the same).
-
-    ``n_partitions`` sizes the loop's shuffles — size it to the edge
-    count (a 4k-edge candidate graph doesn't want 64-task stages; a
-    100 TB one does). Defaults to the session's shuffle partitions.
-
-    ``driver_threshold``: candidate graphs are usually *small* even
-    when the corpus is not (banding bounds pair volume), and the
-    iterative path pays ~0.5 s of scheduler latency per round. When the
-    edge list fits under the threshold (100k edges ≈ 2 MB — a bounded,
-    corpus-size-independent driver materialization, same class as the
-    IVF fit sample), a driver union-find computes the identical
-    min-label fixpoint in one pass. Larger graphs fall through to the
-    distributed loop. Set ``driver_threshold=0`` to force the
-    distributed path.
-
-    Returns (node, cluster_id) where cluster_id is the component's
-    minimum node id."""
-    if driver_threshold:
-        probe = pairs.select(id1, id2).limit(driver_threshold + 1).collect()
-        if len(probe) <= driver_threshold:
-            labels_map = _union_find_labels(
-                [(r[0], r[1]) for r in probe]
-            )
-            # widest of the two endpoint dtypes: labels sourced from
-            # id2 values must not be narrowed to id1's type (e.g. an
-            # int/bigint pair list)
-            dtypes = dict(pairs.select(id1, id2).dtypes)
-            t1, t2 = dtypes[id1], dtypes[id2]
-            rank = {
-                "tinyint": 0, "smallint": 1, "int": 2, "bigint": 3,
-                "decimal(38,0)": 4,
-            }
-            if t1 == t2:
-                node_type = t1
-            elif t1 in rank and t2 in rank:
-                node_type = max(t1, t2, key=rank.__getitem__)
-            else:
-                raise TypeError(
-                    f"connected_components: incompatible id dtypes "
-                    f"{t1!r} vs {t2!r} — cast both endpoints to a "
-                    f"common type first"
-                )
-            return pairs.sparkSession.createDataFrame(
-                sorted(labels_map.items()),
-                f"node {node_type}, cluster_id {node_type}",
-            )
-    npart = n_partitions or int(
-        pairs.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-    # both orientations from ONE evaluation of the (possibly expensive)
-    # pair pipeline: explode, don't union two copies of the subtree
-    sym = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col(id1).alias("node"), F.col(id2).alias("nb")
-                    ),
-                    F.struct(
-                        F.col(id2).alias("node"), F.col(id1).alias("nb")
-                    ),
-                )
-            ).alias("e")
-        )
-        .select("e.node", "e.nb")
-        .repartition(npart, "nb")
-        .persist()
-    )
-    labels = (
-        sym.select("node").distinct()
-        .withColumn("label", F.col("node"))
-        .persist()
-    )
-    labels.count()
-    prev_sum = None
-    converged = False
-    for _ in range(max_iter):
-        nb_labels = sym.join(
-            labels.select(F.col("node").alias("nb"), "label"), on="nb"
-        )
-        neigh = nb_labels.groupBy("node").agg(F.min("label").alias("nl"))
-        stepped = labels.join(neigh, on="node", how="left").select(
-            "node",
-            F.least(
-                F.col("label"), F.coalesce(F.col("nl"), F.col("label"))
-            ).alias("label"),
-        )
-        # stepped feeds BOTH sides of the pointer-jump self-join below;
-        # without a checkpoint the min-label join+agg subtree executes
-        # twice per round (rename on one side defeats ReuseExchange,
-        # and AQE's runtime re-planning defeats it even when shapes
-        # match — same failure mode as the LSH band self-join). Lazy:
-        # the round's single materializing action computes it once.
-        stepped = stepped.localCheckpoint(eager=False)
-        # pointer jump: label of my label (labels are node ids, so the
-        # lookup is a self-join); halves remaining path length per round
-        jumped = (
-            stepped.alias("s")
-            .join(
-                stepped.select(
-                    F.col("node").alias("label"),
-                    F.col("label").alias("ll"),
-                ).alias("t"),
-                on="label",
-                how="left",
-            )
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("ll"), F.col("label"))
-                ).alias("label"),
-            )
-        )
-        # localCheckpoint truncates lineage: without it every round's
-        # plan nests the previous round's, and driver-side analysis
-        # grows quadratically with iterations (on a multi-node cluster
-        # use checkpoint() with a reliable dir for fault tolerance).
-        # Lazy here — the convergence agg below is the materializing
-        # action, so each round runs ONE job, not two.
-        new_labels = jumped.repartition(npart, "node").localCheckpoint(
-            eager=False
-        )
-        # labels only ever decrease, so Σlabel is strictly monotone and
-        # fixpoint ⟺ unchanged sum — one cheap agg instead of an
-        # old-vs-new join per round. Sum in decimal(38,0): a bigint sum
-        # wraps silently in non-ANSI Spark at web-corpus node-id scale,
-        # which would make the equality probe unsound exactly where it
-        # matters.
-        new_sum = new_labels.agg(
-            F.sum(F.col("label").cast("decimal(38,0)"))
-        ).collect()[0][0]
-        labels.unpersist()
-        labels = new_labels
-        if prev_sum is not None and new_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = new_sum
-    sym.unpersist()
-    if not converged:
-        import warnings
-
-        warnings.warn(
-            f"connected_components: label propagation did not reach a "
-            f"fixpoint within max_iter={max_iter} rounds; returned "
-            f"cluster ids may still be split. Raise max_iter (rounds "
-            f"needed ~ log2 of the largest component's diameter).",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    return labels.select("node", F.col("label").alias("cluster_id"))
-
-
 # ---- suite entries (md5 strategy: exact DuckDB oracles) ----
 
 def q_minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -851,10 +652,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the iteration machinery is what's under test, not the slice
     width."""
     pairs = _gate_pairs(spark, sf_dir)
-    # n_partitions sized to the gate slice's edge count (hundreds of
-    # pairs): 2-task iterative stages instead of 8 — at corpus scale
-    # size this to the candidate-graph width instead
-    cc = connected_components(pairs, n_partitions=2)
+    cc = connected_components(pairs)
     return cc.select(
         F.col("node").alias("doc_id"), "cluster_id"
     ).orderBy("doc_id")
@@ -864,14 +662,14 @@ def q_dedup_clusters_distributed(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """``dedup_clusters`` with ``driver_threshold=0``: forces the
-    distributed min-label + pointer-jumping loop — the code path that
+    distributed large-star / small-star loop — the code path that
     actually runs at 100 TB, where the candidate graph exceeds the
     bounded driver union-find. Identical fixpoint, identical oracle;
     exists so the bench RECORDS the loop's wall time instead of only
     exercising it in unit tests (the driver fast path shadows it at
     gate scale)."""
     pairs = _gate_pairs(spark, sf_dir)
-    cc = connected_components(pairs, n_partitions=2, driver_threshold=0)
+    cc = connected_components(pairs, driver_threshold=0)
     return cc.select(
         F.col("node").alias("doc_id"), "cluster_id"
     ).orderBy("doc_id")
@@ -1037,7 +835,7 @@ def q_dedup_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pairs = _gate_pairs(spark, sf_dir)
     verified = jaccard_verify_pairs(docs, pairs)
-    cc = connected_components(verified, n_partitions=2)
+    cc = connected_components(verified)
     return cc.select(
         F.col("node").alias("doc_id"), "cluster_id"
     ).orderBy("doc_id")
@@ -1175,7 +973,7 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-break min doc id). Composes three already-verified stages into
     the decision a real pipeline ships: which doc survives."""
     pairs = _gate_pairs(spark, sf_dir)
-    cc = connected_components(pairs, n_partitions=2).select(
+    cc = connected_components(pairs).select(
         F.col("node").alias("doc_id"), "cluster_id"
     )
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").filter(

@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from magmapandas_spark.operators.graph import connected_components
+
 #: minimum token length admitted to the dictionary / probe base
 MIN_WORD_LEN = 4
 
@@ -332,13 +334,11 @@ def q_er_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
     CC is iteration-order independent), then applies the same
     survivorship window.
     """
-    from magmapandas_spark.operators.dedup import connected_components
-
     parts = spark.read.parquet(f"{sf_dir}/part.parquet")
     pairs = sorted_neighborhood_pairs(
         parts, "p_name", "p_partkey"
     ).select(F.col("id_a").alias("id1"), F.col("id_b").alias("id2"))
-    cc = connected_components(pairs, n_partitions=2)
+    cc = connected_components(pairs)
     members = cc.join(
         parts.select(
             F.col("p_partkey").alias("node"), "p_name", "p_size"

@@ -1,6 +1,6 @@
-"""Iterative graph analytics beyond connected components: PageRank
-(beyond-reference surface — the canonical web-graph computation over a
-crawl, and the second Pregel-shaped loop in the engine).
+"""Iterative graph analytics: PageRank (beyond-reference surface — the
+canonical web-graph computation over a crawl), triangles, k-core,
+label propagation and connected components.
 
 Determinism design: textbook PageRank sums float contributions, whose
 partition-order summation can never be exactly oracle-checked. This
@@ -14,21 +14,22 @@ Truncation loses < outdeg ulps of S per node per round (≪ 1e-9
 relative at the default scale) — far below float PageRank's own
 iteration tolerance.
 
-Plan shape per round (the GraphX/Pregel shape, same family as
-``connected_components``): edges ⋈ ranks on src, bigint-sum
-aggregation on dst, plus the teleport constant, with every relation
-hash-partitioned on its node key into the same ``n_partitions`` so the
-round's only exchange is the inflow aggregation's. The loop is a fixed
-iteration count — no convergence probe. Lineage is cut with a lazy
-``localCheckpoint`` every ``checkpoint_interval`` rounds; under AQE
-even a lazy cut is a driver synchronization point — it runs the
-shuffle stages of the rounds since the previous cut at call time.
+PageRank plan shape per round (the GraphX/Pregel shape): edges ⋈
+ranks on src, bigint-sum aggregation on dst, plus the teleport
+constant, with every relation hash-partitioned on its node key into
+the same ``n_partitions`` so the round's only exchange is the inflow
+aggregation's. The loop is a fixed iteration count — no convergence
+probe. Lineage is cut with a lazy ``localCheckpoint`` every
+``checkpoint_interval`` rounds; under AQE even a lazy cut is a driver
+synchronization point — it runs the shuffle stages of the rounds
+since the previous cut at call time.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DecimalType, IntegralType
 
 #: rank scale: 1.0 of probability mass == S
 SCALE = 1_000_000_000_000
@@ -195,8 +196,8 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     500-node link graph — iteration 10's exact bigint ranks are under
     the hash (every engine must reproduce the whole trajectory).
     ``n_partitions=2`` sizes the loop's per-round shuffles to the
-    1500-edge gate graph (the dedup-cluster gates' convention); at
-    crawl scale size it to the edge-relation width instead."""
+    1500-edge gate graph; at crawl scale size it to the
+    edge-relation width instead."""
     pr = pagerank(
         synthetic_link_graph(spark), iterations=10, n_partitions=2
     )
@@ -446,9 +447,9 @@ ORDER BY p.tri_count DESC, p.node
 
 
 # ---------------------------------------------------------------------
-# Fixed-round loops over the symmetrized edge list (label propagation,
-# k-core): node state rides on the edge rows, so a round is two
-# windows and one exchange — no join, no checkpoint
+# Loops over the symmetrized edge list (label propagation, connected
+# components, k-core): node state rides on the edge rows, so a round
+# is windows and exchanges on the node key — no join
 # ---------------------------------------------------------------------
 
 
@@ -472,6 +473,38 @@ def _swap(df: DataFrame, *pairs: tuple[str, str]) -> DataFrame:
     return df.select([F.col(c).alias(names.get(c, c)) for c in df.columns])
 
 
+def _min_label_round(state: DataFrame) -> DataFrame:
+    """One synchronous min-label round over symmetrized edge rows
+    (a, b, la, lb) partitioned on ``a``: both endpoints take
+    ``least(own, min(neighbour))`` of the previous labels, in a window
+    on ``a`` and, after one exchange on ``b``, a window on ``b`` (the
+    list is symmetric, so each window sees a node's whole adjacency),
+    then ``a``/``b`` swap so the result is partitioned on ``a`` again."""
+    by_a, by_b = Window.partitionBy("a"), Window.partitionBy("b")
+    return _swap(
+        state.withColumn("na", F.least("la", F.min("lb").over(by_a)))
+        .repartition("b")
+        .withColumn("lb", F.least("lb", F.min("la").over(by_b)))
+        .select("a", "b", F.col("na").alias("la"), "lb"),
+        ("a", "b"),
+        ("la", "lb"),
+    )
+
+
+def _own_labels(state: DataFrame) -> DataFrame:
+    """Edge rows (a, b) labeled with their own endpoint ids."""
+    return state.select(
+        "a", "b", F.col("a").alias("la"), F.col("b").alias("lb")
+    )
+
+
+def _node_labels(state: DataFrame, name: str) -> DataFrame:
+    """(node, ``name``): each node's label from labeled edge rows."""
+    return state.groupBy("a").agg(F.min("la").alias(name)).select(
+        F.col("a").alias("node"), name
+    )
+
+
 def min_label_propagation(
     edges: DataFrame, rounds: int = 4
 ) -> DataFrame:
@@ -481,35 +514,168 @@ def min_label_propagation(
 
     Fixed ``rounds`` (not run-to-convergence) keeps the computation
     exactly replayable by an unrolled SQL oracle; the converged
-    variant is the existing distributed connected-components loop
-    (operators/dedup.py) — this operator is its bounded-round,
-    hash-checkable twin.
+    variant is :func:`connected_components` below, which probes its
+    own loop with this round.
 
     Scale posture: labels ride on the symmetrized edge rows as
-    (a, b, la, lb), partitioned on ``a``. Because the edge list is
-    symmetric, a window on ``a`` sees all of a's neighbours' labels
-    and, after one exchange on ``b``, a window on ``b`` sees all of
-    b's; both take ``least(own, min(neighbour))`` from the previous
-    round's labels, then ``a``/``b`` swap so the next round starts
-    partitioned on ``a`` again. One shuffle per round, a plan that
+    (a, b, la, lb), partitioned on ``a``; a round is
+    :func:`_min_label_round`. One shuffle per round, a plan that
     grows linearly in ``rounds``, no join and no driver job. Returns
     (node, community).
     """
-    by_a, by_b = Window.partitionBy("a"), Window.partitionBy("b")
-    state = _sym_edges(edges).select(
-        "a", "b", F.col("a").alias("la"), F.col("b").alias("lb")
-    )
+    state = _own_labels(_sym_edges(edges))
     for _ in range(rounds):
-        state = _swap(
-            state.withColumn("na", F.least("la", F.min("lb").over(by_a)))
-            .repartition("b")
-            .withColumn("lb", F.least("lb", F.min("la").over(by_b)))
-            .select("a", "b", F.col("na").alias("la"), "lb"),
-            ("a", "b"),
-            ("la", "lb"),
+        state = _min_label_round(state)
+    return _node_labels(state, "community")
+
+
+#: round bound of :func:`connected_components`' star loop (shuffled-id
+#: paths of 100 / 1000 / 4000 nodes converge in 6 / 8 / 10 rounds)
+CC_MAX_ROUNDS = 50
+
+
+def _star_edges(df: DataFrame, *pairs: tuple[str, str]) -> DataFrame:
+    """Symmetrized simple edge rows (a, b) from the (x, y) column pairs
+    of every row of ``df``: both orientations of each pair come out of
+    ONE explode, so ``df`` is evaluated once; self-loops and duplicates
+    dropped, hash-partitioned on ``a`` (``distinct`` reuses the ``a``
+    exchange)."""
+    ends = [
+        F.struct(F.col(x).alias("a"), F.col(y).alias("b"))
+        for p in pairs
+        for x, y in (p, p[::-1])
+    ]
+    return (
+        df.select(F.explode(F.array(*ends)).alias("e"))
+        .select("e.a", "e.b")
+        .filter(F.col("a") != F.col("b"))
+        .repartition("a")
+        .distinct()
+    )
+
+
+def _star_round(state: DataFrame) -> DataFrame:
+    """One large-star then one small-star step over symmetrized edge
+    rows (a, b) partitioned on ``a``; see :func:`connected_components`."""
+    by_a = Window.partitionBy("a")
+    large = state.withColumn(
+        "m", F.least("a", F.min("b").over(by_a))
+    ).filter(F.col("b") > F.col("a"))
+    state = _star_edges(large, ("b", "m"))
+    small = state.filter(F.col("b") < F.col("a")).withColumn(
+        "m", F.min("b").over(by_a)
+    )
+    return _star_edges(small, ("b", "m"), ("a", "m"))
+
+
+def _union_find_labels(edges: list) -> dict:
+    """Driver-side union-find with path compression; component label =
+    minimum node id (identical to min-label propagation's fixpoint)."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent.get(root, root) != root:
+            root = parent[root]
+        while parent.get(x, x) != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            # attach the larger root under the smaller: roots stay the
+            # component minimum, so find() IS the cluster label
+            if ra < rb:
+                parent[rb] = ra
+            else:
+                parent[ra] = rb
+    return {n: find(n) for n in {x for e in edges for x in e}}
+
+
+def connected_components(
+    pairs: DataFrame,
+    id1: str = "id1",
+    id2: str = "id2",
+    driver_threshold: int = 100_000,
+) -> DataFrame:
+    """Connected components over an undirected pair list — the dedup
+    *clustering* step that turns near-duplicate candidate pairs into
+    groups (keep one doc per cluster at 100 TB).
+
+    Large-star / small-star (Kiveris et al., "Connected Components in
+    MapReduce and Beyond", SoCC 2014) on symmetrized edge rows (a, b)
+    partitioned on ``a``. A round is two steps, each a window on ``a``
+    and one exchange, with no join:
+
+    - large-star: ``m = least(a, min(b))``; each row with ``b > a``
+      becomes (b, m) — every larger neighbour hooks onto a's
+      neighbourhood minimum;
+    - small-star: over the rows with ``b < a``, ``m = min(b)``; each
+      becomes (b, m) and (a, m) — a and its smaller neighbours hook
+      onto the smallest of them.
+
+    Both keep every component connected and shrink it towards a star
+    around its minimum in O(log n) rounds in practice (a min-label
+    fixpoint alone needs one round per hop: L rounds on a path of L
+    nodes). Every second round one :func:`_min_label_round` from the
+    nodes' own ids probes for the fixpoint: if both ends of every edge
+    get the same ``least(x, min neighbour)``, every node is adjacent
+    to its component's minimum, and that label is the cluster id. The
+    probe's lazy ``localCheckpoint`` cuts the lineage, and its
+    ``isEmpty`` action materializes the cut. More than
+    ``CC_MAX_ROUNDS`` rounds raise ``RuntimeError``.
+
+    ``driver_threshold``: candidate graphs are usually *small* even
+    when the corpus is not (banding bounds pair volume). When the
+    edge list fits under the threshold (100k edges ≈ 2 MB — a bounded,
+    corpus-size-independent driver materialization, same class as the
+    IVF fit sample), a driver union-find computes the identical
+    min-label fixpoint in one pass. Larger graphs fall through to the
+    distributed loop. Set ``driver_threshold=0`` to force the
+    distributed path.
+
+    Returns (node, cluster_id) where cluster_id is the component's
+    minimum node id, typed as the wider of the two id columns (two
+    different id types must both be integers or decimals). A pair
+    (x, x) carries no edge: like a node in no pair, a node in only
+    such pairs is absent from the output."""
+    t1, t2 = pairs.schema[id1].dataType, pairs.schema[id2].dataType
+    if t1 != t2 and not all(
+        isinstance(t, (IntegralType, DecimalType)) for t in (t1, t2)
+    ):
+        raise TypeError(
+            f"connected_components: incompatible id dtypes "
+            f"{t1.simpleString()!r} vs {t2.simpleString()!r} — cast both "
+            f"endpoints to a common type first"
         )
-    return state.groupBy("a").agg(F.min("la").alias("community")).select(
-        F.col("a").alias("node"), "community"
+    state = _star_edges(pairs, (id1, id2))
+    if driver_threshold:
+        rows = (
+            pairs.filter(F.col(id1) != F.col(id2))
+            .select(id1, id2)
+            .limit(driver_threshold + 1)
+            .collect()
+        )
+        if len(rows) <= driver_threshold:
+            labels = _union_find_labels(rows)
+            node_type = state.schema["a"].dataType.simpleString()
+            return pairs.sparkSession.createDataFrame(
+                sorted(labels.items()),
+                f"node {node_type}, cluster_id {node_type}",
+            )
+    for i in range(1, CC_MAX_ROUNDS + 1):
+        state = _star_round(state)
+        if i % 2 == 0 or i == CC_MAX_ROUNDS:
+            probe = _min_label_round(_own_labels(state)).localCheckpoint(
+                eager=False
+            )
+            if probe.filter(F.col("la") != F.col("lb")).isEmpty():
+                return _node_labels(probe, "cluster_id")
+            state = probe.select("a", "b")
+    raise RuntimeError(
+        f"connected_components: no fixpoint within CC_MAX_ROUNDS="
+        f"{CC_MAX_ROUNDS} star rounds"
     )
 
 

@@ -13,8 +13,8 @@ scales), then times the headline shapes at 1× and X×:
 - ``saturation_solver`` — Arrow-vectorized bisection UDF tier (melt)
 - ``minhash_pipeline``  — shingle explode → minhash agg → LSH band
   self-join (production xxhash64 path, documents)
-- ``cc_distributed``    — pointer-jumping connected components with
-  the driver fast path disabled (the loop that runs at 100 TB)
+- ``cc_distributed``    — large-star / small-star connected components
+  with the driver fast path disabled (the loop that runs at 100 TB)
 - ``pricing_aggregate`` — decimal-exact grouped aggregate (lineitem)
 
 A shape passes when wall(X×)/wall(1×) ≤ X·(1+slack) — superlinear

@@ -1,11 +1,14 @@
 """Dedup operator recall tests: the bucket structures must not lose
 pairs inside their guaranteed radii."""
 
+import random
+
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
-from magmapandas_spark.operators import dedup
+from magmapandas_spark.operators import dedup, graph
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -71,7 +74,7 @@ def test_minhash_lsh_recall_on_planted_dupes(spark):
 
 
 def test_connected_components_known_graph(spark):
-    from magmapandas_spark.operators.dedup import connected_components
+    from magmapandas_spark.operators.graph import connected_components
 
     # components: {1,2,3,4} (chain), {10,11}, {20} absent (no edges)
     pairs = spark.createDataFrame(
@@ -88,6 +91,49 @@ def test_connected_components_known_graph(spark):
             ).collect()
         }
         assert out == expected, f"threshold={thresh}"
+
+
+def test_connected_components_rejects_mixed_id_types(spark):
+    pairs = spark.createDataFrame([], "id1 int, id2 string")
+    for thresh in (100_000, 0):
+        with pytest.raises(TypeError, match="incompatible id dtypes"):
+            graph.connected_components(pairs, driver_threshold=thresh)
+    widened = graph.connected_components(
+        spark.createDataFrame([(1, 2)], "id1 int, id2 bigint")
+    )
+    assert widened.schema.simpleString() == (
+        "struct<node:bigint,cluster_id:bigint>"
+    )
+
+
+def _shuffled_path(spark, n: int):
+    ids = list(range(n))
+    random.Random(7).shuffle(ids)
+    return spark.createDataFrame(
+        list(zip(ids, ids[1:])), "id1 bigint, id2 bigint"
+    )
+
+
+def test_connected_components_path_converges_in_log_rounds(
+    spark, monkeypatch
+):
+    """Large-star / small-star needs O(log L) rounds on a path of L
+    nodes, where plain min-label propagation needs L: the 1000-node
+    path must converge within 2 * ceil(log2 1000) = 20 rounds."""
+    monkeypatch.setattr(graph, "CC_MAX_ROUNDS", 20)
+    out = graph.connected_components(
+        _shuffled_path(spark, 1000), driver_threshold=0
+    ).toPandas()
+    assert sorted(out["node"]) == list(range(1000))
+    assert set(out["cluster_id"]) == {0}
+
+
+def test_connected_components_raises_without_fixpoint(spark, monkeypatch):
+    monkeypatch.setattr(graph, "CC_MAX_ROUNDS", 1)
+    with pytest.raises(RuntimeError, match="CC_MAX_ROUNDS=1"):
+        graph.connected_components(
+            _shuffled_path(spark, 1000), driver_threshold=0
+        )
 
 
 def test_fan_out_widens_narrow_inputs_only(spark):

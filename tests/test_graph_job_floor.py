@@ -1,8 +1,9 @@
-"""Job-count tripwire for the fixed-round graph loops.
+"""Job-count tripwire for the graph loops.
 
 A round of ``pagerank``, ``personalized_pagerank``, ``kcore_peel`` or
 ``min_label_propagation`` costs one shuffle, with no broadcast and no
-eager job (ROADMAP item 2: the loops are bound by driver-side job
+eager job, and ``connected_components`` runs one eager probe every
+second round (ROADMAP item 2: the loops are bound by driver-side job
 construction, not by data). The counts are read from Spark's status
 tracker under job groups — construction (the call that builds the
 DataFrame, with every job it triggers) and execution (the full plan
@@ -14,28 +15,38 @@ import re
 
 import pytest
 
-from magmapandas_spark.operators import graph
+from magmapandas_spark.operators import dedup, graph
 
+SF_DIR = "/root/testdata/sf0.001"
 _group_ids = itertools.count()
 
 #: (construction jobs, construction + execution jobs) upper bounds:
 #: the counts at 8 shuffle partitions plus two jobs of headroom. The
 #: join-per-round loops ran pagerank 55 + 3, personalized 58 + 3,
-#: kcore 14-15 + 9 and label propagation 12 + 2.
+#: kcore 14-15 + 9, label propagation 12 + 2 and the sf0.001 dedup
+#: clusters 65 + 3.
 BOUNDS = {
     "q_pagerank": (26, 29),
     "q_personalized_pagerank": (29, 32),
     "q_kcore": (0, 9),
     "q_label_propagation": (0, 7),
+    "q_dedup_clusters_distributed": (16, 20),
 }
+
+
+def _query(name: str):
+    return getattr(graph, name, None) or getattr(dedup, name)
 
 
 def _job_counts(spark, query: str) -> tuple[int, int]:
     sc = spark.sparkContext
     group = f"graph-floor-{next(_group_ids)}"
+    # the dedup gate queries share one cached pair relation: fill it
+    # first, so the count is the clustering loop's alone
+    dedup._gate_pairs(spark, SF_DIR)
     try:
         sc.setJobGroup(f"{group}-build", group)
-        df = getattr(graph, query)(spark, "")
+        df = _query(query)(spark, SF_DIR)
         sc.setJobGroup(f"{group}-exec", group)
         df.write.format("noop").mode("overwrite").save()
     finally:
@@ -70,3 +81,11 @@ def test_window_loop_round_is_one_shuffle(spark, query, rounds):
     assert "BroadcastExchange" not in plan, plan
     per_round = re.findall(r"Exchange hashpartitioning\(b#", plan)
     assert len(per_round) == rounds, plan
+
+
+def test_connected_components_final_plan_has_no_join(spark):
+    """The star loop leaves its labels on edge rows: the plan the
+    caller runs reads the last probe's checkpoint, with no join."""
+    df = dedup.q_dedup_clusters_distributed(spark, SF_DIR)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan, plan

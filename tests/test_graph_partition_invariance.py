@@ -1,17 +1,19 @@
-"""The fixed-round graph loops give the same values whatever the
+"""The graph loops give the same values whatever the
 partitioning (ROADMAP 5(c), graph slice).
 
-``kcore_peel`` and ``min_label_propagation`` take their width from
-unsized exchanges that AQE coalesces, and the PageRank loops from
-``n_partitions``; a window, join or aggregate that only sees part of a
-key's rows would change a value here. Each output is compared by a
-digest of its rows in sorted order."""
+``kcore_peel``, ``min_label_propagation`` and ``connected_components``
+take their width from unsized exchanges that AQE coalesces, and the
+PageRank loops from ``n_partitions``; a window, join or aggregate that
+only sees part of a key's rows would change a value here. Each output
+is compared by a digest of its rows in sorted order."""
 
 import hashlib
 
 from pyspark.sql import functions as F
 
-from magmapandas_spark.operators import graph
+from magmapandas_spark.operators import dedup, graph
+
+SF_DIR = "/root/testdata/sf0.001"
 
 QUERIES = (
     "q_pagerank", "q_personalized_pagerank", "q_kcore", "q_label_propagation",
@@ -33,6 +35,11 @@ def _outputs(spark) -> dict[str, str]:
             graph.synthetic_tri_graph(spark), k=k, rounds=rounds
         )
         out[f"kcore k={k} rounds={rounds}"] = _digest(peeled)
+    out["connected_components"] = _digest(
+        graph.connected_components(
+            dedup._gate_pairs(spark, SF_DIR), driver_threshold=0
+        )
+    )
     return out
 
 
