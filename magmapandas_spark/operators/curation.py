@@ -1766,8 +1766,6 @@ def q_repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     fraction, top-bigram coverage, longest same-word run) — entirely
     scan-local array expressions, zero shuffle; the oracle computes
     max_word_run with an independent gaps-and-islands formulation."""
-    from magmapandas_spark.operators.curation import repetition_scores
-
     docs = spark.read.parquet(_t(sf_dir, "documents"))
     return repetition_scores(docs).orderBy("doc_id")
 
@@ -1776,8 +1774,6 @@ def q_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unigram-LM perplexity quality filter: broadcast top-1000 vocab,
     add-1 smoothed mean negative log-prob per doc (CCNet/KenLM-style
     reduced to its relational core)."""
-    from magmapandas_spark.operators.curation import lm_quality_score
-
     docs = spark.read.parquet(_t(sf_dir, "documents"))
     return lm_quality_score(docs)
 
@@ -1785,8 +1781,6 @@ def q_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_text_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding-window RAG chunking: 200-char windows, 40-char overlap,
     scan-local (no shuffle before the final sort)."""
-    from magmapandas_spark.operators.curation import chunk_text
-
     docs = spark.read.parquet(_t(sf_dir, "documents"))
     return chunk_text(docs).orderBy("doc_id", "chunk_idx")
 
@@ -1819,8 +1813,6 @@ def q_mixture_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Domain-mixture scheduling over the documents table: per-lang
     keep rates toward a 40/15/15/15/15 target (no upsampling), plus
     the deterministically kept doc/token counts those rates produce."""
-    from magmapandas_spark.operators.curation import mixture_schedule
-
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return mixture_schedule(docs, _MIX_WEIGHTS).orderBy("stratum")
 
@@ -1878,11 +1870,6 @@ def q_quality_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     the verdict is engine-independent. Both signal pipelines are
     scan-local; the ensemble adds one join on doc_id."""
     from pyspark.sql import functions as F
-
-    from magmapandas_spark.operators.curation import (
-        lm_quality_score,
-        repetition_scores,
-    )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     rep = repetition_scores(docs).select(

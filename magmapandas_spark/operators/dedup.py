@@ -1457,8 +1457,6 @@ def q_ngram_jaccard_adjacent(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Character-5-gram Jaccard similarity for adjacent doc pairs —
     exercises shingling + set intersection with an O(n) join on the
     composite (doc_id, shingle) key (no hot-shingle skew)."""
-    from magmapandas_spark.operators.dedup import fan_out
-
     # fan_out: the HOF-heavy shingle build runs in the scan stage —
     # spread it when the scan is a single small file
     docs = fan_out(

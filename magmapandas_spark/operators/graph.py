@@ -14,15 +14,13 @@ Truncation loses < outdeg ulps of S per node per round (≪ 1e-9
 relative at the default scale) — far below float PageRank's own
 iteration tolerance.
 
-PageRank plan shape per round (the GraphX/Pregel shape): edges ⋈
-ranks on src, bigint-sum aggregation on dst, plus the teleport
-constant, with every relation hash-partitioned on its node key into
-the same ``n_partitions`` so the round's only exchange is the inflow
-aggregation's. The loop is a fixed iteration count — no convergence
-probe. Lineage is cut with a lazy ``localCheckpoint`` every
-``checkpoint_interval`` rounds; under AQE even a lazy cut is a driver
-synchronization point — it runs the shuffle stages of the rounds
-since the previous cut at call time.
+PageRank plan shape: rank state rides on directed arc rows, like the
+label loops further down — each edge instance twice, once with each
+endpoint as ``a``, carrying outdeg(source), the teleport shares and
+a's rank. A round is one exchange on ``b``, a window on ``b`` that sums
+b's inflow from its in-edge rows, and an a/b swap: no join, no
+broadcast, no cache and no driver job. The loop is a fixed iteration
+count — no convergence probe.
 """
 
 from __future__ import annotations
@@ -35,131 +33,73 @@ from pyspark.sql.types import DecimalType, IntegralType
 SCALE = 1_000_000_000_000
 
 
-def _rank_round(
-    e: DataFrame, nodes: DataFrame, ranks: DataFrame, tp: Column, npart: int
-) -> DataFrame:
-    """One damped rank update: ``e`` is (u, v, outdeg) and ``nodes``
-    / ``ranks`` are node-keyed, all hash-partitioned on their node key
-    into ``npart``. The |V| rank side is joined shuffle-hash (left to
-    the planner it is re-broadcast every round) and the inflow is
-    summed over an explicit ``npart``-wide exchange on ``node``, so
-    the left join onto ``nodes`` is co-partitioned; it is hinted
-    shuffle-hash too, or AQE turns it into a broadcast at run time.
-    One exchange per round, no broadcast. ``tp`` is the teleport
-    share, a column over ``nodes``."""
-    contribs = (
-        e.join(
-            ranks.select(F.col("node").alias("u"), "rank").hint(
-                "shuffle_hash"
-            ),
-            on="u",
-        )
-        .select(
-            F.col("v").alias("node"),
-            F.expr("(85 * rank) div (100 * outdeg)").alias("c"),
-        )
-        .repartition(npart, "node")
-        .groupBy("node")
-        .agg(F.sum("c").alias("inflow"))
-    )
-    return nodes.join(contribs.hint("shuffle_hash"), "node", "left").select(
-        "node",
-        (tp + F.coalesce(F.col("inflow"), F.lit(0))).cast("long").alias(
-            "rank"
-        ),
-    )
-
-
-def _rank_edges(edges: DataFrame, src: str, dst: str, npart: int) -> DataFrame:
-    """(u, v, outdeg) hash-partitioned on ``u`` into ``npart``."""
-    outdeg = edges.groupBy(src).agg(F.count(F.lit(1)).alias("outdeg"))
-    return (
-        edges.join(outdeg, on=src)
-        .select(F.col(src).alias("u"), F.col(dst).alias("v"), "outdeg")
-        .repartition(npart, "u")
-    )
-
-
-def _node_set(edges: DataFrame, src: str, dst: str) -> DataFrame:
-    return (
-        edges.select(F.col(src).alias("node"))
-        .union(edges.select(F.col(dst).alias("node")))
-        .distinct()
-    )
-
-
 def _rank_loop(
-    edges: DataFrame,
-    nodes: DataFrame,
-    tp: Column,
-    r0: Column,
-    src: str,
-    dst: str,
-    npart: int,
-    iterations: int,
-    checkpoint_interval: int,
+    edges: DataFrame, iterations: int, tp: int, r0: int
 ) -> DataFrame:
     """The loop :func:`pagerank` and :func:`personalized_pagerank`
-    share. ``nodes`` is persisted, materialized and hash-partitioned
-    on ``node`` into ``npart``; ``tp`` / ``r0`` are the teleport share
-    and the initial rank as columns over it."""
-    # (u, v, outdeg) partitioned once on u and reused every round.
-    # Both caches are materialized before the first round is planned:
-    # AQE reports an unmaterialized cache's partitioning as unknown,
-    # and the rounds would then re-shuffle e and nodes every round
-    # instead of reading them co-partitioned.
-    e = _rank_edges(edges, src, dst, npart).persist()
-    e.count()
-    ranks = nodes.select("node", r0.alias("rank"))
-    for i in range(iterations):
-        ranks = _rank_round(e, nodes, ranks, tp, npart)
-        if (i + 1) % checkpoint_interval == 0 or i == iterations - 1:
-            ranks = ranks.localCheckpoint(eager=False)
-    # materialize the lazy localCheckpoint chain BEFORE releasing the
-    # co-partitioned edge/node caches — otherwise the caller's first
-    # action replays the whole edge-prep lineage uncached, defeating
-    # the partitioned-once-and-reused plan
-    ranks.count()
-    nodes.unpersist()
-    e.unpersist()
-    return ranks
+    share. ``edges`` holds the edge instances (u, v, wu, wv), with
+    ``wu`` / ``wv`` 1 where the teleport mass returns to that endpoint
+    and 0 elsewhere; a node with weight 1 starts at rank ``r0`` and
+    gets teleport share ``tp`` each round. Returns (node, rank).
+
+    Each edge instance u→v is two arc rows, one with each endpoint as
+    ``a``: (a, b, sa, d, ta, tb, la), ``sa`` true where a = u, ``d`` =
+    outdeg(u), ``ta`` / ``tb`` the endpoints' teleport shares and
+    ``la`` a's rank. A round is one exchange on ``b`` and a window on
+    ``b``: b's rows with ``sa`` are its in-edges, so
+    ``tb + Σ[sa] (85·la) div (100·d)`` is b's new rank. Then a and b
+    swap, so each row again carries its ``a`` endpoint's rank,
+    partitioned on ``a``."""
+
+    def arc(a: str, b: str, sa: bool) -> Column:
+        return F.struct(
+            F.col(a).alias("a"), F.col(b).alias("b"), F.lit(sa).alias("sa"),
+            "d",
+            (F.col(f"w{a}") * tp).cast("long").alias("ta"),
+            (F.col(f"w{b}") * tp).cast("long").alias("tb"),
+            (F.col(f"w{a}") * r0).cast("long").alias("la"),
+        )
+
+    d = F.count(F.lit(1)).over(Window.partitionBy("u")).alias("d")
+    state = (
+        edges.select("u", "v", "wu", "wv", d)
+        .select(F.explode(F.array(arc("v", "u", False), arc("u", "v", True))))
+        .select("col.*")
+    )
+    c = F.when(F.col("sa"), F.expr("(85 * la) div (100 * d)"))
+    inflow = F.coalesce(F.sum(c).over(Window.partitionBy("b")), F.lit(0))
+    for _ in range(iterations):
+        state = _swap(
+            state.repartition("b").select(
+                "a", "b", (~F.col("sa")).alias("sa"), "d", "ta", "tb",
+                (F.col("tb") + inflow).alias("la"),
+            ),
+            ("a", "b"),
+            ("ta", "tb"),
+        )
+    return state.groupBy("a").agg(F.min("la").alias("rank")).select(
+        F.col("a").alias("node"), "rank"
+    )
 
 
 def pagerank(
-    edges: DataFrame,
-    iterations: int = 10,
-    src: str = "src",
-    dst: str = "dst",
-    n_partitions: int | None = None,
-    checkpoint_interval: int = 5,
+    edges: DataFrame, iterations: int = 10, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
-    """Scaled-integer PageRank over a directed edge list.
+    """Scaled-integer PageRank over a directed edge list (duplicate
+    edges and self-loops count as edge instances).
 
     Dangling nodes (outdeg 0) keep only their teleport share — their
     damped mass leaks, the standard simplification when the graph is
     crawl-shaped (sinks are rare and the ranking order is what's
-    consumed). Returns (node, rank) with Σrank ≤ S.
-
-    ``checkpoint_interval``: lineage is cut (lazy localCheckpoint)
-    every k-th round instead of every round — the GraphX
-    ``checkpointInterval`` convention. Each cut costs a full
-    analyze/optimize/plan pass on the driver and, under AQE, runs the
-    shuffle stages of the rounds since the previous cut right away,
-    while the cut's benefit — bounded recovery/lineage depth — needs
-    only PERIODIC cuts. Ranks are identical for any interval (the
-    integer recurrence does not depend on where lineage is truncated;
-    A/B-verified for k ∈ {1, 2, 5, 10}).
-    """
-    npart = n_partitions or int(
-        edges.sparkSession.conf.get("spark.sql.shuffle.partitions")
+    consumed). Returns (node, rank) with Σrank ≤ S. The node count N
+    is the one driver job."""
+    n = edges.select(F.explode(F.array(src, dst))).distinct().count()
+    one = F.lit(1)
+    e = edges.select(
+        F.col(src).alias("u"), F.col(dst).alias("v"),
+        one.alias("wu"), one.alias("wv"),
     )
-    nodes = _node_set(edges, src, dst).repartition(npart, "node").persist()
-    n_nodes = nodes.count()
-    return _rank_loop(
-        edges, nodes, F.lit((15 * SCALE) // (100 * n_nodes)),
-        F.lit(SCALE // n_nodes).cast("long"),
-        src, dst, npart, iterations, checkpoint_interval,
-    )
+    return _rank_loop(e, iterations, (15 * SCALE) // (100 * n), SCALE // n)
 
 
 # ---------------------------------------------------------------------
@@ -194,13 +134,8 @@ def synthetic_link_graph(spark: SparkSession) -> DataFrame:
 def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gate query: 10 integer-PageRank iterations over the synthetic
     500-node link graph — iteration 10's exact bigint ranks are under
-    the hash (every engine must reproduce the whole trajectory).
-    ``n_partitions=2`` sizes the loop's per-round shuffles to the
-    1500-edge gate graph; at crawl scale size it to the
-    edge-relation width instead."""
-    pr = pagerank(
-        synthetic_link_graph(spark), iterations=10, n_partitions=2
-    )
+    the hash (every engine must reproduce the whole trajectory)."""
+    pr = pagerank(synthetic_link_graph(spark), iterations=10)
     return pr.orderBy("node").coalesce(1)
 
 
@@ -984,49 +919,25 @@ def personalized_pagerank(
     iterations: int = 10,
     src: str = "src",
     dst: str = "dst",
-    n_partitions: int | None = None,
-    checkpoint_interval: int = 5,
 ) -> DataFrame:
     """Scaled-integer PERSONALIZED PageRank: the 15% teleport mass
     returns only to the ``seeds`` node set (one ``node`` column), so
     ranks measure proximity to the seeds — the recommendation /
     related-items primitive. Same damped integer recurrence, round
-    body, dangling-node convention and ``checkpoint_interval``
-    lineage-cut cadence as :func:`pagerank`; the per-node teleport
-    share is precomputed into the persisted node relation (one
-    broadcast semi-join before the loop, zero extra per-round work)."""
-    npart = n_partitions or int(
-        edges.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
+    body and dangling-node convention as :func:`pagerank`. Every
+    distinct seed counts in the teleport denominator, also one absent
+    from the graph (its share leaks). The seed flag is joined onto
+    both endpoints of every edge once, by broadcast, before the loop;
+    the seed count is the one driver job."""
+    seeds = seeds.select("node").distinct()
     n_seeds = seeds.count()
-    is_seed = F.col("is_seed").isNotNull()
-    nodes = (
-        _node_set(edges, src, dst)
-        .join(
-            F.broadcast(
-                seeds.select(F.col("node"), F.lit(1).alias("is_seed"))
-            ),
-            "node",
-            "left",
-        )
-        .select(
-            "node",
-            F.when(is_seed, F.lit((15 * SCALE) // (100 * n_seeds)))
-            .otherwise(F.lit(0))
-            .cast("long")
-            .alias("tp"),
-            F.when(is_seed, F.lit(SCALE // n_seeds))
-            .otherwise(F.lit(0))
-            .cast("long")
-            .alias("r0"),
-        )
-        .repartition(npart, "node")
-        .persist()
-    )
-    nodes.count()
+    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    for x in "uv":
+        flag = seeds.select(F.col("node").alias(x), F.lit(1).alias(f"w{x}"))
+        e = e.join(F.broadcast(flag), x, "left")
+    e = e.na.fill(0, ["wu", "wv"])
     return _rank_loop(
-        edges, nodes, F.col("tp"), F.col("r0"),
-        src, dst, npart, iterations, checkpoint_interval,
+        e, iterations, (15 * SCALE) // (100 * n_seeds), SCALE // n_seeds
     )
 
 
@@ -1037,7 +948,7 @@ def q_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     proximity-to-seeds ranks under the hash."""
     seeds = spark.range(0, _N, 50).select(F.col("id").alias("node"))
     pr = personalized_pagerank(
-        synthetic_link_graph(spark), seeds, iterations=10, n_partitions=2
+        synthetic_link_graph(spark), seeds, iterations=10
     )
     return pr.orderBy("node").coalesce(1)
 

@@ -170,8 +170,6 @@ def q_running_stddev(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running windowed stddev of part size ordered by retail price
     with 2σ-from-median rejection (``tools/model_errors.py:20-42``) —
     ordered window + higher-order array expressions, no UDF."""
-    from magmapandas_spark.operators.model_errors import running_stddev
-
     part = spark.read.parquet(_t(sf_dir, "part")).select(
         F.col("p_retailprice").alias("x"),
         F.col("p_size").cast("double").alias("y"),

@@ -1888,8 +1888,6 @@ def q_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordered left fold so Spark and DuckDB produce bit-identical doubles
     (both engines: 0.0 + Σ left-to-right over float32→double promoted
     products)."""
-    from magmapandas_spark.operators.similarity import cosine_topk_bruteforce
-
     emb = spark.read.parquet(_t(sf_dir, "embeddings"))
     queries = emb.filter(F.col("vec_id") < 20)
     out = cosine_topk_bruteforce(
@@ -1933,8 +1931,6 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     embeddings are near-orthogonal, so 0.45 is the regime with real
     pairs to verify): the oracle-checked baseline for the LSH-bucketed
     scale path (operators.similarity.cosine_topk_lsh)."""
-    from magmapandas_spark.operators.similarity import all_pairs_cosine
-
     emb = spark.read.parquet(_t(sf_dir, "embeddings"))
     out = all_pairs_cosine(emb, threshold=0.45, n_blocks=4)
     return out.select(

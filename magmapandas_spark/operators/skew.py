@@ -116,8 +116,6 @@ def q_skew_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     COUNT(DISTINCT) is non-algebraic, so without salting every row of a
     hot key converges on one reduce task. Values are exactly the plain
     COUNT(DISTINCT) — the oracle is the unsalted SQL."""
-    from magmapandas_spark.operators.skew import salted_count_distinct
-
     li = spark.read.parquet(_t(sf_dir, "lineitem"))
     hot = li.select(
         (F.col("l_partkey") % 8).alias("hot_key"), "l_orderkey"
@@ -141,8 +139,6 @@ def q_salted_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     per salt shard so each hot key spreads over n_salt reduce tasks.
     Join output — and therefore the aggregate — is byte-identical to
     the plain join the oracle runs."""
-    from magmapandas_spark.operators.skew import salted_join
-
     li = spark.read.parquet(_t(sf_dir, "lineitem")).select(
         (F.col("l_partkey") % 10).alias("hot_key"),
         "l_extendedprice",

@@ -1,13 +1,23 @@
 """Integer PageRank: mass conservation, determinism, dangling
-semantics, and ranking sanity."""
+semantics, ranking sanity and exactness against a Python replay of
+the oracle recurrence."""
+
+from collections import Counter
 
 import pytest
+from pyspark.sql import functions as F
 
 from magmapandas_spark.operators.graph import (
+    _N,
     SCALE,
     pagerank,
+    personalized_pagerank,
     synthetic_link_graph,
 )
+
+
+def _ranks(df) -> dict[int, int]:
+    return {r.node: r.rank for r in df.collect()}
 
 
 def test_mass_bounded_and_deterministic(spark):
@@ -47,33 +57,66 @@ def test_personalized_pagerank_mass_concentrates_on_seeds(spark):
     """PPR sanity: seeds hold strictly more rank than the uniform
     variant gives them, and non-seed rank is pure inflow (no teleport
     leakage to non-seeds)."""
-    from pyspark.sql import functions as F
-
-    from magmapandas_spark.operators.graph import (
-        _N,
-        pagerank,
-        personalized_pagerank,
-        synthetic_link_graph,
-    )
-
     g = synthetic_link_graph(spark)
     seeds = spark.range(0, _N, 50).select(F.col("id").alias("node"))
-    ppr = personalized_pagerank(g, seeds, iterations=10, n_partitions=2)
-    pr = pagerank(g, iterations=10, n_partitions=2)
-    j = (
-        ppr.withColumnRenamed("rank", "ppr")
-        .join(pr.withColumnRenamed("rank", "pr"), "node")
-        .join(seeds.withColumn("is_seed", F.lit(1)), "node", "left")
+    ppr = _ranks(personalized_pagerank(g, seeds, iterations=10))
+    pr = _ranks(pagerank(g, iterations=10))
+    seed = {n for n in ppr if n % 50 == 0}
+    # teleport concentrates on seeds
+    assert sum(ppr[n] for n in seed) > sum(pr[n] for n in seed)
+    # mass genuinely propagates off-seed
+    assert any(ppr[n] > 0 for n in ppr if n not in seed)
+    # a non-seed node with no in-link gets neither inflow nor teleport
+    dsts = {r.dst for r in g.select("dst").distinct().collect()}
+    unlinked = [n for n in ppr if n not in seed and n not in dsts]
+    assert unlinked
+    assert all(ppr[n] == 0 for n in unlinked)
+
+
+#: duplicate edge 1→2 (so 1 sends 2/3 of its damped rank to 2 and 1/3
+#: to 3), self-loop 3→3, dangling node 4 (no out-link), source-only
+#: node 5 (no in-link) and a second component 7→8→9→7
+_MULTIGRAPH = [
+    (1, 2), (1, 2), (1, 3), (2, 3), (3, 3), (3, 1), (2, 4), (5, 1),
+    (7, 8), (8, 9), (9, 7),
+]
+
+
+def _replay(edges, iterations: int, seeds=None) -> dict[int, int]:
+    """The oracle recurrence in Python integers: every edge instance
+    passes ``(85 · rank) div (100 · outdeg)`` of its source to its
+    destination, and the teleport share (all nodes, or the seeds)
+    is added to the inflow."""
+    nodes = {x for e in edges for x in e}
+    outdeg = Counter(u for u, _ in edges)
+    n = len(nodes) if seeds is None else len(set(seeds))
+    w = {x: int(seeds is None or x in seeds) for x in nodes}
+    rank = {x: w[x] * (SCALE // n) for x in nodes}
+    for _ in range(iterations):
+        new = {x: w[x] * ((15 * SCALE) // (100 * n)) for x in nodes}
+        for u, v in edges:
+            new[v] += (85 * rank[u]) // (100 * outdeg[u])
+        rank = new
+    return rank
+
+
+@pytest.mark.parametrize("iterations", [0, 1, 2, 5])
+def test_pagerank_matches_python_replay(spark, iterations):
+    edges = spark.createDataFrame(_MULTIGRAPH, "src long, dst long")
+    assert _ranks(pagerank(edges, iterations=iterations)) == _replay(
+        _MULTIGRAPH, iterations
     )
-    seed_mass = j.filter("is_seed = 1").agg(
-        F.sum("ppr").alias("p"), F.sum("pr").alias("u")
-    ).first()
-    assert seed_mass.p > seed_mass.u  # teleport concentrates on seeds
-    # an unreachable-from-seeds node with no inflow has rank exactly 0
-    zero = j.filter("is_seed IS NULL AND ppr = 0").count()
-    nonzero_nonseed = j.filter("is_seed IS NULL AND ppr > 0").count()
-    assert nonzero_nonseed > 0  # mass genuinely propagates off-seed
-    assert zero >= 0
+
+
+@pytest.mark.parametrize("iterations", [0, 1, 2, 5])
+def test_personalized_pagerank_matches_python_replay(spark, iterations):
+    """Seed 99 is in no edge: it still counts in the teleport
+    denominator, and its share leaks. Seed 7 is listed twice and
+    counts once."""
+    edges = spark.createDataFrame(_MULTIGRAPH, "src long, dst long")
+    seeds = spark.createDataFrame([(1,), (7,), (7,), (99,)], "node long")
+    got = _ranks(personalized_pagerank(edges, seeds, iterations=iterations))
+    assert got == _replay(_MULTIGRAPH, iterations, seeds={1, 7, 99})
 
 
 def test_two_hop_supernode_cap_bounds_a_one_hub_graph(spark):

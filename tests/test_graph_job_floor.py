@@ -14,6 +14,7 @@ import itertools
 import re
 
 import pytest
+from pyspark.sql import functions as F
 
 from magmapandas_spark.operators import dedup, graph
 
@@ -24,10 +25,11 @@ _group_ids = itertools.count()
 #: the counts at 8 shuffle partitions plus two jobs of headroom. The
 #: join-per-round loops ran pagerank 55 + 3, personalized 58 + 3,
 #: kcore 14-15 + 9, label propagation 12 + 2 and the sf0.001 dedup
-#: clusters 65 + 3.
+#: clusters 65 + 3; the co-partitioned PageRank loops 24 + 3 and
+#: 27 + 3.
 BOUNDS = {
-    "q_pagerank": (26, 29),
-    "q_personalized_pagerank": (29, 32),
+    "q_pagerank": (5, 19),
+    "q_personalized_pagerank": (4, 19),
     "q_kcore": (0, 9),
     "q_label_propagation": (0, 7),
     "q_dedup_clusters_distributed": (16, 20),
@@ -68,19 +70,47 @@ def test_graph_loop_job_floor(spark, query):
     assert build + run <= max_total, (query, build, run)
 
 
+def _joins(plan: str) -> int:
+    return sum("Join" in line.split("[")[0] for line in plan.splitlines())
+
+
 @pytest.mark.parametrize(
-    "query, rounds", [("q_kcore", 3), ("q_label_propagation", 2)]
+    "query, rounds",
+    [
+        ("q_kcore", 3),
+        ("q_label_propagation", 2),
+        ("q_pagerank", 10),
+        ("q_personalized_pagerank", 10),
+    ],
 )
 def test_window_loop_round_is_one_shuffle(spark, query, rounds):
-    """k-core and label propagation carry node state on the edge
-    rows: no join and no broadcast anywhere in the plan, and exactly
-    one exchange on ``b`` per round."""
+    """k-core, label propagation and PageRank carry node state on the
+    edge rows: exactly one exchange on ``b`` per round, no Python, and
+    no join and no broadcast inside a round. The only joins are
+    personalized PageRank's two broadcast seed-flag joins, made once
+    before the loop."""
     df = getattr(graph, query)(spark, "")
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Join" not in plan, plan
-    assert "BroadcastExchange" not in plan, plan
+    assert "Python" not in plan and "Pandas" not in plan, plan
     per_round = re.findall(r"Exchange hashpartitioning\(b#", plan)
     assert len(per_round) == rounds, plan
+    loop = plan[: plan.rfind("Exchange hashpartitioning(b#")]
+    assert _joins(loop) == 0 and "BroadcastExchange" not in loop, plan
+    joins = 2 if query == "q_personalized_pagerank" else 0
+    assert _joins(plan) == plan.count("BroadcastExchange") == joins, plan
+
+
+def test_personalized_pagerank_joins_do_not_grow_with_iterations(spark):
+    edges = graph.synthetic_link_graph(spark)
+    seeds = spark.range(0, graph._N, 50).select(F.col("id").alias("node"))
+    joins = {
+        it: _joins(
+            graph.personalized_pagerank(edges, seeds, iterations=it)
+            ._jdf.queryExecution().executedPlan().toString()
+        )
+        for it in (2, 10)
+    }
+    assert joins[2] == joins[10] == 2, joins
 
 
 def test_connected_components_final_plan_has_no_join(spark):

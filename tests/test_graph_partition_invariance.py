@@ -1,11 +1,10 @@
 """The graph loops give the same values whatever the
 partitioning (ROADMAP 5(c), graph slice).
 
-``kcore_peel``, ``min_label_propagation`` and ``connected_components``
-take their width from unsized exchanges that AQE coalesces, and the
-PageRank loops from ``n_partitions``; a window, join or aggregate that
-only sees part of a key's rows would change a value here. Each output
-is compared by a digest of its rows in sorted order."""
+The graph loops take their width from unsized exchanges that AQE
+coalesces; a window, join or aggregate that only sees part of a key's
+rows would change a value here. Each output is compared by a digest
+of its rows in sorted order."""
 
 import hashlib
 
@@ -57,23 +56,28 @@ def test_graph_loops_shuffle_partition_invariant(spark):
         assert results[1][name] == results[8][name] == results[64][name], name
 
 
-def test_pagerank_n_partitions_invariant(spark):
+def test_pagerank_shuffle_partitions_invariant(spark):
+    """The PageRank functions called directly, beside the gate
+    queries that wrap them."""
     edges = graph.synthetic_link_graph(spark)
     seeds = spark.range(0, 500, 50).select(F.col("id").alias("node"))
-    ranks = {
-        n: (
-            _digest(graph.pagerank(edges, iterations=10, n_partitions=n)),
-            _digest(
-                graph.personalized_pagerank(
-                    edges, seeds, iterations=10, n_partitions=n
-                )
-            ),
-        )
-        for n in (1, 2, 8)
-    }
-    assert ranks[1] == ranks[2] == ranks[8], ranks
-    # the gate queries run at n_partitions=2
-    assert ranks[2] == (
+    key = "spark.sql.shuffle.partitions"
+    prior = spark.conf.get(key)
+    ranks = {}
+    try:
+        for n in (1, 8, 64):
+            spark.conf.set(key, str(n))
+            ranks[n] = (
+                _digest(graph.pagerank(edges, iterations=10)),
+                _digest(
+                    graph.personalized_pagerank(edges, seeds, iterations=10)
+                ),
+            )
+    finally:
+        spark.conf.set(key, prior)
+    assert ranks[1] == ranks[8] == ranks[64], ranks
+    # the gate queries run the same ten iterations on the same graph
+    assert ranks[8] == (
         _digest(graph.q_pagerank(spark, "")),
         _digest(graph.q_personalized_pagerank(spark, "")),
     )

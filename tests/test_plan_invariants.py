@@ -1104,74 +1104,6 @@ def test_minhash_candidates_banded_join_no_explosion(spark):
     assert "EvalPython" not in plan and "MapInPandas" not in plan
 
 
-def _operators(df) -> list[str]:
-    """Physical operator names of ``df``'s plan, exchanges included;
-    a cached relation is a leaf, so its own plan is not counted."""
-    root = df._jdf.queryExecution().executedPlan()
-    if root.nodeName() == "AdaptiveSparkPlan":
-        root = root.executedPlan()
-    names, todo = [], [root]
-    while todo:
-        node = todo.pop()
-        names.append(node.nodeName())
-        kids = node.children()
-        todo.extend(kids.apply(i) for i in range(kids.size()))
-    return names
-
-
-def _pagerank_round_plan(spark, personalized: bool):
-    """One rank-update round built by the round body pagerank()/
-    personalized_pagerank() share, over the materialized node and edge
-    caches the loop feeds it: (full plan text, operator names of the
-    round itself)."""
-    from magmapandas_spark.operators.graph import (
-        _node_set,
-        _rank_edges,
-        _rank_round,
-        synthetic_link_graph,
-    )
-
-    edges = synthetic_link_graph(spark)
-    npart = 2
-    nodes = _node_set(edges, "src", "dst").repartition(npart, "node").persist()
-    e = _rank_edges(edges, "src", "dst", npart).persist()
-    nodes.count()
-    e.count()
-    ranks = nodes.select("node", F.lit(1000).cast("long").alias("rank"))
-    tp = (
-        F.lit(3) if not personalized
-        else F.when(F.col("node") % 50 == 0, F.lit(3)).otherwise(F.lit(0))
-    )
-    nxt = _rank_round(e, nodes, ranks, tp, npart)
-    try:
-        return plan_of(nxt), _operators(nxt)
-    finally:
-        nodes.unpersist()
-        e.unpersist()
-
-
-@pytest.mark.parametrize("personalized", [False, True])
-def test_pagerank_round_keyed_joins_partial_agg(spark, personalized):
-    """One PageRank/PPR round (the job paid iterations×): every join
-    is a keyed equi-join (co-partitioned shuffle-hash — never
-    nested-loop), the inflow aggregation has a map-side partial, no
-    Python anywhere, and every hash exchange is on a graph key
-    (node/u/src) — a surprise key here means a plan-shape regression
-    that multiplies by the iteration count. The round itself shuffles
-    once (the inflow, onto the node set's partitioning) and
-    broadcasts nothing."""
-    plan, ops = _pagerank_round_plan(spark, personalized)
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "EvalPython" not in plan and "MapInPandas" not in plan
-    # inflow groupBy(node).sum: partial+final pair
-    assert "partial_sum(c" in plan
-    for m in re.finditer(r"Exchange hashpartitioning\((\w+)#", plan):
-        assert m.group(1) in ("node", "u", "src")
-    assert ops.count("Exchange") == 1, ops
-    assert "BroadcastExchange" not in ops, ops
-
-
 def test_pq_topk_seeded_broadcast_crosses_no_python(spark):
     """PQ encode + ADC: the only nested-loop joins are the two
     deliberate broadcasts of the 16-row seed codebook / per-query

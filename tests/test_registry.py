@@ -94,3 +94,26 @@ def test_listing_queries_builds_no_oracle():
         check=True,
     )
     assert float(out.stdout.strip()) < 2.0
+
+
+def test_no_function_imports_from_its_own_module():
+    """A function body that imports a name from the module it is
+    defined in re-reads what is already in its globals: the query
+    builders call their module's operators directly."""
+    pkg = Path(suite.__file__).resolve().parents[1]
+    found = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg.parent).with_suffix("")
+        own = ".".join(rel.parts)
+        tree = ast.parse(path.read_text())
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for node in ast.walk(fn):
+                if not isinstance(node, ast.ImportFrom):
+                    continue
+                base = own.rsplit(".", node.level)[0] if node.level else ""
+                target = ".".join(p for p in (base, node.module) if p)
+                if target == own:
+                    found.append(f"{rel}.py:{node.lineno} in {fn.name}")
+    assert not found, found
