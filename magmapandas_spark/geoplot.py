@@ -294,8 +294,6 @@ def spider_spec(
         key=str,
     )
     if skipped:
-        import warnings
-
         warnings.warn(
             "spider_spec: value rows for elements not in "
             f"element_order were dropped: {skipped} — a typo'd "

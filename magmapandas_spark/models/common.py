@@ -8,8 +8,11 @@ power the pandas-UDF solver tier with identical semantics.
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from magmapandas_spark.chem import elements as chem
 from magmapandas_spark.core.geoframe import GeoFrame, csum
@@ -37,6 +40,59 @@ def solver_input(df: DataFrame) -> DataFrame:
     if n < target:
         return df.repartition(target)
     return df
+
+
+def solver_column(
+    kernel,
+    inputs: dict[str, Column],
+    outputs: tuple[str, ...] = (),
+    nan_on_error: bool = False,
+) -> Column:
+    """The solver tier's one Arrow UDF: ``inputs`` travel to the Python
+    worker as one struct (fields in dict order), and each Arrow batch
+    reaches ``kernel`` as a dict of float arrays keyed like ``inputs``.
+    The kernel returns one array (a ``double`` column) when ``outputs``
+    is empty, else one array per name (a ``struct<outputs: double>``).
+
+    With ``nan_on_error`` a batch on which the kernel raises is split in
+    halves and each half retried; a single row that still raises becomes
+    NaN in every output (the reference's per-row NaN on a failed solve,
+    ``melt.py:410-413``). Kernels are row-wise, so every other row keeps
+    its value whatever the batching, and a batch that solves costs one
+    kernel call. Without it the error propagates."""
+    names = list(inputs)
+    struct = F.struct(*[c.alias(k) for k, c in inputs.items()])
+
+    def solve(arrays: dict[str, np.ndarray]) -> list[np.ndarray]:
+        try:
+            out = kernel(arrays)
+        except Exception:
+            if not nan_on_error:
+                raise
+            n = len(arrays[names[0]])
+            if n <= 1:
+                return [np.full(n, np.nan)] * max(len(outputs), 1)
+            halves = [
+                solve({k: v[part] for k, v in arrays.items()})
+                for part in (slice(None, n // 2), slice(n // 2, None))
+            ]
+            return [np.concatenate(cols) for cols in zip(*halves)]
+        return [np.asarray(o, dtype=float) for o in (out if outputs else [out])]
+
+    schema = (
+        StructType([StructField(o, DoubleType()) for o in outputs])
+        if outputs else DoubleType()
+    )
+
+    # a DataFrame or a Series return hint both make a scalar pandas UDF
+    @pandas_udf(schema)
+    def solver(batch: pd.DataFrame) -> pd.DataFrame:
+        cols = solve({k: batch[k].to_numpy(dtype=float) for k in names})
+        if outputs:
+            return pd.DataFrame(dict(zip(outputs, cols)))
+        return pd.Series(cols[0])
+
+    return solver(struct)
 
 
 def as_col(x) -> Column:

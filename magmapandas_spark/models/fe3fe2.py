@@ -39,6 +39,7 @@ from magmapandas_spark.models.common import (
     csum,
     feo_fe2o3_split_np,
     mole_fraction_exprs,
+    solver_column,
     solver_input,
 )
 
@@ -555,28 +556,6 @@ _SOLVER_MODELS_NP = {
 }
 
 
-def _solver_udf(model: str, species: list[str]):
-    fn = _SOLVER_MODELS_NP[model]
-
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import DoubleType
-
-    @pandas_udf(DoubleType())
-    def udf(comp: pd.DataFrame) -> pd.Series:
-        mol = {
-            s: comp[s].to_numpy(dtype=float) for s in species
-        }
-        out = fn(
-            mol,
-            comp["__T_K"].to_numpy(dtype=float),
-            comp["__P_bar"].to_numpy(dtype=float),
-            comp["__fO2"].to_numpy(dtype=float),
-        )
-        return pd.Series(np.asarray(out, dtype=float))
-
-    return udf
-
-
 @F.pandas_udf(T.DoubleType())
 def _sun2024_gamma_deng_udf(T_K: pd.Series, P_bar: pd.Series) -> pd.Series:
     """Γ = Deng dV/dP / (R·T) (``Fe3Fe2_models.py:1428-1439``)."""
@@ -644,14 +623,16 @@ def calculate_Fe3Fe2(
         expr = fe3fe2_sun2024(mol, T, fO2, P, gamma=gamma)
         return solver_input(melt.df).withColumn(out_col, expr)
     if model in _SOLVER_MODELS_NP:
-        # hand the UDF a struct of mol-fraction + condition columns
-        fields = {s: mol[s] for s in melt.species}
-        fields["__T_K"] = T
-        fields["__P_bar"] = P
-        fields["__fO2"] = fO2
-        struct = F.struct(*[v.alias(k) for k, v in fields.items()])
-        udf = _solver_udf(model, melt.species)
-        return solver_input(melt.df).withColumn(out_col, udf(struct))
+        fn = _SOLVER_MODELS_NP[model]
+        species = list(melt.species)
+        inputs = {s: mol[s] for s in species}
+        inputs |= {"__T_K": T, "__P_bar": P, "__fO2": fO2}
+        col = solver_column(
+            lambda a: fn({s: a[s] for s in species}, a["__T_K"],
+                         a["__P_bar"], a["__fO2"]),
+            inputs,
+        )
+        return solver_input(melt.df).withColumn(out_col, col)
     raise ValueError(f"unknown Fe3Fe2 model {model!r}")
 
 
@@ -660,10 +641,14 @@ def register_fe3fe2_model(name: str, expr_builder=None, np_kernel=None):
     reference, ``Fe_redox/Fe3Fe2_baseclass.py:27``): register either a
     Column-expression builder ``f(mol, T_K, fO2, P_bar) -> Column``
     (expression tier) or a numpy kernel
-    ``f(mol_np, T_K, P_bar, fO2) -> ndarray`` (solver tier)."""
+    ``f(mol_np, T_K, P_bar, fO2) -> ndarray`` (solver tier).
+    Registered names dispatch through :func:`calculate_Fe3Fe2` and
+    appear in ``Fe3Fe2_models``."""
     if expr_builder is None and np_kernel is None:
         raise ValueError("provide expr_builder or np_kernel")
     if expr_builder is not None:
         EXPR_MODELS[name] = expr_builder
     if np_kernel is not None:
         _SOLVER_MODELS_NP[name] = np_kernel
+    if name not in Fe3Fe2_models:
+        Fe3Fe2_models.append(name)

@@ -17,7 +17,6 @@ Spark-native re-expression of the reference's
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -30,6 +29,7 @@ from magmapandas_spark.models.common import (
     cation_fractions_np,
     csum,
     mole_fraction_exprs,
+    solver_column,
     solver_input,
 )
 
@@ -247,27 +247,6 @@ _KD_SOLVER_NP = {
 }
 
 
-def _kd_solver_udf(model: str, species: list[str]):
-    kd_fn = _KD_SOLVER_NP[model]
-
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import DoubleType
-
-    @pandas_udf(DoubleType())
-    def udf(comp: pd.DataFrame) -> pd.Series:
-        mol = {s: comp[s].to_numpy(dtype=float) for s in species}
-        out = iterate_kd_np(
-            kd_fn,
-            mol,
-            comp["__T_K"].to_numpy(dtype=float),
-            comp["__P_bar"].to_numpy(dtype=float),
-            comp["__Fe3Fe2"].to_numpy(dtype=float),
-        )
-        return pd.Series(np.asarray(out, dtype=float))
-
-    return udf
-
-
 # ----------------------------------------------------------------------
 # top-level API
 # ----------------------------------------------------------------------
@@ -363,13 +342,16 @@ def calculate_FeMg_Kd(
         expr = _KD_EXPR_REGISTRY[model](wt, mol, T, P, Fe3Fe2)
         return melt.df.withColumn(out_col, expr)
     if model in _KD_SOLVER_NP:
-        fields = {s: mol[s] for s in melt.species}
-        fields["__T_K"] = T
-        fields["__P_bar"] = P
-        fields["__Fe3Fe2"] = Fe3Fe2
-        struct = F.struct(*[v.alias(k) for k, v in fields.items()])
-        udf = _kd_solver_udf(model, melt.species)
-        return solver_input(melt.df).withColumn(out_col, udf(struct))
+        kd_fn = _KD_SOLVER_NP[model]
+        species = list(melt.species)
+        inputs = {s: mol[s] for s in species}
+        inputs |= {"__T_K": T, "__P_bar": P, "__Fe3Fe2": Fe3Fe2}
+        col = solver_column(
+            lambda a: iterate_kd_np(kd_fn, {s: a[s] for s in species},
+                                    a["__T_K"], a["__P_bar"], a["__Fe3Fe2"]),
+            inputs,
+        )
+        return solver_input(melt.df).withColumn(out_col, col)
     raise ValueError(f"unknown Kd model {model!r}")
 
 

@@ -20,9 +20,10 @@ doing nested scipy root-finding (``root_scalar`` inside
   (replaces the 2-D hybr solve at ``iaconomarziano2012.py:477-487``
   with the same degenerate-case handling).
 
-Exposed to Spark as Arrow-vectorized pandas UDFs; Spark's scheduler
-replaces the Pool, solver failures surface as NaN/null (parity with
-``melt.py:410-413``).
+Exposed to Spark through ``models.common.solver_column``, the solver
+tier's one Arrow UDF; Spark's scheduler replaces the Pool. A saturation
+or isobar solve that fails gives NaN for that row only, under any
+batching (parity with ``melt.py:410-413``).
 """
 
 from __future__ import annotations
@@ -35,7 +36,11 @@ from pyspark.sql import functions as F
 from magmapandas_spark.chem import elements as chem
 from magmapandas_spark.core.geoframe import GeoFrame
 from magmapandas_spark.models import eos
-from magmapandas_spark.models.common import as_col, solver_input
+from magmapandas_spark.models.common import (
+    as_col,
+    solver_column,
+    solver_input,
+)
 
 W = chem.calculate_weight
 
@@ -432,11 +437,11 @@ def _register_allison() -> None:
 _register_allison()
 
 
-def _im_mixed_solubility(wt, P, T, x):
-    h2o = h2o_solubility_np(wt, P, T, x)
+def _im_mixed_solubility(wt, P, T, x, parameters="hydrous_webapp"):
+    h2o = h2o_solubility_np(wt, P, T, x, parameters)
     wt2 = dict(wt)
     wt2["H2O"] = h2o
-    return h2o, co2_solubility_np(wt2, P, T, x)
+    return h2o, co2_solubility_np(wt2, P, T, x, parameters)
 
 
 def _shishkina_mixed_solubility(wt, P, T, x):
@@ -479,56 +484,30 @@ def volatile_saturation_pressure(
     (``core/MagmaFrames/melt.py:318-414``) + model dispatch
     (``calculate_volatiles.py:8-35``): one Arrow-vectorized UDF replaces
     the per-row multiprocessing Pool; for ``mixed`` adds an ``Xfl``
-    column. Solver failure → NaN (parity with L410-413)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
+    column. A row whose solve fails gives NaN (parity with L410-413),
+    whatever the batching."""
     sat_fn = SATURATION_MODELS[model][species]
     species_cols = list(melt.species)
     # one task per core: the reference paid a process-Pool pickle per
     # ROW here; a Python-worker task costs a fixed ~0.2 s of CPU, so
     # the stage input is sized by solver_input, not the caller's layout
     df = solver_input(melt.df)
-    T = as_col(T_K)
-    fields = {s: F.coalesce(F.col(s), F.lit(0.0)) for s in species_cols}
-    fields["__T_K"] = T
-    struct = F.struct(*[v.alias(k) for k, v in fields.items()])
+    inputs = {s: F.coalesce(F.col(s), F.lit(0.0)) for s in species_cols}
+    inputs["__T_K"] = as_col(T_K)
+
+    def kernel(a):
+        wt = {s: a[s] for s in species_cols}
+        z = np.zeros_like(a["__T_K"])
+        return sat_fn(wt, wt.get("H2O", z), wt.get("CO2", z), a["__T_K"])
 
     if species in ("h2o", "co2"):
-
-        @pandas_udf(DoubleType())
-        def sat_udf(comp: pd.DataFrame) -> pd.Series:
-            wt = {s: comp[s].to_numpy(dtype=float) for s in species_cols}
-            T_arr = comp["__T_K"].to_numpy(dtype=float)
-            z = np.zeros_like(T_arr)
-            try:
-                out = sat_fn(wt, wt.get("H2O", z), wt.get("CO2", z), T_arr)
-            except Exception:
-                out = np.full_like(T_arr, np.nan)
-            return pd.Series(np.asarray(out, dtype=float))
-
-        return df.withColumn(out_col, sat_udf(struct))
-
-    schema = StructType(
-        [
-            StructField("P_bar_sat", DoubleType()),
-            StructField("Xfl", DoubleType()),
-        ]
+        return df.withColumn(
+            out_col, solver_column(kernel, inputs, nan_on_error=True)
+        )
+    out = df.withColumn(
+        "__sat",
+        solver_column(kernel, inputs, ("P_bar_sat", "Xfl"), nan_on_error=True),
     )
-
-    @pandas_udf(schema)
-    def mixed_udf(comp: pd.DataFrame) -> pd.DataFrame:
-        wt = {s: comp[s].to_numpy(dtype=float) for s in species_cols}
-        T_arr = comp["__T_K"].to_numpy(dtype=float)
-        z = np.zeros_like(T_arr)
-        try:
-            P, x = sat_fn(wt, wt.get("H2O", z), wt.get("CO2", z), T_arr)
-        except Exception:
-            P = np.full_like(T_arr, np.nan)
-            x = np.full_like(T_arr, np.nan)
-        return pd.DataFrame({"P_bar_sat": P, "Xfl": x})
-
-    out = df.withColumn("__sat", mixed_udf(struct))
     return (
         out.withColumn(out_col, F.col("__sat.P_bar_sat"))
         .withColumn("Xfl", F.col("__sat.Xfl"))
@@ -546,36 +525,18 @@ def volatile_solubility(
 ) -> DataFrame:
     """Dissolved H2O/CO2 at given P, T, x_fluid
     (``calculate_volatiles.py:38-53``)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
     species_cols = list(melt.species)
-    fields = {s: F.coalesce(F.col(s), F.lit(0.0)) for s in species_cols}
-    fields["__T_K"] = as_col(T_K)
-    fields["__P_bar"] = as_col(P_bar)
-    fields["__x_fluid"] = as_col(x_fluid)
-    struct = F.struct(*[v.alias(k) for k, v in fields.items()])
-
-    schema = StructType(
-        [
-            StructField("H2O_sol", DoubleType()),
-            StructField("CO2_sol", DoubleType()),
-        ]
+    inputs = {s: F.coalesce(F.col(s), F.lit(0.0)) for s in species_cols}
+    inputs |= {"__T_K": as_col(T_K), "__P_bar": as_col(P_bar),
+               "__x_fluid": as_col(x_fluid)}
+    col = solver_column(
+        lambda a: _im_mixed_solubility(
+            {s: a[s] for s in species_cols}, a["__P_bar"], a["__T_K"],
+            a["__x_fluid"], parameters),
+        inputs,
+        ("H2O_sol", "CO2_sol"),
     )
-
-    @pandas_udf(schema)
-    def sol_udf(comp: pd.DataFrame) -> pd.DataFrame:
-        wt = {s: comp[s].to_numpy(dtype=float) for s in species_cols}
-        T_arr = comp["__T_K"].to_numpy(dtype=float)
-        P_arr = comp["__P_bar"].to_numpy(dtype=float)
-        x_arr = comp["__x_fluid"].to_numpy(dtype=float)
-        h2o = h2o_solubility_np(wt, P_arr, T_arr, x_arr, parameters)
-        wt2 = dict(wt)
-        wt2["H2O"] = h2o
-        co2 = co2_solubility_np(wt2, P_arr, T_arr, x_arr, parameters)
-        return pd.DataFrame({"H2O_sol": h2o, "CO2_sol": co2})
-
-    out = solver_input(melt.df).withColumn("__sol", sol_udf(struct))
+    out = solver_input(melt.df).withColumn("__sol", col)
     return (
         out.withColumn("H2O_sol", F.col("__sol.H2O_sol"))
         .withColumn("CO2_sol", F.col("__sol.CO2_sol"))
@@ -636,32 +597,18 @@ def co2_h2o_isobars(
     # broadcast job at construction
     replicated = solver_input(melt.df).crossJoin(F.broadcast(grid))
 
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    fields = {s: F.coalesce(F.col(s), F.lit(0.0)) for s in species_cols}
-    fields["__P"] = F.col("__iso_P").cast("double")
-    fields["__x"] = F.col("__iso_x").cast("double")
-    struct = F.struct(*[v.alias(k) for k, v in fields.items()])
-    schema = StructType(
-        [StructField("H2O_sol", DoubleType()),
-         StructField("CO2_sol", DoubleType())]
+    inputs = {s: F.coalesce(F.col(s), F.lit(0.0)) for s in species_cols}
+    inputs |= {"__P": F.col("__iso_P").cast("double"),
+               "__x": F.col("__iso_x").cast("double")}
+    T = float(T_K)
+    col = solver_column(
+        lambda a: sol_fn({s: a[s] for s in species_cols}, a["__P"],
+                         np.full_like(a["__P"], T), a["__x"]),
+        inputs,
+        ("H2O_sol", "CO2_sol"),
+        nan_on_error=True,
     )
-
-    @pandas_udf(schema)
-    def grid_udf(comp: pd.DataFrame) -> pd.DataFrame:
-        wt = {s: comp[s].to_numpy(dtype=float) for s in species_cols}
-        P = comp["__P"].to_numpy(dtype=float)
-        x = comp["__x"].to_numpy(dtype=float)
-        T = np.full_like(P, float(T_K))
-        try:
-            h2o, co2 = sol_fn(wt, P, T, x)
-        except Exception:
-            h2o = np.full_like(P, np.nan)
-            co2 = np.full_like(P, np.nan)
-        return pd.DataFrame({"H2O_sol": h2o, "CO2_sol": co2})
-
-    out = replicated.withColumn("__sol", grid_udf(struct))
+    out = replicated.withColumn("__sol", col)
     keep = [
         c
         for c in melt.df.columns

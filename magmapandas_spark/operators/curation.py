@@ -115,8 +115,6 @@ def contamination_pairs(
     broadcast; the corpus side streams through the hash join with no
     shuffle of corpus data. Output is candidate contamination —
     downstream either drops the corpus doc or routes it to review."""
-    from magmapandas_spark.operators.dedup import fan_out
-
     toks = word_tokens(text_col)
 
     def grams(df: DataFrame, out_id: str) -> DataFrame:
@@ -1185,8 +1183,6 @@ def q_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: one counts aggregate (|classes| rows, broadcast back), one
     scan-local md5 filter, one counts aggregate — no window, no
     shuffle of the corpus beyond the two aggregations."""
-    from magmapandas_spark.operators.dedup import _md5_60
-
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     counts = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n_orig"))
     n_min = counts.agg(F.min("n_orig").alias("n_min"))
@@ -1869,8 +1865,6 @@ def q_quality_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the avg_nll test compares the decimal-summed rounded value, so
     the verdict is engine-independent. Both signal pipelines are
     scan-local; the ensemble adds one join on doc_id."""
-    from pyspark.sql import functions as F
-
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     rep = repetition_scores(docs).select(
         "doc_id", "repetitive", "max_word_run"

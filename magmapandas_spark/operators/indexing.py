@@ -314,8 +314,6 @@ def write_search_index(
     and ``{name}_stats`` (ONE row: N, avgdl). At crawl scale each is
     an incremental-maintenance target (`streaming_index_ingest` for
     postings; doclen appends; stats recomputes from doclen)."""
-    from magmapandas_spark.operators.curation import word_tokens
-
     spark = docs.sparkSession
     rel = inverted_index_relation(
         docs, id_col, text_col, max_postings=max_postings

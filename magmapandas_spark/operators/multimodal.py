@@ -639,8 +639,6 @@ def synthetic_mixed_media(spark: SparkSession) -> DataFrame:
     """One unlabeled table mixing every synthetic format family:
     ids 0-31 jpeg, 100-139 png, 200-247 ppm, 300-347 wav, 400-439 mp4,
     500-539 gif, 900-904 unknown garbage."""
-    import numpy as np
-
     from magmapandas_spark.operators.gif import make_synthetic_gif
     from magmapandas_spark.operators.jpeg import make_synthetic_jpeg
     from magmapandas_spark.operators.mp4 import make_synthetic_mp4

@@ -112,8 +112,6 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gate query: hashed linear classifier over every document —
     integer feature sums, mean weight, and sigmoid all under the
     hash."""
-    from magmapandas_spark.operators.dedup import fan_out
-
     # fan_out HERE, not in the operator: the operator's zero-exchange
     # scan-local plan is a pinned invariant (it composes into other
     # pipelines' scan stages); the gate input is a single row group,

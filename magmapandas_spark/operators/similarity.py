@@ -212,7 +212,6 @@ def all_pairs_cosine(
     bounds the *memory*, which is what kills the naive plan). The
     LSH/IVF operators in this module are the sub-quadratic approximate
     alternatives when exactness isn't required."""
-    import pandas as pd
     from pyspark.sql import types as T
 
     spark = corpus.sparkSession
@@ -1211,9 +1210,6 @@ def semdedup(
     guarded = max_cell_rows is not None
 
     def cell_verdict(pdf):
-        import numpy as np
-        import pandas as pd
-
         if not guarded and len(pdf) > _SEMDEDUP_UNSHARDED_WARN_ROWS:
             import warnings as _w
 
@@ -1541,8 +1537,6 @@ def pq_encode_arrow(
     100 TB corpus scan-locally (codes are M small ints per vector; at
     ksub ≤ 256 that is M bytes). Ties broken toward the lowest
     codebook row, matching the relational encode exactly."""
-    import numpy as np
-    import pandas as pd
     from pyspark.sql import types as T
 
     cb = np.asarray(codebook, dtype=np.float64)

@@ -714,8 +714,6 @@ def kmv_setops(
     a side has < k distinct values theta degrades to the observed
     maximum and the estimators fall back to near-exact counts.
     """
-    from magmapandas_spark.operators.dedup import _md5_60
-
     spark = events.sparkSession
     two60 = 1 << 60
 

@@ -189,8 +189,6 @@ def cusum_hourly(
     partitioning, one final group summary. At 100 TB the hourly
     count relation is |groups|·|hours| — tiny next to the scan.
     """
-    from pyspark.sql import Window
-
     hourly = events.groupBy(
         F.col(group_col).alias("g"),
         F.date_trunc("hour", F.col(ts_col)).alias("h"),
@@ -321,8 +319,6 @@ def triangle_downsample(
     lag/lead neighbor window, and the per-bucket argmax (windowless
     max_by-style aggregation) — nothing else shuffles.
     """
-    from pyspark.sql import Window
-
     w = Window.partitionBy(group_col).orderBy(ts_col, seq_col)
     base = events.select(
         F.col(group_col).alias("g"),

@@ -385,8 +385,6 @@ def q_allison_saturation(spark: SparkSession, sf_dir: str) -> DataFrame:
     replacing the reference's per-row 2-D root."""
     from magmapandas_spark.models import volatiles as vol
 
-    from magmapandas_spark.core.geoframe import GeoFrame
-
     gf = synthetic_melt(spark, sf_dir)
     # deterministic 1/64 subset: the nested MRK bisection is ~10× the
     # cost of the IM solver; volatile_saturation_im covers the
@@ -412,7 +410,6 @@ def q_isobar_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CO2-H2O isobar/isopleth grids for the first synthetic-melt
     sample: the reference's itertools.product × process pool
     (``isobars.py:48-85``) as broadcast crossJoin × one UDF stage."""
-    from magmapandas_spark.core.geoframe import GeoFrame
     from magmapandas_spark.models import volatiles as vol
 
     gf = synthetic_melt(spark, sf_dir)
@@ -447,8 +444,6 @@ def q_mc_thermometer(spark: SparkSession, sf_dir: str) -> DataFrame:
     # deterministic 1/256 subset: MC×64 over full lineitem-derived melt
     # is a bench workload, not a correctness gate
     sub = gf.df.filter(F.col("name") % 256 == 0)
-    from magmapandas_spark.core.geoframe import GeoFrame
-
     gf_sub = GeoFrame(sub, units=gf.units, datatype=gf.datatype,
                       species=gf.species)
 
@@ -485,7 +480,6 @@ def q_thermometers_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     narrow pipeline (putirka13/14, shea2022, sugawara2000_3) — widens
     line-by-line SURVEY §2.8 oracle coverage beyond the default
     putirka15 query."""
-    from magmapandas_spark.core.geoframe import GeoFrame
     from magmapandas_spark.models import thermometers as tm
 
     gf = synthetic_melt(spark, sf_dir)
@@ -622,7 +616,6 @@ def q_kd_expr_models(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kd(Fe-Mg) olivine-melt expression models putirka2016_8a-8d as
     parallel columns (``Kd_models.py:422-593``) — inputs are the
     renormalised wt.% oxides, P from the sample column."""
-    from magmapandas_spark.core.geoframe import GeoFrame
     from magmapandas_spark.models.kd import calculate_FeMg_Kd
 
     gf = synthetic_melt(spark, sf_dir)
@@ -767,8 +760,6 @@ def q_unit_conversions(spark: SparkSession, sf_dir: str) -> DataFrame:
     mol fractions (``magmaFrame.py:356-385``), oxide → cation fractions
     with renaming (``magmaFrame.py:225-264``), wt.% → ppm — all as one
     narrow expression pipeline, exact SQL oracle."""
-    from magmapandas_spark.core.geoframe import GeoFrame
-
     gf = synthetic_melt(spark, sf_dir)
     # single narrow plan (no joins: the synthetic key is non-unique)
     base = gf.df.select(
@@ -777,8 +768,6 @@ def q_unit_conversions(spark: SparkSession, sf_dir: str) -> DataFrame:
         *[F.col(s).alias(f"__w_{s}") for s in gf.species],
     )
     # recompute mol/cat fractions inline over the aliased wt columns
-    from magmapandas_spark.chem import elements as chem
-
     mol_terms = {
         s: F.col(f"__w_{s}") / F.lit(chem.calculate_weight(s))
         for s in gf.species
@@ -904,7 +893,6 @@ def q_thermometers_multi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     putirka2008_22 with Beattie D_Mg, sun2020 on the cation-per-oxygen
     basis) — completes oracle coverage of the SURVEY §2.8 thermometer
     table (sugawara2000_6a shares sugawara2000_3's structure)."""
-    from magmapandas_spark.core.geoframe import GeoFrame
     from magmapandas_spark.models import thermometers as tm
 
     gf = synthetic_melt(spark, sf_dir)
@@ -1183,7 +1171,6 @@ def q_plag_endmembers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Plagioclase An/Ab/Or endmembers + anorthite content
     (``plagioclase.py:28-52``) on a synthetic feldspar table from
     customer."""
-    from magmapandas_spark.core.geoframe import GeoFrame
     from magmapandas_spark.models.minerals import (
         plagioclase_anorthite,
         plagioclase_endmembers,
@@ -1247,8 +1234,6 @@ def q_feo_fe2o3_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     Kd against the synthetic olivine (``Kd_calculate.py:12-62``)."""
     from magmapandas_spark.models.kd import observed_FeMg_Kd
     from magmapandas_spark.models.minerals import forsterite
-
-    from magmapandas_spark.core.geoframe import GeoFrame
 
     gf = synthetic_melt(spark, sf_dir)
     ol = synthetic_olivine(spark, sf_dir)
@@ -1572,8 +1557,6 @@ def q_qfm_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("P_bar"),
     )
     fo2col = fo2_mod.fo2_qfm(0.0, F.col("t"), F.col("P_bar"))
-    from magmapandas_spark.relational.suite import heavy_sorted
-
     return heavy_sorted(
         grid.select(
             "t", "P_bar", F.round(F.log10(fo2col), 6).alias("log_qfm")
@@ -1592,8 +1575,6 @@ def q_iw_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle replays all three solver layers in SQL."""
     from magmapandas_spark.models import iw as iw_mod
     from magmapandas_spark.relational.solver_oracles import IW_GRID_P_BAR
-    from magmapandas_spark.relational.suite import heavy_sorted
-
     gf = synthetic_melt(spark, sf_dir)
     tvals = gf.df.select(
         (
@@ -1629,8 +1610,6 @@ def q_fe3fe2_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
     knots/coefficients — previously golden-tested only."""
     from magmapandas_spark.models.common import solver_input
     from magmapandas_spark.operators.montecarlo import fe3fe2_error_column
-    from magmapandas_spark.relational.suite import heavy_sorted
-
     gf = synthetic_melt(spark, sf_dir)
     x = F.lit(0.05) + (F.col("name") % 440).cast("double") * F.lit(0.005)
     p = F.when((F.col("name") % 3) == 0, F.lit(1.0)).otherwise(
@@ -1732,7 +1711,6 @@ def q_kd_blundy_saper(spark: SparkSession, sf_dir: str) -> DataFrame:
     borisov2018 Fe3Fe2, ``Kd_models.py:352-362``) and saper2022 (Gibbs
     + interaction terms, ``Kd_models.py:655-752``), each iterating
     forsterite to convergence inside one pandas-UDF batch."""
-    from magmapandas_spark.core.geoframe import GeoFrame
     from magmapandas_spark.models.kd import calculate_FeMg_Kd
 
     gf = _melt_subset(spark, sf_dir)
@@ -2025,7 +2003,6 @@ ORDER BY name
 def q_fe3fe2_solvers2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Remaining solver-tier Fe3+/Fe2+ models: oneill2006 and
     armstrong2019 fixed points over the sample subset (rows-only)."""
-    from magmapandas_spark.core.geoframe import GeoFrame
     from magmapandas_spark.models import fe3fe2 as fe_mod
 
     gf = _melt_subset(spark, sf_dir)

@@ -395,8 +395,6 @@ def q_customer_ntiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     over per-customer order totals, then quartile-level aggregates.
     Covers the remaining window-function class (the suite already
     exercises rank, offset, sliding and cumulative frames)."""
-    from pyspark.sql import Window
-
     orders = spark.read.parquet(_t(sf_dir, "orders"))
     per_cust = orders.groupBy("o_custkey").agg(
         dsum(F.col("o_totalprice")).alias("cust_total")
@@ -561,9 +559,6 @@ def q_blame_supplier(spark, sf_dir):
     planned as hash joins against the one shared late-flagged line
     relation, never correlated re-execution.
     """
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     o = spark.read.parquet(f"{sf_dir}/orders.parquet")
     flagged = (
@@ -643,9 +638,6 @@ def q_balance_cume_dist(spark, sf_dir):
     the hash). One segment-keyed window; deciles reduce the output to
     10 rows per segment.
     """
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
     cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
     w = Window.partitionBy("c_mktsegment").orderBy(
         "c_acctbal", "c_custkey"
@@ -718,9 +710,6 @@ def q_rolling_range_frame(spark, sf_dir):
     Scale posture: per-customer partitions, frame bounded by the
     customer's ±30-day order density; the slice cap keeps the gate
     output constant."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet").filter(
         F.col("o_custkey") < 300
     )
@@ -815,8 +804,6 @@ def q_unpivot_profile(spark, sf_dir):
 
     Plan: one scan, Expand (4 rows per input, scan-local), one 4-row
     aggregation — no join, no window."""
-    from pyspark.sql import functions as F
-
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     m = li.unpivot(
         [],
@@ -864,8 +851,6 @@ def q_null_semantics(spark, sf_dir):
     and NULL-SAFE equality (Spark <=> vs DuckDB IS NOT DISTINCT
     FROM). NULLs are derived deterministically with NULLIF so the
     probe runs on any snapshot."""
-    from pyspark.sql import functions as F
-
     o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
         F.expr("NULLIF(o_orderpriority, '3-MEDIUM')").alias("x"),
         F.expr("NULLIF(o_custkey % 5, 2)").alias("y"),
@@ -933,8 +918,6 @@ def q_date_semantics(spark, sf_dir):
     (month-end clamping), quarter extraction, and integer month
     arithmetic against a fixed epoch. Monthly order census with all
     four beside the counts."""
-    from pyspark.sql import functions as F
-
     o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
         F.to_date("o_orderdate").alias("d")
     )

@@ -338,8 +338,6 @@ def streaming_dedup_ingest(
         incremental_lsh_candidates,
         minhash_lsh_candidates,
     )
-    from pyspark.sql import functions as F
-
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if fail_injector is not None:
             fail_injector(batch_id)

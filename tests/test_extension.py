@@ -43,12 +43,16 @@ def test_register_fe3fe2_expr_model(spark):
         return F.lit(0.42)
 
     fe3fe2.register_fe3fe2_model("toy_fixed42", expr_builder=fixed_ratio)
-    out = fe3fe2.calculate_Fe3Fe2(
-        _gf(spark), T_K=F.lit(1400.0), P_bar=F.lit(1.0),
-        model="toy_fixed42", fO2=F.lit(1e-8),
-    ).toPandas()
-    assert np.allclose(out["Fe3Fe2"], 0.42)
-    del fe3fe2.EXPR_MODELS["toy_fixed42"]
+    try:
+        out = fe3fe2.calculate_Fe3Fe2(
+            _gf(spark), T_K=F.lit(1400.0), P_bar=F.lit(1.0),
+            model="toy_fixed42", fO2=F.lit(1e-8),
+        ).toPandas()
+        assert "toy_fixed42" in fe3fe2.Fe3Fe2_models
+        assert np.allclose(out["Fe3Fe2"], 0.42)
+    finally:
+        del fe3fe2.EXPR_MODELS["toy_fixed42"]
+        fe3fe2.Fe3Fe2_models.remove("toy_fixed42")
 
 
 def test_register_solubility_model(spark):

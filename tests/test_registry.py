@@ -96,24 +96,97 @@ def test_listing_queries_builds_no_oracle():
     assert float(out.stdout.strip()) < 2.0
 
 
-def test_no_function_imports_from_its_own_module():
-    """A function body that imports a name from the module it is
-    defined in re-reads what is already in its globals: the query
-    builders call their module's operators directly."""
+def _modules(sub: str = ""):
+    """(path relative to the repo, dotted module name, AST) of every
+    package module, or of those under the package's ``sub`` directory."""
     pkg = Path(suite.__file__).resolve().parents[1]
-    found = []
-    for path in sorted(pkg.rglob("*.py")):
+    for path in sorted((pkg / sub).rglob("*.py")):
         rel = path.relative_to(pkg.parent).with_suffix("")
-        own = ".".join(rel.parts)
-        tree = ast.parse(path.read_text())
+        yield rel, ".".join(rel.parts), ast.parse(path.read_text())
+
+
+def _bound(node, own: str) -> set:
+    """(module, name, asname) of each name an import statement binds,
+    name None for ``import module``; relative imports resolve against
+    the importing module ``own``."""
+    if isinstance(node, ast.Import):
+        return {(a.name, None, a.asname) for a in node.names}
+    base = own.rsplit(".", node.level)[0] if node.level else ""
+    target = ".".join(p for p in (base, node.module) if p)
+    return {(target, a.name, a.asname) for a in node.names}
+
+
+def _function_imports():
+    """(rel, own, the module's top-level bindings, function, import
+    node) of every import statement inside a function body."""
+    imports = (ast.Import, ast.ImportFrom)
+    for rel, own, tree in _modules():
+        top = set().union(
+            *(_bound(n, own) for n in tree.body if isinstance(n, imports))
+        )
         for fn in ast.walk(tree):
             if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 continue
             for node in ast.walk(fn):
-                if not isinstance(node, ast.ImportFrom):
-                    continue
-                base = own.rsplit(".", node.level)[0] if node.level else ""
-                target = ".".join(p for p in (base, node.module) if p)
-                if target == own:
-                    found.append(f"{rel}.py:{node.lineno} in {fn.name}")
+                if isinstance(node, imports):
+                    yield rel, own, top, fn, node
+
+
+def test_no_function_imports_from_its_own_module():
+    """A function body that imports a name from the module it is
+    defined in re-reads what is already in its globals: the query
+    builders call their module's operators directly."""
+    found = [
+        f"{rel}.py:{node.lineno} in {fn.name}"
+        for rel, own, _, fn, node in _function_imports()
+        if isinstance(node, ast.ImportFrom)
+        and any(m == own for m, _, _ in _bound(node, own))
+    ]
     assert not found, found
+
+
+def test_no_function_reimports_a_top_level_import():
+    """A function-body import of a (module.name, asname) that its module
+    already imports at top level binds the same object a second time."""
+    found = sorted({
+        f"{rel}.py:{node.lineno} {sorted(_bound(node, own) & top)}"
+        for rel, own, top, _, node in _function_imports()
+        if _bound(node, own) & top
+    })
+    assert not found, found
+
+
+# The (T, P) UDFs dedupe conditions per Arrow batch; they are not
+# composition kernels and stay outside ``solver_column``.
+MODEL_UDFS = {
+    "common.solver_column",
+    "fe3fe2._sun2024_gamma_deng_udf",
+    "fo2._qfm_udf",
+    "fo2._grid_interp_column_factory",
+    "iw._iw_udf",
+}
+
+
+def test_models_have_one_solver_udf():
+    """``models.common.solver_column`` is the solver tier's one Arrow
+    UDF, and the only place in ``models/`` that catches a solver error:
+    a hand-written kernel closure, or a handler that blanks a whole
+    batch, shows up here."""
+    udfs, handlers = set(), []
+    for rel, _, tree in _modules("models"):
+        for top in tree.body:
+            for node in ast.walk(top):
+                if (isinstance(node, ast.Name) and node.id == "pandas_udf"
+                        or isinstance(node, ast.Attribute)
+                        and node.attr == "pandas_udf"):
+                    udfs.add(f"{rel.name}.{getattr(top, 'name', top.lineno)}")
+                if isinstance(node, ast.ExceptHandler) and (
+                    node.type is None
+                    or {"Exception", "BaseException"} & {
+                        n.id for n in ast.walk(node.type)
+                        if isinstance(n, ast.Name)
+                    }
+                ) and rel.name != "common":
+                    handlers.append(f"{rel}.py:{node.lineno}")
+    assert udfs == MODEL_UDFS
+    assert not handlers, handlers

@@ -239,3 +239,100 @@ def test_allison_spark_saturation(spark):
     assert np.isfinite(out["P_bar_sat"]).all()
     assert (out["P_bar_sat"] > 0).all()
     assert out["Xfl"].between(0, 1).all()
+
+
+# ----------------------------------------------------------------------
+# Per-row solver failures
+# ----------------------------------------------------------------------
+
+POISON_MODEL = "toy_poison"
+POISONED = 37
+
+
+@pytest.fixture(scope="module")
+def poison_model():
+    """Iacono-Marziano kernels behind a guard that raises on any batch
+    holding a negative CO2, so one bad row fails every batch it is in."""
+    im_sat = vol.SATURATION_MODELS["iaconomarziano2012"]
+    im_sol = vol.SOLUBILITY_MODELS["iaconomarziano2012"]
+
+    def guard(fn, co2):
+        def kernel(*args):
+            if (np.asarray(co2(*args)) < 0).any():
+                raise ValueError("negative CO2")
+            return fn(*args)
+
+        return kernel
+
+    vol.register_solubility_model(
+        POISON_MODEL,
+        saturation={
+            s: guard(fn, lambda wt, w, c, T: c) for s, fn in im_sat.items()
+        },
+        solubility=guard(im_sol, lambda wt, P, T, x: wt["CO2"]),
+    )
+    yield POISON_MODEL
+    del vol.SATURATION_MODELS[POISON_MODEL]
+    del vol.SOLUBILITY_MODELS[POISON_MODEL]
+
+
+def _poison_melt(spark, drop_poisoned: bool) -> GeoFrame:
+    """64 basalts with distinct ids; row ``POISONED`` has CO2 = -1."""
+    i = np.arange(64)
+    pdf = pd.DataFrame({s: np.full(64, v) for s, v in BASALT.items()})
+    pdf["SiO2"] += (i % 7) * 0.3
+    pdf["H2O"] = 0.5 + (i % 5) * 0.5
+    pdf["CO2"] = np.where(i == POISONED, -1.0, 0.05 + (i % 4) * 0.05)
+    species = list(pdf.columns)
+    pdf.insert(0, "id", i)
+    if drop_poisoned:
+        pdf = pdf[pdf["id"] != POISONED]
+    return GeoFrame(spark.createDataFrame(pdf), units="wt.%",
+                    datatype="oxide", species=species)
+
+
+def _per_row_check(spark, batch, run):
+    """``run(melt)`` -> values indexed by row key; the poisoned melt's
+    run must be NaN exactly on the poisoned sample's rows and equal the
+    run without that sample everywhere else."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(key)
+    spark.conf.set(key, str(batch))
+    try:
+        clean = run(_poison_melt(spark, True))
+        hit = run(_poison_melt(spark, False))
+    finally:
+        spark.conf.set(key, before)
+    bad = hit.index.get_level_values("id") == POISONED
+    assert bad.any() and hit[bad].isna().all().all()
+    rest = hit[~bad]
+    assert np.isfinite(rest.to_numpy()).all()
+    assert rest.index.equals(clean.index)
+    np.testing.assert_array_equal(rest.to_numpy(), clean.to_numpy())
+
+
+@pytest.mark.parametrize("batch", [1, 10000])
+@pytest.mark.parametrize("species", ["co2", "mixed"])
+def test_saturation_failure_is_nan_per_row(spark, poison_model, species,
+                                           batch):
+    cols = ["P_bar_sat", "Xfl"] if species == "mixed" else ["P_bar_sat"]
+
+    def run(gf):
+        out = vol.volatile_saturation_pressure(
+            gf, T_K=1473.15, model=poison_model, species=species)
+        return out.select("id", *cols).toPandas().set_index("id").sort_index()
+
+    _per_row_check(spark, batch, run)
+
+
+@pytest.mark.parametrize("batch", [1, 10000])
+def test_isobar_failure_is_nan_per_row(spark, poison_model, batch):
+    keys = ["id", "kind", "P_bar", "x_fluid"]
+
+    def run(gf):
+        out = vol.co2_h2o_isobars(gf, T_K=1473.15, n_points=4,
+                                  model=poison_model)
+        pdf = out.select(*keys, "H2O_sol", "CO2_sol").toPandas()
+        return pdf.set_index(keys).sort_index()
+
+    _per_row_check(spark, batch, run)
