@@ -4,6 +4,9 @@ $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and print ONE JSON line:
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+
+The full record, with every sample and each query's ``layers`` block,
+goes to BENCH_FULL.json.
 """
 
 from __future__ import annotations
@@ -16,59 +19,50 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
+from perfbench.layers import StatusReader, plan_phases_ms  # noqa: E402
 
-def select_retry_suspects(
-    timings: dict[str, float],
-    ref: dict[str, float],
-    cap: int = 8,
-) -> tuple[list[str], set[str]]:
-    """Continuity-pass selection (unit-tested in
-    tests/test_bench_protocol.py): queries whose min-of-samples sits
-    >3x their last committed record (and >2 s absolute) earn ONE
-    temporally-separated extra sample; queries with NO committed
-    record fall back to 3x the in-run median (r10 ADVICE — without
-    this a new query burst-charged across both adjacent samples is
-    committed as its headline time). Returns (suspects slowest-first,
-    capped, and the history-less subset)."""
-    mins_sorted = sorted(timings.values())
-    run_median = mins_sorted[len(mins_sorted) // 2] if mins_sorted else 0.0
-    historyless = {
-        n for n, t in timings.items()
-        if t > 2.0 and n not in ref and t > 3 * max(run_median, 0.5)
+
+def measure(spark, reader: StatusReader, name: str, fn, sf_dir: str,
+            plan: bool = True) -> tuple[float, dict]:
+    """Run query ``fn`` once: its construction under job group
+    ``<name>-build``, then a ``noop`` write of its full plan (sorts
+    included, which ``count()`` would optimize away) under
+    ``<name>-exec``. Returns the wall time of both and the query's
+    ``layers``: ``build_s``, ``exec_s``, the jobs in each group,
+    ``stages``, executor ``cpu_s``, ``shuffle_mb`` written and
+    ``spill_mb`` over all of its jobs, and with ``plan`` the Catalyst
+    ``plan_ms`` (analysis + optimization + planning).
+
+    Counters are read after the write, outside the timed window.
+    ``plan_ms`` plans the query a second time, so read it once per
+    query. Jobs of an earlier run under the same name are excluded."""
+    sc = spark.sparkContext
+    groups = (f"{name}-build", f"{name}-exec")
+    seen = {j for g in groups for j in reader.jobs_in_group(g)}
+    sc.setJobGroup(groups[0], name)
+    t0 = time.perf_counter()
+    df = fn(spark, sf_dir)
+    t1 = time.perf_counter()
+    sc.setJobGroup(groups[1], name)
+    df.write.format("noop").mode("overwrite").save()
+    t2 = time.perf_counter()
+    reader.drain()
+    build, exe = ([j for j in reader.jobs_in_group(g) if j not in seen]
+                  for g in groups)
+    ex = reader.exec_totals(build + exe)
+    layers = {
+        "build_s": round(t1 - t0, 4),
+        "exec_s": round(t2 - t1, 4),
+        "jobs_build": len(build),
+        "jobs_exec": len(exe),
+        "stages": int(ex["stages"]),
+        "cpu_s": round(ex["cpu_s"], 3),
+        "shuffle_mb": round(ex["shuffle_write_mb"], 3),
+        "spill_mb": round(ex["spill_mb"], 3),
     }
-    suspects = sorted(
-        (n for n, t in timings.items()
-         if (t > 2.0 and n in ref and t > 3 * ref[n])
-         or n in historyless),
-        key=lambda n: -timings[n],
-    )[:cap]
-    return suspects, historyless
-
-
-def select_weather_suspects(
-    timings: dict[str, float],
-    ref: dict[str, float],
-    cap: int = 12,
-    factor: float = 1.4,
-    floor_s: float = 1.5,
-) -> list[str]:
-    """Host-weather adjudication (r12 verdict item 4, unit-tested in
-    tests/test_bench_protocol.py): the continuity pass's 3x threshold
-    is too coarse to self-adjudicate a loaded run — r12 left 15 false
-    regressions (1.4-2.3x) for the judge to re-time by hand. A query
-    whose min-of-samples sits >1.4x its last committed record (and
-    >1.5 s absolute, so the cheap tail's scheduling jitter doesn't
-    qualify) earns ONE temporally-separated extra sample; the
-    adjudication samples and the still-elevated survivors land in the
-    emitted record so the run carries its own weather verdict.
-    Returns suspects slowest-first, capped."""
-    return sorted(
-        (
-            n for n, t in timings.items()
-            if n in ref and t > floor_s and t > factor * ref[n]
-        ),
-        key=lambda n: -timings[n],
-    )[:cap]
+    if plan:
+        layers["plan_ms"] = round(sum(plan_phases_ms(df).values()), 1)
+    return t2 - t0, layers
 
 
 def main() -> None:
@@ -79,6 +73,7 @@ def main() -> None:
     from magmapandas_spark.session import get_spark
 
     spark = get_spark(app_name="magmapandas-bench")
+    reader = StatusReader(spark)
 
     # warm the JVM/IO/codegen path once so the first timed query
     # measures steady-state execution, not classloading
@@ -109,30 +104,15 @@ def main() -> None:
 
         ivf_fit_centroids(sf_dir)
 
-    def run_once(name: str, fn) -> float:
-        t0 = time.perf_counter()
-        df = fn(spark, sf_dir)
-        # noop write materializes the FULL plan (incl. sorts that
-        # count() would optimize away)
-        df.write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
-
-    # Measurement protocol (round 10): pass 1 times every query once;
-    # pass 2 re-times queries in DESCENDING pass-1 time order (a
-    # second sample matters most where the first was large) until
-    # SPARK_GRAFT_BENCH_SAMPLES per query or the wall budget
+    # Measurement protocol (DESIGN.md §4): pass 1 times every query
+    # once; later passes re-time queries in DESCENDING pass-1 time
+    # order (a second sample matters most where the first was large)
+    # until SPARK_GRAFT_BENCH_SAMPLES per query or the wall budget
     # (SPARK_GRAFT_BENCH_BUDGET_S, default 1600 s total) runs out.
     # ALL samples land in BENCH_FULL.json; the headline per-query
-    # number is the MINIMUM — on a multi-tenant host the min of
-    # samples estimates the plan's cost, and the recorded spread
-    # quantifies host weather (r9's 378→505 s drift on byte-identical
-    # code was unfalsifiable with one sample and a heuristic retry
-    # pass). Budget exhaustion trims second samples off the CHEAP tail
-    # first and is counted in `single_sampled`, so the record says so.
-    # Budget sizing (r10 verdict item 3): the r10 run measured pass 1
-    # at 545 s and a complete pass 2 at ~555 s; the old 1100 s default
-    # cut 47 second samples off the cheap tail. 1600 s covers both
-    # passes plus the bounded retry pass with slow-host headroom.
+    # number is the MINIMUM, and its `layers` are that sample's
+    # counters. Budget exhaustion trims samples off the CHEAP tail
+    # first and is counted in `single_sampled`.
     n_samples = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_SAMPLES", "2")))
     budget_s = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_S", "1600"))
     load_before = os.getloadavg()
@@ -141,113 +121,51 @@ def main() -> None:
     qmap = suite.queries()
     samples: dict[str, list[float]] = {}
     timings: dict[str, float] = {}
-    for name, fn in qmap.items():
-        dt = run_once(name, fn)
-        samples[name] = [round(dt, 4)]
-        timings[name] = round(dt, 4)
-        print(f"# {name}: {dt:.3f}s", file=sys.stderr)
+    layers: dict[str, dict] = {}
+    reader_s = 0.0
 
+    def sample(name: str) -> None:
+        nonlocal reader_s
+        t0 = time.perf_counter()
+        dt, lay = measure(spark, reader, name, qmap[name], sf_dir,
+                          plan=name not in layers)
+        reader_s += time.perf_counter() - t0 - dt
+        samples.setdefault(name, []).append(round(dt, 4))
+        if name not in timings or dt < timings[name]:
+            timings[name] = round(dt, 4)
+            layers.setdefault(name, {}).update(lay)
+        print(f"# {name}: "
+              + "/".join(f"{r:.3f}" for r in samples[name]) + "s",
+              file=sys.stderr)
+
+    for name in qmap:
+        sample(name)
     for _ in range(n_samples - 1):
         for name in sorted(timings, key=lambda n: -timings[n]):
             if time.perf_counter() - suite_t0 > budget_s:
                 break
-            dt = run_once(name, qmap[name])
-            samples[name].append(round(dt, 4))
-            if dt < timings[name]:
-                timings[name] = round(dt, 4)
-            print(
-                f"# {name}: "
-                + "/".join(f"{r:.3f}" for r in samples[name]) + "s",
-                file=sys.stderr,
-            )
+            sample(name)
     single_sampled = sum(1 for v in samples.values() if len(v) < n_samples)
 
-    # Continuity pass: a query whose min-of-samples still sits >3x its
-    # last committed record (and >2 s absolute) gets ONE extra sample —
-    # a burst can straddle both adjacent samples. The extra sample is
-    # recorded like the others; bounded to the 8 worst offenders.
-    ref: dict[str, float] = {}
-    bench_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json"
-    )
-    try:
-        with open(bench_path) as fh:
-            prior = json.load(fh)
-        if prior.get("sf") == (float(sf) if sf.replace(".", "").isdigit()
-                               else sf):
-            ref = dict(prior.get("queries", {}))
-    except (FileNotFoundError, json.JSONDecodeError):
-        pass  # no readable history: every query is historyless
-    suspects, historyless = select_retry_suspects(timings, ref)
-    retried = 0
-    replaced = 0
-    for name in suspects:
-        dt = run_once(name, qmap[name])
-        retried += 1
-        samples[name].append(round(dt, 4))
-        if dt < timings[name]:
-            print(
-                f"# retry {name}: {timings[name]:.3f}s -> {dt:.3f}s "
-                "(burst-charged; recording min)",
-                file=sys.stderr,
-            )
-            timings[name] = round(dt, 4)
-            replaced += 1
-
-    # Weather-adjudication pass (r12 verdict item 4): queries still
-    # >1.4x their committed record after the min-of-n and continuity
-    # passes get ONE more temporally-separated sample each — the
-    # sweep over the whole suspect list IS the temporal separation
-    # (a burst that straddled the adjacent min-of-n samples has moved
-    # on by the time the sweep returns). Survivors are named in
-    # `weather_suspects` so a loaded run carries its own verdict
-    # instead of leaving 1.4-2.3x false regressions for a judge to
-    # re-time by hand.
-    weather = select_weather_suspects(timings, ref)
-    # count the adjudication samples that actually RAN — the wall
-    # budget can cut the sweep short, and recording len(weather)
-    # would overstate the pass (r13 ADVICE)
-    weather_retried = 0
-    for name in weather:
-        if time.perf_counter() - suite_t0 > budget_s + 120:
-            break
-        dt = run_once(name, qmap[name])
-        weather_retried += 1
-        samples[name].append(round(dt, 4))
-        if dt < timings[name]:
-            print(
-                f"# weather {name}: {timings[name]:.3f}s -> {dt:.3f}s "
-                "(recording min)",
-                file=sys.stderr,
-            )
-            timings[name] = round(dt, 4)
-    weather_suspects = sorted(
-        n for n in weather
-        if n in ref and timings[n] > 1.4 * ref[n] and timings[n] > 1.5
-    )
-
     load_after = os.getloadavg()
-    total = sum(timings.values())
-    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
+    wall_elapsed = time.perf_counter() - suite_t0
+    print(f"# counter readers: {reader_s:.2f}s of {wall_elapsed:.1f}s "
+          f"wall ({100 * reader_s / wall_elapsed:.2f}%)", file=sys.stderr)
     full = {
         "metric": "suite_total_wall",
-        "value": round(total, 4),
+        "value": round(sum(timings.values()), 4),
         "unit": "sec",
         "queries": timings,
         "samples": samples,
-        "sf": sf_val,
+        "layers": layers,
+        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "cpus": spark.sparkContext.defaultParallelism,
         "protocol": f"min-of-{n_samples}",
         "single_sampled": single_sampled,
-        "wall_elapsed_s": round(time.perf_counter() - suite_t0, 1),
+        "wall_elapsed_s": round(wall_elapsed, 1),
+        "reader_s": round(reader_s, 2),
         "load_before": [round(v, 2) for v in load_before],
         "load_after": [round(v, 2) for v in load_after],
-        "retried": retried,
-        "replaced": replaced,
-        "historyless_retried": sorted(
-            n for n in suspects if n in historyless
-        ),
-        "weather_retried": weather_retried,
-        "weather_suspects": weather_suspects,
     }
     # The complete per-query map, for humans/the judge
     with open(
@@ -263,7 +181,8 @@ def main() -> None:
     # rest folded into queries_omitted / omitted_total_s.
     budget = 1800
     slowest = sorted(timings.items(), key=lambda kv: -kv[1])
-    compact = {k: v for k, v in full.items() if k != "samples"}
+    compact = {k: v for k, v in full.items()
+               if k not in ("samples", "layers")}
     included: dict[str, float] = {}
     for name, secs in slowest:
         trial = dict(compact)

@@ -520,7 +520,6 @@ def volatile_solubility(
     P_bar,
     T_K,
     x_fluid=1.0,
-    species: str = "mixed",
     parameters: str = "hydrous_webapp",
 ) -> DataFrame:
     """Dissolved H2O/CO2 at given P, T, x_fluid

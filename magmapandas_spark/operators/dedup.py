@@ -766,62 +766,19 @@ def jaccard_verify_pairs(
     verify stage that turns a high-recall candidate set into a
     high-precision one before clustering.
 
-    Cost is CANDIDATE-bounded, not corpus-bounded: the shingle relation
-    joins only rows whose doc ids appear in ``pairs`` (banding already
-    collapsed the corpus), and the intersection count is two narrow
-    equi-joins + one aggregation. The threshold test is exact integer
+    The counts come from :func:`pair_overlap_scores` (candidate-bounded,
+    checkpointed); the threshold test on them is exact integer
     arithmetic (``den·|A∩B| ≥ num·|A∪B|``) — no float enters the
     decision, so Spark and any SQL engine agree on every pair."""
-    # pairs is referenced three times below (candidate-id pruning, the
-    # intersection join, and the final threshold join); without a
-    # persist each reference re-executes the entire upstream
-    # shingle→minhash→banding pipeline. The candidate set is
-    # banding-bounded (<< corpus), so caching it is cheap at any scale.
-    pairs = pairs.persist()
-    sh = shingle_df(docs, id_col, text_col, shingle)
-    # prune the shingle relation to docs that occur in candidates:
-    # at corpus scale |docs(pairs)| << |docs|
-    cand_ids = (
-        pairs.select(F.col("id1").alias(id_col))
-        .union(pairs.select(F.col("id2").alias(id_col)))
-        .distinct()
-    )
-    # the pruned shingle relation feeds sizes + both sides of the
-    # intersection join — persist it once too (candidate-bounded)
-    sh = sh.join(F.broadcast(cand_ids), on=id_col, how="semi").persist()
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
-    # attach id1's shingles to each pair, then count matches against
-    # id2's shingle relation: |A∩B| per pair in two equi-joins
-    s1 = sh.select(F.col(id_col).alias("id1"), "sh")
-    s2 = sh.select(F.col(id_col).alias("id2"), "sh")
-    inter = (
-        pairs.join(s1, on="id1")
-        .join(s2, on=["id2", "sh"])
-        .groupBy("id1", "id2")
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
-    na = sizes.select(F.col(id_col).alias("id1"), F.col("n").alias("na"))
-    nb = sizes.select(F.col(id_col).alias("id2"), F.col("n").alias("nb"))
-    out = (
-        pairs.join(inter, on=["id1", "id2"], how="left")
-        .withColumn("i", F.coalesce(F.col("i"), F.lit(0)))
-        .join(F.broadcast(na), on="id1")
-        .join(F.broadcast(nb), on="id2")
+    return (
+        pair_overlap_scores(docs, pairs, id_col, text_col, shingle)
         .filter(
-            F.lit(threshold_den) * F.col("i")
+            F.lit(threshold_den) * F.col("n_inter")
             >= F.lit(threshold_num)
-            * (F.col("na") + F.col("nb") - F.col("i"))
+            * (F.col("na") + F.col("nb") - F.col("n_inter"))
         )
         .select("id1", "id2")
     )
-    # materialize the (verified ⊆ candidates, so bounded) result and
-    # sever its lineage from the two cached relations, then release
-    # them — repeated calls in a long-lived session must not
-    # accumulate cached pair/shingle tables until LRU pressure
-    out = out.localCheckpoint(eager=True)
-    pairs.unpersist()
-    sh.unpersist()
-    return out
 
 
 def q_dedup_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1212,18 +1169,31 @@ def pair_overlap_scores(
     doc-inside-doc case a real dedup policy routes differently
     (drop the contained copy, keep both near-equals, etc.).
 
-    Same candidate-bounded plan as jaccard_verify_pairs; ratios are a
-    single integer division each (rounded at 6), so both engines agree
-    bit-for-bit."""
+    Cost is CANDIDATE-bounded, not corpus-bounded: the shingle relation
+    joins only rows whose doc ids appear in ``pairs`` (banding already
+    collapsed the corpus), and the intersection count is two narrow
+    equi-joins + one aggregation. Ratios are a single integer division
+    each (rounded at 6), so both engines agree bit-for-bit."""
+    # pairs is referenced three times below (candidate-id pruning, the
+    # intersection join, and the final join); without a persist each
+    # reference re-executes the entire upstream
+    # shingle→minhash→banding pipeline. The candidate set is
+    # banding-bounded (<< corpus), so caching it is cheap at any scale.
     pairs = pairs.persist()
     sh = shingle_df(docs, id_col, text_col, shingle)
+    # prune the shingle relation to docs that occur in candidates:
+    # at corpus scale |docs(pairs)| << |docs|
     cand_ids = (
         pairs.select(F.col("id1").alias(id_col))
         .union(pairs.select(F.col("id2").alias(id_col)))
         .distinct()
     )
+    # the pruned shingle relation feeds sizes + both sides of the
+    # intersection join — persist it once too (candidate-bounded)
     sh = sh.join(F.broadcast(cand_ids), on=id_col, how="semi").persist()
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
+    # attach id1's shingles to each pair, then count matches against
+    # id2's shingle relation: |A∩B| per pair in two equi-joins
     s1 = sh.select(F.col(id_col).alias("id1"), "sh")
     s2 = sh.select(F.col(id_col).alias("id2"), "sh")
     inter = (
@@ -1257,6 +1227,10 @@ def pair_overlap_scores(
             ).alias("containment"),
         )
     )
+    # materialize the (candidate-bounded) result and sever its lineage
+    # from the two cached relations, then release them — repeated
+    # calls in a long-lived session must not accumulate cached
+    # pair/shingle tables until LRU pressure
     out = out.localCheckpoint(eager=True)
     pairs.unpersist()
     sh.unpersist()

@@ -18,6 +18,9 @@ aggregation. Nothing new shuffles the corpus.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark import inheritable_thread_target
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -284,6 +287,65 @@ SQL_RETRIEVAL_EVAL = _sql_retrieval_eval()
 # ---------------------------------------------------------------------
 
 
+def _recall_legs(
+    docs: DataFrame, hash_strategy: str
+) -> tuple[DataFrame, DataFrame]:
+    """The two pair relations a recall measurement compares, each
+    eager-checkpointed: ``truth``, every (id1, id2) with word-3-shingle
+    Jaccard >= 3/5 from the prefix-filtered set-similarity join, and
+    ``cand``, the char-5 MinHash-LSH banding candidates hashed with
+    ``hash_strategy``."""
+    from magmapandas_spark.operators.dedup import fan_out, minhash_lsh_candidates
+    from magmapandas_spark.operators.setjoin import setjoin_jaccard
+
+    # Materialize the document slice ONCE: both shingle pipelines
+    # otherwise scan+filter the corpus parquet independently AND each
+    # pays its own fan_out round-robin shuffle of the raw text.
+    # Checkpointing after fan_out gives both legs the already-spread
+    # (doc_id, text) relation from executor memory — one scan, zero
+    # fan-out exchanges in the legs (each leg's own fan_out sees
+    # parallelism >= target and no-ops). The relation is the
+    # measurement slice, recomputed inside every invocation — never a
+    # cross-run cache.
+    docs = fan_out(
+        docs.select("doc_id", "text")
+    ).localCheckpoint(eager=True)
+
+    # both pair relations feed two consumers each (a count and the
+    # hit join): eager-checkpoint the pair-sized results so the
+    # shingle pipelines run once, not twice.
+    #
+    # The two pipelines are INDEPENDENT (different shingle families:
+    # word-3 prefix-filter truth vs char-5 minhash banding) and each
+    # is a chain of stage barriers that underfills the cluster on its
+    # own — submit them from two driver threads so the scheduler
+    # back-fills one pipeline's stragglers with the other's tasks
+    # (optimization guide §2.6). Each thread computes its relation
+    # exactly once; values are unchanged. Each thread inherits the
+    # caller's job group, local properties and job tags.
+    def _truth() -> DataFrame:
+        return (
+            setjoin_jaccard(docs)
+            .select(
+                F.col("doc_a").alias("id1"), F.col("doc_b").alias("id2")
+            )
+            .localCheckpoint(eager=True)
+        )
+
+    def _cand() -> DataFrame:
+        return (
+            minhash_lsh_candidates(docs, hash_strategy=hash_strategy)
+            .select("id1", "id2")
+            .localCheckpoint(eager=True)
+        )
+
+    inherit = inheritable_thread_target(docs.sparkSession)
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        truth_f = pool.submit(inherit(_truth))
+        cand_f = pool.submit(inherit(_cand))
+        return truth_f.result(), cand_f.result()
+
+
 def lsh_recall_eval(
     spark: SparkSession, docs: DataFrame, sample_pred: Column | None = None
 ) -> DataFrame:
@@ -302,59 +364,9 @@ def lsh_recall_eval(
     measure recall on a sample, never the full corpus (this is the
     suite's most expensive query when unsampled; see scale_probe's
     ``lsh_recall_sampled`` row)."""
-    from magmapandas_spark.operators.dedup import fan_out, minhash_lsh_candidates
-    from magmapandas_spark.operators.setjoin import setjoin_jaccard
-
     if sample_pred is not None:
         docs = docs.filter(sample_pred)
-
-    # Materialize the (sample-bounded) document slice ONCE: both
-    # shingle pipelines otherwise scan+filter the corpus parquet
-    # independently AND each pays its own fan_out round-robin
-    # shuffle of the raw text. Checkpointing after fan_out gives
-    # both legs the already-spread (doc_id, text) relation from
-    # executor memory — one scan, zero fan-out exchanges in the
-    # legs (each leg's own fan_out sees parallelism >= target and
-    # no-ops). The relation is the measurement slice, recomputed
-    # inside every invocation — never a cross-run cache.
-    docs = fan_out(
-        docs.select("doc_id", "text")
-    ).localCheckpoint(eager=True)
-
-    # both pair relations feed two consumers each (a count and the
-    # hit join): eager-checkpoint the pair-sized results so the
-    # shingle pipelines run once, not twice.
-    #
-    # The two pipelines are INDEPENDENT (different shingle families:
-    # word-3 prefix-filter truth vs char-5 minhash banding) and each
-    # is a chain of stage barriers that underfills the cluster on its
-    # own — submit them from two driver threads so the scheduler
-    # back-fills one pipeline's stragglers with the other's tasks
-    # (optimization guide §2.6). Each thread computes its relation
-    # exactly once; values are unchanged.
-    def _truth() -> DataFrame:
-        return (
-            setjoin_jaccard(docs)
-            .select(
-                F.col("doc_a").alias("id1"), F.col("doc_b").alias("id2")
-            )
-            .localCheckpoint(eager=True)
-        )
-
-    def _cand() -> DataFrame:
-        return (
-            minhash_lsh_candidates(docs, hash_strategy="md5")
-            .select("id1", "id2")
-            .localCheckpoint(eager=True)
-        )
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        truth_f = pool.submit(_truth)
-        cand_f = pool.submit(_cand)
-        truth = truth_f.result()
-        cand = cand_f.result()
+    truth, cand = _recall_legs(docs, "md5")
     n_truth = truth.count()
     hit = truth.join(cand, ["id1", "id2"], "left_semi")
     n_hit = hit.count()
@@ -410,41 +422,9 @@ def q_minhash_xxhash_recall_bound(
     xxhash64 banding's candidates must cover >= 90% of the exact
     prefix-filter Jaccard>=0.6 pair set. Same two-pipeline shape as
     :func:`lsh_recall_eval` (shared doc slice, overlapped legs)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from magmapandas_spark.operators.dedup import (
-        fan_out,
-        minhash_lsh_candidates,
+    truth, cand = _recall_legs(
+        spark.read.parquet(f"{sf_dir}/documents.parquet"), "xxhash64"
     )
-    from magmapandas_spark.operators.setjoin import setjoin_jaccard
-
-    docs = fan_out(
-        spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-            "doc_id", "text"
-        )
-    ).localCheckpoint(eager=True)
-
-    def _truth() -> DataFrame:
-        return (
-            setjoin_jaccard(docs)
-            .select(
-                F.col("doc_a").alias("id1"), F.col("doc_b").alias("id2")
-            )
-            .localCheckpoint(eager=True)
-        )
-
-    def _cand() -> DataFrame:
-        return (
-            minhash_lsh_candidates(docs, hash_strategy="xxhash64")
-            .select("id1", "id2")
-            .localCheckpoint(eager=True)
-        )
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        truth_f = pool.submit(_truth)
-        cand_f = pool.submit(_cand)
-        truth = truth_f.result()
-        cand = cand_f.result()
     n_truth = truth.count()
     n_hit = truth.join(cand, ["id1", "id2"], "left_semi").count()
     ok = (

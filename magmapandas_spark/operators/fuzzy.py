@@ -34,6 +34,9 @@ all outputs are integers and strings — no float fog anywhere.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -451,7 +454,8 @@ def q_er_golden_multipass(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # multi (pass-2 window + union) and the brute-force truth are
     # independent pipelines; overlap them so one's stragglers
-    # back-fill the other's idle cores (optimization guide §2.6)
+    # back-fill the other's idle cores (optimization guide §2.6); each
+    # thread inherits the caller's job group, local properties and tags
     def _multi() -> DataFrame:
         return multi.localCheckpoint(eager=True)
 
@@ -470,11 +474,10 @@ def q_er_golden_multipass(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=True)
         )
 
-    from concurrent.futures import ThreadPoolExecutor
-
+    inherit = inheritable_thread_target(spark)
     with ThreadPoolExecutor(max_workers=2) as pool:
-        multi_f = pool.submit(_multi)
-        truth_f = pool.submit(_truth)
+        multi_f = pool.submit(inherit(_multi))
+        truth_f = pool.submit(inherit(_truth))
         multi = multi_f.result()
         truth = truth_f.result()
     n_truth = truth.count()

@@ -33,10 +33,12 @@ import os
 import resource
 import shutil
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
+
+from bench import measure  # noqa: E402
+from perfbench.layers import StatusReader  # noqa: E402
 
 # env-overridable so two probes can't clobber each other's inputs
 SCRATCH = os.environ.get(
@@ -312,7 +314,11 @@ def _abc_sketch_only_shape(spark, sf_dir: str):
     return abc_classification_sketch(li, with_exact=False)
 
 
-def run_shapes(spark, sf_dir: str, only: list | None = None) -> dict:
+def run_shapes(
+    spark, sf_dir: str, only: list | None = None
+) -> tuple[dict, dict]:
+    """Samples (seconds) and the fastest sample's ``layers`` per
+    shape."""
     from magmapandas_spark.relational import suite
 
     qs = suite.queries()
@@ -390,48 +396,44 @@ def run_shapes(spark, sf_dir: str, only: list | None = None) -> dict:
     }
     # Measurement protocol (round 10, same as bench.py): every shape
     # is timed SPARK_GRAFT_PROBE_SAMPLES (default 2) times
-    # back-to-back; BOTH samples are recorded and the ratio check uses
-    # the per-shape MINIMUM. r9's two single-sample probe passes
+    # back-to-back through bench.measure; ALL samples are recorded and
+    # the ratio check uses the per-shape MINIMUM, whose counters are
+    # the shape's `layers`. r9's two single-sample probe passes
     # flagged disjoint shape sets on identical bytes — min-of-adjacent
     # samples is the cheapest estimator that shrugs off a one-sided
     # co-tenant burst.
     n_samples = max(
         1, int(os.environ.get("SPARK_GRAFT_PROBE_SAMPLES", "2"))
     )
-    out: dict[str, list[float]] = {}
-    todo = SHAPES if only is None else [n for n in SHAPES if n in only]
-
     # melt materialization timed on its own so the model-tier shapes
-    # measure their operators, not the shared cache build; re-sampling
-    # it means dropping the (session, sf_dir) memo + persisted blocks
-    # so the second sample rebuilds instead of reading the cache
-    if "melt_materialize" in todo:
-        runs = []
-        for s in range(n_samples):
-            # reset unconditionally (no-op on a cold memo): every
-            # sample times a genuine rebuild even when a prior pass
-            # left the memo warm (the adjudication-pass case)
-            suite.reset_melt_cache(spark, sf_dir)
-            t0 = time.perf_counter()
-            gf = suite.synthetic_melt(spark, sf_dir)
-            gf.df.write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
-        out["melt_materialize"] = runs
-
-    for name in [n for n in todo if n != "melt_materialize"]:
+    # measure their operators, not the shared cache build
+    shape_fns["melt_materialize"] = (
+        lambda spark, d: suite.synthetic_melt(spark, d).df
+    )
+    reader = StatusReader(spark)
+    out: dict[str, list[float]] = {}
+    layers: dict[str, dict] = {}
+    todo = SHAPES if only is None else [n for n in SHAPES if n in only]
+    for name in todo:
         runs = []
         for _ in range(n_samples):
-            t0 = time.perf_counter()
-            shape_fns[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            runs.append(time.perf_counter() - t0)
+            if name == "melt_materialize":
+                # drop the (session, sf_dir) memo + persisted blocks
+                # so every sample times a genuine rebuild, even when a
+                # prior pass left the memo warm (the adjudication-pass
+                # case); a no-op on a cold memo
+                suite.reset_melt_cache(spark, sf_dir)
+            dt, lay = measure(spark, reader, name, shape_fns[name], sf_dir,
+                              plan=not runs)
+            if not runs or dt < min(runs):
+                layers.setdefault(name, {}).update(lay)
+            runs.append(dt)
         out[name] = runs
         print(
             f"#   {name}: " + "/".join(f"{r:.2f}" for r in runs) + "s",
             file=sys.stderr,
         )
-    return out
+    return out, layers
 
 
 def main() -> None:
@@ -461,9 +463,10 @@ def main() -> None:
         print(f"# running shapes at {label}", file=sys.stderr)
         spark.catalog.clearCache()  # drop the previous scale's persists
         rss0 = _maxrss_mb()
-        samples = run_shapes(spark, d)
+        samples, layers = run_shapes(spark, d)
         results[label] = {
             "samples": samples,
+            "layers": layers,
             "times": {n: min(r) for n, r in samples.items()},
             "driver_maxrss_mb_before": round(rss0, 1),
             "driver_maxrss_mb_after": round(_maxrss_mb(), 1),
@@ -504,12 +507,12 @@ def main() -> None:
                 f"# re-adjudicating flagged shapes at {label}: {flagged}",
                 file=sys.stderr,
             )
-            extra = run_shapes(spark, d, only=flagged)
+            extra, extra_layers = run_shapes(spark, d, only=flagged)
             for n, runs in extra.items():
                 results[label]["samples"][n].extend(runs)
-                results[label]["times"][n] = min(
-                    results[label]["times"][n], *runs
-                )
+                if min(runs) < results[label]["times"][n]:
+                    results[label]["times"][n] = min(runs)
+                    results[label]["layers"][n] = extra_layers[n]
 
     rows = []
     for name in SHAPES:
@@ -525,6 +528,8 @@ def main() -> None:
                                results["1x"]["samples"][name]],
                 f"samples_{x}x": [round(r, 2) for r in
                                   results[f"{x}x"]["samples"][name]],
+                "layers_1x": results["1x"]["layers"][name],
+                f"layers_{x}x": results[f"{x}x"]["layers"][name],
                 "ratio": round(ratio, 2),
                 "ratio_over_x": round(ratio / x, 2),
                 "linear_ok": ratio <= x * 1.3,

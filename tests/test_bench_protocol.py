@@ -1,85 +1,67 @@
-"""Measurement-protocol unit tests: bench.py's continuity-pass
-selection (incl. the r10-ADVICE history-less fallback) and the
-scale-probe's shared-melt cache reset. Pure driver-side logic — no
-benchmark run needed to pin the policy."""
+"""Measurement-protocol tests: the `layers` record of `bench.measure`,
+job-group coverage of the thread-pooled queries it reads, and the
+scale-probe's shared-melt cache reset."""
+
+import pytest
 
 import bench
 from magmapandas_spark.relational import suite
+from perfbench.layers import StatusReader
+
+SF = "/root/testdata/sf0.001"
+LAYER_KEYS = {"build_s", "exec_s", "plan_ms", "jobs_build", "jobs_exec",
+              "stages", "cpu_s", "shuffle_mb", "spill_mb"}
 
 
-# -- bench.select_retry_suspects ---------------------------------------
+# -- bench.measure -----------------------------------------------------
 
-def test_suspects_history_based():
-    timings = {"a": 9.0, "b": 2.5, "c": 0.4}
-    ref = {"a": 2.0, "b": 2.4, "c": 0.3}
-    suspects, historyless = bench.select_retry_suspects(timings, ref)
-    # a sits >3x its record; b within; c under the 2 s floor
-    assert suspects == ["a"]
-    assert historyless == set()
-
-
-def test_suspects_historyless_fallback_vs_run_median():
-    # median of mins = 0.5 -> threshold max(0.5, 0.5)*3 = 1.5, floor 2.0
-    timings = {f"q{i}": 0.5 for i in range(9)}
-    timings["new_slow"] = 6.0       # no ref entry: 6 > 2.0 and > 1.5
-    timings["new_mid"] = 1.9        # under the 2 s absolute floor
-    suspects, historyless = bench.select_retry_suspects(timings, {})
-    assert suspects == ["new_slow"]
-    assert historyless == {"new_slow"}
-
-
-def test_suspects_historyless_respects_median_scale():
-    # an expensive suite: median 4 s -> a 6 s new query is NOT a
-    # suspect (3x median = 12), so genuinely-heavy new queries are
-    # not endlessly re-timed
-    timings = {f"q{i}": 4.0 for i in range(9)}
-    timings["new"] = 6.0
-    suspects, historyless = bench.select_retry_suspects(timings, {})
-    assert suspects == [] and historyless == set()
+def test_measure_layers_schema(spark):
+    reader = StatusReader(spark)
+    qmap = suite.queries()
+    got = {}
+    for name in ("pricing_summary", "dedup_verified"):
+        wall, layers = bench.measure(spark, reader, name, qmap[name], SF)
+        assert set(layers) == LAYER_KEYS
+        assert wall == pytest.approx(layers["build_s"] + layers["exec_s"],
+                                     abs=1e-3)
+        assert layers["jobs_exec"] > 0 and layers["stages"] > 0
+        assert layers["plan_ms"] > 0
+        got[name] = layers
+    # pricing_summary builds lazily: its one construction job is the
+    # parquet schema read; dedup_verified also checkpoints eagerly
+    assert got["pricing_summary"]["jobs_build"] == 1
+    assert got["dedup_verified"]["jobs_build"] > 0
+    # a second run counts only its own jobs (a warm run may launch
+    # fewer), and plan_ms is opt-out
+    _, again = bench.measure(spark, reader, "dedup_verified",
+                             qmap["dedup_verified"], SF, plan=False)
+    assert set(again) == LAYER_KEYS - {"plan_ms"}
+    assert 0 < again["jobs_build"] <= got["dedup_verified"]["jobs_build"]
 
 
-def test_suspects_capped_and_sorted_slowest_first():
-    # 20 cheap queries anchor the median at 0.5 s; 12 outliers all
-    # qualify but the retry budget caps at the 8 slowest
-    timings = {f"q{i}": 0.5 for i in range(20)}
-    timings.update({f"n{i}": 10.0 + i for i in range(12)})
-    suspects, historyless = bench.select_retry_suspects(timings, {})
-    assert len(suspects) == 8
-    assert suspects[0] == "n11"  # slowest first
-    assert historyless.issuperset(suspects)
+@pytest.mark.parametrize("name", ["lsh_recall_eval",
+                                  "minhash_xxhash_recall_bound",
+                                  "er_golden_multipass"])
+def test_thread_pooled_build_jobs_stay_in_group(spark, name):
+    """These queries submit work from driver threads: every job their
+    construction launches must carry the caller's job group, or a
+    per-query record undercounts them."""
+    sc = spark.sparkContext
+    reader = StatusReader(spark)
 
+    def probe(group: str) -> list[int]:
+        sc.setJobGroup(group, "probe")
+        spark.range(1).collect()
+        reader.drain()
+        return reader.jobs_in_group(group)
 
-def test_suspects_mixed_history_and_new():
-    timings = {"old_burst": 7.0, "new_burst": 9.0, "steady": 1.0,
-               "pad1": 1.0, "pad2": 1.0}
-    ref = {"old_burst": 2.0, "steady": 1.0, "pad1": 1.0, "pad2": 1.0}
-    suspects, historyless = bench.select_retry_suspects(timings, ref)
-    assert suspects == ["new_burst", "old_burst"]
-    assert historyless == {"new_burst"}
-
-
-# -- bench.select_weather_suspects -------------------------------------
-
-def test_weather_suspects_14x_threshold():
-    timings = {"a": 3.0, "b": 2.7, "c": 1.0, "d": 5.0}
-    ref = {"a": 2.0, "b": 2.0, "c": 0.5, "d": 4.0}
-    # a: 1.5x -> suspect; b: 1.35x -> not; c: 2x but under the 1.5 s
-    # floor -> not; d: 1.25x -> not
-    assert bench.select_weather_suspects(timings, ref) == ["a"]
-
-
-def test_weather_suspects_slowest_first_and_capped():
-    timings = {f"q{i}": 10.0 + i for i in range(15)}
-    ref = {f"q{i}": 1.0 for i in range(15)}
-    out = bench.select_weather_suspects(timings, ref)
-    assert len(out) == 12
-    assert out[0] == "q14"  # slowest first
-
-
-def test_weather_suspects_no_history_no_suspect():
-    # a query with no committed record cannot be weather-adjudicated
-    # (the continuity pass's history-less fallback owns that case)
-    assert bench.select_weather_suspects({"new": 9.0}, {}) == []
+    first = max(probe(f"{name}-probe-before"))
+    sc.setJobGroup(f"{name}-build-only", name)
+    suite.queries()[name](spark, SF)
+    last = min(probe(f"{name}-probe-after"))
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    built = reader.jobs_in_group(f"{name}-build-only")
+    assert built and built == list(range(first + 1, last))
 
 
 # -- suite.reset_melt_cache --------------------------------------------
