@@ -11,7 +11,9 @@ goes to BENCH_FULL.json.
 
 from __future__ import annotations
 
+import itertools
 import json
+import math
 import os
 import sys
 import time
@@ -22,23 +24,30 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 from perfbench.layers import StatusReader, plan_phases_ms  # noqa: E402
 
 
-def measure(spark, reader: StatusReader, name: str, fn, sf_dir: str,
-            plan: bool = True) -> tuple[float, dict]:
-    """Run query ``fn`` once: its construction under job group
-    ``<name>-build``, then a ``noop`` write of its full plan (sorts
-    included, which ``count()`` would optimize away) under
-    ``<name>-exec``. Returns the wall time of both and the query's
-    ``layers``: ``build_s``, ``exec_s``, the jobs in each group,
-    ``stages``, executor ``cpu_s``, ``shuffle_mb`` written and
-    ``spill_mb`` over all of its jobs, and with ``plan`` the Catalyst
-    ``plan_ms`` (analysis + optimization + planning).
+_runs = itertools.count()
 
-    Counters are read after the write, outside the timed window.
-    ``plan_ms`` plans the query a second time, so read it once per
-    query. Jobs of an earlier run under the same name are excluded."""
+
+def measure(spark, reader: StatusReader, name: str, fn, sf_dir: str,
+            plan: bool = True,
+            best: float = math.inf) -> tuple[float, dict | None]:
+    """Run query ``fn`` once: its construction under job group
+    ``<name>-build-<run>``, then a ``noop`` write of its full plan
+    (sorts included, which ``count()`` would optimize away) under
+    ``<name>-exec-<run>``, where ``<run>`` numbers the calls in this
+    process. Returns the wall time of both and the query's ``layers``:
+    ``build_s``, ``exec_s``, the jobs in each group, ``stages``,
+    executor ``cpu_s``, ``shuffle_mb`` written and ``spill_mb`` over
+    all of its jobs, and with ``plan`` the Catalyst ``plan_ms``
+    (analysis + optimization + planning).
+
+    Counters are read after the write, outside the timed window, and
+    only when the sample beats ``best`` (the query's fastest sample so
+    far); a slower sample's counters would be discarded, so it returns
+    ``None`` and reads nothing. ``plan_ms`` plans the query a second
+    time, so read it once per query."""
     sc = spark.sparkContext
-    groups = (f"{name}-build", f"{name}-exec")
-    seen = {j for g in groups for j in reader.jobs_in_group(g)}
+    run = next(_runs)
+    groups = (f"{name}-build-{run}", f"{name}-exec-{run}")
     sc.setJobGroup(groups[0], name)
     t0 = time.perf_counter()
     df = fn(spark, sf_dir)
@@ -46,9 +55,10 @@ def measure(spark, reader: StatusReader, name: str, fn, sf_dir: str,
     sc.setJobGroup(groups[1], name)
     df.write.format("noop").mode("overwrite").save()
     t2 = time.perf_counter()
+    if t2 - t0 >= best:
+        return t2 - t0, None
     reader.drain()
-    build, exe = ([j for j in reader.jobs_in_group(g) if j not in seen]
-                  for g in groups)
+    build, exe = (reader.jobs_in_group(g) for g in groups)
     ex = reader.exec_totals(build + exe)
     layers = {
         "build_s": round(t1 - t0, 4),
@@ -128,10 +138,11 @@ def main() -> None:
         nonlocal reader_s
         t0 = time.perf_counter()
         dt, lay = measure(spark, reader, name, qmap[name], sf_dir,
-                          plan=name not in layers)
+                          plan=name not in layers,
+                          best=timings.get(name, math.inf))
         reader_s += time.perf_counter() - t0 - dt
         samples.setdefault(name, []).append(round(dt, 4))
-        if name not in timings or dt < timings[name]:
+        if lay is not None:
             timings[name] = round(dt, 4)
             layers.setdefault(name, {}).update(lay)
         print(f"# {name}: "

@@ -7,6 +7,9 @@ power the pandas-UDF solver tier with identical semantics.
 
 from __future__ import annotations
 
+import sys
+import zipimport
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -18,17 +21,35 @@ from magmapandas_spark.chem import elements as chem
 from magmapandas_spark.core.geoframe import GeoFrame, csum
 
 
+def drop_zip_finders() -> None:
+    """Delete every ``zipimporter`` from ``sys.path_importer_cache``.
+
+    PySpark's worker calls ``importlib.invalidate_caches()`` at the
+    start of every task, and on CPython 3.11 each cached zipimporter
+    then re-reads its archive's whole central directory: a worker
+    caches ~17 of them (``pyspark.zip`` x12, the ``spark-core`` jar x2,
+    py4j x2, the package zip), ~0.2 s of CPU per task. A deleted
+    finder is rebuilt on demand by the path hooks from
+    ``zipimport._zip_directory_cache`` without a re-read, so imports
+    still resolve; an import that adds finders back is undone by the
+    next call."""
+    cache = sys.path_importer_cache
+    for path, finder in list(cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            cache.pop(path, None)
+
+
 def solver_input(df: DataFrame) -> DataFrame:
     """Fit the input of a Python-UDF stage to one partition per core.
 
-    Every Arrow-UDF task pays a fixed Python-worker cost (~0.2 s of CPU
-    on a 4-core host, even for an empty function body), which dwarfs
-    the per-row kernels on small inputs: over the 32-partition
-    persisted melt, the toplis2005 Kd solver took 8-10 CPU s for 470
-    rows whose UDF body runs in 0.08 s. A wider input is narrowed with
-    ``coalesce`` (no shuffle); a narrower one is fanned out round-robin
-    so the stage still uses every core. Every solver kernel is row-wise,
-    so values do not depend on the partitioning.
+    Every Arrow-UDF task pays a fixed Python-worker cost, which dwarfs
+    the per-row kernels on small inputs: over a 32-partition melt, the
+    toplis2005 Kd solver took 8-10 CPU s for 470 rows whose UDF body
+    runs in 0.08 s. A wider input is narrowed with ``coalesce`` (no
+    shuffle); a narrower one is fanned out round-robin so the stage
+    still uses every core. The persisted synthetic melt already has one
+    partition per core, so on it this is a no-op. Every solver kernel
+    is row-wise, so values do not depend on the partitioning.
 
     The width probe converts the plan to an RDD; on a plan with
     unmaterialized exchanges under AQE that runs them, so call this on
@@ -59,7 +80,10 @@ def solver_column(
     NaN in every output (the reference's per-row NaN on a failed solve,
     ``melt.py:410-413``). Kernels are row-wise, so every other row keeps
     its value whatever the batching, and a batch that solves costs one
-    kernel call. Without it the error propagates."""
+    kernel call. Without it the error propagates.
+
+    Each batch first runs :func:`drop_zip_finders`, which keeps the
+    worker's next task from re-reading its zip archives."""
     names = list(inputs)
     struct = F.struct(*[c.alias(k) for k, c in inputs.items()])
 
@@ -87,6 +111,7 @@ def solver_column(
     # a DataFrame or a Series return hint both make a scalar pandas UDF
     @pandas_udf(schema)
     def solver(batch: pd.DataFrame) -> pd.DataFrame:
+        drop_zip_finders()
         cols = solve({k: batch[k].to_numpy(dtype=float) for k in names})
         if outputs:
             return pd.DataFrame(dict(zip(outputs, cols)))

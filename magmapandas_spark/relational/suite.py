@@ -155,14 +155,18 @@ def synthetic_melt(spark: SparkSession, sf_dir: str) -> GeoFrame:
     cache, not a result cache — values are identical with or without
     it.
 
-    It is persisted ALREADY RANGE-SORTED on ``name``: InMemoryRelation
-    retains the cached plan's output partitioning + ordering, so the
-    deterministic ``orderBy("name")`` every gate query ends in is
-    satisfied for free — EnsureRequirements elides both the range
-    exchange and the sort for all narrow (per-row) model queries, which
-    also removes the range-sampling pass that would otherwise evaluate
-    each query's expression tree twice. One sort at materialization
-    replaces ~30 per-query sorts."""
+    It is persisted ALREADY RANGE-SORTED on ``name``, in one range
+    partition per core (``defaultParallelism``), each sorted within:
+    InMemoryRelation retains the cached plan's output partitioning +
+    ordering, so the deterministic ``orderBy("name")`` every gate query
+    ends in is satisfied for free — EnsureRequirements elides both the
+    range exchange and the sort for all narrow (per-row) model queries,
+    which also removes the range-sampling pass that would otherwise
+    evaluate each query's expression tree twice. One sort at
+    materialization replaces ~30 per-query sorts. One partition per
+    core (not ``spark.sql.shuffle.partitions``) makes a narrow model
+    query one task per core, so its Arrow-UDF stages pay the fixed
+    Python-worker cost per task once per core."""
     key = (id(spark), sf_dir)
     cached = _melt_cache.get(key)
     if cached is not None:
@@ -190,7 +194,9 @@ def synthetic_melt(spark: SparkSession, sf_dir: str) -> GeoFrame:
         (F.lit(0.1) + (F.col("l_suppkey") % 5) * F.lit(0.1)).alias("CO2"),
         (F.lit(1000.0) + (F.col("l_orderkey") % 5) * F.lit(1000.0)).alias("P_bar"),
     )
-    df = df.orderBy("name").persist()
+    n = spark.sparkContext.defaultParallelism
+    df = (df.repartitionByRange(n, "name").sortWithinPartitions("name")
+          .persist())
     # hold the session ref too so a GC'd session can't recycle the id
     _melt_cache[key] = (spark, df)
     return GeoFrame(df, units="wt.%", datatype="oxide", species=MELT_SPECIES)

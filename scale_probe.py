@@ -29,6 +29,7 @@ Usage:  python scale_probe.py           (X=10, sf0.1, local[32])
 from __future__ import annotations
 
 import json
+import math
 import os
 import resource
 import shutil
@@ -424,8 +425,8 @@ def run_shapes(
                 # case); a no-op on a cold memo
                 suite.reset_melt_cache(spark, sf_dir)
             dt, lay = measure(spark, reader, name, shape_fns[name], sf_dir,
-                              plan=not runs)
-            if not runs or dt < min(runs):
+                              plan=not runs, best=min(runs, default=math.inf))
+            if lay is not None:
                 layers.setdefault(name, {}).update(lay)
             runs.append(dt)
         out[name] = runs

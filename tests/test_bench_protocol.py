@@ -39,6 +39,48 @@ def test_measure_layers_schema(spark):
     assert 0 < again["jobs_build"] <= got["dedup_verified"]["jobs_build"]
 
 
+class CountingReader:
+    """A ``StatusReader`` stand-in that counts its calls."""
+
+    def __init__(self):
+        self.calls = {"drain": 0, "jobs_in_group": 0, "exec_totals": 0}
+
+    def drain(self):
+        self.calls["drain"] += 1
+
+    def jobs_in_group(self, group):
+        self.calls["jobs_in_group"] += 1
+        return []
+
+    def exec_totals(self, job_ids):
+        self.calls["exec_totals"] += 1
+        return {"stages": 0, "cpu_s": 0.0, "shuffle_write_mb": 0.0,
+                "spill_mb": 0.0}
+
+
+def test_measure_reads_counters_only_for_a_new_minimum(spark):
+    """A sample no faster than the query's best so far reads no
+    counter: its layers would be discarded."""
+    reader = CountingReader()
+
+    def tiny(spark, sf_dir):
+        return spark.range(3)
+
+    _, layers = bench.measure(spark, reader, "tiny", tiny, SF,
+                              plan=False)
+    assert set(layers) == LAYER_KEYS - {"plan_ms"}
+    assert reader.calls == {"drain": 1, "jobs_in_group": 2,
+                            "exec_totals": 1}
+    slower, none = bench.measure(spark, reader, "tiny", tiny, SF,
+                                 best=0.0)
+    assert none is None and slower > 0
+    assert reader.calls == {"drain": 1, "jobs_in_group": 2,
+                            "exec_totals": 1}
+    _, again = bench.measure(spark, reader, "tiny", tiny, SF, plan=False,
+                             best=60.0)
+    assert again is not None and reader.calls["drain"] == 2
+
+
 @pytest.mark.parametrize("name", ["lsh_recall_eval",
                                   "minhash_xxhash_recall_bound",
                                   "er_golden_multipass"])

@@ -1,0 +1,81 @@
+"""The persisted synthetic melt holds one range partition per core, and
+the model queries that read it give the same values whatever its
+layout (ROADMAP 5(c), melt slice).
+
+``relational.suite.synthetic_melt`` persists the melt range-partitioned
+and sorted on ``name``, so a narrow model query's ``orderBy("name")``
+needs no exchange and no sort, and its stages run one task per core.
+The invariance check swaps the memoized melt for 1-,
+``defaultParallelism``- and 32-partition range layouts of the same rows
+and compares value hashes of the ``geochem_models`` benchmark queries."""
+
+from magmapandas_spark.relational import suite
+from perfbench.check import value_hash
+from perfbench.workloads import WORKLOADS
+
+from .conftest import sf_dir
+
+SF = sf_dir()
+QUERIES = WORKLOADS["geochem_models"].queries
+
+
+def _operators(df) -> list[str]:
+    """Node names of the executed plan. A cached relation's own plan is
+    not a child of its scan, so the melt build is not counted here."""
+    root = df._jdf.queryExecution().executedPlan()
+    if root.nodeName() == "AdaptiveSparkPlan":
+        root = root.executedPlan()
+    names, todo = [], [root]
+    while todo:
+        node = todo.pop()
+        names.append(node.nodeName())
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return names
+
+
+def test_melt_one_range_partition_per_core(spark):
+    """Built under a shuffle width other than the core count, the melt
+    still has one partition per core."""
+    dp = spark.sparkContext.defaultParallelism
+    key = "spark.sql.shuffle.partitions"
+    prior = spark.conf.get(key)
+    suite.reset_melt_cache(spark, SF)
+    spark.conf.set(key, str(4 * dp))
+    try:
+        melt = suite.synthetic_melt(spark, SF).df
+        assert melt.rdd.getNumPartitions() == dp
+        query = suite.queries()["thermometer_putirka2008_15"](spark, SF)
+        ops = _operators(query)
+    finally:
+        spark.conf.set(key, prior)
+    assert "InMemoryTableScan" in ops
+    assert "Exchange" not in ops and "Sort" not in ops, ops
+
+
+def test_geochem_values_melt_layout_invariant(spark):
+    key = (id(spark), SF)
+    melt = suite.synthetic_melt(spark, SF).df
+    cached = suite._melt_cache[key]
+    qmap = suite.queries()
+    dp = spark.sparkContext.defaultParallelism
+    results = {}
+    try:
+        for n in (1, dp, 32):
+            layout = (melt.repartitionByRange(n, "name")
+                      .sortWithinPartitions("name").persist())
+            assert layout.rdd.getNumPartitions() == n
+            suite._melt_cache[key] = (spark, layout)
+            results[n] = {}
+            for name in QUERIES:
+                pdf = qmap[name](spark, SF).toPandas()
+                # every query still ends ordered on the sample key
+                assert pdf["name"].is_monotonic_increasing, (name, n)
+                results[n][name] = (value_hash(pdf), len(pdf))
+            layout.unpersist()
+    finally:
+        suite._melt_cache[key] = cached
+    for name in QUERIES:
+        assert results[1][name] == results[dp][name] == results[32][name], (
+            name, results)
+        assert results[1][name][1] > 0, name

@@ -5,10 +5,18 @@ Every DataFrame-returning solver entry point sizes its input through
 ``models.common.solver_input``. The tripwire reads the Python-eval
 stage's task count from Spark's status tracker under a job group (not
 from timing), and hashes each solver's output over inputs with 1,
-``defaultParallelism`` and 32 partitions."""
+``defaultParallelism`` and 32 partitions.
+
+A second tripwire reads the workers' own import state: a solver task
+leaves no ``zipimporter`` in ``sys.path_importer_cache``, so the next
+task's ``importlib.invalidate_caches()`` re-reads no zip archive."""
 
 import hashlib
+import importlib
 import itertools
+import sys
+import zipfile
+import zipimport
 
 import numpy as np
 import pytest
@@ -17,7 +25,11 @@ from pyspark.sql import functions as F
 from magmapandas_spark.core.geoframe import GeoFrame
 from magmapandas_spark.models import fe3fe2 as fe_mod
 from magmapandas_spark.models import volatiles as vol
-from magmapandas_spark.models.common import solver_input
+from magmapandas_spark.models.common import (
+    drop_zip_finders,
+    solver_column,
+    solver_input,
+)
 from magmapandas_spark.models.kd import calculate_FeMg_Kd
 from magmapandas_spark.relational.suite import synthetic_melt
 
@@ -130,3 +142,51 @@ def test_solver_output_values_finite(spark, melt_rows):
     """Guard against a hash match on all-NaN output."""
     out = SOLVERS["kd_toplis2005"](_melt(spark, melt_rows, 4)).toPandas()
     assert np.isfinite(out["Kd"].to_numpy()).all()
+
+
+def _zip_finders() -> int:
+    return sum(isinstance(f, zipimport.zipimporter)
+               for f in sys.path_importer_cache.values())
+
+
+def test_solver_tasks_leave_no_zip_finders(spark):
+    """Each row reads the zipimporter count of the worker that ran its
+    kernel; without the purge a worker holds a dozen or more (pyspark.zip
+    alone is cached once per package directory)."""
+    def zip_finders(arrays):  # a closure, so it pickles by value
+        n = sum(isinstance(f, zipimport.zipimporter)
+                for f in sys.path_importer_cache.values())
+        return np.full(len(arrays["x"]), float(n))
+
+    dp = spark.sparkContext.defaultParallelism
+    df = spark.range(0, 8 * dp, numPartitions=dp).select(
+        solver_column(zip_finders, {"x": F.col("id").cast("double")})
+        .alias("n"))
+    for _ in range(2):  # the second run's tasks reuse the same workers
+        counts = [r.n for r in df.collect()]
+        assert len(counts) == 8 * dp and set(counts) == {0.0}, counts
+
+
+def test_zip_imports_survive_drop_zip_finders(tmp_path, monkeypatch):
+    """A module in a zip on ``sys.path`` still imports after the purge
+    and the per-task ``invalidate_caches()``, and the archive's
+    directory is not read again (the cached one is reused)."""
+    archive = str(tmp_path / "finder_probe.zip")
+    with zipfile.ZipFile(archive, "w") as zf:
+        zf.writestr("finder_probe_pkg/__init__.py", "")
+        zf.writestr("finder_probe_pkg/first.py", "VALUE = 1\n")
+        zf.writestr("finder_probe_pkg/second.py", "VALUE = 2\n")
+    monkeypatch.syspath_prepend(archive)
+    try:
+        assert importlib.import_module("finder_probe_pkg.first").VALUE == 1
+        directory = zipimport._zip_directory_cache[archive]
+        assert _zip_finders() > 0
+        drop_zip_finders()
+        assert _zip_finders() == 0
+        importlib.invalidate_caches()
+        assert importlib.import_module("finder_probe_pkg.second").VALUE == 2
+        assert zipimport._zip_directory_cache[archive] is directory
+    finally:
+        for mod in ("finder_probe_pkg", "finder_probe_pkg.first",
+                    "finder_probe_pkg.second"):
+            sys.modules.pop(mod, None)
