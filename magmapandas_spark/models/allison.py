@@ -26,12 +26,16 @@ from __future__ import annotations
 import numpy as np
 
 from magmapandas_spark.chem import elements as chem
+from magmapandas_spark.models import eos
 from magmapandas_spark.models.common import cation_fractions_np
 
 R = 8.31446261815324
 _ALLISON_OXIDES = ["SiO2", "TiO2", "Al2O3", "FeO", "MgO", "CaO", "Na2O", "K2O"]
 _FW = 36.594  # alkali-basalt formula weight per 1 oxygen (allison2022.py:245)
 _P_BRACKET = (1e-10, 1.5e4)  # reference bracket [1e-50, 1.5e4] bar
+# 48 halvings of the 1.5e4 bar bracket ≈ 5e-11 bar — beyond any
+# physical meaning, at 40% the cost of scipy-default-equivalent 80
+_ITERS = 48
 
 
 # ----------------------------------------------------------------------
@@ -206,18 +210,6 @@ def hb_fugacity_np(T_K, P_bar, species: str) -> np.ndarray:
 # Allison 2022 solubility (``allison2022.py``)
 # ----------------------------------------------------------------------
 
-def _bisect(f, lo, hi, iters: int = 48):
-    # 48 halvings of the 1.5e4 bar bracket ≈ 5e-11 bar — beyond any
-    # physical meaning, at 40% the cost of scipy-default-equivalent 80
-    f_lo = f(lo)
-    for _ in range(iters):
-        mid = 0.5 * (lo + hi)
-        same = np.sign(f(mid)) == np.sign(f_lo)
-        lo = np.where(same, mid, lo)
-        hi = np.where(same, hi, mid)
-    return 0.5 * (lo + hi)
-
-
 def _allison_cations(wt: dict[str, np.ndarray]) -> dict[str, np.ndarray]:
     """Cation fractions on the 8-oxide basis, all Fe as Fe2+, rounded to
     3 decimals per the reference quirk (``allison2022.py:379-403``)."""
@@ -305,7 +297,9 @@ def allison_co2_solubility_np(
 
         lo = np.full_like(P, _P_BRACKET[0])
         hi = np.full_like(P, _P_BRACKET[1])
-        P_CO2 = np.where(mixed_fluid, _bisect(froot, lo, hi), P)
+        P_CO2 = np.where(
+            mixed_fluid, eos.bisect_vectorized(froot, lo, hi, iters=_ITERS), P
+        )
     else:
         P_CO2 = P
 
@@ -334,7 +328,7 @@ def allison_h2o_saturation_np(wt, h2o_obs, T_K, x_fluid=1.0) -> np.ndarray:
 
     lo = np.full_like(h2o, _P_BRACKET[0])
     hi = np.full_like(h2o, _P_BRACKET[1])
-    out = _bisect(f, lo, hi)
+    out = eos.bisect_vectorized(f, lo, hi, iters=_ITERS)
     return np.where(h2o <= 0, 0.0, out)
 
 
@@ -360,7 +354,7 @@ def allison_co2_saturation_np(wt, co2_obs, T_K, x_fluid=0.0) -> np.ndarray:
 
     lo = np.full_like(co2_safe, _P_BRACKET[0])
     hi = np.full_like(co2_safe, _P_BRACKET[1])
-    P_CO2 = _bisect(f, lo, hi)
+    P_CO2 = eos.bisect_vectorized(f, lo, hi, iters=_ITERS)
 
     if np.any(np.asarray(x_fluid) > 0):
         fCO2 = fug_co2(P_CO2)
@@ -369,7 +363,7 @@ def allison_co2_saturation_np(wt, co2_obs, T_K, x_fluid=0.0) -> np.ndarray:
         def f2(P):
             return fCO2_pure - fug_co2(P)
 
-        P_sat = _bisect(f2, lo, hi)
+        P_sat = eos.bisect_vectorized(f2, lo, hi, iters=_ITERS)
     else:
         P_sat = P_CO2
     return np.where(co2 <= 0, 0.0, P_sat)
@@ -421,7 +415,7 @@ def allison_mixed_saturation_np(wt, h2o_obs, co2_obs, T_K):
     # contract as the reference's solver, failure → clipped fallback.
     lo = np.full_like(h_safe, 10.0)
     hi = np.full_like(h_safe, _P_BRACKET[1])
-    P = _bisect(residual, lo, hi)
+    P = eos.bisect_vectorized(residual, lo, hi, iters=_ITERS)
     x = x_of_P(P)
 
     P = np.where(x <= 0.0, P_co2_sat, np.where(x >= 1.0, P_h2o_sat, P))

@@ -120,6 +120,20 @@ def solver_column(
     return solver(struct)
 
 
+def tp_column(fn, T_K, P_bar) -> Column:
+    """A sample-independent kernel ``fn(T, P) -> array`` (fO2 buffers,
+    Γ) as a :func:`solver_column`: each Arrow batch evaluates its
+    distinct (T, P) pairs once, since real tables hold few distinct
+    conditions. Row-wise, so values do not depend on the batching."""
+
+    def kernel(a: dict[str, np.ndarray]) -> np.ndarray:
+        pairs = np.stack([a["T_K"], a["P_bar"]], axis=1)
+        uniq, inv = np.unique(pairs, axis=0, return_inverse=True)
+        return np.asarray(fn(uniq[:, 0], uniq[:, 1]))[inv]
+
+    return solver_column(kernel, {"T_K": as_col(T_K), "P_bar": as_col(P_bar)})
+
+
 def as_col(x) -> Column:
     if isinstance(x, Column):
         return x

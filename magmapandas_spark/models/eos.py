@@ -169,16 +169,17 @@ def bisect_vectorized(f, lo, hi, iters: int = 80):
     """Vectorized bisection: find f(x)=0 for arrays of brackets.
 
     All rows bisect simultaneously — the Spark-friendly replacement for
-    per-row ``scipy.fsolve`` (cf. ``fO2/QFM.py:51-63``)."""
-    lo = np.asarray(lo, dtype=float).copy()
-    hi = np.asarray(hi, dtype=float).copy()
-    flo = f(lo)
+    per-row ``scipy.fsolve`` (cf. ``fO2/QFM.py:51-63``), and the model
+    tier's one sign bisection. ``lo`` moves to the midpoint where
+    ``f(mid)`` has the sign of ``f(lo)``, which therefore never changes;
+    a NaN row never moves ``lo``."""
+    lo = np.asarray(lo, dtype=float)
+    hi = np.asarray(hi, dtype=float)
+    sign_lo = np.sign(f(lo))
     for _ in range(iters):
         mid = 0.5 * (lo + hi)
-        fmid = f(mid)
-        same = np.sign(fmid) == np.sign(flo)
+        same = np.sign(f(mid)) == sign_lo
         lo = np.where(same, mid, lo)
-        flo = np.where(same, fmid, flo)
         hi = np.where(same, hi, mid)
     return 0.5 * (lo + hi)
 

@@ -24,10 +24,8 @@ P_bar Columns, and return a Fe3Fe2 Column.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from magmapandas_spark.chem import elements as chem
 from magmapandas_spark.core.geoframe import GeoFrame
@@ -41,6 +39,7 @@ from magmapandas_spark.models.common import (
     mole_fraction_exprs,
     solver_column,
     solver_input,
+    tp_column,
 )
 
 R = eos.R
@@ -556,14 +555,6 @@ _SOLVER_MODELS_NP = {
 }
 
 
-@F.pandas_udf(T.DoubleType())
-def _sun2024_gamma_deng_udf(T_K: pd.Series, P_bar: pd.Series) -> pd.Series:
-    """Γ = Deng dV/dP / (R·T) (``Fe3Fe2_models.py:1428-1439``)."""
-    t = T_K.to_numpy(dtype=float)
-    p = P_bar.to_numpy(dtype=float)
-    return pd.Series(deng_dVdP(t, p) / (R * t))
-
-
 # ----------------------------------------------------------------------
 # top-level API
 # ----------------------------------------------------------------------
@@ -619,7 +610,8 @@ def calculate_Fe3Fe2(
         expr = EXPR_MODELS[model](mol, T, fO2, P)
         return melt.df.withColumn(out_col, expr)
     if model == "sun2024_deng":
-        gamma = _sun2024_gamma_deng_udf(T, P)
+        # Γ = Deng dV/dP / (R·T) (``Fe3Fe2_models.py:1428-1439``)
+        gamma = tp_column(lambda t, p: deng_dVdP(t, p) / (R * t), T, P)
         expr = fe3fe2_sun2024(mol, T, fO2, P, gamma=gamma)
         return solver_input(melt.df).withColumn(out_col, expr)
     if model in _SOLVER_MODELS_NP:

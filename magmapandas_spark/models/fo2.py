@@ -15,14 +15,11 @@ at ``fO2/fO2_calculate.py:20-24``).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DoubleType
 
 from magmapandas_spark.models import eos
-from magmapandas_spark.models.common import as_col
+from magmapandas_spark.models.common import as_col, solver_column, tp_column
 
 R = eos.R
 LN10 = float(np.log(10.0))
@@ -167,40 +164,14 @@ def fo2_qfm_1bar(logshift, T_K) -> Column:
 # solver tier: exact QFM at pressure
 # ----------------------------------------------------------------------
 
-@pandas_udf(DoubleType())
-def _qfm_udf(T_K: pd.Series, P_bar: pd.Series) -> pd.Series:
-    # dedupe (T,P) pairs inside the Arrow batch: fO2(T,P) is
-    # sample-independent, and real tables have few distinct conditions
-    t = T_K.to_numpy(dtype=float)
-    p = P_bar.to_numpy(dtype=float)
-    pairs = np.stack([t, p], axis=1)
-    uniq, inv = np.unique(pairs, axis=0, return_inverse=True)
-    vals = eos.fo2_qfm(0.0, uniq[:, 0], uniq[:, 1])
-    return pd.Series(np.asarray(vals)[inv])
-
-
 def fo2_qfm(logshift, T_K, P_bar) -> Column:
     """Exact QFM fO2(T,P) (``fO2/QFM.py:187-239``): O'Neill 1-bar
     polynomial + EOS pressure term with phase transitions, as a
-    vectorized pandas UDF (bisection replaces per-row fsolve)."""
-    return _qfm_udf(as_col(T_K), as_col(P_bar)) * _offset(logshift)
-
-
-def qfm_grid(spark, T_range=(600.0, 2600.0), n_T=201, P_levels=None):
-    """Broadcastable (T,P) → log10 fO2(QFM) lookup grid, precomputed
-    driver-side. At 100 TB scale, join+interpolate on this beats running
-    even a vectorized UDF over every row (SURVEY §4.2)."""
-    if P_levels is None:
-        P_levels = [1.0, 1e3, 2e3, 4e3, 6e3, 1e4, 2e4, 5e4, 1e5]
-    T = np.linspace(T_range[0], T_range[1], n_T)
-    rows = []
-    for P in P_levels:
-        vals = eos.fo2_qfm(0.0, T, np.full_like(T, P))
-        rows += [
-            (float(t), float(P), float(np.log10(v))) for t, v in zip(T, vals)
-        ]
-    pdf = pd.DataFrame(rows, columns=["T_K", "P_bar", "log10_fO2"])
-    return spark.createDataFrame(pdf)
+    :func:`~magmapandas_spark.models.common.tp_column` (bisection
+    replaces per-row fsolve)."""
+    return tp_column(
+        lambda T, P: eos.fo2_qfm(0.0, T, P), T_K, P_bar
+    ) * _offset(logshift)
 
 
 def fo2_iw(logshift, T_K, P_bar) -> Column:
@@ -248,9 +219,10 @@ def fo2_grid_column(
     equilibria per distinct (T,P); both are *sample-independent*, so at
     scale we precompute a (T × P-level) grid ONCE driver-side, broadcast
     the few-KB table, and each executor batch does O(1) searchsorted +
-    bilinear interpolation (T linear, P in log10) — no root-finding on
-    the hot path at all. Returns a Column factory result usable exactly
-    like :func:`fo2_qfm` / :func:`fo2_iw`.
+    bilinear interpolation (linear in T and P) as a
+    :func:`~magmapandas_spark.models.common.solver_column` kernel — no
+    root-finding on the hot path at all. Returns a Column factory
+    usable exactly like :func:`fo2_qfm` / :func:`fo2_iw`.
 
     Accuracy vs the exact solvers at n_T=801 over 900-1900 K, 1-8e4 bar
     (asserted in tests): ≤0.02 dex worst case, hit only at phase-
@@ -260,45 +232,27 @@ def fo2_grid_column(
 
     key = (buffer, tuple(T_range), n_T,
            tuple(P_levels) if P_levels is not None else None)
-    if key in _GRID_CACHE:
-        T_axis, P_axis, grid = _GRID_CACHE[key]
-        return _grid_interp_column_factory(spark, T_axis, P_axis, grid,
-                                           logshift)
+    if key not in _GRID_CACHE:
+        if P_levels is None:
+            # linear spacing: the pressure term of mu_O2 is ~V·P (linear
+            # in P up to slow EOS compression), so linear-P interpolation
+            # converges fast where log-P badly undershoots between
+            # levels; 1-kbar spacing bounds the error at the
+            # P-dependent quartz-coesite transition kink
+            P_levels = list(np.linspace(1.0, 1e5, 101))
+        T_axis = np.linspace(T_range[0], T_range[1], n_T)
+        P_axis = np.asarray(sorted(P_levels), dtype=float)
+        fn = {"QFM": eos.fo2_qfm, "IW": iw_mod.fo2_iw_np}[buffer]
+        grid = np.empty((len(P_axis), n_T))
+        for j, P in enumerate(P_axis):
+            grid[j] = np.log10(fn(0.0, T_axis, np.full_like(T_axis, P)))
+        _GRID_CACHE[key] = (T_axis, P_axis, grid)
+    table = spark.sparkContext.broadcast(_GRID_CACHE[key])
 
-    if P_levels is None:
-        # linear spacing: the pressure term of mu_O2 is ~V·P (linear in
-        # P up to slow EOS compression), so linear-P interpolation
-        # converges fast where log-P badly undershoots between levels;
-        # 1-kbar spacing bounds the error at the P-dependent
-        # quartz-coesite transition kink
-        P_levels = list(np.linspace(1.0, 1e5, 101))
-    T_axis = np.linspace(T_range[0], T_range[1], n_T)
-    P_axis = np.asarray(sorted(P_levels), dtype=float)
-
-    fn = {"QFM": eos.fo2_qfm, "IW": iw_mod.fo2_iw_np}[buffer]
-    grid = np.empty((len(P_axis), n_T))
-    for j, P in enumerate(P_axis):
-        grid[j] = np.log10(fn(0.0, T_axis, np.full_like(T_axis, P)))
-    _GRID_CACHE[key] = (T_axis, P_axis, grid)
-    return _grid_interp_column_factory(spark, T_axis, P_axis, grid, logshift)
-
-
-_GRID_CACHE: dict = {}
-
-
-def _grid_interp_column_factory(spark, T_axis, P_axis, grid, logshift):
-    sc = spark.sparkContext
-    b_T = sc.broadcast(T_axis)
-    b_P = sc.broadcast(P_axis)
-    b_grid = sc.broadcast(grid)
-
-    @pandas_udf(DoubleType())
-    def interp_udf(T_K: pd.Series, P_bar: pd.Series) -> pd.Series:
-        Ts = b_T.value
-        Ps = b_P.value
-        G = b_grid.value
-        t = np.clip(T_K.to_numpy(dtype=float), Ts[0], Ts[-1])
-        p = np.clip(P_bar.to_numpy(dtype=float), Ps[0], Ps[-1])
+    def interp(a: dict[str, np.ndarray]) -> np.ndarray:
+        Ts, Ps, G = table.value
+        t = np.clip(a["T_K"], Ts[0], Ts[-1])
+        p = np.clip(a["P_bar"], Ps[0], Ps[-1])
         ti = np.clip(np.searchsorted(Ts, t) - 1, 0, len(Ts) - 2)
         pi = np.clip(np.searchsorted(Ps, p) - 1, 0, len(Ps) - 2)
         wt = (t - Ts[ti]) / (Ts[ti + 1] - Ts[ti])
@@ -309,11 +263,15 @@ def _grid_interp_column_factory(spark, T_axis, P_axis, grid, logshift):
             + G[pi + 1, ti] * wp * (1 - wt)
             + G[pi + 1, ti + 1] * wp * wt
         )
-        return pd.Series(10.0 ** v)
+        return 10.0 ** v
 
     def column(T_K, P_bar) -> Column:
-        return interp_udf(as_col(T_K), as_col(P_bar)) * F.pow(
+        inputs = {"T_K": as_col(T_K), "P_bar": as_col(P_bar)}
+        return solver_column(interp, inputs) * F.pow(
             F.lit(10.0), F.lit(float(logshift))
         )
 
     return column
+
+
+_GRID_CACHE: dict = {}

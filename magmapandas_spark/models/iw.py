@@ -13,9 +13,9 @@ per-row ``brentq`` in the reference), and the O2 chemical potential
 
 Execution strategy (100 TB posture):
 - everything is a *function of (T, P) only* — sample-independent — so the
-  pandas UDF dedupes distinct (T, P) pairs per Arrow batch before
-  evaluating, and :func:`iw_grid` precomputes a broadcastable lookup
-  table for join+interpolate plans (SURVEY §4.2);
+  Arrow UDF dedupes distinct (T, P) pairs per batch before evaluating,
+  and :func:`~magmapandas_spark.models.fo2.fo2_grid_column` interpolates
+  a broadcast (T, P) grid at scale (SURVEY §4.2);
 - the per-row ``brentq``/``fsolve`` of the reference become *vectorized
   bisection* over the whole batch (both objective functions are
   monotonic in their bracket), so the kernel is pure numpy — no Python
@@ -25,13 +25,11 @@ Execution strategy (100 TB posture):
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DoubleType
 
-from magmapandas_spark.models.common import as_col
+from magmapandas_spark.models import eos
+from magmapandas_spark.models.common import as_col, tp_column
 
 R = 8.31446261815324
 
@@ -148,7 +146,9 @@ def _gibbs_fe_magnetic(T: np.ndarray) -> np.ndarray:
 def _vinet_V_roomT(P_GPa: np.ndarray, V_0, K_0, Kprime_0,
                    iters: int = 60) -> np.ndarray:
     """V(P) at 298.15 K: invert P_Vinet(V) by bisection — monotonically
-    decreasing in V, bracketed by (0.2·V0, 1.001·V0)."""
+    decreasing in V, bracketed by (0.2·V0, 1.001·V0). Its own loop, not
+    :func:`eos.bisect_vectorized`: the ``fm < 0`` rule moves ``lo`` where
+    ``fm`` is exactly 0 or NaN, where the sign rule would move ``hi``."""
     lo = np.full_like(P_GPa, 0.2 * V_0)
     hi = np.full_like(P_GPa, V_0 * 1.001)
 
@@ -215,15 +215,9 @@ def _solve_XFeO1p5(T: np.ndarray, dG_Fe_wustite: np.ndarray,
             - _gamma_FeO1p5(X)
         )
 
-    lo = np.full_like(T, 1e-6)
-    hi = np.full_like(T, 1.0 - 1e-6)
-    f_lo = f(lo)
-    for _ in range(iters):
-        mid = 0.5 * (lo + hi)
-        same = np.sign(f(mid)) == np.sign(f_lo)
-        lo = np.where(same, mid, lo)
-        hi = np.where(same, hi, mid)
-    out = 0.5 * (lo + hi)
+    out = eos.bisect_vectorized(
+        f, np.full_like(T, 1e-6), np.full_like(T, 1.0 - 1e-6), iters
+    )
     # reference fallback: non-bracketed root → 1e-6 (``IW.py:296-301``)
     return np.where(np.sign(f(np.full_like(T, 1e-6))) < 0, 1e-6, out)
 
@@ -272,36 +266,10 @@ def fo2_iw_np(logshift, T_K, P_bar) -> np.ndarray:
     return np.exp(mu / (R * T)) * 10.0**logshift
 
 
-@pandas_udf(DoubleType())
-def _iw_udf(T_K: pd.Series, P_bar: pd.Series) -> pd.Series:
-    # fO2(T,P) is sample-independent: evaluate distinct pairs only
-    t = T_K.to_numpy(dtype=float)
-    p = P_bar.to_numpy(dtype=float)
-    uniq, inv = np.unique(np.stack([t, p], axis=1), axis=0, return_inverse=True)
-    vals = fo2_iw_np(0.0, uniq[:, 0], uniq[:, 1])
-    return pd.Series(np.asarray(vals)[inv])
-
-
 def fo2_iw(logshift, T_K, P_bar) -> Column:
-    """Exact IW buffer (Hirschmann 2021) as a Column: vectorized pandas
-    UDF with per-batch (T,P) dedup."""
-    return _iw_udf(as_col(T_K), as_col(P_bar)) * F.pow(
+    """Exact IW buffer (Hirschmann 2021) as a Column: a
+    :func:`~magmapandas_spark.models.common.tp_column` with per-batch
+    (T,P) dedup."""
+    return tp_column(lambda T, P: fo2_iw_np(0.0, T, P), T_K, P_bar) * F.pow(
         F.lit(10.0), as_col(logshift)
-    )
-
-
-def iw_grid(spark, T_range=(600.0, 2600.0), n_T=201, P_levels=None):
-    """Broadcastable (T,P) → log10 fO2(IW) lookup grid, precomputed
-    driver-side — the join+interpolate fast path at cluster scale
-    (SURVEY §4.2)."""
-    if P_levels is None:
-        P_levels = [1.0, 1e3, 2e3, 4e3, 6e3, 1e4, 2e4, 5e4, 1e5]
-    T = np.linspace(T_range[0], T_range[1], n_T)
-    rows = []
-    for P in P_levels:
-        vals = fo2_iw_np(0.0, T, np.full_like(T, P))
-        rows += [(float(t), float(P), float(np.log10(v)))
-                 for t, v in zip(T, vals)]
-    return spark.createDataFrame(
-        pd.DataFrame(rows, columns=["T_K", "P_bar", "log10_fO2"])
     )

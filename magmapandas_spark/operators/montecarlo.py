@@ -16,7 +16,8 @@ Model-error curves (1-bar fit ``a·x + b·x² + c^(x+d)``,
 ``tools/model_errors.py:6-10`` + ``Fe_redox/Fe3Fe2_errors.py:9-40``)
 are pure expressions; the >1 bar spline tier
 (``Fe3Fe2_baseclass.py:123-145``) evaluates B-splines with a numpy
-De Boor implementation inside a pandas UDF.
+De Boor implementation inside
+:func:`~magmapandas_spark.models.common.solver_column`.
 """
 
 from __future__ import annotations
@@ -24,11 +25,11 @@ from __future__ import annotations
 from typing import Callable, Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from magmapandas_spark.core.geoframe import GeoFrame
+from magmapandas_spark.models.common import as_col, solver_column
 
 # 1-bar fitted error parameters (``Fe_redox/Fe3Fe2_errors.py:9-40``)
 FE3FE2_ERROR_PARAMS_1BAR = {
@@ -307,22 +308,14 @@ def fe3fe2_error_np(model: str, Fe3Fe2, P_bar=None) -> np.ndarray:
     return np.where(P > 1.0, hp_err, err)
 
 
-def fe3fe2_error_column(model: str, Fe3Fe2, P_bar) -> "Column":
+def fe3fe2_error_column(model: str, Fe3Fe2, P_bar) -> Column:
     """Arrow-vectorized 1σ Fe3Fe2 error column — full reference
     semantics (fitted curve at 1 bar, published HP spline above; see
     :func:`fe3fe2_error_np`)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import DoubleType
-
-    @pandas_udf(DoubleType())
-    def _err(x: pd.Series, p: pd.Series) -> pd.Series:
-        return pd.Series(
-            fe3fe2_error_np(
-                model, x.to_numpy(dtype=float), p.to_numpy(dtype=float)
-            )
-        )
-
-    return _err(Fe3Fe2, P_bar)
+    return solver_column(
+        lambda a: fe3fe2_error_np(model, a["x"], a["p"]),
+        {"x": as_col(Fe3Fe2), "p": as_col(P_bar)},
+    )
 
 
 def _sql_deboor(tk, c, k: int, idx: int, x: str) -> str:

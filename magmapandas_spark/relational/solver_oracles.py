@@ -776,9 +776,9 @@ def _allison_cat_stages():
 
 def _staged_bisect(name, base, consts, species, flo_init, residual, C,
                    iters=48):
-    """``allison._bisect`` mirror with a staged fugacity evaluation per
-    step; f(lo) is computed ONCE (its sign never updates — the
-    reference's loop keeps the original f_lo)."""
+    """``eos.bisect_vectorized`` mirror with a staged fugacity
+    evaluation per step; the sign of f(lo) is computed ONCE, as there
+    (it never changes while the loop runs)."""
     cols = ", ".join(consts)
     inner = _nest(
         f"SELECT *, 0.5 * (lo + hi) AS pb FROM {name} WHERE it < {iters}",

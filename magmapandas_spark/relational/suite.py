@@ -173,12 +173,7 @@ def synthetic_melt(spark: SparkSession, sf_dir: str) -> GeoFrame:
         return GeoFrame(
             cached[1], units="wt.%", datatype="oxide", species=MELT_SPECIES
         )
-    from magmapandas_spark.operators.dedup import fan_out
-
-    # fan_out: the test parquet is a single row group, so without it
-    # the scan+project feeding the range sort runs on one core
-    li = fan_out(spark.read.parquet(_t(sf_dir, "lineitem")))
-    df = li.select(
+    df = spark.read.parquet(_t(sf_dir, "lineitem")).select(
         (F.col("l_orderkey") * 10 + F.col("l_linenumber")).alias("name"),
         (F.lit(45.0) + (F.col("l_partkey") % 1000) * F.lit(0.02)).alias("SiO2"),
         (F.lit(12.0) + (F.col("l_suppkey") % 100) * F.lit(0.05)).alias("Al2O3"),

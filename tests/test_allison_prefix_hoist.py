@@ -21,7 +21,6 @@ import pytest
 from magmapandas_spark.models import allison as al
 from magmapandas_spark.models.allison import (
     _allison_cations,
-    _bisect,
     _deltaV,
     _lnK0,
     _redkw,
@@ -31,8 +30,19 @@ from magmapandas_spark.models.allison import (
 )
 
 # ---------------------------------------------------------------------
-# Verbatim replica of the r13 (pre-hoist) code paths
+# Verbatim replica of the r13 (pre-hoist) code paths, with the
+# module's own bisection loop that eos.bisect_vectorized replaced
 # ---------------------------------------------------------------------
+
+
+def _bisect(f, lo, hi, iters: int = 48):
+    f_lo = f(lo)
+    for _ in range(iters):
+        mid = 0.5 * (lo + hi)
+        same = np.sign(f(mid)) == np.sign(f_lo)
+        lo = np.where(same, mid, lo)
+        hi = np.where(same, hi, mid)
+    return 0.5 * (lo + hi)
 
 
 def _rkcalc_old(T_K, P_bar, species):

@@ -19,10 +19,9 @@ SF = sf_dir()
 QUERIES = WORKLOADS["geochem_models"].queries
 
 
-def _operators(df) -> list[str]:
-    """Node names of the executed plan. A cached relation's own plan is
-    not a child of its scan, so the melt build is not counted here."""
-    root = df._jdf.queryExecution().executedPlan()
+def _operators(root) -> list[str]:
+    """Node names of a physical plan. A cached relation's own plan is
+    not a child of its scan: :func:`_cached_plan` reaches it."""
     if root.nodeName() == "AdaptiveSparkPlan":
         root = root.executedPlan()
     names, todo = [], [root]
@@ -34,9 +33,18 @@ def _operators(df) -> list[str]:
     return names
 
 
+def _cached_plan(df):
+    """The physical plan a persisted DataFrame's cache is built from."""
+    cache = df.sparkSession._jsparkSession.sharedState().cacheManager()
+    relation = cache.lookupCachedData(df._jdf).get().cachedRepresentation()
+    return relation.cacheBuilder().cachedPlan()
+
+
 def test_melt_one_range_partition_per_core(spark):
     """Built under a shuffle width other than the core count, the melt
-    still has one partition per core."""
+    still has one partition per core, and its build shuffles once: the
+    range exchange spreads the rows, with no round-robin fan-out
+    before it."""
     dp = spark.sparkContext.defaultParallelism
     key = "spark.sql.shuffle.partitions"
     prior = spark.conf.get(key)
@@ -44,11 +52,13 @@ def test_melt_one_range_partition_per_core(spark):
     spark.conf.set(key, str(4 * dp))
     try:
         melt = suite.synthetic_melt(spark, SF).df
+        build = _operators(_cached_plan(melt))
         assert melt.rdd.getNumPartitions() == dp
         query = suite.queries()["thermometer_putirka2008_15"](spark, SF)
-        ops = _operators(query)
+        ops = _operators(query._jdf.queryExecution().executedPlan())
     finally:
         spark.conf.set(key, prior)
+    assert build.count("Exchange") == 1, build
     assert "InMemoryTableScan" in ops
     assert "Exchange" not in ops and "Sort" not in ops, ops
 

@@ -144,13 +144,29 @@ def test_qfm_golden_curve():
     assert np.abs(dlog[~low_p]).max() < 1.2
 
 
-def test_qfm_udf_spark(spark):
-    pdf = pd.DataFrame({"T_K": [1200.0, 1400.0, 1600.0],
-                        "P_bar": [1.0, 4e3, 2e4]})
+ARROW_BATCH = "spark.sql.execution.arrow.maxRecordsPerBatch"
+
+
+def _with_arrow_batch(spark, rows, query):
+    """``query()`` with Arrow batches of ``rows`` records."""
+    prior = spark.conf.get(ARROW_BATCH)
+    spark.conf.set(ARROW_BATCH, str(rows))
+    try:
+        return query()
+    finally:
+        spark.conf.set(ARROW_BATCH, prior)
+
+
+# repeated (T, P) rows: the per-batch (T, P) dedup must stay row-wise
+# whether a batch holds one row or all of them
+@pytest.mark.parametrize("batch_rows", [1, 10000])
+def test_qfm_udf_spark(spark, batch_rows):
+    pdf = pd.DataFrame({"T_K": [1200.0, 1400.0, 1600.0, 1400.0, 1200.0],
+                        "P_bar": [1.0, 4e3, 2e4, 4e3, 1.0]})
     sdf = spark.createDataFrame(pdf)
-    out = sdf.withColumn(
+    out = _with_arrow_batch(spark, batch_rows, lambda: sdf.withColumn(
         "fO2", fo2.calculate_fO2("T_K", "P_bar", fO2_buffer="QFM", dfO2=1.0)
-    ).toPandas()
+    ).toPandas())
     exp = eos.fo2_qfm(1.0, pdf["T_K"].to_numpy(), pdf["P_bar"].to_numpy())
     assert np.allclose(out["fO2"].to_numpy(), exp, rtol=1e-10)
 
@@ -296,15 +312,16 @@ def test_iw_golden_curve():
     assert dlog.max() < 0.01
 
 
-def test_iw_udf_spark(spark):
+@pytest.mark.parametrize("batch_rows", [1, 10000])
+def test_iw_udf_spark(spark, batch_rows):
     from magmapandas_spark.models import iw
 
-    pdf = pd.DataFrame({"T_K": [1200.0, 1500.0, 1800.0],
-                        "P_bar": [1.0, 4e3, 1e5]})
+    pdf = pd.DataFrame({"T_K": [1200.0, 1500.0, 1800.0, 1500.0, 1200.0],
+                        "P_bar": [1.0, 4e3, 1e5, 4e3, 1.0]})
     sdf = spark.createDataFrame(pdf)
-    out = sdf.withColumn(
+    out = _with_arrow_batch(spark, batch_rows, lambda: sdf.withColumn(
         "fO2", fo2.calculate_fO2("T_K", "P_bar", fO2_buffer="IW", dfO2=1.0)
-    ).toPandas()
+    ).toPandas())
     exp = iw.fo2_iw_np(1.0, pdf["T_K"].to_numpy(), pdf["P_bar"].to_numpy())
     assert np.allclose(out["fO2"].to_numpy(), exp, rtol=1e-10)
     # IW sits several log units below QFM at the same conditions

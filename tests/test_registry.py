@@ -6,6 +6,7 @@ must fail loudly and stay cheap."""
 import ast
 import subprocess
 import sys
+from itertools import chain
 from pathlib import Path
 
 import pytest
@@ -98,9 +99,11 @@ def test_listing_queries_builds_no_oracle():
 
 def _modules(sub: str = ""):
     """(path relative to the repo, dotted module name, AST) of every
-    package module, or of those under the package's ``sub`` directory."""
+    package module, or of those under the package's ``sub`` directory,
+    or of the one module at the package's ``sub`` path."""
     pkg = Path(suite.__file__).resolve().parents[1]
-    for path in sorted((pkg / sub).rglob("*.py")):
+    root = pkg / sub
+    for path in sorted(root.rglob("*.py")) if root.is_dir() else [root]:
         rel = path.relative_to(pkg.parent).with_suffix("")
         yield rel, ".".join(rel.parts), ast.parse(path.read_text())
 
@@ -156,24 +159,23 @@ def test_no_function_reimports_a_top_level_import():
     assert not found, found
 
 
-# The (T, P) UDFs dedupe conditions per Arrow batch; they are not
-# composition kernels and stay outside ``solver_column``.
-MODEL_UDFS = {
-    "common.solver_column",
-    "fe3fe2._sun2024_gamma_deng_udf",
-    "fo2._qfm_udf",
-    "fo2._grid_interp_column_factory",
-    "iw._iw_udf",
+MODEL_UDFS = {"common.solver_column"}
+# bisection loops in models/ other than eos.bisect_vectorized, with why
+BISECTION_LOOPS = {
+    # ``fm < 0`` moves lo where fm is exactly 0 or NaN; the sign rule
+    # of eos.bisect_vectorized would move hi there
+    "iw._vinet_V_roomT",
 }
 
 
 def test_models_have_one_solver_udf():
-    """``models.common.solver_column`` is the solver tier's one Arrow
-    UDF, and the only place in ``models/`` that catches a solver error:
-    a hand-written kernel closure, or a handler that blanks a whole
-    batch, shows up here."""
+    """``models.common.solver_column`` is the one Arrow UDF of the
+    model tier and of ``operators/montecarlo.py``, and the only place
+    in them that catches a solver error: a hand-written ``pandas_udf``,
+    or a handler that blanks a whole batch, shows up here."""
     udfs, handlers = set(), []
-    for rel, _, tree in _modules("models"):
+    for rel, _, tree in chain(_modules("models"),
+                              _modules("operators/montecarlo.py")):
         for top in tree.body:
             for node in ast.walk(top):
                 if (isinstance(node, ast.Name) and node.id == "pandas_udf"
@@ -190,3 +192,31 @@ def test_models_have_one_solver_udf():
                     handlers.append(f"{rel}.py:{node.lineno}")
     assert udfs == MODEL_UDFS
     assert not handlers, handlers
+
+
+def _is_midpoint(node) -> bool:
+    """``0.5 * (a + b)``, either way round."""
+    if not (isinstance(node, ast.BinOp) and isinstance(node.op, ast.Mult)):
+        return False
+    pair = (node.left, node.right)
+    return any(
+        isinstance(x, ast.Constant) and x.value == 0.5
+        and isinstance(y, ast.BinOp) and isinstance(y.op, ast.Add)
+        for x, y in (pair, pair[::-1])
+    )
+
+
+def test_models_have_one_bisection():
+    """``eos.bisect_vectorized`` is the one sign-bisection loop in
+    ``models/``, so a change of root finder happens in one place: a loop
+    that halves a bracket anywhere else shows up here, unless
+    ``BISECTION_LOOPS`` names it with its reason."""
+    loops = set()
+    for rel, _, tree in _modules("models"):
+        for top in tree.body:
+            for loop in ast.walk(top):
+                if isinstance(loop, (ast.For, ast.While)) and any(
+                    _is_midpoint(n) for n in ast.walk(loop)
+                ):
+                    loops.add(f"{rel.name}.{getattr(top, 'name', top.lineno)}")
+    assert loops == {"eos.bisect_vectorized"} | BISECTION_LOOPS
