@@ -218,8 +218,9 @@ def fo2_grid_column(
     The exact QFM/IW buffers solve EOS phase-transition / wustite
     equilibria per distinct (T,P); both are *sample-independent*, so at
     scale we precompute a (T × P-level) grid ONCE driver-side, broadcast
-    the few-KB table, and each executor batch does O(1) searchsorted +
-    bilinear interpolation (linear in T and P) as a
+    the few-KB table (once per SparkContext and grid), and each
+    executor batch does O(1) searchsorted + bilinear interpolation
+    (linear in T and P) as a
     :func:`~magmapandas_spark.models.common.solver_column` kernel — no
     root-finding on the hot path at all. Returns a Column factory
     usable exactly like :func:`fo2_qfm` / :func:`fo2_iw`.
@@ -247,7 +248,11 @@ def fo2_grid_column(
         for j, P in enumerate(P_axis):
             grid[j] = np.log10(fn(0.0, T_axis, np.full_like(T_axis, P)))
         _GRID_CACHE[key] = (T_axis, P_axis, grid)
-    table = spark.sparkContext.broadcast(_GRID_CACHE[key])
+    sc = spark.sparkContext
+    held = _GRID_BROADCASTS.get(key)
+    if held is None or held[0] is not sc:
+        held = _GRID_BROADCASTS[key] = (sc, sc.broadcast(_GRID_CACHE[key]))
+    table = held[1]
 
     def interp(a: dict[str, np.ndarray]) -> np.ndarray:
         Ts, Ps, G = table.value
@@ -275,3 +280,7 @@ def fo2_grid_column(
 
 
 _GRID_CACHE: dict = {}
+# grid key -> (SparkContext, broadcast of the grid): every column built
+# on the live context reads one broadcast (PySpark runs one context per
+# process, so a new context replaces its predecessor's entry)
+_GRID_BROADCASTS: dict = {}

@@ -21,6 +21,7 @@ from magmapandas_spark.relational.suite import (
     SQL_MELT_CTE,
     _sql_mole_fraction_terms,
     _t,
+    by_name,
     heavy_sorted,
     synthetic_melt,
 )
@@ -367,15 +368,12 @@ def q_volatile_saturation_im(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive CTE (``solver_oracles.sql_volatile_saturation_im``)."""
     from magmapandas_spark.models import volatiles as vol
 
-    gf = synthetic_melt(spark, sf_dir)
+    gf = _melt_subset(spark, sf_dir, modulus=1)
     out = vol.volatile_saturation_pressure(gf, T_K=1473.15, species="mixed")
-    return heavy_sorted(
-        out.select(
-            "name",
-            F.round("P_bar_sat", 4).alias("P_bar_sat"),
-            F.round("Xfl", 6).alias("Xfl"),
-        ),
+    return out.select(
         "name",
+        F.round("P_bar_sat", 4).alias("P_bar_sat"),
+        F.round("Xfl", 6).alias("Xfl"),
     )
 
 
@@ -385,24 +383,18 @@ def q_allison_saturation(spark: SparkSession, sf_dir: str) -> DataFrame:
     replacing the reference's per-row 2-D root."""
     from magmapandas_spark.models import volatiles as vol
 
-    gf = synthetic_melt(spark, sf_dir)
     # deterministic 1/64 subset: the nested MRK bisection is ~10× the
     # cost of the IM solver; volatile_saturation_im covers the
     # full-table fan-out, this gate covers the Allison kernels (and the
     # recursive-CTE oracle replays every bisection step per row)
-    sub = gf.df.filter(F.col("name") % 64 == 0)
-    gf = GeoFrame(sub, units=gf.units, datatype=gf.datatype,
-                  species=gf.species)
+    gf = _melt_subset(spark, sf_dir)
     out = vol.volatile_saturation_pressure(
         gf, T_K=1473.15, model="allison2022", species="mixed"
     )
-    return heavy_sorted(
-        out.select(
-            "name",
-            F.round("P_bar_sat", 4).alias("P_bar_sat"),
-            F.round("Xfl", 6).alias("Xfl"),
-        ),
+    return out.select(
         "name",
+        F.round("P_bar_sat", 4).alias("P_bar_sat"),
+        F.round("Xfl", 6).alias("Xfl"),
     )
 
 
@@ -1379,9 +1371,12 @@ ORDER BY in_range, t_valid
 
 
 def _melt_subset(spark, sf_dir, modulus=64):
+    """The melt rows whose ``name`` is a multiple of ``modulus`` (every
+    row at 1), sorted on ``name`` by :func:`suite.by_name`, so a per-row
+    model over them comes out in ``name`` order with no exchange."""
     gf = synthetic_melt(spark, sf_dir)
-    sub = gf.df.filter(F.col("name") % modulus == 0)
-    return GeoFrame(sub, units=gf.units, datatype=gf.datatype,
+    df = gf.df if modulus == 1 else gf.df.filter(F.col("name") % modulus == 0)
+    return GeoFrame(by_name(df), units=gf.units, datatype=gf.datatype,
                     species=gf.species)
 
 
@@ -1400,9 +1395,7 @@ def q_fe3fe2_deng2020(spark: SparkSession, sf_dir: str) -> DataFrame:
         gf, T_K=T, P_bar="P_bar", model="deng2020", fO2_buffer="QFM_1bar",
         dfO2=1.0,
     )
-    return heavy_sorted(
-        out.select("name", F.round("Fe3Fe2", 6).alias("Fe3Fe2")), "name"
-    )
+    return out.select("name", F.round("Fe3Fe2", 6).alias("Fe3Fe2"))
 
 
 def q_kd_toplis_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1417,9 +1410,7 @@ def q_kd_toplis_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         gf, T_K=F.lit(1500.0), P_bar="P_bar", model="toplis2005",
         Fe3Fe2=F.lit(0.2),
     )
-    return heavy_sorted(
-        out.select("name", F.round("Kd", 6).alias("Kd")), "name"
-    )
+    return out.select("name", F.round("Kd", 6).alias("Kd"))
 
 
 def q_fo2_buffers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1608,21 +1599,20 @@ def q_fe3fe2_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
     melt pressure so both regimes of the selector run. The oracle
     unrolls the De Boor triangle per knot span with literal
     knots/coefficients — previously golden-tested only."""
-    from magmapandas_spark.models.common import solver_input
     from magmapandas_spark.operators.montecarlo import fe3fe2_error_column
     gf = synthetic_melt(spark, sf_dir)
     x = F.lit(0.05) + (F.col("name") % 440).cast("double") * F.lit(0.005)
     p = F.when((F.col("name") % 3) == 0, F.lit(1.0)).otherwise(
         F.col("P_bar")
     )
-    base = solver_input(gf.df).select("name", x.alias("x"), p.alias("p"))
+    base = by_name(gf.df).select("name", x.alias("x"), p.alias("p"))
     cols = [
         F.round(
             fe3fe2_error_column(m, F.col("x"), F.col("p")), 6
         ).alias(f"err_{m}")
         for m in _ERR_MODELS
     ]
-    return heavy_sorted(base.select("name", *cols), "name")
+    return base.select("name", *cols)
 
 
 def _sql_fe3fe2_errors() -> str:
@@ -1724,13 +1714,10 @@ def q_kd_blundy_saper(spark: SparkSession, sf_dir: str) -> DataFrame:
         g2, T_K=F.lit(1500.0), P_bar="P_bar", model="saper2022",
         Fe3Fe2=F.lit(0.2), out_col="kd_saper",
     )
-    return heavy_sorted(
-        df.select(
-            "name",
-            F.round("kd_blundy", 6).alias("kd_blundy"),
-            F.round("kd_saper", 6).alias("kd_saper"),
-        ),
+    return df.select(
         "name",
+        F.round("kd_blundy", 6).alias("kd_blundy"),
+        F.round("kd_saper", 6).alias("kd_saper"),
     )
 
 
@@ -2017,13 +2004,10 @@ def q_fe3fe2_solvers2(spark: SparkSession, sf_dir: str) -> DataFrame:
         g2, T_K=T, P_bar="P_bar", model="armstrong2019",
         fO2_buffer="QFM_1bar", dfO2=0.0, out_col="fe3fe2_armstrong",
     )
-    return heavy_sorted(
-        df.select(
-            "name",
-            F.round("fe3fe2_oneill06", 4).alias("fe3fe2_oneill06"),
-            F.round("fe3fe2_armstrong", 4).alias("fe3fe2_armstrong"),
-        ),
+    return df.select(
         "name",
+        F.round("fe3fe2_oneill06", 4).alias("fe3fe2_oneill06"),
+        F.round("fe3fe2_armstrong", 4).alias("fe3fe2_armstrong"),
     )
 
 

@@ -7,19 +7,21 @@ recurrence is expressible in ANSI SQL as a recursive CTE — giving the
 correctness gate *exact* cross-engine oracles for:
 
 - ``fe3fe2_solvers2``  — oneill2006 + armstrong2019 fixed points
-  (80-step bisection on ``g(x) − x``, ``models/fe3fe2.py:444-523``);
+  (80-step bisection on ``g(x) − x``, ``models.fe3fe2.oneill2006_np``,
+  ``models.fe3fe2.armstrong2019_np``);
 - ``kd_toplis_iteration`` / ``kd_blundy_saper`` — forsterite fixed
-  point with per-row convergence masks (``models/kd.py:208-245``);
+  point with per-row convergence masks (``models.kd.iterate_kd_np``);
 - ``volatile_saturation_im`` — Iacono-Marziano mixed saturation
   (60-step bisection on the closed-form partial-pressure residual,
-  ``models/volatiles.py:235-273``);
+  ``models.volatiles.mixed_saturation_np``);
 - ``isobar_grid`` — dissolved-H2O inner bisection + closed-form CO2
-  (``models/volatiles.py:88-153``);
+  (``models.volatiles.h2o_solubility_np``,
+  ``models.volatiles.co2_solubility_np``);
 - ``mc_thermometer`` — md5-counter Box-Muller draws (bit-identical to
   ``core.geoframe._hash_gauss``) + the putirka15 closed form;
 - ``fe3fe2_deng2020`` — BM4 volume bisections over the per-row
   pressure grid, trapezoid ΔV·dP, then the outer fixed point
-  (``models/fe3fe2.py:378-547``).
+  (``models.fe3fe2.deng_dVdP``, ``models.fe3fe2.deng2020_np``).
 
 Bisection is self-correcting: a 1-ulp libm difference between numpy and
 DuckDB can flip one sign test, but the bracket still contains a point
@@ -88,7 +90,7 @@ def _bisect_cte(
     iters: int,
 ) -> str:
     """Recursive-CTE mirror of ``eos.bisect_vectorized``
-    (``models/eos.py:136-151``): keep the endpoint whose sign matches
+    (``models.eos.bisect_vectorized``): keep the endpoint whose sign matches
     f(lo); after ``iters`` halvings the root is 0.5·(lo+hi)."""
     cols = ", ".join(consts)
     return f"""
@@ -120,7 +122,8 @@ def _final(name: str, iters: int) -> str:
 
 def _split_cats(x: str) -> dict[str, str]:
     """Cation fractions after the FeO/Fe2O3 split at Fe3/Fe2 = x
-    (``models/common.py:91-101`` + ``:81-88``); total cation moles
+    (``models.common.feo_fe2o3_split_np`` +
+    ``models.common.cation_fractions_np``); total cation moles
     collapse to rest + eFe + eFe3."""
     fe2f = f"(1.0 / (1.0 + {x}))"
     e_fe = f"(m_FeO * {fe2f})"
@@ -134,7 +137,7 @@ def _split_cats(x: str) -> dict[str, str]:
 
 
 def _g_oneill(x: str) -> str:
-    """O'Neill (2006) eq. 10 map g(x) (``models/fe3fe2.py:444-471``)."""
+    """O'Neill (2006) eq. 10 map g(x) (``models.fe3fe2.oneill2006_np``)."""
     c = _split_cats(x)
     part1 = (
         f"((-28144.0 + 3905.0 * {c['Mg']} - 13359.0 * {c['Ca']}"
@@ -146,7 +149,8 @@ def _g_oneill(x: str) -> str:
 
 
 def _g_armstrong(x: str) -> str:
-    """Armstrong et al. (2019) eq. S12 map (``models/fe3fe2.py:503-523``)."""
+    """Armstrong et al. (2019) eq. S12 map
+    (``models.fe3fe2.armstrong2019_np``)."""
     c = _split_cats(x)
     sum_marg = (
         f"(-2248.0 * {c['Mg']} + 7690.0 * {c['Ca']} + 8553.0 * {c['Na']}"
@@ -160,7 +164,7 @@ def _g_armstrong(x: str) -> str:
 
 def _armstrong_vdp_sql(phase: str) -> str:
     """Armstrong Vinet-like VdP with python-precomputed a/b/c constants
-    (``models/fe3fe2.py:479-494``)."""
+    (``models.fe3fe2._armstrong_VdP_np``)."""
     K0, Kp = {"Fe2": (37.0, 8.0), "Fe3": (12.6, 1.3)}[phase]
     Kpp = -Kp / K0
     a = (1 + Kp) / (1 + Kp + K0 * Kpp)
@@ -232,7 +236,7 @@ ORDER BY name
 
 def _fixed_point_cte(name: str, base: str, consts: list[str], kd_of) -> str:
     """Recursive-CTE mirror of the per-row-frozen
-    ``iterate_kd_np`` (``models/kd.py:208-245``): fo₀ = 0.85,
+    ``models.kd.iterate_kd_np``: fo₀ = 0.85,
     foₖ₊₁ = 1/(1+kd(foₖ)·fe2mg), stop at |Δfo|/fo ≤ 1e-3 or 100 steps;
     the kd of the last update is the answer."""
     cols = ", ".join(consts)
@@ -262,7 +266,7 @@ def _fp_final(name: str) -> str:
 
 
 def _kd_toplis(x: str) -> str:
-    """toplis2005 (``models/kd.py:155-182``); sio2_a and T are per-row
+    """toplis2005 (``models.kd.toplis2005_kd_np``); sio2_a and T are per-row
     constants, fo enters through the olivine term."""
     return (
         f"EXP((-6766.0 / ({R!r} * t) - 7.34 / {R!r})"
@@ -273,7 +277,7 @@ def _kd_toplis(x: str) -> str:
 
 
 def _sio2a_expr() -> str:
-    """Adjusted molar SiO2 (``models/kd.py:155-171``) from mole-fraction
+    """Adjusted molar SiO2 (``models.kd._toplis_SiO2A_np``) from mole-fraction
     columns (×100 to mol %)."""
     si = "(m_SiO2 * 100.0)"
     na = "(m_Na2O * 100.0)"
@@ -314,7 +318,7 @@ ORDER BY name
 
 def _borisov_expr() -> str:
     """borisov2018 from mole-fraction columns + 1-bar QFM at dfO2=+1
-    (``models/fe3fe2.py:64-85``); constant per row at T = 1500 K."""
+    (``models.fe3fe2.fe3fe2_borisov2018``); constant per row at T = 1500 K."""
     t15 = "CAST(1500.0 AS DOUBLE)"
     mu_1500 = (
         f"(-587474.0 + 1584.427 * {t15}"
@@ -332,7 +336,8 @@ def _borisov_expr() -> str:
 
 
 def _kd_blundy(x: str) -> str:
-    """blundy2020 (``models/kd.py:185-191``); f3t = borisov/(1+borisov)."""
+    """blundy2020 (``models.kd.blundy2020_kd_np``);
+    f3t = borisov/(1+borisov)."""
     return (
         f"((0.3642 * (1.0 - f3t)"
         f" * EXP((312.7 * (1.0 - 2.0 * {x})) / t)) / (1.0 - f3t))"
@@ -340,7 +345,7 @@ def _kd_blundy(x: str) -> str:
 
 
 def _kd_saper(x: str) -> str:
-    """saper2022 (``models/kd.py:194-205``); gibbs+melt terms constant."""
+    """saper2022 (``models.kd.saper2022_kd_np``); gibbs+melt terms constant."""
     return f"EXP(gm + 3040.0 * (1.0 - 2.0 * {x}) / ({R!r} * t))"
 
 
@@ -391,7 +396,7 @@ ORDER BY name
 # ----------------------------------------------------------------------
 
 # hydrous_webapp + hydrous-CO2 coefficient sets
-# (``models/volatiles.py:43-54``)
+# (``models.volatiles.H2O_COEFFS``, ``models.volatiles.CO2_COEFFS``)
 IM_H2O = dict(a=0.52096846, b=2.11575907, B=-3.24443335, C=-0.02238884)
 IM_CO2 = dict(d_H2O=-16.4, d_AI=4.4, d_FM=-17.1, d_NK=22.8, a=1.0,
               b=17.3, B=-6.0, C=0.12)
@@ -400,7 +405,9 @@ IM_CO2 = dict(d_H2O=-16.4, d_AI=4.4, d_FM=-17.1, d_NK=22.8, a=1.0,
 def _im_consts(h2o_expr: str) -> dict[str, str]:
     """Per-row constants of the saturation residual at observed
     volatiles: mole fractions at dissolved-H2O = ``h2o_expr``
-    (``models/volatiles.py:60-85, 156-190``).
+    (``models.volatiles._mol_fractions``, ``models.volatiles._nbo_o``,
+    ``models.volatiles._ln_p_h2o_prefix``,
+    ``models.volatiles._ln_p_co2_prefix``).
 
     Mole terms m*_s = wt_s/W_s are NOT renormalised — every use below is
     scale-invariant (NBO/O, x_AI are ratios) or explicitly divided by
@@ -428,7 +435,7 @@ def _im_consts(h2o_expr: str) -> dict[str, str]:
 
 def sql_volatile_saturation_im(melt_cte: str) -> str:
     """Mixed IM saturation over the full melt table
-    (``models/volatiles.py:235-273``): rows with observed H2O>0 solve
+    (``models.volatiles.mixed_saturation_np``): rows with observed H2O>0 solve
     exp(ln P_H2O(P)) + exp(ln P_CO2(P)) = P; H2O=0 rows take the
     pure-CO2 pressure with zero-H2O melt chemistry and Xfl=0. CO2 is
     always >0 in the synthetic melt so the pure-H2O branch never fires.
@@ -493,7 +500,7 @@ ORDER BY name
 
 def sql_isobar_grid(melt_cte: str) -> str:
     """IM solubility grid for the first sample
-    (``models/volatiles.py:568-658``): hydrous dissolved-H2O inner
+    (``models.volatiles.co2_h2o_isobars``): hydrous dissolved-H2O inner
     bisection (60 steps in v ∈ [0, 60] wt.%) per grid point, then the
     closed-form CO2 equation at the solved H2O. The grid literals are
     generated with the same numpy arithmetic as ``co2_h2o_isobars``."""
@@ -538,7 +545,7 @@ def sql_isobar_grid(melt_cte: str) -> str:
     mnak = f"({m['Na2O']} + {m['K2O']})"
 
     # residual of the hydrous H2O solubility solve: v − exp(a·ln P_H2O
-    # + b·NBO/O(v) + B + C·P/T)   (``models/volatiles.py:106-121``)
+    # + b·NBO/O(v) + B + C·P/T)   (``models.volatiles.h2o_solubility_np``)
     def res(x):
         hm = f"({x} / {wh2o!r})"
         nbo = f"((n0 + 2.0 * {hm}) / (d0 + {hm}))"
@@ -606,7 +613,7 @@ _ALLISON_FW = 36.594
 
 def _allison_consts() -> dict:
     """Python-side constants of the Allison kernels at the gate's fixed
-    T = 1473.15 K. The MRK temperature terms (``models/allison.py:86-103``)
+    T = 1473.15 K. The MRK temperature terms (``models.allison._rk_prefix``)
     and the boundary fugacities are evaluated with the ENGINE'S OWN numpy
     kernels, so the literals embedded in the SQL are bit-identical to
     what every Spark task computes."""
@@ -665,7 +672,7 @@ def _nest(base: str, stages: list[list[tuple[str, str]]]) -> str:
 
 def _fug_stages(pcol: str, species: str, s: str, C: dict):
     """Stages computing ``fug_<s>`` = Holloway&Blank fugacity of
-    ``species`` at probe column ``pcol`` (``models/allison.py:41-140``),
+    ``species`` at probe column ``pcol`` (``models.allison.hb_fugacity_np``),
     with every operation in numpy's evaluation order."""
     a2b = C[f"a2b_{species}"]
     bsum = {"co2": 29.7, "h2o": 14.5}[species]
@@ -739,8 +746,9 @@ def _fug_stages(pcol: str, species: str, s: str, C: dict):
 
 def _allison_cat_stages():
     """Stages computing dv / lnk0 from melt wt.% columns — the rounded
-    cation fractions of ``models/allison.py:159-205`` with python sum
-    order (= left-associated SQL chains)."""
+    cation fractions of ``models.allison._allison_cations``,
+    ``models.allison._deltaV`` and ``models.allison._lnK0`` with python
+    sum order (= left-associated SQL chains)."""
     oxides = ["SiO2", "TiO2", "Al2O3", "FeO", "MgO", "CaO", "Na2O", "K2O"]
     ncat = {"SiO2": 1.0, "TiO2": 1.0, "Al2O3": 2.0, "FeO": 1.0,
             "MgO": 1.0, "CaO": 1.0, "Na2O": 2.0, "K2O": 2.0}
@@ -802,12 +810,13 @@ def _staged_bisect(name, base, consts, species, flo_init, residual, C,
 
 def sql_allison_saturation(melt_cte: str) -> str:
     """Allison (2022) mixed CO2-H2O saturation
-    (``models/allison.py:298-338``): pure-species pressures via staged
-    48-step bisections, then the nested solve — an outer bisection in P
-    whose residual contains an inner fugacity-inversion bisection —
-    flattened into ONE recursive state machine (49 micro-steps per outer
-    round: 48 inner halvings + a finalize that updates the outer bracket
-    and seeds the next inner solve)."""
+    (``models.allison.allison_mixed_saturation_np``): pure-species
+    pressures via staged 48-step bisections, then the nested solve — an
+    outer bisection in P whose residual contains an inner
+    fugacity-inversion bisection — flattened into ONE recursive state
+    machine (49 micro-steps per outer round: 48 inner halvings + a
+    finalize that updates the outer bracket and seeds the next inner
+    solve)."""
     C = _allison_consts()
     FW = _ALLISON_FW
     RaT = C["RaT"]
@@ -816,9 +825,11 @@ def sql_allison_saturation(melt_cte: str) -> str:
     ksol = (
         lambda p: f"(EXP(lnk0) * EXP(-dv * ({p} - 1000.0) / {RaT!r}))"
     )
-    # pure-CO2 saturation residual (``allison.py:276-279``)
+    # pure-CO2 saturation residual
+    # (``models.allison.allison_co2_saturation_np``)
     res_c = lambda fug: f"(kfr / {fug} - {ksol('pb')})"
-    # pure-H2O saturation residual (``allison.py:254-255``)
+    # pure-H2O saturation residual
+    # (``models.allison.allison_h2o_saturation_np``)
     res_h = lambda fug: f"(fh2o_pure - {fug})"
     flo_c = (
         f"(kfr / {C['fug_co2_lo']!r} - {ksol('1e-10')})"
@@ -1038,7 +1049,8 @@ _AVOGADRO = 6.02214076e23
 
 def _bm4_residual(phase: str, v: str) -> str:
     """BM4 + thermal-pressure residual f(v) at (t, gp)
-    (``models/fe3fe2.py:388-393``, ``models/eos.py:268-277``)."""
+    (``models.fe3fe2._deng_volume``,
+    ``models.eos.birch_murnaghan_4th_order``)."""
     p = _DENG_EOS[phase]
     V0, K0, Kp, Kpp = p["V_0"], p["K_0"], p["Kprime_0"], p["Kprime_prime_0"]
     tp = p["tp"]
@@ -1097,7 +1109,7 @@ def _bisect2_cte(name: str, base: str, consts: list[str]) -> str:
 
 
 def _g_deng(x: str) -> str:
-    """Deng et al. (2020) eq. 3 map (``models/fe3fe2.py:534-544``)."""
+    """Deng et al. (2020) eq. 3 map (``models.fe3fe2.deng2020_np``)."""
     c = _split_cats(x)
     marg = " + ".join(
         f"{coef!r} * {c[n]}" for n, coef in _DENG_MARGULES.items()
@@ -1178,7 +1190,7 @@ ORDER BY name
 
 # ----------------------------------------------------------------------
 # qfm_exact: full QFM fO2(T,P) with Tait EOS + Landau + phase
-# transitions (``models/eos.py:49-261``; reference ``fO2/QFM.py``).
+# transitions (``models.eos.fo2_qfm``; reference ``fO2/QFM.py``).
 # T-independent Tait/Landau constants are computed HERE with the same
 # numpy expressions the kernel uses, then inlined as literals; the
 # three transition-pressure solves (quartz→coesite, coesite→stishovite,
@@ -1408,7 +1420,7 @@ ORDER BY t, P_bar
 
 
 # ----------------------------------------------------------------------
-# iw_exact: Hirschmann (2021) Iron-Wustite buffer (``models/iw.py``).
+# iw_exact: Hirschmann (2021) Iron-Wustite buffer (``models.iw.fo2_iw_np``).
 # Same literal-inlining strategy as qfm_exact; three solver layers:
 # (1) Vinet room-T volume inversions — 60-step bisections over the
 #     shared 100-point integration grid (depends on grid pressure only,
@@ -1538,7 +1550,8 @@ def _gamma_feo15_sql(x: str) -> str:
 
 
 def _wustite_f(x: str) -> str:
-    """Objective of the FeO1.5-fraction solve (``iw.py:203-216``)."""
+    """Objective of the FeO1.5-fraction solve
+    (``models.iw._solve_XFeO1p5``)."""
     return (
         f"((0.5 * dgw + ({R_IW!r} * t)"
         f" * LN(POWER(1.0 - {x}, 1.5) / {x})"

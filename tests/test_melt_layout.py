@@ -5,9 +5,17 @@ layout (ROADMAP 5(c), melt slice).
 ``relational.suite.synthetic_melt`` persists the melt range-partitioned
 and sorted on ``name``, so a narrow model query's ``orderBy("name")``
 needs no exchange and no sort, and its stages run one task per core.
-The invariance check swaps the memoized melt for 1-,
+The per-row model queries (one Arrow-UDF solver stage over melt rows)
+sort their input through ``suite.by_name`` instead of their output, so
+on the persisted melt they too plan no exchange and no sort, and run as
+one job. The invariance check swaps the memoized melt for 1-,
 ``defaultParallelism``- and 32-partition range layouts of the same rows
-and compares value hashes of the ``geochem_models`` benchmark queries."""
+and compares value hashes of the ``geochem_models`` benchmark queries
+and of those solver queries."""
+
+import itertools
+
+import pytest
 
 from magmapandas_spark.relational import suite
 from perfbench.check import value_hash
@@ -17,6 +25,13 @@ from .conftest import sf_dir
 
 SF = sf_dir()
 QUERIES = WORKLOADS["geochem_models"].queries
+# gate queries whose Arrow-UDF stage reads the melt's rows one to one
+SOLVER_QUERIES = (
+    "volatile_saturation_im", "allison_saturation", "fe3fe2_deng2020",
+    "kd_toplis_iteration", "fe3fe2_errors", "kd_blundy_saper",
+    "fe3fe2_solvers2",
+)
+_group_ids = itertools.count()
 
 
 def _operators(root) -> list[str]:
@@ -69,6 +84,7 @@ def test_geochem_values_melt_layout_invariant(spark):
     cached = suite._melt_cache[key]
     qmap = suite.queries()
     dp = spark.sparkContext.defaultParallelism
+    names = QUERIES + tuple(q for q in SOLVER_QUERIES if q not in QUERIES)
     results = {}
     try:
         for n in (1, dp, 32):
@@ -77,7 +93,7 @@ def test_geochem_values_melt_layout_invariant(spark):
             assert layout.rdd.getNumPartitions() == n
             suite._melt_cache[key] = (spark, layout)
             results[n] = {}
-            for name in QUERIES:
+            for name in names:
                 pdf = qmap[name](spark, SF).toPandas()
                 # every query still ends ordered on the sample key
                 assert pdf["name"].is_monotonic_increasing, (name, n)
@@ -85,7 +101,45 @@ def test_geochem_values_melt_layout_invariant(spark):
             layout.unpersist()
     finally:
         suite._melt_cache[key] = cached
-    for name in QUERIES:
+    for name in names:
         assert results[1][name] == results[dp][name] == results[32][name], (
             name, results)
         assert results[1][name][1] > 0, name
+
+
+@pytest.mark.parametrize("name", SOLVER_QUERIES)
+def test_solver_query_plans_no_exchange_on_melt(spark, name):
+    """On the persisted melt a per-row solver query needs neither an
+    exchange nor a sort for its ``name`` order, and its write is one
+    job."""
+    sc = spark.sparkContext
+    suite.synthetic_melt(spark, SF).df.count()  # materialized
+    query = suite.queries()[name](spark, SF)
+    ops = _operators(query._jdf.queryExecution().executedPlan())
+    assert "InMemoryTableScan" in ops and "ArrowEvalPython" in ops, ops
+    assert "Exchange" not in ops and "Sort" not in ops, ops
+    group = f"melt-solver-{next(_group_ids)}"
+    sc.setJobGroup(group, group)
+    try:
+        query.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+def test_solver_query_first_on_fresh_melt(spark):
+    """A solver query that is the first to read a rebuilt melt, whose
+    partitioning AQE does not know yet, range-partitions its input once
+    and still comes out ordered, with the same values."""
+    name = "kd_toplis_iteration"
+    qmap = suite.queries()
+    suite.synthetic_melt(spark, SF).df.count()
+    expected = qmap[name](spark, SF).toPandas()
+    suite.reset_melt_cache(spark, SF)
+    query = qmap[name](spark, SF)
+    ops = _operators(query._jdf.queryExecution().executedPlan())
+    assert ops.count("Exchange") == 1, ops
+    pdf = query.toPandas()
+    assert pdf["name"].is_monotonic_increasing
+    assert value_hash(pdf) == value_hash(expected)
+    assert len(pdf) == len(expected) > 0

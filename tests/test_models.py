@@ -355,6 +355,30 @@ def test_fo2_grid_fast_path(spark):
         assert dlog.mean() < 1e-3, (buf, dlog.mean())
 
 
+def test_fo2_grid_column_reuses_its_broadcast(spark, monkeypatch):
+    """Columns built for the same grid on one SparkContext read one
+    broadcast: a session that builds the column per query does not
+    accumulate a broadcast per call."""
+    sc = spark.sparkContext
+    created = []
+    broadcast = type(sc).broadcast
+
+    def counting(self, value):
+        created.append(broadcast(self, value))
+        return created[-1]
+
+    monkeypatch.setattr(type(sc), "broadcast", counting)
+    # a grid no other test builds, so the first call broadcasts it
+    cols = [fo2.fo2_grid_column(spark, n_T=37, P_levels=(1.0, 5e3))
+            for _ in range(2)]
+    ids = {b._jbroadcast.id() for b in created}
+    assert len(ids) == len(created) == 1, ids
+    sdf = spark.createDataFrame(pd.DataFrame({"T_K": [1400.0, 1500.0]}))
+    out = [sdf.select(c("T_K", F.lit(1e3)).alias("f")).toPandas()["f"]
+           for c in cols]
+    assert np.isfinite(out[0]).all() and out[0].equals(out[1])
+
+
 def test_density_temperature_round_trip(spark):
     """calculate_temperature is the exact inverse of calculate_density
     (``rheology/density.py:117-147``)."""

@@ -220,3 +220,29 @@ def test_models_have_one_bisection():
                 ):
                     loops.add(f"{rel.name}.{getattr(top, 'name', top.lineno)}")
     assert loops == {"eos.bisect_vectorized"} | BISECTION_LOOPS
+
+
+def test_solver_oracle_citations_resolve():
+    """``relational/solver_oracles.py`` cites the engine kernel each SQL
+    replay mirrors by dotted name (``models.eos.bisect_vectorized``),
+    not by line numbers that drift: every cited name imports, and no
+    ``<models file>.py:<line>`` citation is left."""
+    import importlib
+    import re
+
+    from magmapandas_spark.relational import solver_oracles
+
+    text = Path(solver_oracles.__file__).read_text()
+    cited = set(re.findall(r"``(models(?:\.\w+)+)``", text))
+    assert len(cited) >= 20, cited
+    for name in sorted(cited):
+        module, _, attr = f"magmapandas_spark.{name}".rpartition(".")
+        try:
+            obj = importlib.import_module(f"{module}.{attr}")
+        except ModuleNotFoundError:
+            obj = getattr(importlib.import_module(module), attr, None)
+        assert obj is not None, name
+    models_dir = Path(solver_oracles.__file__).resolve().parents[1] / "models"
+    stale = [m.group(0) for m in re.finditer(r"(\w+)\.py:\d+", text)
+             if (models_dir / f"{m.group(1)}.py").exists()]
+    assert not stale, stale
