@@ -143,7 +143,8 @@ def as_col(x) -> Column:
 
 
 def components_expr(gf: GeoFrame, components: list[str]) -> dict[str, Column]:
-    """check_components as expressions: null→0, missing→lit(0)."""
+    """check_components as expressions (``parse_io/parse.py:47-65``):
+    null→0, missing→lit(0)."""
     comp = {s: F.coalesce(F.col(s), F.lit(0.0)) for s in gf.species}
     for c in components:
         comp.setdefault(c, F.lit(0.0))
@@ -153,6 +154,8 @@ def components_expr(gf: GeoFrame, components: list[str]) -> dict[str, Column]:
 def mole_fraction_exprs(
     comp: dict[str, Column], exclude: tuple[str, ...] = ()
 ) -> dict[str, Column]:
+    """wt.% → mol fraction over the included species
+    (``magmaFrame.py:356-385`` with normalise=True)."""
     mol = {
         s: c / F.lit(chem.calculate_weight(s))
         for s, c in comp.items()

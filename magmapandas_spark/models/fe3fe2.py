@@ -27,13 +27,13 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from magmapandas_spark.chem import elements as chem
 from magmapandas_spark.core.geoframe import GeoFrame
 from magmapandas_spark.models import eos
 from magmapandas_spark.models.common import (
     as_col,
     cation_fraction_exprs,
     cation_fractions_np,
+    components_expr,
     csum,
     feo_fe2o3_split_np,
     mole_fraction_exprs,
@@ -603,7 +603,7 @@ def calculate_Fe3Fe2(
     if fO2 is None:
         fO2 = fo2mod.calculate_fO2(T, P, fO2_buffer=fO2_buffer, dfO2=dfO2)
 
-    comp = {s: F.coalesce(F.col(s), F.lit(0.0)) for s in melt.species}
+    comp = components_expr(melt, [])
     mol = mole_fraction_exprs(comp)
 
     if model in EXPR_MODELS:

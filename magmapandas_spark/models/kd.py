@@ -25,8 +25,8 @@ from magmapandas_spark.core.geoframe import GeoFrame
 from magmapandas_spark.models import eos
 from magmapandas_spark.models.common import (
     as_col,
-    cation_fraction_exprs,
     cation_fractions_np,
+    components_expr,
     csum,
     mole_fraction_exprs,
     solver_column,
@@ -312,7 +312,7 @@ def calculate_FeMg_Kd(
             raise ValueError("fixed model needs fixed_value")
         return melt.df.withColumn(out_col, F.lit(float(fixed_value)))
 
-    comp = {s: F.coalesce(F.col(s), F.lit(0.0)) for s in melt.species}
+    comp = components_expr(melt, [])
     mol = mole_fraction_exprs(comp)
     # wt.% renormalised (mol → wt backtrack is just the normalised input)
     total_wt = csum(comp.values())
@@ -372,7 +372,7 @@ def observed_FeMg_Kd(
 
     T = as_col(T_K)
     P = as_col(P_bar)
-    comp = {s: F.coalesce(F.col(s), F.lit(0.0)) for s in melt.species}
+    comp = components_expr(melt, [])
     mol = mole_fraction_exprs(comp)
     if Fe3Fe2 is None:
         fO2_col = fo2_mod.calculate_fO2(T, P, fO2_buffer=fO2_buffer, dfO2=dfO2)

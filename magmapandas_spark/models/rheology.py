@@ -7,13 +7,17 @@ coefficients, so both compile entirely to Column expressions.
 
 from __future__ import annotations
 
-import numpy as np
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from magmapandas_spark.chem import elements as chem
 from magmapandas_spark.core.geoframe import GeoFrame
-from magmapandas_spark.models.common import as_col, csum, mole_fraction_exprs
+from magmapandas_spark.models.common import (
+    as_col,
+    components_expr,
+    csum,
+    mole_fraction_exprs,
+)
 
 # Iacovino & Till (2019) model tables (``rheology/density.py:11-69``)
 DENSITY_T_REF = {"SiO2": 1773.0, "TiO2": 1773.0, "Al2O3": 1773.0,
@@ -41,9 +45,7 @@ def calculate_density(melt: GeoFrame, T_K, P_bar, out_col: str = "density") -> D
     ``density.py:96-98``)."""
     T = as_col(T_K)
     P = as_col(P_bar)
-    comp = {s: F.coalesce(F.col(s), F.lit(0.0)) for s in melt.species}
-    for c in DENSITY_COMPONENTS:
-        comp.setdefault(c, F.lit(0.0))
+    comp = components_expr(melt, DENSITY_COMPONENTS)
     mol = mole_fraction_exprs(comp)
     mass = csum(
         mol[s] * F.lit(chem.calculate_weight(s)) for s in DENSITY_COMPONENTS
@@ -74,9 +76,7 @@ def calculate_viscosity(melt: GeoFrame, T_K, out_col: str = "viscosity") -> Data
     B and C terms from mol% of the full composition
     (``viscosity.py:53-111``)."""
     T = as_col(T_K)
-    comp = {s: F.coalesce(F.col(s), F.lit(0.0)) for s in melt.species}
-    for c in VISCOSITY_COMPONENTS:
-        comp.setdefault(c, F.lit(0.0))
+    comp = components_expr(melt, VISCOSITY_COMPONENTS)
     mol = mole_fraction_exprs(comp)
     m = {s: mol.get(s, F.lit(0.0)) * F.lit(100.0) for s in set(mol) | set(VISCOSITY_COMPONENTS)}
     p = _VISC
@@ -126,9 +126,7 @@ def calculate_temperature(
     """
     rho = as_col(density)
     P = as_col(P_bar)
-    comp = {s: F.coalesce(F.col(s), F.lit(0.0)) for s in melt.species}
-    for c in DENSITY_COMPONENTS:
-        comp.setdefault(c, F.lit(0.0))
+    comp = components_expr(melt, DENSITY_COMPONENTS)
     mol = mole_fraction_exprs(comp)
     mass = csum(
         mol[s] * F.lit(chem.calculate_weight(s)) for s in DENSITY_COMPONENTS

@@ -19,6 +19,11 @@ from pyspark.sql import functions as F
 
 from magmapandas_spark.chem import elements as chem
 from magmapandas_spark.core.geoframe import GeoFrame, csum
+from magmapandas_spark.models.common import (
+    as_col,
+    components_expr,
+    mole_fraction_exprs,
+)
 
 # standard errors of estimate, K (``thermometers/melt.py:36-48``)
 ERRORS = {
@@ -68,36 +73,6 @@ _BEATTIE = {
     "Co": (0.786, -0.385),
     "Ni": (3.346, -3.665),
 }
-
-
-def _p_col(P_bar) -> Column:
-    if isinstance(P_bar, Column):
-        return P_bar
-    if isinstance(P_bar, str):
-        return F.col(P_bar)
-    return F.lit(float(P_bar))
-
-
-def _components(gf: GeoFrame, model: str) -> dict[str, Column]:
-    """check_components (``parse_io/parse.py:47-65``): null→0, missing→0."""
-    comp = {s: F.coalesce(F.col(s), F.lit(0.0)) for s in gf.species}
-    for c in COMPONENTS[model]:
-        comp.setdefault(c, F.lit(0.0))
-    return comp
-
-
-def _mole_fractions(
-    comp: dict[str, Column], exclude: tuple[str, ...] = ()
-) -> dict[str, Column]:
-    """wt.% → mol fraction over the included species
-    (``magmaFrame.py:356-385`` with normalise=True)."""
-    mol = {
-        s: c / F.lit(chem.calculate_weight(s))
-        for s, c in comp.items()
-        if s not in exclude
-    }
-    total = csum(mol.values())
-    return {s: m / total for s, m in mol.items()}
 
 
 def _cation_fractions(
@@ -157,15 +132,15 @@ def putirka2008_13(
     melt: GeoFrame, P_bar=None, offset: float = 0.0, out_col: str = "T_K"
 ) -> DataFrame:
     """Putirka (2008) eq. 13 (``thermometers/melt.py:71-106``)."""
-    comp = _components(melt, "putirka2008_13")
+    comp = components_expr(melt, COMPONENTS["putirka2008_13"])
     T_K = F.lit(26.3) * comp["MgO"] + F.lit(994.4 + 273.15)
     return _finish(melt, "putirka2008_13", T_K, offset, out_col)
 
 
 def _putirka_14_15_core(melt: GeoFrame, model: str):
-    comp = _components(melt, model)
+    comp = components_expr(melt, COMPONENTS[model])
     H2O = comp["H2O"]
-    mol = _mole_fractions(comp, exclude=("H2O",))
+    mol = mole_fraction_exprs(comp, exclude=("H2O",))
     mg_no = mol["MgO"] / (mol["MgO"] + mol["FeO"])
     FeO = comp["FeO"]
     if "Fe2O3" in melt.species:
@@ -199,7 +174,7 @@ def putirka2008_15(
     """Putirka (2008) eq. 15 — the reference's default thermometer
     (``thermometers/melt.py:191-279``)."""
     comp, H2O, mg_no, FeO = _putirka_14_15_core(melt, "putirka2008_15")
-    P_GPa = _p_col(P_bar) / F.lit(1e4)
+    P_GPa = as_col(P_bar) / F.lit(1e4)
     T_K = (
         F.lit(815.3)
         + F.lit(265.5) * mg_no
@@ -217,10 +192,10 @@ def putirka2008_16(
     melt: GeoFrame, P_bar=0.0, offset: float = 0.0, out_col: str = "T_K"
 ) -> DataFrame:
     """Putirka (2008) eq. 16 (``thermometers/melt.py:282-346``)."""
-    comp = _components(melt, "putirka2008_16")
+    comp = components_expr(melt, COMPONENTS["putirka2008_16"])
     exclude = ("H2O",) if "H2O" in melt.species else ()
-    mol = _mole_fractions(comp, exclude=exclude)
-    P_GPa = _p_col(P_bar) / F.lit(1e4)
+    mol = mole_fraction_exprs(comp, exclude=exclude)
+    P_GPa = as_col(P_bar) / F.lit(1e4)
     T_K = (
         F.lit(-583.0)
         + F.lit(3141.0) * mol["SiO2"]
@@ -238,10 +213,10 @@ def putirka2008_22(
 ) -> DataFrame:
     """Putirka (2008) eq. 22 with Beattie (1993) eq. 12 D_Mg
     (``thermometers/melt.py:349-425``)."""
-    comp = _components(melt, "putirka2008_22")
+    comp = components_expr(melt, COMPONENTS["putirka2008_22"])
     H2O = comp["H2O"]
     cat = _cation_fractions(comp, exclude=("H2O",))
-    P_GPa = _p_col(P_bar) / F.lit(1e4)
+    P_GPa = as_col(P_bar) / F.lit(1e4)
 
     def c(name: str) -> Column:
         return cat.get(name, F.lit(0.0))
@@ -273,11 +248,11 @@ def sun2020(
     """Sun & Dasgupta (2020) eq. 6 (``thermometers/melt.py:428-486``),
     on the cation-moles-per-oxygen basis
     (``tools/modify_compositions.py:38-74``)."""
-    comp = _components(melt, "sun2020")
-    P_GPa = _p_col(P_bar) / F.lit(1e4)
+    comp = components_expr(melt, COMPONENTS["sun2020"])
+    P_GPa = as_col(P_bar) / F.lit(1e4)
 
     # mole fractions of the full composition
-    mol = _mole_fractions(comp)
+    mol = mole_fraction_exprs(comp)
     # volatile-free oxide subset on the *mole* basis
     volatiles = ("H2O", "CO2", "F", "S", "Cl")
     oxides = [
@@ -316,7 +291,7 @@ def shea2022(
     melt: GeoFrame, P_bar=None, offset: float = 0.0, out_col: str = "T_K"
 ) -> DataFrame:
     """Shea et al. (2022) eq. 1 (``thermometers/melt.py:489-521``)."""
-    comp = _components(melt, "shea2022")
+    comp = components_expr(melt, COMPONENTS["shea2022"])
     T_K = F.lit(21.2) * comp["MgO"] + F.lit(1017.0 + 273.15)
     return _finish(melt, "shea2022", T_K, offset, out_col)
 
@@ -326,7 +301,7 @@ def sugawara2000_3(
 ) -> DataFrame:
     """Sugawara (2000) eq. 3 + H2O correction eq. 7a
     (``thermometers/melt.py:524-567``)."""
-    comp = _components(melt, "sugawara2000_3")
+    comp = components_expr(melt, COMPONENTS["sugawara2000_3"])
     # anhydrous, renormalised to 100 wt.% then to mol percent
     anhydrous = {
         s: c for s, c in comp.items() if s != "H2O"
@@ -335,15 +310,15 @@ def sugawara2000_3(
     anhydrous = {s: c / total * F.lit(100.0) for s, c in anhydrous.items()}
     mol_pc = {
         s: e * F.lit(100.0)
-        for s, e in _mole_fractions(anhydrous).items()
+        for s, e in mole_fraction_exprs(anhydrous).items()
     }
     T_K = (
         F.lit(1293.0)
         + F.lit(14.60) * mol_pc["MgO"]
-        + F.lit(5.5e-3) * _p_col(P_bar)
+        + F.lit(5.5e-3) * as_col(P_bar)
     )
     if "H2O" in melt.species:
-        mol_full = _mole_fractions(comp)
+        mol_full = mole_fraction_exprs(comp)
         T_K = T_K - F.lit(5.403) * mol_full["H2O"] * F.lit(100.0)
     return _finish(melt, "sugawara2000_3", T_K, offset, out_col)
 
@@ -353,13 +328,13 @@ def sugawara2000_6a(
 ) -> DataFrame:
     """Sugawara (2000) eq. 6a + H2O correction eq. 7a
     (``thermometers/melt.py:570-616``)."""
-    comp = _components(melt, "sugawara2000_6a")
+    comp = components_expr(melt, COMPONENTS["sugawara2000_6a"])
     anhydrous = {s: c for s, c in comp.items() if s != "H2O"}
     total = csum(anhydrous.values())
     anhydrous = {s: c / total * F.lit(100.0) for s, c in anhydrous.items()}
     mol_pc = {
         s: e * F.lit(100.0)
-        for s, e in _mole_fractions(anhydrous).items()
+        for s, e in mole_fraction_exprs(anhydrous).items()
     }
     T_K = (
         F.lit(1466.0)
@@ -367,10 +342,10 @@ def sugawara2000_6a(
         - F.lit(0.5) * mol_pc["FeO"]
         + F.lit(12.32) * mol_pc["MgO"]
         - F.lit(3.899) * mol_pc["CaO"]
-        + F.lit(4.3e-3) * _p_col(P_bar)
+        + F.lit(4.3e-3) * as_col(P_bar)
     )
     if "H2O" in melt.species:
-        mol_full = _mole_fractions(comp)
+        mol_full = mole_fraction_exprs(comp)
         T_K = T_K - F.lit(5.403) * mol_full["H2O"] * F.lit(100.0)
     return _finish(melt, "sugawara2000_6a", T_K, offset, out_col)
 
@@ -390,14 +365,12 @@ def putirka2007_4(
     (``olivine_cations.loc[liquid_cations.index]``) becomes an inner
     equi-join on the sample key — broadcast-sized in practice."""
     has_h2o = "H2O" in liquid.species
-    comp = {
-        s: F.coalesce(F.col(s), F.lit(0.0)) for s in liquid.species
-    }
-    for c in ["MgO", "FeO", "Na2O", "K2O", "CaO", "SiO2", "TiO2"]:
-        comp.setdefault(c, F.lit(0.0))
+    comp = components_expr(
+        liquid, ["MgO", "FeO", "Na2O", "K2O", "CaO", "SiO2", "TiO2"]
+    )
     H2O = comp["H2O"] if has_h2o else F.lit(0.0)
     exclude = ("H2O",) if has_h2o else ()
-    mol = _mole_fractions(comp, exclude=exclude)
+    mol = mole_fraction_exprs(comp, exclude=exclude)
     cat = _cation_fractions(comp, exclude=exclude)
 
     ol_comp = {
@@ -413,7 +386,7 @@ def putirka2007_4(
         F.lit(1.0) - c(cat, "Ti")
     )
     D_Mg = c(ol_cat, "Mg") / c(cat, "Mg")
-    P_GPa = _p_col(P_bar) / F.lit(1e4)
+    P_GPa = as_col(P_bar) / F.lit(1e4)
 
     numerator = (
         F.lit(15294.6) + F.lit(1318.8) * P_GPa + F.lit(2.4834) * P_GPa * P_GPa

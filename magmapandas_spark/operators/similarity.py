@@ -29,6 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from magmapandas_spark.models.common import drop_zip_finders
 from magmapandas_spark.operators.dedup import fan_out
 from magmapandas_spark.relational.suite import _t
 
@@ -338,6 +339,7 @@ def ivf_index(
 
     @pandas_udf(T.IntegerType())
     def assign_cell(vecs: pd.Series) -> pd.Series:
+        drop_zip_finders()
         C = b_cent.value
         V = np.vstack(vecs.to_numpy()).astype(float)
         d = (
@@ -446,6 +448,7 @@ def ivf_topk(
 
     @pandas_udf(T.ArrayType(T.IntegerType()))
     def probe_cells(vecs: pd.Series) -> pd.Series:
+        drop_zip_finders()
         c = b_cent.value
         q = np.vstack(vecs.to_numpy()).astype(float)
         q /= np.maximum(np.linalg.norm(q, axis=1, keepdims=True), 1e-30)
@@ -1786,6 +1789,7 @@ def ivfpq_topk(
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def probe_cells(vecs: pd.Series) -> pd.Series:
+        drop_zip_finders()
         C = b_cent.value
         Q = np.vstack(vecs.to_numpy()).astype(float)
         d2 = (

@@ -93,14 +93,17 @@ def q_redox_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     end-to-end."""
     from magmapandas_spark.models import fe3fe2, fo2
     from magmapandas_spark.models import thermometers as tm
-    from magmapandas_spark.models.common import mole_fraction_exprs
+    from magmapandas_spark.models.common import (
+        components_expr,
+        mole_fraction_exprs,
+    )
 
     gf = synthetic_melt(spark, sf_dir)
     with_t = tm.putirka2008_15(gf, P_bar="P_bar")
     gf2 = GeoFrame(with_t, units="wt.%", datatype="oxide",
                    species=MELT_SPECIES)
     fO2 = fo2.fo2_qfm_1bar(1.0, F.col("T_K"))
-    comp = {s: F.coalesce(F.col(s), F.lit(0.0)) for s in gf2.species}
+    comp = components_expr(gf2, [])
     mol = mole_fraction_exprs(comp)
     fe = fe3fe2.fe3fe2_borisov2018(mol, F.col("T_K"), fO2)
     return (
@@ -530,12 +533,15 @@ def q_fe3fe2_expr_models(spark: SparkSession, sf_dir: str) -> DataFrame:
     cation fractions are all closed-form)."""
     from magmapandas_spark.models import fe3fe2 as fe_mod
     from magmapandas_spark.models import fo2 as fo2_mod
-    from magmapandas_spark.models.common import mole_fraction_exprs
+    from magmapandas_spark.models.common import (
+        components_expr,
+        mole_fraction_exprs,
+    )
 
     gf = synthetic_melt(spark, sf_dir)
     T = F.lit(1400.0) + (F.col("name") % 200).cast("double") / F.lit(2.0)
     fO2 = fo2_mod.fo2_qfm_1bar(0.0, T)
-    comp = {s: F.coalesce(F.col(s), F.lit(0.0)) for s in gf.species}
+    comp = components_expr(gf, [])
     mol = mole_fraction_exprs(comp)
     return gf.df.select(
         "name",
@@ -1728,12 +1734,15 @@ def q_fe3fe2_expr_models2(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle."""
     from magmapandas_spark.models import fe3fe2 as fe_mod
     from magmapandas_spark.models import fo2 as fo2_mod
-    from magmapandas_spark.models.common import mole_fraction_exprs
+    from magmapandas_spark.models.common import (
+        components_expr,
+        mole_fraction_exprs,
+    )
 
     gf = synthetic_melt(spark, sf_dir)
     T = F.lit(1400.0) + (F.col("name") % 200).cast("double") / F.lit(2.0)
     fO2 = fo2_mod.fo2_qfm_1bar(0.0, T)
-    comp = {s: F.coalesce(F.col(s), F.lit(0.0)) for s in gf.species}
+    comp = components_expr(gf, [])
     mol = mole_fraction_exprs(comp)
     return gf.df.select(
         "name",
@@ -1809,12 +1818,15 @@ def q_fe3fe2_expr_models3(spark: SparkSession, sf_dir: str) -> DataFrame:
     with Al(IV) capping — LEAST in both engines)."""
     from magmapandas_spark.models import fe3fe2 as fe_mod
     from magmapandas_spark.models import fo2 as fo2_mod
-    from magmapandas_spark.models.common import mole_fraction_exprs
+    from magmapandas_spark.models.common import (
+        components_expr,
+        mole_fraction_exprs,
+    )
 
     gf = synthetic_melt(spark, sf_dir)
     T = F.lit(1400.0) + (F.col("name") % 200).cast("double") / F.lit(2.0)
     fO2 = fo2_mod.fo2_qfm_1bar(0.0, T)
-    comp = {s: F.coalesce(F.col(s), F.lit(0.0)) for s in gf.species}
+    comp = components_expr(gf, [])
     mol = mole_fraction_exprs(comp)
     return gf.df.select(
         "name",
@@ -1902,12 +1914,15 @@ def q_fe3fe2_hirschmann2022(spark: SparkSession, sf_dir: str) -> DataFrame:
     still fully SQL-expressible (SURVEY §2.8)."""
     from magmapandas_spark.models import fe3fe2 as fe_mod
     from magmapandas_spark.models import fo2 as fo2_mod
-    from magmapandas_spark.models.common import mole_fraction_exprs
+    from magmapandas_spark.models.common import (
+        components_expr,
+        mole_fraction_exprs,
+    )
 
     gf = synthetic_melt(spark, sf_dir)
     T = F.lit(1400.0) + (F.col("name") % 200).cast("double") / F.lit(2.0)
     fO2 = fo2_mod.fo2_qfm_1bar(0.0, T)
-    comp = {s: F.coalesce(F.col(s), F.lit(0.0)) for s in gf.species}
+    comp = components_expr(gf, [])
     mol = mole_fraction_exprs(comp)
     return gf.df.select(
         "name",

@@ -55,6 +55,19 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
+        # No per-operator call-site capture. With it on (Spark's
+        # default), every Column operator PySpark builds walks the
+        # Python stack, reads the active session and
+        # spark.sql.stackTracesInDataFrameContext, and sets and clears
+        # the JVM's PySparkCurrentOrigin: a py4j round trip each. The
+        # key's own doc string says it "has a non-trivial performance
+        # overhead because of the stack trace collection". Measured
+        # warm on 4 cores, building the four geochem_models queries
+        # took 4331 round trips with it and 1401 without. An error
+        # keeps its class, condition, message and `== DataFrame ==`
+        # block; only that block's call site loses the Python
+        # file:line (README.md "Session defaults").
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
     spark = builder.getOrCreate()

@@ -194,6 +194,27 @@ def test_models_have_one_solver_udf():
     assert not handlers, handlers
 
 
+def test_pandas_udfs_drop_zip_finders_first():
+    """Every ``pandas_udf`` body in the package starts with
+    ``drop_zip_finders()``, so no Arrow-UDF task makes the worker's
+    next task re-read its zip archives (see its docstring)."""
+    udfs, late = [], []
+    for rel, _, tree in _modules():
+        for fn in ast.walk(tree):
+            if not isinstance(fn, ast.FunctionDef) or not any(
+                isinstance(d, ast.Call) and "pandas_udf" in ast.unparse(d.func)
+                for d in fn.decorator_list
+            ):
+                continue
+            udfs.append(f"{rel}.{fn.name}")
+            first = fn.body[0]
+            if not (isinstance(first, ast.Expr)
+                    and ast.unparse(first.value) == "drop_zip_finders()"):
+                late.append(f"{rel}.py:{fn.lineno} {fn.name}")
+    assert len(udfs) >= 4, udfs  # solver_column and similarity.py's three
+    assert not late, late
+
+
 def _is_midpoint(node) -> bool:
     """``0.5 * (a + b)``, either way round."""
     if not (isinstance(node, ast.BinOp) and isinstance(node.op, ast.Mult)):
