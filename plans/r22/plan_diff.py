@@ -3,11 +3,12 @@
 query of the geochem, solver-oracle, conversions and Monte Carlo
 modules must build the same logical plan in two trees.
 
-    python plans/r22/plan_diff.py dump PARENT_ROOT before.json
-    python plans/r22/plan_diff.py dump CHANGE_ROOT after.json
+    python plans/r22/plan_diff.py dump PARENT_ROOT SF_DIR before.json
+    python plans/r22/plan_diff.py dump CHANGE_ROOT SF_DIR after.json
     python plans/r22/plan_diff.py compare before.json after.json
 
-``dump`` builds each query at sf0.001 on ``local[4]`` (construction
+``SF_DIR`` holds the test tables (``plans/r22/plan_diff.txt`` was made
+at sf0.001). ``dump`` builds each query on ``local[4]`` (construction
 only; the few eager width probes run) and records its analyzed plan
 with expression ids, ``plan_id``s and the Arrow UDF's argument list
 masked. ``compare`` prints how many plans are identical and a diff of
@@ -22,15 +23,16 @@ import json
 import os
 import re
 import sys
+import tempfile
 
-SF_DIR = "/root/testdata/sf0.001"
 MODULES = ("geochem", "solver", "conversions", "montecarlo")
 
 
-def dump(root: str, out_path: str) -> None:
+def dump(root: str, sf_dir: str, out_path: str) -> None:
     out_path = os.path.abspath(out_path)
     sys.path.insert(0, root)
-    os.chdir("/tmp")  # workers must import the shipped zip, not a cwd copy
+    # workers must import the shipped zip, not a copy in the cwd
+    os.chdir(tempfile.gettempdir())
     from magmapandas_spark.relational import suite
     from magmapandas_spark.session import get_spark
 
@@ -41,7 +43,7 @@ def dump(root: str, out_path: str) -> None:
         fn = inspect.getclosurevars(wrapped).nonlocals["fn"]
         if not any(m in fn.__module__ for m in MODULES):
             continue
-        plan = wrapped(spark, SF_DIR)._jdf.queryExecution().analyzed()
+        plan = wrapped(spark, sf_dir)._jdf.queryExecution().analyzed()
         plan = re.sub(r"#\d+L?", "#", plan.toString())
         plan = re.sub(r"plan_id=\d+", "plan_id=", plan)
         rec[name] = re.sub(r"solver\(.*?\)", "solver()", plan)
@@ -68,8 +70,8 @@ def compare(before_path: str, after_path: str) -> int:
 
 
 if __name__ == "__main__":
-    if sys.argv[1:2] == ["dump"] and len(sys.argv) == 4:
-        dump(sys.argv[2], sys.argv[3])
+    if sys.argv[1:2] == ["dump"] and len(sys.argv) == 5:
+        dump(sys.argv[2], sys.argv[3], sys.argv[4])
     elif sys.argv[1:2] == ["compare"] and len(sys.argv) == 4:
         sys.exit(compare(sys.argv[2], sys.argv[3]))
     else:

@@ -17,7 +17,9 @@ from pyspark.sql import functions as F
 
 from magmapandas_spark.relational import suite
 
-SF_DIR = "/root/testdata/sf0.001"
+from .conftest import sf_dir
+
+SF_DIR = sf_dir("0.001")
 
 #: py4j round trips the building thread may make per warm rebuild,
 #: ``local[8]``, sf0.001. Measured with the capture on / off:
