@@ -72,8 +72,9 @@ def tiny_sorted(df, *cols):
     keeps its input parallelism and only the ~KB result funnels into
     the 1-task sort — coalesce would collapse the decode itself into
     one task (measured 5.4 s: worst of the three). Not for
-    corpus-scale outputs — the small-output twin of
-    suite.heavy_sorted."""
+    corpus-scale outputs. The gate hashes rows unordered, so this
+    order is for readers of the output, not for the gate; the frozen
+    H.264 decoders call it (DESIGN.md §5), so it stays."""
     return df.repartition(1).sortWithinPartitions(*cols)
 
 

@@ -615,12 +615,10 @@ def q_ivf_topk_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = ivf_seeded(
         emb, _IVF_SEED_IDS, F.col("vec_id") < 20, k=5, n_probe=4
     )
-    from magmapandas_spark.relational.suite import heavy_sorted
-
-    return heavy_sorted(
-        out.select("qid", "rn", "cid", F.round("cos", 4).alias("cos")),
-        "qid", "rn",
-    ).drop("rn")
+    return (
+        out.select("qid", "rn", "cid", F.round("cos", 4).alias("cos"))
+        .orderBy("qid", "rn").drop("rn")
+    )
 
 
 def _sql_dot(a: str, b: str, dim: int = 64) -> str:
@@ -719,12 +717,10 @@ def q_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_tables=_LSH_TABLES,
         seed=_LSH_SEED,
     )
-    from magmapandas_spark.relational.suite import heavy_sorted
-
-    return heavy_sorted(
-        out.select("qid", "rn", "cid", F.round("cos", 4).alias("cos")),
-        "qid", "rn",
-    ).drop("rn")
+    return (
+        out.select("qid", "rn", "cid", F.round("cos", 4).alias("cos"))
+        .orderBy("qid", "rn").drop("rn")
+    )
 
 
 def _sql_sig(vec: str, table: int, dim: int, n_planes: int, seed: int) -> str:
@@ -967,12 +963,10 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = ivf_topk_fitted(
         emb, centroids, F.col("vec_id") < 20, k=5, n_probe=4
     )
-    from magmapandas_spark.relational.suite import heavy_sorted
-
-    return heavy_sorted(
-        out.select("qid", "rn", "cid", F.round("cos", 4).alias("cos")),
-        "qid", "rn",
-    ).drop("rn")
+    return (
+        out.select("qid", "rn", "cid", F.round("cos", 4).alias("cos"))
+        .orderBy("qid", "rn").drop("rn")
+    )
 
 
 def _sql_dist2_lit(vec: str, cent: list[float]) -> str:
@@ -1574,12 +1568,10 @@ def q_pq_topk_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
     all under the hash."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     out = pq_seeded(emb, _PQ_SEED_IDS, F.col("vec_id") < 20, k=5)
-    from magmapandas_spark.relational.suite import heavy_sorted
-
-    return heavy_sorted(
-        out.select("qid", "rn", "cid", F.round("adc", 4).alias("adc")),
-        "qid", "rn",
-    ).drop("rn")
+    return (
+        out.select("qid", "rn", "cid", F.round("adc", 4).alias("adc"))
+        .orderBy("qid", "rn").drop("rn")
+    )
 
 
 def _sql_subdist(a: str, b: str, m: int, dsub: int = 8) -> str:
@@ -1933,7 +1925,7 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = all_pairs_cosine(emb, threshold=0.45, n_blocks=4)
     return out.select(
         "id_a", "id_b", F.round("cos_sim", 4).alias("cos_sim")
-    ).orderBy("id_a", "id_b")
+    )
 
 
 SQL_EMBEDDING_NEARDUP = """

@@ -19,11 +19,11 @@ from magmapandas_spark.core.geoframe import GeoFrame
 from magmapandas_spark.relational.suite import (
     MELT_SPECIES,
     SQL_MELT_CTE,
+    T_EXPR,
     _sql_mole_fraction_terms,
     _t,
-    by_name,
-    heavy_sorted,
     synthetic_melt,
+    t_sweep,
 )
 
 W = chem.calculate_weight
@@ -60,17 +60,11 @@ def q_thermometer_putirka15(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_thermometer_putirka15() -> str:
-    anhyd = [s for s in MELT_SPECIES if s != "H2O"]
-    _, frac = _sql_mole_fraction_terms(anhyd)
-    mg_no = f"({frac['MgO']} / ({frac['MgO']} + {frac['FeO']}))"
-    t_k = (
-        f"815.3 + 265.5 * {mg_no} + 15.37 * MgO + 8.61 * FeO"
-        f" + 6.646 * (Na2O + K2O) + 39.16 * (P_bar / 10000.0)"
-        f" - 12.83 * H2O + 273.15"
-    )
+    # the formula less its outer parentheses: the oracle SQL, and the
+    # value hash stored under its SHA-256, stay byte for byte the same
     return f"""
 WITH {SQL_MELT_CTE}
-SELECT name, ROUND({t_k}, 4) AS T_K
+SELECT name, ROUND({_sql_putirka15_raw()[1:-1]}, 4) AS T_K
 FROM melt
 ORDER BY name
 """
@@ -416,7 +410,7 @@ def q_isobar_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         "name", "P_bar", "x_fluid", "kind",
         F.round("H2O_sol", 6).alias("H2O_sol"),
         F.round("CO2_sol", 6).alias("CO2_sol"),
-    ).orderBy("kind", "P_bar", "x_fluid")
+    )
 
 
 # ----------------------------------------------------------------------
@@ -539,7 +533,7 @@ def q_fe3fe2_expr_models(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     gf = synthetic_melt(spark, sf_dir)
-    T = F.lit(1400.0) + (F.col("name") % 200).cast("double") / F.lit(2.0)
+    T = t_sweep()
     fO2 = fo2_mod.fo2_qfm_1bar(0.0, T)
     comp = components_expr(gf, [])
     mol = mole_fraction_exprs(comp)
@@ -577,7 +571,7 @@ def _sql_fe3fe2_expr_models() -> str:
         for n, parts in cat.items()
     }
     R = 8.31446261815324
-    t = "(1400.0 + (name % 200) / 2.0)"
+    t = T_EXPR
     mu = (
         f"(-587474.0 + 1584.427 * {t} - 203.3164 * {t} * LN({t})"
         f" + 0.092710 * {t} * {t})"
@@ -1378,11 +1372,12 @@ ORDER BY in_range, t_valid
 
 def _melt_subset(spark, sf_dir, modulus=64):
     """The melt rows whose ``name`` is a multiple of ``modulus`` (every
-    row at 1), sorted on ``name`` by :func:`suite.by_name`, so a per-row
-    model over them comes out in ``name`` order with no exchange."""
+    row at 1), as they lie in the persisted melt. A per-row model over
+    them keeps their order and needs no exchange; each row carries its
+    ``name``, so the gate needs no order at all."""
     gf = synthetic_melt(spark, sf_dir)
     df = gf.df if modulus == 1 else gf.df.filter(F.col("name") % modulus == 0)
-    return GeoFrame(by_name(df), units=gf.units, datatype=gf.datatype,
+    return GeoFrame(df, units=gf.units, datatype=gf.datatype,
                     species=gf.species)
 
 
@@ -1396,7 +1391,7 @@ def q_fe3fe2_deng2020(spark: SparkSession, sf_dir: str) -> DataFrame:
     from magmapandas_spark.models import fe3fe2 as fe_mod
 
     gf = _melt_subset(spark, sf_dir)
-    T = F.lit(1400.0) + (F.col("name") % 200).cast("double") / F.lit(2.0)
+    T = t_sweep()
     out = fe_mod.calculate_Fe3Fe2(
         gf, T_K=T, P_bar="P_bar", model="deng2020", fO2_buffer="QFM_1bar",
         dfO2=1.0,
@@ -1431,7 +1426,7 @@ def q_fo2_buffers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from magmapandas_spark.models import fo2 as fo2_mod
 
     gf = synthetic_melt(spark, sf_dir)
-    T = F.lit(1400.0) + (F.col("name") % 200).cast("double") / F.lit(2.0)
+    T = t_sweep()
     P = F.col("P_bar")
     out = {
         "nno": fo2_mod.fo2_nno(0.0, T, P),
@@ -1452,7 +1447,7 @@ def q_fo2_buffers(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_fo2_buffers() -> str:
     from magmapandas_spark.models.fo2 import LN10, R
 
-    t = "(1400.0 + (name % 200) / 2.0)"
+    t = T_EXPR
     pg = "(P_bar / 10000.0)"       # GPa-ish scaling used by nno/ruruo2
     pm = "(P_bar * 0.0001)"        # the *1e-4 variant (iw buffers)
     off = ""  # logshift 0 → multiplier 10^0 == 1.0, identity in IEEE
@@ -1542,23 +1537,15 @@ def q_qfm_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from magmapandas_spark.relational.solver_oracles import QFM_GRID_P_BAR
 
     gf = synthetic_melt(spark, sf_dir)
-    tvals = gf.df.select(
-        (
-            F.lit(1400.0) + (F.col("name") % 200).cast("double") / F.lit(2.0)
-        ).alias("t")
-    ).distinct()
-    grid = tvals.select(
+    grid = gf.df.select(t_sweep().alias("t")).distinct().select(
         "t",
         F.explode(
             F.array(*[F.lit(p) for p in QFM_GRID_P_BAR])
         ).alias("P_bar"),
     )
     fo2col = fo2_mod.fo2_qfm(0.0, F.col("t"), F.col("P_bar"))
-    return heavy_sorted(
-        grid.select(
-            "t", "P_bar", F.round(F.log10(fo2col), 6).alias("log_qfm")
-        ),
-        "t", "P_bar",
+    return grid.select(
+        "t", "P_bar", F.round(F.log10(fo2col), 6).alias("log_qfm")
     )
 
 
@@ -1573,23 +1560,15 @@ def q_iw_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from magmapandas_spark.models import iw as iw_mod
     from magmapandas_spark.relational.solver_oracles import IW_GRID_P_BAR
     gf = synthetic_melt(spark, sf_dir)
-    tvals = gf.df.select(
-        (
-            F.lit(1400.0) + (F.col("name") % 200).cast("double") / F.lit(2.0)
-        ).alias("t")
-    ).distinct()
-    grid = tvals.select(
+    grid = gf.df.select(t_sweep().alias("t")).distinct().select(
         "t",
         F.explode(
             F.array(*[F.lit(p) for p in IW_GRID_P_BAR])
         ).alias("P_bar"),
     )
     fo2col = iw_mod.fo2_iw(0.0, F.col("t"), F.col("P_bar"))
-    return heavy_sorted(
-        grid.select(
-            "t", "P_bar", F.round(F.log10(fo2col), 6).alias("log_iw")
-        ),
-        "t", "P_bar",
+    return grid.select(
+        "t", "P_bar", F.round(F.log10(fo2col), 6).alias("log_iw")
     )
 
 
@@ -1611,7 +1590,7 @@ def q_fe3fe2_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = F.when((F.col("name") % 3) == 0, F.lit(1.0)).otherwise(
         F.col("P_bar")
     )
-    base = by_name(gf.df).select("name", x.alias("x"), p.alias("p"))
+    base = gf.df.select("name", x.alias("x"), p.alias("p"))
     cols = [
         F.round(
             fe3fe2_error_column(m, F.col("x"), F.col("p")), 6
@@ -1740,7 +1719,7 @@ def q_fe3fe2_expr_models2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     gf = synthetic_melt(spark, sf_dir)
-    T = F.lit(1400.0) + (F.col("name") % 200).cast("double") / F.lit(2.0)
+    T = t_sweep()
     fO2 = fo2_mod.fo2_qfm_1bar(0.0, T)
     comp = components_expr(gf, [])
     mol = mole_fraction_exprs(comp)
@@ -1762,7 +1741,7 @@ def q_fe3fe2_expr_models2(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_fe3fe2_expr_models2() -> str:
     _, mol = _sql_mole_fraction_terms(MELT_SPECIES)
     R = 8.31446261815324
-    t = "(1400.0 + (name % 200) / 2.0)"
+    t = T_EXPR
     mu = (
         f"(-587474.0 + 1584.427 * {t} - 203.3164 * {t} * LN({t})"
         f" + 0.092710 * {t} * {t})"
@@ -1824,7 +1803,7 @@ def q_fe3fe2_expr_models3(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     gf = synthetic_melt(spark, sf_dir)
-    T = F.lit(1400.0) + (F.col("name") % 200).cast("double") / F.lit(2.0)
+    T = t_sweep()
     fO2 = fo2_mod.fo2_qfm_1bar(0.0, T)
     comp = components_expr(gf, [])
     mol = mole_fraction_exprs(comp)
@@ -1848,7 +1827,7 @@ def _sql_fe3fe2_expr_models3() -> str:
 
     _, mol = _sql_mole_fraction_terms(MELT_SPECIES)
     R = 8.31446261815324
-    t = "(1400.0 + (name % 200) / 2.0)"
+    t = T_EXPR
     mu = (
         f"(-587474.0 + 1584.427 * {t} - 203.3164 * {t} * LN({t})"
         f" + 0.092710 * {t} * {t})"
@@ -1920,7 +1899,7 @@ def q_fe3fe2_hirschmann2022(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     gf = synthetic_melt(spark, sf_dir)
-    T = F.lit(1400.0) + (F.col("name") % 200).cast("double") / F.lit(2.0)
+    T = t_sweep()
     fO2 = fo2_mod.fo2_qfm_1bar(0.0, T)
     comp = components_expr(gf, [])
     mol = mole_fraction_exprs(comp)
@@ -1942,7 +1921,7 @@ def _sql_fe3fe2_hirschmann2022() -> str:
 
     R = 8.31446261815324
     LN10 = float(np.log(10.0))
-    t = "(1400.0 + (name % 200) / 2.0)"
+    t = T_EXPR
     mu = (
         f"(-587474.0 + 1584.427 * {t} - 203.3164 * {t} * LN({t})"
         f" + 0.092710 * {t} * {t})"
@@ -2008,7 +1987,7 @@ def q_fe3fe2_solvers2(spark: SparkSession, sf_dir: str) -> DataFrame:
     from magmapandas_spark.models import fe3fe2 as fe_mod
 
     gf = _melt_subset(spark, sf_dir)
-    T = F.lit(1400.0) + (F.col("name") % 200).cast("double") / F.lit(2.0)
+    T = t_sweep()
     df = fe_mod.calculate_Fe3Fe2(
         gf, T_K=T, P_bar="P_bar", model="oneill2006",
         fO2_buffer="QFM_1bar", dfO2=0.0, out_col="fe3fe2_oneill06",

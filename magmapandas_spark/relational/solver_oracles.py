@@ -36,17 +36,10 @@ from magmapandas_spark.chem.elements import (
     cation_amount,
     cation_name,
 )
+from magmapandas_spark.relational.suite import MELT_SPECIES, T_EXPR
 
 R = 8.31446261815324
 W = calculate_weight
-
-MELT_SPECIES = [
-    "SiO2", "Al2O3", "TiO2", "MgO", "FeO", "CaO", "Na2O", "K2O",
-    "MnO", "P2O5", "H2O", "CO2",
-]
-
-# T_K used by all solver-tier fe3fe2 queries
-T_EXPR = "(1400.0 + (name % 200) / 2.0)"
 
 
 def _mol_cols() -> str:

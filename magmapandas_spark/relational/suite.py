@@ -113,54 +113,6 @@ def davg(col: F.Column) -> F.Column:
     return (F.sum(col.cast("decimal(18,6)")).cast("double") / F.count(F.lit(1)))
 
 
-def heavy_sorted(df: DataFrame, *cols: str) -> DataFrame:
-    """Deterministic orderBy for UDF-tier results whose input is not the
-    melt's rows: ``qfm_exact`` and ``iw_exact`` (distinct (T, P) grids)
-    and the ``similarity.py`` top-k queries. Hash-repartition on the
-    sort key first, so the expensive upstream stage (Arrow-vectorized
-    bisection, per-row scoring) materializes into ONE shuffle that the
-    range-sort's sampling pass and the final sort job both read — Spark
-    reuses shuffle stages across jobs. Without this, ``orderBy`` alone
-    re-executes the whole UDF stage a second time for range-boundary
-    sampling (Python eval nodes don't expose output ordering, so no
-    input ordering can elide the sort either). A per-row model over the
-    melt sorts its input with :func:`by_name` instead and needs neither
-    exchange. Values are unchanged; only the plan shape is."""
-    return df.repartition(*[F.col(c) for c in cols]).orderBy(*cols)
-
-
-def by_name(df: DataFrame) -> DataFrame:
-    """``df`` sorted on ``name`` in one range partition per core
-    (``defaultParallelism``): the input of a per-row model query, whose
-    output then comes out in ``name`` order with no exchange. Filter,
-    Project and the Arrow-UDF stage all keep row order within a
-    partition, and at this width ``models.common.solver_input`` leaves
-    the input alone (its ``coalesce`` and round-robin ``repartition``
-    would both break the order).
-
-    On the materialized melt ``orderBy("name")`` plans no exchange and
-    no sort, since the cache declares its range partitioning and
-    ordering, and that is returned. Any other layout -- another width,
-    or a melt not yet materialized, whose partitioning AQE does not
-    know -- is range-partitioned and sorted here. The check only plans
-    the query; it runs no job."""
-    n = df.sparkSession.sparkContext.defaultParallelism
-    ordered = df.orderBy("name")
-    plan = ordered._jdf.queryExecution().executedPlan()
-    if plan.nodeName() == "AdaptiveSparkPlan":
-        plan = plan.executedPlan()
-    nodes, todo = [], [plan]
-    while todo:
-        node = todo.pop()
-        nodes.append(node.nodeName())
-        kids = node.children()
-        todo.extend(kids.apply(i) for i in range(kids.size()))
-    if (plan.outputPartitioning().numPartitions() == n
-            and "Exchange" not in nodes and "Sort" not in nodes):
-        return ordered
-    return df.repartitionByRange(n, "name").sortWithinPartitions("name")
-
-
 SQL_DSUM = "CAST(SUM(CAST({x} AS DECIMAL(18,6))) AS DOUBLE)"
 SQL_DAVG = "CAST(SUM(CAST({x} AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*)"
 
@@ -193,18 +145,18 @@ def synthetic_melt(spark: SparkSession, sf_dir: str) -> GeoFrame:
     It is persisted ALREADY RANGE-SORTED on ``name``, in one range
     partition per core (``defaultParallelism``), each sorted within:
     InMemoryRelation retains the cached plan's output partitioning +
-    ordering, so the deterministic ``orderBy("name")`` every gate query
-    ends in is satisfied for free — EnsureRequirements elides both the
-    range exchange and the sort for all narrow (per-row) model queries,
-    which also removes the range-sampling pass that would otherwise
-    evaluate each query's expression tree twice. One sort at
+    ordering, so the ``orderBy("name")`` the expression-tier gate
+    queries end in is satisfied for free — EnsureRequirements elides
+    both the range exchange and the sort for all narrow (per-row) model
+    queries, which also removes the range-sampling pass that would
+    otherwise evaluate each query's expression tree twice. One sort at
     materialization replaces ~30 per-query sorts. Per-row model
-    queries (an Arrow-UDF solver stage) get ``name`` order for free
-    too: they sort their input through :func:`by_name`, which on this
-    cache plans nothing, and the UDF stage keeps row order. One
-    partition per core (not ``spark.sql.shuffle.partitions``) makes a
-    narrow model query one task per core, so its Arrow-UDF stages pay
-    the fixed Python-worker cost per task once per core."""
+    queries (an Arrow-UDF solver stage) read the rows as they lie and
+    sort nothing: each row carries its ``name``, and the gate hashes
+    rows unordered. One partition per core (not
+    ``spark.sql.shuffle.partitions``) makes a narrow model query one
+    task per core, so its Arrow-UDF stages pay the fixed Python-worker
+    cost per task once per core."""
     key = (id(spark), sf_dir)
     cached = _melt_cache.get(key)
     if cached is not None:
@@ -272,6 +224,14 @@ melt AS (
   FROM lineitem
 )
 """
+
+# The temperature sweep (K) of the model queries that take T_K per row:
+# 1400-1499.5 in half-kelvin steps of ``name``, as SQL and as a Column.
+T_EXPR = "(1400.0 + (name % 200) / 2.0)"
+
+
+def t_sweep() -> F.Column:
+    return F.lit(1400.0) + (F.col("name") % 200).cast("double") / F.lit(2.0)
 
 
 def _sql_mole_fraction_terms(species: list[str]) -> tuple[str, dict[str, str]]:

@@ -159,17 +159,18 @@ def main() -> None:
             setattr(DataFrame, name, fn)
 
 
+def diff() -> None:
+    for name in ("melt_build",) + QUERIES + ("fresh_melt",):
+        (hb, before), (ha, after) = (read(name, m)
+                                     for m in ("before", "after"))
+        if name != "melt_build":
+            print(f"{name}: {job_counts(hb)} -> {job_counts(ha)}")
+        print(f"{name}: {node_counts(before)} -> {node_counts(after)}")
+        for line in difflib.unified_diff(masked(before), masked(after),
+                                         n=0, lineterm=""):
+            if not line.startswith(("---", "+++", "@@")):
+                print("   ", line)
+
+
 if __name__ == "__main__":
-    if sys.argv[1:] == ["diff"]:
-        for name in ("melt_build",) + QUERIES + ("fresh_melt",):
-            (hb, before), (ha, after) = (read(name, m)
-                                         for m in ("before", "after"))
-            if name != "melt_build":
-                print(f"{name}: {job_counts(hb)} -> {job_counts(ha)}")
-            print(f"{name}: {node_counts(before)} -> {node_counts(after)}")
-            for line in difflib.unified_diff(masked(before), masked(after),
-                                             n=0, lineterm=""):
-                if not line.startswith(("---", "+++", "@@")):
-                    print("   ", line)
-    else:
-        main()
+    diff() if sys.argv[1:] == ["diff"] else main()
